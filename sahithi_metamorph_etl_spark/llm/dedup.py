@@ -590,6 +590,15 @@ def band_signature_store(
     )
 
 
+def _require_positive_threshold(threshold: float, op_name: str) -> None:
+    if not threshold > 0:
+        raise ValueError(
+            f"{op_name}: threshold must be > 0, got {threshold!r} — the "
+            "array_intersect verify keeps zero-overlap candidates until "
+            "the threshold filter, so a threshold <= 0 emits jaccard-0 pairs"
+        )
+
+
 def neardup_against_seen(
     new_df: DataFrame,
     seen_bands: DataFrame,
@@ -636,12 +645,10 @@ def neardup_against_seen(
     freed-with-the-session rationale only holds for one-shot batch
     jobs.
 
-    THRESHOLD > 0 is assumed (ADVICE_r21 note): the array_intersect
+    ``threshold <= 0`` raises ``ValueError``: the array_intersect
     verify form keeps zero-overlap candidate pairs until the
-    ``jac >= threshold`` filter, so at ``threshold <= 0.0`` it would
-    emit jaccard-0 collision pairs the former overlap-join form
-    dropped. Every shipped caller uses 0.8; a <= 0 threshold is not a
-    meaningful near-dup cut.
+    ``jac >= threshold`` filter, so such a threshold would emit
+    jaccard-0 collision pairs — not a meaningful near-dup cut.
 
     ``new_sigs`` (an (id, band, sig) frame for exactly ``new_df``,
     i.e. ``band_signature_store(new_df, ...)`` at the SAME
@@ -651,6 +658,7 @@ def neardup_against_seen(
     shingle+minhash pass then runs ONCE per batch, not twice."""
     from pyspark import StorageLevel
 
+    _require_positive_threshold(threshold, "neardup_against_seen")
     if new_sigs is None:
         new_sigs = band_signature_store(new_df, text_col, id_col, n, num_perm, bands)
     seen = seen_bands.select(
@@ -738,14 +746,13 @@ def minhash_lsh_pairs(
     With 64 perms / 16 bands x 4 rows, the candidate probability for
     jaccard s is 1-(1-s^4)^16 (~0.99 at s=0.8, ~0.07 at s=0.3). If
     ``verify``, candidates are re-scored with exact Jaccard and filtered
-    — output schema matches :func:`jaccard_pairs`. THRESHOLD > 0 is
-    assumed (ADVICE_r21 note, same as :func:`neardup_against_seen`):
-    at ``threshold <= 0.0`` the array_intersect verify form would keep
-    zero-overlap banded collisions the former overlap-join form
-    dropped; every shipped caller uses 0.8.
+    — output schema matches :func:`jaccard_pairs`. ``threshold <= 0``
+    raises ``ValueError``, as in :func:`neardup_against_seen` (the
+    verify form would keep zero-overlap banded collisions).
     """
     from pyspark import StorageLevel
 
+    _require_positive_threshold(threshold, "minhash_lsh_pairs")
     band_sigs = band_signature_store(df, text_col, id_col, n, num_perm, bands)
     # consumed by both sides of the band self-join — persist the tiny
     # signature table so the scoring pass runs once

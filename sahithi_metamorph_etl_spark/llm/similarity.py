@@ -1,27 +1,54 @@
 """Embedding similarity search.
 
-- ``cosine_topk_bruteforce``: exact top-k for a bounded query set —
-  O(|queries| x |corpus|), the correctness baseline. All arithmetic in
-  double with a deterministic left-to-right fold (``F.aggregate``), so
-  results are bit-comparable to an external oracle.
-- ``hyperplane_lsh_topk``: the scale path — random-hyperplane LSH
-  (sign-bit bucketing) so each query only scores its bucket. Planes are
-  seeded deterministically; recall/bucket-size trade-off via n_planes.
+Every top-k method here is one skeleton with a pluggable codec:
 
-At 100 TB the corpus side stays partitioned; the bounded query set is
-broadcast. Neither operator needs a UDF — dot products are higher-order
-array expressions (JVM codegen).
+1. **Bounded queries.** The query set is collected once with an
+   explicit bound (:func:`_bounded_query_rows`) and shipped to the
+   executors inside the scoring closure; the corpus never leaves its
+   partitions.
+2. **Probe.** On an IVF (inverted-file) layout each query probes its
+   ``n_probe`` nearest coarse lists (:func:`_probe_lists`: rounded dot,
+   lowest list id on ties); the probe union is a partition filter, so
+   non-probed list directories are never opened, and a per-row
+   ``list_id`` mask keeps each query to its own lists.
+3. **Codec scan.** A codec turns one Arrow batch into a (queries x
+   rows) score matrix, rounded before any compare: float cosine
+   (:func:`cosine_topk_bruteforce`, :func:`hard_negative_topk`,
+   :func:`ivf_search`), SQ8 dequantized dot (:func:`sq8_topk`,
+   :func:`sq8_search`) or PQ ADC table lookup (:func:`pq_topk`,
+   :func:`pq_search`). The flat ``*_topk`` forms encode in-scan with
+   the same encode function ``*_build_index`` writes to disk; the
+   ``*_search`` forms read the written codes.
+4. **Heap scan.** :func:`_topk_scorer` — the one per-partition heap —
+   keeps the best (score desc, neighbor id asc) candidates per query,
+   so the shuffle carries only ``partitions x |queries| x keep`` rows.
+5. **Final cut.** Float scores are exact, so a global top-k window
+   ranks them. Quantized scores only choose candidates: a global
+   top-(k+rerank) cut feeds :func:`_adc_exact_rerank`, which re-scores
+   the survivors with the JVM fold, so reported similarities are
+   always exact.
+
+All ordering keys round half-away-from-zero (:func:`_nround`, the
+``functions.money.dround`` twin) with id tie-breaks, so results are
+partition-independent and replayable by an external oracle.
+
+The LSH paths (:func:`hyperplane_lsh_topk`, :func:`lsh_near_dup_pairs`)
+and the all-pairs :func:`cosine_near_dup_pairs` bucket or pair the
+corpus instead of probing it and keep their own shapes.
 """
 
 from __future__ import annotations
 
 import random
 
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.money import dround
 from ..operators.windows import top_k_per_group
+
+_TOPK_SCHEMA = "vec_id bigint, rank int, neighbor_id bigint, cos_sim double"
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -63,31 +90,41 @@ def _nround(t, scale: int = 8):
     rounds through this before compare, so oracle determinism never
     rides on bit-identical unrounded accumulation (BLAS vs DuckDB
     list_dot_product can differ by an ulp on near-ties)."""
-    import numpy as np
-
     f = float(10**scale)
     return np.sign(t) * np.floor(np.abs(t) * f + 0.5) / f
 
 
-def _local_sidecar_path(path: str) -> str:
-    """Enforce the index-path sidecar contract (ADVICE_r21): the
-    pyarrow sidecar fast path does driver-local POSIX I/O, while the
-    data files (codes/lists) in the SAME ``index_path`` go through
-    Spark's Hadoop FS layer. On a non-local ``index_path`` (hdfs://,
-    s3a://, ...) the index would silently split across storage
-    systems — fail fast with the contract instead. ``file:`` URIs are
-    accepted and stripped to their POSIX path so both layers resolve
-    to the same files."""
-    import re
+def _unit_rows(m):
+    """Rows of a (rows, dim) float64 matrix scaled to unit length;
+    zero rows clamp to 0 (0/eps) like ``_norm``."""
+    return m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
 
-    m = re.match(r"^([a-zA-Z][a-zA-Z0-9+.-]*)://(.*)$", path)
-    if m is None:
+
+def _batch_matrix(cells):
+    """(rows, dim) float64 matrix of an iterable of vectors (an Arrow
+    batch column or collected row values)."""
+    return np.array(list(cells), dtype=np.float64)
+
+
+def _local_sidecar_path(path: str) -> str:
+    """Enforce the index-path sidecar contract: the pyarrow sidecar
+    fast path does driver-local POSIX I/O, while the data files
+    (codes/lists) in the SAME ``index_path`` go through Spark's Hadoop
+    FS layer. A plain path passes through; ``file:/p``, ``file:///p``
+    and ``file://localhost/p`` map to ``/p`` so both layers resolve to
+    the same files. Any other scheme — or a ``file:`` URI naming
+    another host — would silently split the index across storage
+    systems, so it fails fast instead."""
+    from urllib.parse import urlparse
+
+    u = urlparse(path)
+    if not u.scheme:
         return path
-    if m.group(1) == "file":
-        return "/" + m.group(2).lstrip("/")
+    if u.scheme == "file" and u.netloc in ("", "localhost"):
+        return u.path
     raise ValueError(
         f"index sidecars use driver-local pyarrow I/O, but index_path "
-        f"{path!r} has scheme {m.group(1)!r}: build the index on a "
+        f"{path!r} is not a local path: build the index on a "
         "driver-local path (or mount), then publish it to the remote "
         "filesystem as a unit — a remote index_path would silently "
         "write sidecars locally while the codes go to the remote FS"
@@ -168,92 +205,154 @@ def _bounded_query_rows(
     return q.collect()
 
 
+def _probe_lists(qm, cents, n_probe):
+    """(queries x lists) boolean probe mask: each unit query's
+    ``n_probe`` nearest coarse lists by ROUNDED dot, stable sort so
+    ties go to the lowest list id (the oracle's (dot DESC, list_id)
+    window)."""
+    order = np.argsort(-_nround(qm @ cents.T), axis=1, kind="stable")[:, :n_probe]
+    mask = np.zeros((len(qm), len(cents)), dtype=bool)
+    np.put_along_axis(mask, order, True, axis=1)
+    return mask
 
-def _topk_scorer(q_ids, qm, k, rf, exclude_self=True, q_labels=None):
-    """Shared ``mapInPandas`` scorer for the bounded-query BLAS top-k
-    scan (:func:`cosine_topk_bruteforce` / :func:`hard_negative_topk`):
-    per-partition heaps of the best (cos, neighbor) per query, each
-    Arrow batch scored by one matmul, candidates rounded half-away
-    BEFORE compare. With ``q_labels`` the corpus frame must also carry
-    the neighbor label as ``nl``: same-label columns are masked out
-    vectorized (hard negatives — the self row masks for free) and the
-    label rides through the heap into the output. The returned closure
-    is self-contained (pickles by value; no package refs)."""
+
+def _list_ids(raw, cents):
+    """IVF list assignment of raw vectors: argmax of the ROUNDED dot of
+    the unit vector with each centroid, first index (lowest list id)
+    on ties."""
+    return _nround(_unit_rows(raw) @ cents.T).argmax(axis=1).astype("int32")
+
+
+def _topk_scorer(q_ids, score, keep, score_col="cos_sim", exclude_self=True,
+                 q_labels=None, probes=None):
+    """The ONE per-partition heap scan of every top-k method: a
+    ``mapInPandas`` function keeping, per query, the best ``keep``
+    (score desc, neighbor id asc) candidates of its partition.
+
+    ``score(pdf)`` is the codec: one Arrow batch of the corpus frame
+    (``neighbor_id`` + payload) -> rounded (queries x rows) scores.
+    Only rows that can beat (or tie) the worst kept candidate enter
+    the Python loop; the masks are vectorized: the self row
+    (``exclude_self``), same-label rows (``q_labels``: the frame also
+    carries ``nl`` and the label rides through to ``neighbor_label``)
+    and rows outside the query's probed lists (``probes``, a
+    (queries x lists) boolean mask against the frame's ``list_id``)."""
 
     def score_partition(batches):
         import heapq
 
-        import numpy as np
         import pandas as pd
 
         heaps = {int(qid): [] for qid in q_ids}
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            cm = np.array(list(pdf["cv"]), dtype=np.float64)
-            cm = cm / np.maximum(np.linalg.norm(cm, axis=1, keepdims=True), 1e-12)
-            t = qm @ cm.T
-            # half-AWAY-from-zero (functions.money.dround twin): np.round
-            # is half-to-even and can disagree with the oracle on .5 ties
-            sims = np.sign(t) * np.floor(np.abs(t) * rf + 0.5) / rf
+            sims = score(pdf)
             nids = pdf["neighbor_id"].to_numpy()
-            nlabels = pdf["nl"].to_numpy() if q_labels is not None else None
+            nlabels = None if q_labels is None else pdf["nl"].to_numpy()
+            lids = None if probes is None else pdf["list_id"].to_numpy()
             for qi, qid in enumerate(q_ids):
                 heap = heaps[int(qid)]
                 s = sims[qi]
-                # vectorized prefilter: only items that can beat (or tie)
-                # the worst kept candidate — and, under a label mask,
-                # carry a DIFFERENT label — enter the Python loop
-                if q_labels is not None:
-                    elig = nlabels != q_labels[qi]
-                    if len(heap) >= k:
-                        elig &= s >= heap[0][0]
-                    idxs = np.nonzero(elig)[0]
-                elif len(heap) >= k:
-                    idxs = np.nonzero(s >= heap[0][0])[0]
+                if len(heap) >= keep:
+                    elig = s >= heap[0][0]
                 else:
-                    idxs = range(len(nids))
-                for ci in idxs:
-                    nid = int(nids[ci])
-                    if exclude_self and nid == qid:
-                        continue
-                    # min-heap keyed (cos asc, neighbor desc): root is the
-                    # WORST kept candidate under (cos desc, neighbor asc);
-                    # nid is unique so a trailing label never compares
-                    item = (
-                        (float(s[ci]), -nid)
-                        if nlabels is None
-                        else (float(s[ci]), -nid, int(nlabels[ci]))
-                    )
-                    if len(heap) < k:
+                    elig = np.ones(len(s), dtype=bool)
+                if nlabels is not None:
+                    elig &= nlabels != q_labels[qi]
+                if lids is not None:
+                    elig &= probes[qi][lids]
+                if exclude_self:
+                    elig &= nids != qid
+                for ci in np.nonzero(elig)[0]:
+                    # min-heap keyed (score asc, neighbor desc): root is
+                    # the WORST kept candidate under (score desc,
+                    # neighbor asc); nid is unique so a trailing label
+                    # never compares
+                    item = (float(s[ci]), -int(nids[ci]))
+                    if nlabels is not None:
+                        item += (int(nlabels[ci]),)
+                    if len(heap) < keep:
                         heapq.heappush(heap, item)
                     elif item > heap[0]:
                         heapq.heapreplace(heap, item)
-        if q_labels is None:
-            out = [
-                (int(qid), -it[1], it[0])
-                for qid, heap in heaps.items()
-                for it in heap
-            ]
-            yield pd.DataFrame(
-                out, columns=["vec_id", "neighbor_id", "cos_sim"]
-            ).astype(
-                {"vec_id": "int64", "neighbor_id": "int64", "cos_sim": "float64"}
-            )
-        else:
-            out = [
-                (int(qid), -it[1], it[2], it[0])
-                for qid, heap in heaps.items()
-                for it in heap
-            ]
-            yield pd.DataFrame(
-                out, columns=["vec_id", "neighbor_id", "neighbor_label", "cos_sim"]
-            ).astype(
-                {"vec_id": "int64", "neighbor_id": "int64",
-                 "neighbor_label": "int32", "cos_sim": "float64"}
-            )
+        types = {"vec_id": "int64", "neighbor_id": "int64"}
+        if q_labels is not None:
+            types["neighbor_label"] = "int32"
+        types[score_col] = "float64"
+        out = [(qid, -it[1], *it[2:], it[0]) for qid, heap in heaps.items() for it in heap]
+        yield pd.DataFrame(out, columns=list(types)).astype(types)
 
     return score_partition
+
+
+def _ann_search(corpus, qrows, score, k, *, rerank=None, float_corpus=None,
+                id_col="vec_id", vec_col="embedding", round_scale=8,
+                probes=None, exclude_self=True, q_labels=None):
+    """The search skeleton shared by every top-k method: the heap scan
+    of ``corpus`` under codec ``score``, then the final cut.
+
+    ``rerank=None`` means the codec scores are final (float cosine):
+    a global top-k window ranks them. An int means they are quantized:
+    the heaps keep ``k + rerank`` candidates, a global top-(k+rerank)
+    ADC cut follows — every partition heap holds a superset of its
+    share of that list, so the cut is partition-independent — and the
+    survivors re-rank exactly against ``float_corpus``
+    (:func:`_adc_exact_rerank`)."""
+    keep = k if rerank is None else k + rerank
+    score_col = "cos_sim" if rerank is None else "adc"
+    label = [] if q_labels is None else ["neighbor_label"]
+    candidates = corpus.mapInPandas(
+        _topk_scorer(
+            np.array([r[0] for r in qrows], dtype=np.int64), score, keep,
+            score_col, exclude_self, q_labels, probes,
+        ),
+        schema="vec_id bigint, neighbor_id bigint, "
+        + ("" if q_labels is None else "neighbor_label int, ")
+        + f"{score_col} double",
+    )
+    order = [F.col(score_col).desc(), F.col("neighbor_id").asc()]
+    if rerank is None:
+        return top_k_per_group(
+            candidates, partition_by=["vec_id"], order_by=order, k=k,
+            rank_col="rank", keep_rank=True,
+        ).select(
+            "vec_id", F.col("rank").cast("int").alias("rank"), "neighbor_id",
+            *label, "cos_sim",
+        )
+    cut = top_k_per_group(candidates, partition_by=["vec_id"], order_by=order, k=keep)
+    return _adc_exact_rerank(
+        corpus.sparkSession, cut, qrows, float_corpus, id_col, vec_col, k,
+        round_scale, cand_bound=len(qrows) * keep,
+    )
+
+
+def _float_corpus(embeddings, id_col, vec_col, *extra):
+    """The flat scan's corpus frame: (neighbor_id, *extra, cv)."""
+    return embeddings.select(
+        F.col(id_col).alias("neighbor_id"), *extra, F.col(vec_col).alias("cv")
+    )
+
+
+def _cosine_codec(qm, round_scale):
+    """Float codec: rounded cosine of the unit query matrix ``qm``
+    against the batch's ``cv`` vectors — one BLAS matmul per batch."""
+
+    def score(pdf):
+        return _nround(qm @ _unit_rows(_batch_matrix(pdf["cv"])).T, round_scale)
+
+    return score
+
+
+def _codes_of(pdf, encode, *args):
+    """A batch's uint8 code matrix: the ``codes`` binary cells
+    of a materialized index (one ``np.frombuffer`` over the batch), or
+    — in the flat scan — the ``cv`` float vectors run through
+    ``encode(raw, *args)``, the same function the index build wrote
+    them with."""
+    if "codes" in pdf:
+        return np.frombuffer(b"".join(pdf["codes"]), dtype=np.uint8).reshape(len(pdf), -1)
+    return encode(_batch_matrix(pdf["cv"]), *args)
 
 
 def cosine_topk_bruteforce(
@@ -277,12 +376,11 @@ def cosine_topk_bruteforce(
     differ, so dropping a corpus row that merely shares a query's id
     number would be wrong.
 
-    Scale design: the (bounded) query set is collected once and shipped
-    to executors as a unit-normalized float64 matrix inside the scoring
-    closure; the corpus NEVER leaves its partitions — each partition
-    streams Arrow batches through one BLAS matmul (``Q @ C.T``) and
-    reduces to a per-partition top-k heap, so the shuffle carries only
-    ``partitions x |queries| x k`` candidate rows into the final global
+    Scale design: the skeleton with the float codec and no probe — the
+    bounded query set ships to executors as a unit-normalized float64
+    matrix, each corpus partition streams Arrow batches through one
+    BLAS matmul (``Q @ C.T``) into the per-partition heaps, and only
+    ``partitions x |queries| x k`` candidates reach the final global
     window. Brute force stays exact at any corpus size; only the query
     set must fit on the driver (it must be small for O(Q x N) to make
     sense at all).
@@ -290,34 +388,17 @@ def cosine_topk_bruteforce(
     ``cos_sim`` is rounded (default 8dp) BEFORE ranking with a
     neighbor-id tie-break, so ordering is reproducible across engines.
     """
-    import numpy as np
-
     qrows = _bounded_query_rows(
         queries if queries is not None else embeddings,
         id_col, vec_col, query_filter, max_queries, "cosine_topk_bruteforce",
     )
     if not qrows:
-        schema = "vec_id bigint, rank int, neighbor_id bigint, cos_sim double"
-        return embeddings.sparkSession.createDataFrame([], schema)
-    q_ids = np.array([r[0] for r in qrows], dtype=np.int64)
-    qm = np.array([r[1] for r in qrows], dtype=np.float64)
-    qm = qm / np.maximum(np.linalg.norm(qm, axis=1, keepdims=True), 1e-12)
-
-    rf = float(10**round_scale)
-    corpus = embeddings.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"))
-
-    candidates = corpus.mapInPandas(
-        _topk_scorer(q_ids, qm, k, rf, exclude_self=exclude_self),
-        schema="vec_id bigint, neighbor_id bigint, cos_sim double",
+        return embeddings.sparkSession.createDataFrame([], _TOPK_SCHEMA)
+    qm = _unit_rows(_batch_matrix(r[1] for r in qrows))
+    return _ann_search(
+        _float_corpus(embeddings, id_col, vec_col), qrows,
+        _cosine_codec(qm, round_scale), k, exclude_self=exclude_self,
     )
-    return top_k_per_group(
-        candidates,
-        partition_by=["vec_id"],
-        order_by=[F.col("cos_sim").desc(), F.col("neighbor_id").asc()],
-        k=k,
-        rank_col="rank",
-        keep_rank=True,
-    ).select("vec_id", F.col("rank").cast("int").alias("rank"), "neighbor_id", "cos_sim")
 
 
 def hard_negative_topk(
@@ -338,14 +419,10 @@ def hard_negative_topk(
     cos_sim); reference parity: the reference has no ANN surface, this
     extends the training-data family per SURVEY §2.
 
-    Scale design: identical to :func:`cosine_topk_bruteforce` — the
-    bounded query set ships inside the scoring closure as a
-    unit-normalized float64 matrix PLUS a label vector; the corpus
-    never leaves its partitions, each Arrow batch is scored by one BLAS
-    matmul with the same-label columns masked out vectorized, and the
-    shuffle carries only ``partitions x |queries| x k`` candidates into
-    the final global window. The self-row is excluded for free (it
-    always shares the query's label).
+    Scale design: :func:`cosine_topk_bruteforce`'s skeleton plus a
+    query label vector — the heap scan masks same-label columns out
+    vectorized, so the self row is excluded for free (it always shares
+    the query's label).
 
     Label contract: ``label_col`` must be an INTEGRAL column
     (byte/short/int/long) with no nulls among the queries — the output
@@ -357,8 +434,6 @@ def hard_negative_topk(
     ``cos_sim`` is rounded (default 8dp) BEFORE ranking with a
     neighbor-id tie-break, so ordering is reproducible across engines.
     """
-    import numpy as np
-
     from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
 
     ltype = embeddings.schema[label_col].dataType
@@ -372,44 +447,22 @@ def hard_negative_topk(
         embeddings, id_col, vec_col, query_filter, max_queries,
         "hard_negative_topk", extra_cols=(label_col,),
     )
-    schema = (
-        "vec_id bigint, rank int, neighbor_id bigint, "
-        "neighbor_label int, cos_sim double"
-    )
     if not qrows:
-        return embeddings.sparkSession.createDataFrame([], schema)
+        return embeddings.sparkSession.createDataFrame(
+            [], "vec_id bigint, rank int, neighbor_id bigint, "
+            "neighbor_label int, cos_sim double",
+        )
     if any(r[2] is None for r in qrows):
         raise ValueError(
             f"hard_negative_topk: null {label_col!r} among query rows — "
             "the different-label mask is undefined for null labels; "
             "filter or impute them first"
         )
-    q_ids = np.array([r[0] for r in qrows], dtype=np.int64)
-    q_labels = [int(r[2]) for r in qrows]
-    qm = np.array([r[1] for r in qrows], dtype=np.float64)
-    qm = qm / np.maximum(np.linalg.norm(qm, axis=1, keepdims=True), 1e-12)
-
-    rf = float(10**round_scale)
-    corpus = embeddings.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(label_col).alias("nl"),
-        F.col(vec_col).alias("cv"),
-    )
-
-    candidates = corpus.mapInPandas(
-        _topk_scorer(q_ids, qm, k, rf, exclude_self=False, q_labels=q_labels),
-        schema="vec_id bigint, neighbor_id bigint, neighbor_label int, cos_sim double",
-    )
-    return top_k_per_group(
-        candidates,
-        partition_by=["vec_id"],
-        order_by=[F.col("cos_sim").desc(), F.col("neighbor_id").asc()],
-        k=k,
-        rank_col="rank",
-        keep_rank=True,
-    ).select(
-        "vec_id", F.col("rank").cast("int").alias("rank"),
-        "neighbor_id", "neighbor_label", "cos_sim",
+    qm = _unit_rows(_batch_matrix(r[1] for r in qrows))
+    return _ann_search(
+        _float_corpus(embeddings, id_col, vec_col, F.col(label_col).alias("nl")),
+        qrows, _cosine_codec(qm, round_scale), k, exclude_self=False,
+        q_labels=[int(r[2]) for r in qrows],
     )
 
 
@@ -430,14 +483,12 @@ def cosine_near_dup_pairs(
 
     Scale design: one side of the N x N comparison is shipped to
     executors as a unit-normalized float64 matrix; the other side
-    streams through its partitions, each Arrow batch scored by one BLAS
-    matmul and mask-filtered to >= threshold before anything is
-    materialized. Exact all-pairs is inherently O(N^2) — this keeps the
-    constant BLAS-sized; at open-corpus scale run the same scoring
-    within LSH buckets (:func:`hyperplane_lsh_topk`) instead.
+    streams through its partitions, each Arrow batch scored by the
+    float codec (one BLAS matmul) and mask-filtered to >= threshold
+    before anything is materialized. Exact all-pairs is inherently
+    O(N^2) — this keeps the constant BLAS-sized; at open-corpus scale
+    run the same scoring within LSH buckets instead.
     """
-    import numpy as np
-
     rows = embeddings.select(F.col(id_col), F.col(vec_col)).limit(max_corpus_rows + 1).collect()
     if len(rows) > max_corpus_rows:
         raise ValueError(
@@ -446,24 +497,16 @@ def cosine_near_dup_pairs(
             "lsh_near_dup_pairs for open-ended corpora"
         )
     ids = np.array([r[0] for r in rows], dtype=np.int64)
-    m = np.array([r[1] for r in rows], dtype=np.float64)
-    m = m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
-
-    rf = float(10**round_scale)
+    score = _cosine_codec(_unit_rows(_batch_matrix(r[1] for r in rows)), round_scale)
     corpus = embeddings.select(F.col(id_col).alias("vec_b"), F.col(vec_col).alias("cv"))
 
     def score_partition(batches):
-        import numpy as np
         import pandas as pd
 
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            cm = np.array(list(pdf["cv"]), dtype=np.float64)
-            cm = cm / np.maximum(np.linalg.norm(cm, axis=1, keepdims=True), 1e-12)
-            t = m @ cm.T
-            # half-away-from-zero rounding (dround twin)
-            sims = np.sign(t) * np.floor(np.abs(t) * rf + 0.5) / rf
+            sims = score(pdf)
             bids = pdf["vec_b"].to_numpy()
             # a < b keeps each unordered pair exactly once (the a-side
             # runs over the full matrix, the b-side over this batch)
@@ -521,8 +564,6 @@ def lsh_near_dup_pairs(
     buckets), or text-side :func:`~..llm.dedup.jaccard_pairs` whose
     prefix filter is exact and sub-quadratic at high thresholds.
     """
-    import numpy as np
-
     p_random = 0.5**band_planes
     random_pair_frac = 1.0 - (1.0 - p_random) ** n_bands
     if random_pair_frac > 0.05:
@@ -553,20 +594,18 @@ def lsh_near_dup_pairs(
     dim = len(row[0])
     rng = np.random.default_rng(seed)
     planes = rng.standard_normal((n_bands * band_planes, dim))
-    rf = float(10**round_scale)
     nb, bp = n_bands, band_planes
 
     src = embeddings.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v"))
 
     def assign_buckets(batches):
-        import numpy as np
         import pandas as pd
 
         weights = (2 ** np.arange(bp)).astype(np.int64)
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            m = np.array(list(pdf["v"]), dtype=np.float64)
+            m = _batch_matrix(pdf["v"])
             bits = (m @ planes.T >= 0).astype(np.int64)  # (n, nb*bp)
             buckets = bits.reshape(len(m), nb, bp) @ weights  # (n, nb)
             ids = pdf["vec_id"].to_numpy()
@@ -585,17 +624,14 @@ def lsh_near_dup_pairs(
     )
 
     def score_bucket(pdf):
-        import numpy as np
         import pandas as pd
 
         if len(pdf) < 2:
             return pd.DataFrame({"vec_a": [], "vec_b": [], "cos_sim": []}).astype(
                 {"vec_a": "int64", "vec_b": "int64", "cos_sim": "float64"}
             )
-        m = np.array(list(pdf["v"]), dtype=np.float64)
-        m = m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
-        t = m @ m.T
-        sims = np.sign(t) * np.floor(np.abs(t) * rf + 0.5) / rf  # dround twin
+        m = _unit_rows(_batch_matrix(pdf["v"]))
+        sims = _nround(m @ m.T, round_scale)
         ids = pdf["vec_id"].to_numpy()
         ai, bi = np.nonzero((sims >= threshold) & (ids[:, None] < ids[None, :]))
         return pd.DataFrame(
@@ -627,8 +663,6 @@ def _write_centroid_sidecar(path: str, cents) -> None:
 def _read_centroid_sidecar(path: str):
     """centroid matrix (np float64, indexed by list_id) from the
     sidecar — driver-side, no Spark job."""
-    import numpy as np
-
     rows = _sidecar_rows(path)
     cents = np.zeros((len(rows), len(rows[0]["centroid"])))
     for r in rows:
@@ -636,17 +670,29 @@ def _read_centroid_sidecar(path: str):
     return cents
 
 
-def _train_centroids(embeddings, vec_col, n_lists, seed, train_sample):
-    """Seeded k-means coarse quantizer: a few Lloyd iterations on cosine
-    (unit vectors -> dot argmax) over a bounded driver sample. Returns a
-    unit-normalized (n_lists, dim) ndarray — small enough to ship into
-    closures by value."""
-    import numpy as np
+def _ordered_sample(embeddings, id_col, vec_col, n):
+    """The ``n`` LOWEST-id vectors, unit-normalized — an ordered take
+    (TakeOrderedAndProject, bounded cost), so a quantizer trained on it
+    never depends on partition layout the way an un-ordered ``limit``
+    would."""
+    rows = (
+        embeddings.select(F.col(id_col), F.col(vec_col))
+        .orderBy(F.col(id_col))
+        .limit(n)
+        .select(F.col(vec_col))
+        .collect()
+    )
+    return _unit_rows(_batch_matrix(r[0] for r in rows))
 
+
+def _train_centroids(embeddings, id_col, vec_col, n_lists, seed, train_sample):
+    """Seeded k-means coarse quantizer: a few Lloyd iterations on cosine
+    (unit vectors -> dot argmax) over the ``train_sample`` lowest-id
+    vectors (:func:`_ordered_sample`). Returns a unit-normalized
+    (n_lists, dim) ndarray — small enough to ship into closures by
+    value."""
     rng = np.random.default_rng(seed)
-    sample = embeddings.select(F.col(vec_col)).limit(train_sample).collect()
-    xs = np.array([r[0] for r in sample], dtype=np.float64)
-    xs = xs / np.maximum(np.linalg.norm(xs, axis=1, keepdims=True), 1e-12)
+    xs = _ordered_sample(embeddings, id_col, vec_col, train_sample)
     cents = xs[rng.choice(len(xs), size=min(n_lists, len(xs)), replace=False)]
     for _ in range(5):
         assign = (xs @ cents.T).argmax(axis=1)
@@ -658,109 +704,96 @@ def _train_centroids(embeddings, vec_col, n_lists, seed, train_sample):
     return cents
 
 
-def ivf_topk(
-    embeddings: DataFrame,
-    k: int = 5,
-    n_lists: int = 16,
-    n_probe: int = 4,
-    query_filter: Column | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_scale: int = 8,
-    seed: int = 42,
-    train_sample: int = 2048,
-    max_queries: int | None = None,
-) -> DataFrame:
-    """IVF (inverted-file) approximate top-k — index-FREE form: one-shot
-    search where the corpus is scanned once and every vector's list
-    assignment is recomputed at score time. Use this when the corpus is
-    not worth materializing; for repeated searches over a large corpus,
-    :func:`ivf_build_index` + :func:`ivf_search` persist the assignment
-    as a physical partition key so a probe READS only ``n_probe /
-    n_lists`` of the data (partition pruning at the scan) instead of
-    scanning everything and discarding non-probed rows.
+def _coarse_centroids(embeddings, index_path, id_col, vec_col, n_lists, seed,
+                      train_sample, centroids):
+    """The IVF coarse quantizer of an index build — ``centroids`` if
+    given, else :func:`_train_centroids` — written to the
+    ``{index_path}/centroids`` sidecar and returned."""
+    if centroids is not None:
+        cents = np.asarray(centroids, dtype=np.float64)
+    else:
+        cents = _train_centroids(embeddings, id_col, vec_col, n_lists, seed, train_sample)
+    _write_centroid_sidecar(f"{index_path}/centroids", cents)
+    return cents
 
-    Train: k-means (a few Lloyd iterations, seeded, on a bounded driver
-    sample) -> ``n_lists`` centroids. Search: each query keeps scores
-    only from its ``n_probe`` nearest inverted lists. All scoring is
-    BLAS matmul in ``mapInPandas``; only centroid training touches the
-    driver.
-    """
-    import numpy as np
 
-    cents = _train_centroids(embeddings, vec_col, n_lists, seed, train_sample)
+def _write_index(embeddings, id_col, vec_col, path, cents, encode=None, *args):
+    """One Arrow pass writing an index's data files to ``path`` as
+    (vec_id, payload[, list_id]), PARTITIONED BY ``list_id`` when
+    coarse centroids ``cents`` are given (:func:`_list_ids`). The
+    payload is the float vector as ``embedding`` (IVF lists) or, with
+    ``encode``, its ``encode(raw, *args)`` uint8 row stored as one
+    ``codes`` binary cell — ``dim`` (SQ8) or ``m`` (PQ) bytes."""
 
-    qrows = _bounded_query_rows(
-        embeddings, id_col, vec_col, query_filter, max_queries, "ivf_topk"
-    )
-    if not qrows:
-        schema = "vec_id bigint, rank int, neighbor_id bigint, cos_sim double"
-        return embeddings.sparkSession.createDataFrame([], schema)
-    q_ids = np.array([r[0] for r in qrows], dtype=np.int64)
-    qm = np.array([r[1] for r in qrows], dtype=np.float64)
-    qm = qm / np.maximum(np.linalg.norm(qm, axis=1, keepdims=True), 1e-12)
-    # each query probes its n_probe nearest lists (rounded key + stable
-    # sort: deterministic lowest-list-id tie-break, same as ivf_search)
-    q_probes = np.argsort(-_nround(qm @ cents.T), axis=1, kind="stable")[:, :n_probe]
-
-    rf = float(10**round_scale)
-    corpus = embeddings.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"))
-
-    def score_partition(batches):
-        import heapq
-
-        import numpy as np
+    def write_batches(batches):
         import pandas as pd
 
-        heaps = {int(qid): [] for qid in q_ids}
-        probe_sets = [set(map(int, row)) for row in q_probes]
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            cm = np.array(list(pdf["cv"]), dtype=np.float64)
-            cm = cm / np.maximum(np.linalg.norm(cm, axis=1, keepdims=True), 1e-12)
-            c_assign = _nround(cm @ cents.T).argmax(axis=1)
-            t = qm @ cm.T
-            # half-AWAY-from-zero (functions.money.dround twin): np.round
-            # is half-to-even and can disagree with the oracle on .5 ties
-            sims = np.sign(t) * np.floor(np.abs(t) * rf + 0.5) / rf
-            nids = pdf["neighbor_id"].to_numpy()
-            for qi, qid in enumerate(q_ids):
-                heap = heaps[int(qid)]
-                probes = probe_sets[qi]
-                s = sims[qi]
-                floor = heap[0][0] if len(heap) >= k else -2.0
-                for ci in np.nonzero(s >= floor)[0]:
-                    if int(c_assign[ci]) not in probes:
-                        continue  # outside the probed inverted lists
-                    nid = int(nids[ci])
-                    if nid == qid:
-                        continue
-                    item = (float(s[ci]), -nid)
-                    if len(heap) < k:
-                        heapq.heappush(heap, item)
-                    elif item > heap[0]:
-                        heapq.heapreplace(heap, item)
-        out = [
-            (int(qid), -neg_nid, cos)
-            for qid, heap in heaps.items()
-            for cos, neg_nid in heap
-        ]
-        yield pd.DataFrame(out, columns=["vec_id", "neighbor_id", "cos_sim"]).astype(
-            {"vec_id": "int64", "neighbor_id": "int64", "cos_sim": "float64"}
-        )
+            raw = _batch_matrix(pdf["embedding"])
+            out = {"vec_id": pdf["vec_id"]}
+            if encode is None:
+                out["embedding"] = pdf["embedding"]
+            else:
+                out["codes"] = [row.tobytes() for row in encode(raw, *args)]
+            if cents is not None:
+                out["list_id"] = _list_ids(raw, cents)
+            yield pd.DataFrame(out)
 
-    candidates = corpus.mapInPandas(
-        score_partition, schema="vec_id bigint, neighbor_id bigint, cos_sim double"
+    payload = "embedding array<double>" if encode is None else "codes binary"
+    writer = (
+        embeddings.select(
+            F.col(id_col).cast("bigint").alias("vec_id"),
+            F.col(vec_col).cast("array<double>").alias("embedding"),
+        )
+        .mapInPandas(
+            write_batches,
+            schema=f"vec_id bigint, {payload}" + ("" if cents is None else ", list_id int"),
+        )
+        .write.mode("overwrite")
     )
-    return top_k_per_group(
-        candidates,
-        partition_by=["vec_id"],
-        order_by=[F.col("cos_sim").desc(), F.col("neighbor_id").asc()],
-        k=k,
-        rank_col="rank",
-        keep_rank=True,
-    ).select("vec_id", F.col("rank").cast("int").alias("rank"), "neighbor_id", "cos_sim")
+    (writer if cents is None else writer.partitionBy("list_id")).parquet(path)
+
+
+def _open_index(spark, index_path, data, qm, n_probe, op_name):
+    """``{index_path}/{data}`` as the skeleton's corpus frame
+    (``neighbor_id``, ``cv`` or ``codes``[, ``list_id``]) plus the
+    probe mask. On a list-partitioned layout the unit queries ``qm``
+    probe their ``n_probe`` (default 4) nearest lists and the probe
+    UNION is pushed into the scan as a partition filter — non-probed
+    list directories never open. ``n_probe`` on an un-listed index
+    raises, as does a ``codes`` column that is not binary."""
+    from pyspark.sql.types import BinaryType
+
+    corpus = (
+        spark.read.parquet(f"{index_path}/{data}")
+        .withColumnRenamed("vec_id", "neighbor_id")
+        .withColumnRenamed("embedding", "cv")
+    )
+    if "codes" in corpus.columns and not isinstance(
+        corpus.schema["codes"].dataType, BinaryType
+    ):
+        raise ValueError(
+            f"{op_name}: {index_path}/codes holds "
+            f"{corpus.schema['codes'].dataType.simpleString()} codes, but the "
+            "scan reads one binary cell per vector — rebuild the "
+            "index with the current build function"
+        )
+    if "list_id" not in corpus.columns:
+        if n_probe is not None:
+            raise ValueError(
+                f"{op_name}: n_probe given but the index has no list_id "
+                f"partitions — rebuild with "
+                f"{op_name.replace('search', 'build_index')}(n_lists=...)"
+            )
+        return corpus, None
+    probes = _probe_lists(
+        qm, _read_centroid_sidecar(f"{index_path}/centroids"),
+        4 if n_probe is None else n_probe,
+    )
+    union = np.flatnonzero(probes.any(axis=0)).tolist()
+    return corpus.filter(F.col("list_id").isin(union)), probes
 
 
 def ivf_build_index(
@@ -785,51 +818,16 @@ def ivf_build_index(
     value — partition-parallel, no shuffle beyond the partitioned
     write. Returns the centroid matrix for convenience.
 
-    ``centroids`` (an (n_lists, dim) array-like) skips k-means training
-    and quantizes against the given coarse centroids — e.g. seed
-    vectors chosen by a rule an external oracle can replay exactly
-    (the catalog's hash-checked IVF entry passes the unit-normalized
-    lowest-id corpus vectors)."""
-    import numpy as np
-
-    if centroids is not None:
-        cents = np.asarray(centroids, dtype=np.float64)
-    else:
-        cents = _train_centroids(embeddings, vec_col, n_lists, seed, train_sample)
-    _write_centroid_sidecar(f"{index_path}/centroids", cents)
-
-    cents_ship = cents.copy()
-
-    def assign(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            m = np.array(list(pdf["embedding"]), dtype=np.float64)
-            m = m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
-            # assignment argmax on the ROUNDED dot (8dp): ties break
-            # first-index = lowest list_id, matching the oracle's
-            # (dot DESC, list_id) window
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"],
-                    "embedding": pdf["embedding"],
-                    "list_id": _nround(m @ cents_ship.T).argmax(axis=1).astype("int32"),
-                }
-            )
-
-    (
-        embeddings.select(
-            F.col(id_col).cast("bigint").alias("vec_id"),
-            F.col(vec_col).cast("array<double>").alias("embedding"),
-        )
-        .mapInPandas(assign, schema="vec_id bigint, embedding array<double>, list_id int")
-        .write.partitionBy("list_id")
-        .mode("overwrite")
-        .parquet(f"{index_path}/lists")
+    Train: k-means (a few seeded Lloyd iterations on the
+    ``train_sample`` lowest-id vectors). ``centroids`` (an (n_lists,
+    dim) array-like) skips training and quantizes against the given
+    coarse centroids — e.g. seed vectors chosen by a rule an external
+    oracle can replay exactly (the catalog's hash-checked IVF entry
+    passes the unit-normalized lowest-id corpus vectors)."""
+    cents = _coarse_centroids(
+        embeddings, index_path, id_col, vec_col, n_lists, seed, train_sample, centroids
     )
+    _write_index(embeddings, id_col, vec_col, f"{index_path}/lists", cents)
     return cents
 
 
@@ -845,98 +843,23 @@ def ivf_search(
     max_queries: int = 10_000,
 ) -> DataFrame:
     """Search a materialized IVF index (:func:`ivf_build_index`): the
-    scan is FILTERED to the union of every query's ``n_probe`` nearest
-    lists — ``list_id IN (...)`` is a partition filter, so non-probed
-    list directories are never read (plan-asserted in tests). Each
-    query then keeps scores only from its own probed lists (the row's
-    stored ``list_id`` — no re-assignment at search time).
+    skeleton with the float codec over the probed lists. The scan is
+    FILTERED to the union of every query's ``n_probe`` nearest lists —
+    ``list_id IN (...)`` is a partition filter, so non-probed list
+    directories are never read (plan-asserted in tests). Each query
+    then keeps scores only from its own probed lists (the row's stored
+    ``list_id`` — no re-assignment at search time). Probing every list
+    equals :func:`cosine_topk_bruteforce`.
 
     ``queries`` is a bounded DataFrame of (id_col, vec_col);
     ``max_queries`` guards the driver collect the same way the other
     similarity operators do."""
-    import numpy as np
-
-    cents = _read_centroid_sidecar(f"{index_path}/centroids")
-
-    qrows = queries.select(F.col(id_col), F.col(vec_col)).limit(max_queries + 1).collect()
-    if len(qrows) > max_queries:
-        raise ValueError(
-            f"ivf_search: query set exceeds max_queries={max_queries}; "
-            "tighten the queries DataFrame or raise the cap deliberately"
-        )
+    qrows = _bounded_query_rows(queries, id_col, vec_col, None, max_queries, "ivf_search")
     if not qrows:
-        return spark.createDataFrame(
-            [], "vec_id bigint, rank int, neighbor_id bigint, cos_sim double"
-        )
-    q_ids = np.array([r[0] for r in qrows], dtype=np.int64)
-    qm = np.array([r[1] for r in qrows], dtype=np.float64)
-    qm = qm / np.maximum(np.linalg.norm(qm, axis=1, keepdims=True), 1e-12)
-    # probe ranking on the ROUNDED dot; stable sort so ties break by
-    # lowest list_id like the oracle's (dot DESC, list_id) window
-    q_probes = np.argsort(-_nround(qm @ cents.T), axis=1, kind="stable")[:, :n_probe]
-    probe_union = sorted({int(p) for row in q_probes for p in row})
-
-    corpus = (
-        spark.read.parquet(f"{index_path}/lists")
-        .filter(F.col("list_id").isin(probe_union))  # partition pruning
-        .select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cv"), "list_id")
-    )
-    rf = float(10**round_scale)
-    k_ = k
-
-    def score_partition(batches):
-        import heapq
-
-        import numpy as np
-        import pandas as pd
-
-        heaps = {int(qid): [] for qid in q_ids}
-        probe_sets = [set(map(int, row)) for row in q_probes]
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            cm = np.array(list(pdf["cv"]), dtype=np.float64)
-            cm = cm / np.maximum(np.linalg.norm(cm, axis=1, keepdims=True), 1e-12)
-            lids = pdf["list_id"].to_numpy()
-            t = qm @ cm.T
-            sims = np.sign(t) * np.floor(np.abs(t) * rf + 0.5) / rf  # dround twin
-            nids = pdf["neighbor_id"].to_numpy()
-            for qi, qid in enumerate(q_ids):
-                heap = heaps[int(qid)]
-                probes = probe_sets[qi]
-                s = sims[qi]
-                floor = heap[0][0] if len(heap) >= k_ else -2.0
-                for ci in np.nonzero(s >= floor)[0]:
-                    if int(lids[ci]) not in probes:
-                        continue  # another query's probe, not this one's
-                    nid = int(nids[ci])
-                    if nid == qid:
-                        continue
-                    item = (float(s[ci]), -nid)
-                    if len(heap) < k_:
-                        heapq.heappush(heap, item)
-                    elif item > heap[0]:
-                        heapq.heapreplace(heap, item)
-        out = [
-            (int(qid), -neg_nid, cos)
-            for qid, heap in heaps.items()
-            for cos, neg_nid in heap
-        ]
-        yield pd.DataFrame(out, columns=["vec_id", "neighbor_id", "cos_sim"]).astype(
-            {"vec_id": "int64", "neighbor_id": "int64", "cos_sim": "float64"}
-        )
-
-    candidates = corpus.mapInPandas(
-        score_partition, schema="vec_id bigint, neighbor_id bigint, cos_sim double"
-    )
-    return top_k_per_group(
-        candidates,
-        partition_by=["vec_id"],
-        order_by=[F.col("cos_sim").desc(), F.col("neighbor_id").asc()],
-        k=k,
-        rank_col="rank",
-        keep_rank=True,
-    ).select("vec_id", F.col("rank").cast("int").alias("rank"), "neighbor_id", "cos_sim")
+        return spark.createDataFrame([], _TOPK_SCHEMA)
+    qm = _unit_rows(_batch_matrix(r[1] for r in qrows))
+    corpus, probes = _open_index(spark, index_path, "lists", qm, n_probe, "ivf_search")
+    return _ann_search(corpus, qrows, _cosine_codec(qm, round_scale), k, probes=probes)
 
 
 def ann_recall_summary(
@@ -1105,24 +1028,12 @@ def _train_pq_codebooks(embeddings, id_col, vec_col, m, ksub, seed, train_sample
     """Seeded per-subspace k-means codebooks (product quantization): the
     vector space splits into ``m`` contiguous subspaces; each gets its
     own ``ksub``-centroid L2 codebook trained with a few Lloyd
-    iterations on a bounded driver sample of UNIT-normalized vectors.
-    The sample is the ``train_sample`` LOWEST ids (TakeOrderedAndProject,
-    bounded cost) — an un-ordered ``limit`` would depend on partition
-    layout and break end-to-end determinism across repartitioning.
-    Returns (m, ksub, dim // m) float64 — a few KB, shipped into
-    closures by value like the IVF centroids."""
-    import numpy as np
-
+    iterations on the ``train_sample`` lowest-id UNIT vectors
+    (:func:`_ordered_sample`, layout-independent). Returns (m, ksub,
+    dim // m) float64 — a few KB, shipped into closures by value like
+    the IVF centroids."""
     rng = np.random.default_rng(seed)
-    sample = (
-        embeddings.select(F.col(id_col), F.col(vec_col))
-        .orderBy(F.col(id_col))
-        .limit(train_sample)
-        .select(F.col(vec_col))
-        .collect()
-    )
-    xs = np.array([r[0] for r in sample], dtype=np.float64)
-    xs = xs / np.maximum(np.linalg.norm(xs, axis=1, keepdims=True), 1e-12)
+    xs = _ordered_sample(embeddings, id_col, vec_col, train_sample)
     dim = xs.shape[1]
     if dim % m != 0:
         raise ValueError(f"PQ: dim {dim} not divisible by m={m} subspaces")
@@ -1140,6 +1051,51 @@ def _train_pq_codebooks(embeddings, id_col, vec_col, m, ksub, seed, train_sample
                     cents[c] = members.mean(axis=0)
         books[j, : len(cents)] = cents
     return books
+
+
+def _pq_books(embeddings, id_col, vec_col, m, ksub, seed, train_sample, books):
+    """The PQ codebooks of a flat scan or index build: ``books`` checked
+    against (m, ksub), else trained (:func:`_train_pq_codebooks`).
+    Codes are one byte per subspace, so ``ksub`` is capped at 256."""
+    if ksub > 256:
+        raise ValueError(f"PQ: ksub={ksub} exceeds 256 — codes are one byte per subspace")
+    if books is None:
+        return _train_pq_codebooks(embeddings, id_col, vec_col, m, ksub, seed, train_sample)
+    books = np.asarray(books, dtype=np.float64)
+    if books.shape[0] != m or books.shape[1] != ksub:
+        raise ValueError(f"books shape {books.shape} != (m={m}, ksub={ksub}, dsub)")
+    return books
+
+
+def _pq_encode(raw, books):
+    """PQ encode: unit-normalize, then per subspace the nearest codebook
+    entry by ROUNDED Euclidean distance (8dp, mirroring the oracle's
+    o_round(list_distance) key, so a near-tie can't flip a code between
+    engines); first-index ties = lowest cid, matching the oracle's
+    (dist, cid) window. (rows, m) uint8."""
+    m, _, dsub = books.shape
+    sub = _unit_rows(raw).reshape(len(raw), m, dsub)
+    codes = np.empty((len(raw), m), dtype=np.uint8)
+    for j in range(m):
+        d2 = ((sub[:, j, None, :] - books[None, j]) ** 2).sum(axis=2)
+        codes[:, j] = _nround(np.sqrt(d2)).argmin(axis=1)
+    return codes
+
+
+def _pq_codec(qm, books):
+    """PQ ADC codec: per query an (m x ksub) table of query-subvector
+    dots with every codebook entry, built once on the driver; a row's
+    score is the sum of its ``m`` code lookups, ROUNDED at 6dp so the
+    heap and cut ordering survive any accumulation order."""
+    m, _, dsub = books.shape
+    tables = np.einsum("qjd,jkd->qjk", qm.reshape(len(qm), m, dsub), books)
+    js = np.arange(m)
+
+    def score(pdf):
+        codes = _codes_of(pdf, _pq_encode, books).astype(np.int64)
+        return _nround(np.stack([t[js, codes].sum(axis=1) for t in tables]), 6)
+
+    return score
 
 
 def pq_topk(
@@ -1162,166 +1118,54 @@ def pq_topk(
     is COMPARED; PQ shrinks what is HELD: ``m`` uint8 codes per vector
     instead of ``dim`` floats, 32x at the defaults for dim=64).
 
-    Per partition: corpus vectors unit-normalize, encode to their
-    nearest codebook entry per subspace, and score against each query
-    by asymmetric distance computation — an (m x ksub) table of
-    query-subvector dot products per query, summed by code lookups
-    (this is the scan a PQ-compressed 100 TB index performs: bytes +
-    table lookups, no float vectors). The global top ``k + rerank``
-    ADC candidates are then re-scored EXACTLY by the shared JVM
-    re-rank stage (:func:`_adc_exact_rerank`: survivors broadcast-join
-    the float table and score with the codegen fold — the same IEEE op
-    sequence as the DuckDB oracle), and the final window ranks by
-    exact cosine — so PQ error affects only which candidates survive,
-    never the reported similarity of survivors.
+    The flat form of :func:`pq_search`: the skeleton with the PQ ADC
+    codec over the float corpus, each Arrow batch encoded in-scan by
+    the very function :func:`pq_build_index` writes (so the two match
+    row for row). The global top ``k + rerank`` ADC candidates are
+    then re-scored EXACTLY by :func:`_adc_exact_rerank` — PQ error
+    affects only which candidates survive, never the reported
+    similarity of survivors.
 
     Determinism: the codebooks are layout-independent (seeded k-means
     on the ``train_sample`` LOWEST ids — an ordered take, not an
     un-ordered limit; or caller-supplied via ``books``), every per-row
-    step breaks ties deterministically (argmin first-index, id
-    tie-breaks), and the candidate set is PARTITION-INDEPENDENT: the
-    per-partition heaps order by the ROUNDED ADC score (6dp, so float
-    accumulation noise can't flip the ordering) with an id tie-break,
-    and a global ADC top-(k+rerank) cut applies before the exact
-    re-rank. Each partition's heap holds a superset of its share of
-    that global ADC top list, so the cut — and therefore the result —
-    is identical under any repartitioning, and an external oracle can
-    replay the whole pipeline.
+    step breaks ties deterministically, and the candidate cut is
+    partition-independent, so an external oracle can replay the whole
+    pipeline.
 
     ``books`` (an (m, ksub, dim//m) array-like) skips k-means training
     and encodes against the given codebooks — e.g. subvectors of the
     lowest-id corpus vectors, which a SQL oracle can reconstruct.
+    ``ksub`` is at most 256 (one byte per code).
 
     ``rerank=None`` (the default) SCALES the exact-rerank budget with
-    the corpus: ``max(128, ceil(n/16))`` candidates, costing one cheap
+    the corpus: :func:`_auto_rerank_budget` with the PQ floor of 128
+    (``max(128, ceil(n/16))``, capped at 8192), costing one cheap
     ``count()`` of the corpus frame. A FIXED budget silently loses
     recall as the corpus grows — the r10 SCALING.md re-measure saw
-    recall 0.742 → 0.502 at 8x corpus under a pinned ``rerank=128``
-    (the ADC candidate pool grew 8x but the exact window did not),
-    while n/16 held 0.742 at the base scale and restores it at 8x.
-    The rerank is still a vanishing fraction of the ADC scan (1/16 of
-    the corpus per query, exact-scored only for heap survivors); for
-    sub-linear per-query cost compose with IVF list-pruning
-    (``ivf_search``), which bounds the scanned corpus per probe —
-    then a fixed budget proportional to the probed-list size is
-    appropriate. Pass an explicit int to pin the budget (the graded
-    catalog entry pins 128 so its oracle hash is scale-stable).
-
-    The auto budget is CAPPED at 8192: per-query per-partition heap
-    memory and the candidate shuffle both scale with ``k + rerank``,
-    so an uncapped n/16 would grow them linearly with the corpus (a
-    50M-row corpus would mean ~3M-entry heaps per query — executor
-    OOM). Past the cap, flat-scan PQ stops being the right tool:
-    compose with IVF so the per-probe pool, and hence a fixed budget,
-    stays bounded. The one ``count()`` job at call time is the
-    documented price of auto-scaling; pass an explicit ``rerank`` to
-    stay action-free.
+    recall 0.742 → 0.502 at 8x corpus under a pinned ``rerank=128``,
+    while n/16 held 0.742. The cap bounds per-query heap memory and the
+    candidate shuffle; past it, compose with IVF (``pq_build_index(
+    n_lists=...)`` + ``pq_search``) so the per-probe pool, and hence a
+    fixed budget, stays bounded. Pass an explicit int to pin the
+    budget and stay action-free (the graded catalog entry pins 128 so
+    its oracle hash is scale-stable).
     """
-    import numpy as np
-
     if rerank is None:
-        # the shared helper with the PQ floor (128) — pq_search's
-        # rerank=None path resolves through the same call, so the
-        # logical/physical parity claim holds for the auto budget too
         rerank = _auto_rerank_budget(embeddings.count(), floor=128)
-
     qrows = _bounded_query_rows(
         embeddings, id_col, vec_col, query_filter, max_queries, "pq_topk"
     )
     if not qrows:
         # also covers the empty-corpus case (queries come from the same
         # frame), so codebook training below always has sample vectors
-        schema = "vec_id bigint, rank int, neighbor_id bigint, cos_sim double"
-        return embeddings.sparkSession.createDataFrame([], schema)
-    if books is not None:
-        books = np.asarray(books, dtype=np.float64)
-        if books.shape[0] != m or books.shape[1] != ksub:
-            raise ValueError(f"books shape {books.shape} != (m={m}, ksub={ksub}, dsub)")
-    else:
-        books = _train_pq_codebooks(embeddings, id_col, vec_col, m, ksub, seed, train_sample)
-    dsub = books.shape[2]
-    q_ids = np.array([r[0] for r in qrows], dtype=np.int64)
-    qm = np.array([r[1] for r in qrows], dtype=np.float64)
-    qm = qm / np.maximum(np.linalg.norm(qm, axis=1, keepdims=True), 1e-12)
-    # ADC lookup tables: (n_queries, m, ksub) — query subvector dots
-    # with every codebook entry, built once on the driver
-    tables = np.einsum("qjd,jkd->qjk", qm.reshape(len(qm), m, dsub), books)
-
-    keep = k + rerank
-    corpus = embeddings.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"))
-
-    def score_partition(batches):
-        import heapq
-
-        import numpy as np
-        import pandas as pd
-
-        heaps = {int(qid): [] for qid in q_ids}
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            cm = np.array(list(pdf["cv"]), dtype=np.float64)
-            cm = cm / np.maximum(np.linalg.norm(cm, axis=1, keepdims=True), 1e-12)
-            sub = cm.reshape(len(cm), m, dsub)
-            # encode: nearest codebook entry per subspace — argmin on
-            # the ROUNDED Euclidean distance (8dp, mirroring the
-            # oracle's o_round(list_distance) key) so a near-tie can't
-            # flip a code between engines; first-index ties = lowest
-            # cid, matching the oracle's (dist, cid) window
-            codes = np.empty((len(cm), m), dtype=np.int64)
-            for j in range(m):
-                d2 = ((sub[:, j, None, :] - books[None, j]) ** 2).sum(axis=2)
-                codes[:, j] = _nround(np.sqrt(d2)).argmin(axis=1)
-            nids = pdf["neighbor_id"].to_numpy()
-            js = np.arange(m)
-            for qi, qid in enumerate(q_ids):
-                # ADC score: sum of table lookups over the m codes —
-                # ROUNDED (6dp, half-away like dround) so the heap /
-                # global-cut ordering is reproducible across engines and
-                # accumulation orders; ties break by neighbor id
-                adc = tables[qi][js, codes].sum(axis=1)
-                adc = np.sign(adc) * np.floor(np.abs(adc) * 1e6 + 0.5) / 1e6
-                heap = heaps[int(qid)]
-                floor = heap[0][0] if len(heap) >= keep else -2.0
-                for ci in np.nonzero(adc >= floor)[0]:
-                    nid = int(nids[ci])
-                    if nid == qid:
-                        continue
-                    item = (float(adc[ci]), -nid)
-                    if len(heap) < keep:
-                        heapq.heappush(heap, item)
-                    elif item > heap[0]:
-                        heapq.heapreplace(heap, item)
-        out = [
-            (int(qid), -neg_nid, adc_r)
-            for qid, heap in heaps.items()
-            for adc_r, neg_nid in heap
-        ]
-        yield pd.DataFrame(
-            out, columns=["vec_id", "neighbor_id", "adc"]
-        ).astype(
-            {"vec_id": "int64", "neighbor_id": "int64", "adc": "float64"}
-        )
-
-    candidates = corpus.mapInPandas(
-        score_partition,
-        schema="vec_id bigint, neighbor_id bigint, adc double",
-    )
-    # global ADC top-(k+rerank) cut first — every partition heap holds a
-    # superset of its share of this list, so the cut is
-    # partition-independent — then re-rank the survivors by EXACT
-    # cosine: ADC only ever chooses candidates, never reported scores.
-    # The re-rank is the shared JVM fold stage (r13): identical IEEE op
-    # sequence to the DuckDB oracle, no numpy-accumulation boundary risk
-    adc_cut = top_k_per_group(
-        candidates,
-        partition_by=["vec_id"],
-        order_by=[F.col("adc").desc(), F.col("neighbor_id").asc()],
-        k=keep,
-    )
-    return _adc_exact_rerank(
-        embeddings.sparkSession, adc_cut, qrows, embeddings,
-        id_col, vec_col, k, round_scale, cand_bound=len(qrows) * keep,
+        return embeddings.sparkSession.createDataFrame([], _TOPK_SCHEMA)
+    books = _pq_books(embeddings, id_col, vec_col, m, ksub, seed, train_sample, books)
+    qm = _unit_rows(_batch_matrix(r[1] for r in qrows))
+    return _ann_search(
+        _float_corpus(embeddings, id_col, vec_col), qrows, _pq_codec(qm, books), k,
+        rerank=rerank, float_corpus=embeddings, id_col=id_col, vec_col=vec_col,
+        round_scale=round_scale,
     )
 
 
@@ -1344,16 +1188,14 @@ def pq_build_index(
     ``{index_path}/codes`` as (vec_id, codes binary) — ``m`` BYTES per
     vector, a ``dim*8/m``-fold shrink over float64 (64x at the
     defaults for dim=64) — plus the ``{index_path}/books`` codebook
-    sidecar (m*ksub rows). This completes the physical symmetry with
-    :func:`sq8_build_index`: SQ8's codes cut scan BANDWIDTH 8x keeping
+    sidecar (m*ksub rows). SQ8's codes cut scan BANDWIDTH 8x keeping
     every dimension; PQ's codes shrink what is HELD far harder at the
     price of a coarse ADC, which is why :func:`pq_search` defaults to
     the corpus-scaled exact-rerank budget.
 
-    Encoding is ONE Arrow pass replaying :func:`pq_topk` bit for bit:
-    unit-normalize, per-subspace argmin on the ROUNDED L2 distance
-    (8dp, first-index = lowest code ties) — so a physical search
-    equals the logical flat scan row for row at the same parameters.
+    Encoding is ONE Arrow pass of the same encode function
+    :func:`pq_topk` runs in-scan, so a physical search equals the flat
+    scan row for row at the same parameters.
 
     ``n_lists`` composes the two pruning axes exactly as in
     ``sq8_build_index``: codes additionally carry the coarse-list
@@ -1367,88 +1209,24 @@ def pq_build_index(
     k-means trainer, e.g. the lowest-id-subvector books a SQL oracle
     can reconstruct (the ``emb_pq_topk`` treatment).
     """
-    import numpy as np
-
-    if books is not None:
-        books = np.asarray(books, dtype=np.float64)
-        if books.shape[0] != m or books.shape[1] != ksub:
-            raise ValueError(
-                f"books shape {books.shape} != (m={m}, ksub={ksub}, dsub)"
-            )
-    else:
-        books = _train_pq_codebooks(
-            embeddings, id_col, vec_col, m, ksub, seed, train_sample
-        )
-    dsub = books.shape[2]
-
     import pyarrow as pa
 
+    books = _pq_books(embeddings, id_col, vec_col, m, ksub, seed, train_sample, books)
     _sidecar_write(
         f"{index_path}/books",
         {
             "j": [j for j in range(m) for _ in range(ksub)],
             "cid": [c for _ in range(m) for c in range(ksub)],
-            "bv": [
-                [float(v) for v in books[j, c]]
-                for j in range(m)
-                for c in range(ksub)
-            ],
+            "bv": [[float(v) for v in books[j, c]] for j in range(m) for c in range(ksub)],
         },
         pa.schema(
             [("j", pa.int32()), ("cid", pa.int32()), ("bv", pa.list_(pa.float64()))]
         ),
     )
-
-    cents = None
-    if n_lists is not None:
-        cents = (
-            np.asarray(centroids, dtype=np.float64)
-            if centroids is not None
-            else _train_centroids(embeddings, vec_col, n_lists, seed, train_sample)
-        )
-        _write_centroid_sidecar(f"{index_path}/centroids", cents)
-
-    def encode(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            raw = np.array(list(pdf[vec_col]), dtype=np.float64)
-            cm = raw / np.maximum(
-                np.linalg.norm(raw, axis=1, keepdims=True), 1e-12
-            )
-            sub = cm.reshape(len(cm), m, dsub)
-            codes = np.empty((len(cm), m), dtype=np.uint8)
-            for j in range(m):
-                d2 = ((sub[:, j, None, :] - books[None, j]) ** 2).sum(axis=2)
-                codes[:, j] = _nround(np.sqrt(d2)).argmin(axis=1)
-            out = {
-                "vec_id": pdf[id_col].to_numpy(),
-                "codes": [row.tobytes() for row in codes],
-            }
-            if cents is not None:
-                out["list_id"] = (
-                    _nround(cm @ cents.T).argmax(axis=1).astype("int32")
-                )
-            yield pd.DataFrame(out)
-
-    writer = (
-        embeddings.select(
-            F.col(id_col).cast("bigint").alias(id_col),
-            F.col(vec_col).cast("array<double>").alias(vec_col),
-        )
-        .mapInPandas(
-            encode,
-            schema="vec_id bigint, codes binary"
-            + (", list_id int" if cents is not None else ""),
-        )
-        .write.mode("overwrite")
+    cents = None if n_lists is None else _coarse_centroids(
+        embeddings, index_path, id_col, vec_col, n_lists, seed, train_sample, centroids
     )
-    if cents is not None:
-        writer = writer.partitionBy("list_id")
-    writer.parquet(f"{index_path}/codes")
+    _write_index(embeddings, id_col, vec_col, f"{index_path}/codes", cents, _pq_encode, books)
 
 
 def pq_search(
@@ -1465,12 +1243,10 @@ def pq_search(
     n_probe: int | None = None,
 ) -> DataFrame:
     """Search a materialized PQ index (:func:`pq_build_index`) — IVFPQ
-    when the index is list-partitioned: the candidate stage scans ONLY
-    (vec_id, codes) at ``m`` bytes per vector, scores by ADC table
-    lookups against the broadcast codebook sidecar, and heaps the
-    global top-(k+rerank) rounded sums per query; survivors re-rank
-    exactly through the shared JVM fold stage
-    (:func:`_adc_exact_rerank` — the float table is touched only via
+    when the index is list-partitioned: the skeleton with the PQ ADC
+    codec over the codes files, which hold ONLY (vec_id, codes) at
+    ``m`` bytes per vector; survivors re-rank exactly through
+    :func:`_adc_exact_rerank` (the float table is touched only via
     broadcast joins on the candidate ids). One Python stage: the byte
     scan, exactly like :func:`sq8_search`.
 
@@ -1483,132 +1259,39 @@ def pq_search(
     ``rerank=None`` (the DEFAULT here, unlike ``sq8_search``) applies
     the corpus-scaled budget (:func:`_auto_rerank_budget` with the PQ
     floor of 128, over the probed codes count): PQ's coarse 8-code ADC
-    genuinely needs the budget to track the candidate pool (the r10
-    lesson — recall 0.742 -> 0.502 at 8x under a pinned 128), where
+    genuinely needs the budget to track the candidate pool, where
     SQ8's near-exact ADC does not. Composing with IVF keeps the pool —
     and hence the budget — bounded by the probed fraction.
 
-    Matches :func:`pq_topk` row for row at the same parameters (same
-    encode, same rounded-ADC ordering, same partition-independent cut,
-    same shared exact re-rank; pinned in tests) — INCLUDING
-    ``rerank=None`` on a flat index, where both paths resolve the
-    budget through the same helper at the same floor.
+    Matches :func:`pq_topk` row for row at the same parameters — the
+    same encode, codec and skeleton — INCLUDING ``rerank=None`` on a
+    flat index, where both resolve the budget through the same helper
+    at the same floor.
 
     CONTRACT: ``embeddings`` must be the SAME corpus the index was
     built from (the rerank joins survivors back by id), exactly as
     with ``sq8_search``/``ivf_search``.
     """
-    import numpy as np
-
     book_rows = _sidecar_rows(f"{index_path}/books")
     m = max(r["j"] for r in book_rows) + 1
     ksub = max(r["cid"] for r in book_rows) + 1
-    dsub = len(book_rows[0]["bv"])
-    books = np.zeros((m, ksub, dsub), dtype=np.float64)
+    books = np.zeros((m, ksub, len(book_rows[0]["bv"])), dtype=np.float64)
     for r in book_rows:
         books[r["j"], r["cid"]] = r["bv"]
 
-    qrows = (
-        queries.select(F.col(id_col), F.col(vec_col))
-        .limit(max_queries + 1)
-        .collect()
-    )
-    if len(qrows) > max_queries:
-        raise ValueError(
-            f"pq_search: query set exceeds max_queries={max_queries}; "
-            "tighten the queries DataFrame or raise the cap deliberately"
-        )
+    qrows = _bounded_query_rows(queries, id_col, vec_col, None, max_queries, "pq_search")
     if not qrows:
-        return spark.createDataFrame(
-            [], "vec_id bigint, rank int, neighbor_id bigint, cos_sim double"
-        )
-    q_ids = np.array([r[0] for r in qrows], dtype=np.int64)
-    qt = np.array([r[1] for r in qrows], dtype=np.float64)
-    qm = qt / np.maximum(np.linalg.norm(qt, axis=1, keepdims=True), 1e-12)
-    tables = np.einsum("qjd,jkd->qjk", qm.reshape(len(qm), m, dsub), books)
-
-    corpus = spark.read.parquet(f"{index_path}/codes")
-    q_probes = None
-    if "list_id" in corpus.columns:
-        if n_probe is None:
-            n_probe = 4
-        cents = _read_centroid_sidecar(f"{index_path}/centroids")
-        q_probes = np.argsort(
-            -_nround(qm @ cents.T), axis=1, kind="stable"
-        )[:, :n_probe]
-        probe_union = sorted({int(p) for row in q_probes for p in row})
-        corpus = corpus.filter(F.col("list_id").isin(probe_union))
-    elif n_probe is not None:
-        raise ValueError(
-            "pq_search: n_probe given but the index has no list_id "
-            "partitions — rebuild with pq_build_index(n_lists=...)"
-        )
+        return spark.createDataFrame([], _TOPK_SCHEMA)
+    qm = _unit_rows(_batch_matrix(r[1] for r in qrows))
+    corpus, probes = _open_index(spark, index_path, "codes", qm, n_probe, "pq_search")
     if rerank is None:
         # PQ floor (128): same helper + same floor as pq_topk, so the
         # two paths resolve identical budgets at the same scanned count
         rerank = _auto_rerank_budget(corpus.count(), floor=128)
-    keep = k + rerank
-
-    def score_partition(batches):
-        import heapq
-
-        import numpy as np
-        import pandas as pd
-
-        heaps = {int(qid): [] for qid in q_ids}
-        probe_sets = (
-            None if q_probes is None
-            else [set(map(int, row)) for row in q_probes]
-        )
-        js = np.arange(m)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            codes = np.frombuffer(
-                b"".join(pdf["codes"]), dtype=np.uint8
-            ).reshape(len(pdf), m).astype(np.int64)
-            nids = pdf["vec_id"].to_numpy()
-            lids = pdf["list_id"].to_numpy() if probe_sets is not None else None
-            for qi, qid in enumerate(q_ids):
-                adc = tables[qi][js, codes].sum(axis=1)
-                adc = np.sign(adc) * np.floor(np.abs(adc) * 1e6 + 0.5) / 1e6
-                heap = heaps[int(qid)]
-                floor = heap[0][0] if len(heap) >= keep else -2.0
-                for ci in np.nonzero(adc >= floor)[0]:
-                    if lids is not None and int(lids[ci]) not in probe_sets[qi]:
-                        continue
-                    nid = int(nids[ci])
-                    if nid == qid:
-                        continue
-                    item = (float(adc[ci]), -nid)
-                    if len(heap) < keep:
-                        heapq.heappush(heap, item)
-                    elif item > heap[0]:
-                        heapq.heapreplace(heap, item)
-        out = [
-            (int(qid), -neg_nid, adc_r)
-            for qid, heap in heaps.items()
-            for adc_r, neg_nid in heap
-        ]
-        yield pd.DataFrame(
-            out, columns=["vec_id", "neighbor_id", "adc"]
-        ).astype(
-            {"vec_id": "int64", "neighbor_id": "int64", "adc": "float64"}
-        )
-
-    candidates = corpus.mapInPandas(
-        score_partition,
-        schema="vec_id bigint, neighbor_id bigint, adc double",
-    )
-    cand_cut = top_k_per_group(
-        candidates,
-        partition_by=["vec_id"],
-        order_by=[F.col("adc").desc(), F.col("neighbor_id").asc()],
-        k=keep,
-    )
-    return _adc_exact_rerank(
-        spark, cand_cut, qrows, embeddings, id_col, vec_col, k,
-        round_scale, cand_bound=len(qrows) * keep,
+    return _ann_search(
+        corpus, qrows, _pq_codec(qm, books), k, rerank=rerank,
+        float_corpus=embeddings, id_col=id_col, vec_col=vec_col,
+        round_scale=round_scale, probes=probes,
     )
 
 
@@ -1621,8 +1304,6 @@ def _np_unit_rounded(m):
     pairwise-accumulate and could differ by an ulp on the 8dp
     boundary; equality with the JVM fold is pinned in tests). Zero
     vectors clamp like ``_norm``."""
-    import numpy as np
-
     n2 = np.cumsum(m * m, axis=1)[:, -1]
     norm = np.maximum(np.sqrt(n2), 1e-12)
     return _nround(m / norm[:, None])
@@ -1634,10 +1315,7 @@ def _sq8_dim_stats(df: DataFrame, id_col: str, vec_col: str):
     dim-count rows per PARTITION (partial min/max inside the batch
     loop), then a dim-row final aggregate: the shuffle carries
     partitions x dim rows, never data."""
-    import numpy as np
-
     def partial(batches):
-        import numpy as np
         import pandas as pd
 
         lo = hi = None
@@ -1742,6 +1420,32 @@ def _adc_exact_rerank(
     )
 
 
+def _sq8_encode(raw, mn, mx):
+    """SQ8 encode: per-dimension affine quantization of the
+    fold-order-exact rounded unit values (:func:`_np_unit_rounded`) —
+    ``code_d = floor((u_d - mn_d) / (mx_d - mn_d) * 255 + 0.5)``, 0 on a
+    constant dimension. (rows, dim) uint8, bit-identical to the
+    oracle's codes."""
+    span = mx - mn
+    nz = span > 0
+    um = _np_unit_rounded(raw)
+    codes = np.zeros_like(um)
+    codes[:, nz] = np.floor((um[:, nz] - mn[nz]) / span[nz] * 255.0 + 0.5)
+    return codes.astype(np.uint8)
+
+
+def _sq8_codec(qn, mn, mx):
+    """SQ8 codec: the dot of the rounded unit queries ``qn`` with each
+    row's DEQUANTIZED vector ``mn + code * (mx - mn) / 255``, ROUNDED at
+    6dp."""
+    scale = (mx - mn) / 255.0
+
+    def score(pdf):
+        return _nround(qn @ (mn + _codes_of(pdf, _sq8_encode, mn, mx) * scale).T, 6)
+
+    return score
+
+
 def sq8_topk(
     embeddings: DataFrame,
     k: int = 5,
@@ -1759,20 +1463,14 @@ def sq8_topk(
     per-dimension affine min/max quantization of the unit-normalized
     corpus, so a 100 TB float64 index scans as ~12.5 TB of codes).
 
-    Training is ONE Arrow scan with per-partition partial min/max over
-    the ROUNDED unit values (the shuffle carries dim-count rows per
-    partition, not data). Each corpus vector then encodes as
-    ``code_d = floor((u_d - mn_d) / (mx_d - mn_d) * 255 + 0.5)`` and
-    scores against a query by the dot product with the DEQUANTIZED
-    vector ``mn_d + code_d * (mx_d - mn_d) / 255`` — the scan a
-    byte-compressed index performs (a production deployment persists
-    the codes column once and scans bytes + the two 64-float tables;
-    the graded entry re-encodes in-scan like ``pq_topk``, and the
-    affine form means the scan could equally score
-    ``q·mn + (q*scale)·codes`` without materializing the floats).
-    The top ``k + rerank`` candidates re-rank EXACTLY, so quantization
-    error affects only which candidates survive, never reported
-    similarities.
+    The flat form of :func:`sq8_search`. Training is ONE Arrow scan
+    with per-partition partial min/max over the ROUNDED unit values
+    (:func:`_sq8_dim_stats`: the shuffle carries dim-count rows per
+    partition, not data). Then the skeleton runs the SQ8 codec over
+    the float corpus, each Arrow batch encoded in-scan by the very
+    function :func:`sq8_build_index` writes; the top ``k + rerank``
+    candidates re-rank EXACTLY, so quantization error affects only
+    which candidates survive, never reported similarities.
 
     Determinism (oracle-replayable end to end): the quantization
     INPUT is :func:`_np_unit_rounded` — the norm accumulates strictly
@@ -1781,142 +1479,49 @@ def sq8_topk(
     twin (pinned equal in tests) — so codes are BIT-IDENTICAL across
     engines, and the per-dim min/max are selections of those shared
     values (no accumulation). The ADC analog rounds at 6dp, the exact
-    cosine at ``round_scale``, every ordering breaks ties by id, and
-    the candidate cut is partition-independent (per-partition heaps on
-    the rounded score hold a superset of the global top-(k+rerank)).
-    The exact re-rank itself runs JVM-SIDE (survivors of the global
-    ADC cut broadcast-join back to the float table and score with the
-    codegen ``_dot``/``_norm`` fold) — the same left-to-right IEEE op
-    sequence as DuckDB's ``list_dot_product``, so the 8dp-rounded
-    exact value can never differ by a boundary ulp the way a
-    numpy/BLAS accumulation could, and :func:`sq8_search` shares the
-    stage verbatim (the row-for-row parity claim rests on identical
-    code, not on two accumulation orders happening to agree).
+    cosine at ``round_scale``, every ordering breaks ties by id, the
+    candidate cut is partition-independent, and the exact re-rank runs
+    JVM-side with the same op sequence as the oracle.
 
     Unlike ``pq_topk`` the default ``rerank`` is a small FIXED 32:
     8-bit-per-dim reconstruction error is tiny (the ADC ordering is
     nearly exact), so the budget does not need to scale with the
     corpus the way PQ's coarse 8-code ADC does.
     """
-    import numpy as np
-
     qrows = _bounded_query_rows(
         embeddings, id_col, vec_col, query_filter, max_queries, "sq8_topk"
     )
     if not qrows:
-        schema = "vec_id bigint, rank int, neighbor_id bigint, cos_sim double"
-        return embeddings.sparkSession.createDataFrame([], schema)
-    # per-dimension min/max of the shared rounded unit values: the one
-    # training pass — a dim-row collect after the partial aggregate
+        return embeddings.sparkSession.createDataFrame([], _TOPK_SCHEMA)
     mn, mx = _sq8_dim_stats(embeddings, id_col, vec_col)
-    span = mx - mn
-    scale = span / 255.0
-    nz = span > 0
-
-    q_ids = np.array([r[0] for r in qrows], dtype=np.int64)
-    qt = np.array([r[1] for r in qrows], dtype=np.float64)  # true vectors
-    qn = _np_unit_rounded(qt)  # rounded unit (the oracle's quantization input)
-
-    keep = k + rerank
-    corpus = embeddings.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
+    qn = _np_unit_rounded(_batch_matrix(r[1] for r in qrows))
+    return _ann_search(
+        _float_corpus(embeddings, id_col, vec_col), qrows, _sq8_codec(qn, mn, mx), k,
+        rerank=rerank, float_corpus=embeddings, id_col=id_col, vec_col=vec_col,
+        round_scale=round_scale,
     )
 
-    def score_partition(batches):
-        import heapq
-
-        import numpy as np
-        import pandas as pd
-
-        heaps = {int(qid): [] for qid in q_ids}
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            raw = np.array(list(pdf["cv"]), dtype=np.float64)
-            # encode from the fold-order-exact rounded unit values —
-            # same doubles the oracle quantizes, so codes match bit for
-            # bit; in a persisted-index deployment this IS the uint8
-            # column (sq8_build_index materializes it)
-            um = _np_unit_rounded(raw)
-            codes = np.zeros_like(um)
-            codes[:, nz] = np.floor(
-                (um[:, nz] - mn[nz]) / span[nz] * 255.0 + 0.5
-            )
-            deq = mn + codes * scale
-            nids = pdf["neighbor_id"].to_numpy()
-            adc_all = qn @ deq.T
-            adc_all = np.sign(adc_all) * np.floor(np.abs(adc_all) * 1e6 + 0.5) / 1e6
-            for qi, qid in enumerate(q_ids):
-                adc = adc_all[qi]
-                heap = heaps[int(qid)]
-                floor = heap[0][0] if len(heap) >= keep else -2.0
-                for ci in np.nonzero(adc >= floor)[0]:
-                    nid = int(nids[ci])
-                    if nid == qid:
-                        continue
-                    item = (float(adc[ci]), -nid)
-                    if len(heap) < keep:
-                        heapq.heappush(heap, item)
-                    elif item > heap[0]:
-                        heapq.heapreplace(heap, item)
-        out = [
-            (int(qid), -neg_nid, adc_r)
-            for qid, heap in heaps.items()
-            for adc_r, neg_nid in heap
-        ]
-        yield pd.DataFrame(
-            out, columns=["vec_id", "neighbor_id", "adc"]
-        ).astype(
-            {"vec_id": "int64", "neighbor_id": "int64", "adc": "float64"}
-        )
-
-    candidates = corpus.mapInPandas(
-        score_partition,
-        schema="vec_id bigint, neighbor_id bigint, adc double",
-    )
-    adc_cut = top_k_per_group(
-        candidates,
-        partition_by=["vec_id"],
-        order_by=[F.col("adc").desc(), F.col("neighbor_id").asc()],
-        k=keep,
-    )
-    return _adc_exact_rerank(
-        embeddings.sparkSession, adc_cut, qrows, embeddings,
-        id_col, vec_col, k, round_scale, cand_bound=len(qrows) * keep,
-    )
 
 def sq8_build_index(
     embeddings: DataFrame,
     index_path: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    packed: bool = True,
     n_lists: int | None = None,
     centroids=None,
     seed: int = 42,
     train_sample: int = 2048,
 ):
     """Materialize the SQ8 physical layout: the corpus encoded to
-    ``{index_path}/codes`` as (vec_id, codes array<smallint>) — one
-    byte of information per dimension — plus the per-dimension
-    ``{index_path}/minmax`` sidecar (dim rows). This is where the
-    bandwidth claim becomes physical: :func:`sq8_search` scans ONLY
-    the codes files (the float column never appears in its candidate
-    stage), the way :func:`ivf_build_index` makes IVF's pruning
-    physical. Encoding is one Arrow pass (the fold-order-exact rounded
-    unit values + per-dim affine quantization — no shuffle beyond the
-    write) after the one partial-aggregate min/max training scan.
-    Returns (mn, mx).
-
-    ``packed=True`` (the default) stores each vector's 0..255 codes as
-    ONE ``binary`` cell — exactly ``dim`` bytes of payload, decoded in
-    the scan by a single ``np.frombuffer`` over the Arrow batch
-    instead of per-element list materialization. On DISK parquet's
-    bit-packing makes the two layouts near-identical (measured at
-    sf0.001); the packed win is decode/transfer cost, not compression.
-    ``packed=False`` writes ``array<smallint>`` for layouts a plain
-    SQL engine should unnest. :func:`sq8_search` auto-detects either.
+    ``{index_path}/codes`` as (vec_id, codes binary) — each vector's
+    0..255 codes stored in ONE binary cell of exactly ``dim`` bytes — plus
+    the per-dimension ``{index_path}/minmax`` sidecar (dim rows). This
+    is where the bandwidth claim becomes physical: :func:`sq8_search`
+    scans ONLY the codes files (the float column never appears in its
+    candidate stage) and decodes each Arrow batch with a single
+    ``np.frombuffer``. Encoding is one Arrow pass of the same encode
+    function :func:`sq8_topk` runs in-scan, after the one
+    partial-aggregate min/max training scan. Returns (mn, mx).
 
     ``n_lists`` COMPOSES the two pruning axes: the codes additionally
     carry an IVF coarse-list assignment and write PARTITIONED BY
@@ -1927,84 +1532,22 @@ def sq8_build_index(
     ``centroids`` overrides the seeded k-means trainer exactly as in
     ``ivf_build_index``.
     """
-    import numpy as np
-
-    mn, mx = _sq8_dim_stats(embeddings, id_col, vec_col)
-    span = mx - mn
-    nz = span > 0
-    dim = len(mn)
-
     import pyarrow as pa
 
+    mn, mx = _sq8_dim_stats(embeddings, id_col, vec_col)
     _sidecar_write(
         f"{index_path}/minmax",
         {
-            "pos": list(range(dim)),
+            "pos": list(range(len(mn))),
             "mn": [float(v) for v in mn],
             "mx": [float(v) for v in mx],
         },
         pa.schema([("pos", pa.int32()), ("mn", pa.float64()), ("mx", pa.float64())]),
     )
-
-    cents = None
-    if n_lists is not None:
-        cents = (
-            np.asarray(centroids, dtype=np.float64)
-            if centroids is not None
-            else _train_centroids(embeddings, vec_col, n_lists, seed, train_sample)
-        )
-        _write_centroid_sidecar(f"{index_path}/centroids", cents)
-
-    def encode(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            raw = np.array(list(pdf[vec_col]), dtype=np.float64)
-            um = _np_unit_rounded(raw)
-            codes = np.zeros_like(um)
-            codes[:, nz] = np.floor(
-                (um[:, nz] - mn[nz]) / span[nz] * 255.0 + 0.5
-            )
-            u8 = codes.astype("uint8")
-            out = {
-                "vec_id": pdf[id_col].to_numpy(),
-                "codes": (
-                    [row.tobytes() for row in u8]
-                    if packed
-                    else list(u8.astype("int16"))
-                ),
-            }
-            if cents is not None:
-                # the ivf_build_index assignment: argmax rounded dot of
-                # the np-normalized vector, first-index = lowest list
-                m = raw / np.maximum(
-                    np.linalg.norm(raw, axis=1, keepdims=True), 1e-12
-                )
-                out["list_id"] = _nround(m @ cents.T).argmax(axis=1).astype("int32")
-            yield pd.DataFrame(out)
-
-    schema = (
-        "vec_id bigint, codes binary"
-        if packed
-        else "vec_id bigint, codes array<smallint>"
+    cents = None if n_lists is None else _coarse_centroids(
+        embeddings, index_path, id_col, vec_col, n_lists, seed, train_sample, centroids
     )
-    writer = (
-        embeddings.select(
-            F.col(id_col).cast("bigint").alias(id_col),
-            F.col(vec_col).cast("array<double>").alias(vec_col),
-        )
-        .mapInPandas(
-            encode,
-            schema=schema + (", list_id int" if cents is not None else ""),
-        )
-        .write.mode("overwrite")
-    )
-    if cents is not None:
-        writer = writer.partitionBy("list_id")
-    writer.parquet(f"{index_path}/codes")
+    _write_index(embeddings, id_col, vec_col, f"{index_path}/codes", cents, _sq8_encode, mn, mx)
     return mn, mx
 
 
@@ -2041,15 +1584,14 @@ def sq8_search(
     n_probe: int | None = None,
 ) -> DataFrame:
     """Search a materialized SQ8 index (:func:`sq8_build_index`): the
-    candidate stage scans ONLY (vec_id, codes) — 8x less bandwidth
-    than the float64 corpus — dequantizes per Arrow batch against the
-    broadcast minmax sidecar and heaps the global top-(k+rerank)
-    rounded dequantized dots per query. Survivors then re-rank EXACTLY
-    against ``embeddings`` (the float table), which is touched only
-    via a BROADCAST join on the |queries| x (k+rerank) candidate ids —
-    full-width vectors are read for candidates, never the corpus. The
-    exact re-rank runs JVM-side (codegen fold dot products), so the
-    whole search has exactly one Python stage: the byte scan.
+    skeleton with the SQ8 codec over the codes files — 8x less
+    bandwidth than the float64 corpus — dequantizing per Arrow batch
+    against the minmax sidecar. Survivors then re-rank EXACTLY against
+    ``embeddings`` (the float table), which is touched only via a
+    BROADCAST join on the |queries| x (k+rerank) candidate ids. The
+    exact re-rank runs JVM-side, so the whole search has exactly one
+    Python stage: the byte scan. An index whose ``codes`` column is
+    not ``binary`` raises ``ValueError``.
 
     On an IVF-composed index (``sq8_build_index(n_lists=...)``) the
     probe set prunes BOTH axes: ``list_id IN (probes)`` is a partition
@@ -2059,30 +1601,21 @@ def sq8_search(
     every list reproduces the flat-index answer exactly.
 
     ``rerank=None`` applies the PQ-style corpus-scaled budget
-    (``pq_topk``'s recipe, scoped to what this search actually scans):
-    ``max(64, ceil(n_scanned / 16))`` capped at 8192, where
-    ``n_scanned`` is the row count of the PROBED codes frame (the
-    partition-pruned scan — one cheap count of a codes-only read), so
-    the exact window grows with the candidate pool the way PQ's must.
-    Note the scan is pruned to the probe UNION across all queries: a
-    large diverse query batch can union every list, making
-    ``n_scanned`` the corpus — the budget follows what is READ, which
-    upper-bounds every query's own candidate pool.
-    Measured honestly (r13 sweep, SCALING.md): on this corpus SQ8's
-    8-bit ADC orders nearly exactly, so recall is INSENSITIVE to the
-    budget (32 vs 128 identical at every probe setting, 1x and 8x) —
-    the recall knob for the composed search is ``n_probe``
-    (4/16 -> 0.54, 8/16 -> 0.77, 10/16 -> 0.86-0.91, 12/16 -> 0.94
-    across sf0.001..sf0.1 and 8x). The auto budget is the guard rail
-    for corpora where per-dim quantization error is material (wider
-    dynamic range per dimension), not a recall lever here; a pinned
-    int keeps the call action-free and the oracle scale-stable.
+    (:func:`_auto_rerank_budget`, floor 64) over the row count of the
+    PROBED codes frame (the partition-pruned scan — one cheap count of
+    a codes-only read). The scan is pruned to the probe UNION across
+    all queries, so a large diverse query batch can union every list;
+    the budget follows what is READ, which upper-bounds every query's
+    own candidate pool. Measured (r13 sweep, SCALING.md): on this
+    corpus SQ8's 8-bit ADC orders nearly exactly, so recall is
+    INSENSITIVE to the budget — the recall knob for the composed
+    search is ``n_probe`` (4/16 -> 0.54, 8/16 -> 0.77, 12/16 -> 0.94).
+    The auto budget is a guard rail for corpora with wider per-dim
+    dynamic range; a pinned int keeps the call action-free and the
+    oracle scale-stable.
 
     Matches :func:`sq8_topk` row for row at the same parameters — the
-    codes are bit-identical by construction (property-pinned in
-    tests) and the exact re-rank IS the same code
-    (:func:`_adc_exact_rerank`), the way the physical IVF path equals
-    its logical twin.
+    same encode, codec, skeleton and exact re-rank.
 
     CONTRACT: ``embeddings`` must be the SAME corpus the index was
     built from (the rerank joins survivors back by id) — a drifted
@@ -2090,127 +1623,22 @@ def sq8_search(
     vectors; rebuild the index when the corpus changes, exactly as
     with ``ivf_build_index``.
     """
-    import numpy as np
+    mm = sorted(_sidecar_rows(f"{index_path}/minmax"), key=lambda r: r["pos"])
+    mn = np.array([r["mn"] for r in mm], dtype=np.float64)
+    mx = np.array([r["mx"] for r in mm], dtype=np.float64)
 
-    mm = _sidecar_rows(f"{index_path}/minmax")
-    dim = max(r["pos"] for r in mm) + 1
-    mn = np.zeros(dim, dtype=np.float64)
-    mx = np.zeros(dim, dtype=np.float64)
-    for r in mm:
-        mn[r["pos"]] = r["mn"]
-        mx[r["pos"]] = r["mx"]
-    scale = (mx - mn) / 255.0
-
-    qrows = (
-        queries.select(F.col(id_col), F.col(vec_col))
-        .limit(max_queries + 1)
-        .collect()
-    )
-    if len(qrows) > max_queries:
-        raise ValueError(
-            f"sq8_search: query set exceeds max_queries={max_queries}; "
-            "tighten the queries DataFrame or raise the cap deliberately"
-        )
+    qrows = _bounded_query_rows(queries, id_col, vec_col, None, max_queries, "sq8_search")
     if not qrows:
-        return spark.createDataFrame(
-            [], "vec_id bigint, rank int, neighbor_id bigint, cos_sim double"
-        )
-    q_ids = np.array([r[0] for r in qrows], dtype=np.int64)
-    qt = np.array([r[1] for r in qrows], dtype=np.float64)
-    qn = _np_unit_rounded(qt)
-
-    corpus = spark.read.parquet(f"{index_path}/codes")
-    q_probes = None
-    if "list_id" in corpus.columns:
-        # IVF-composed index: probe like ivf_search — per-query
-        # top-n_probe centroid lists (rounded dot, stable lowest-list
-        # ties), the probe UNION pushed as a partition filter so
-        # non-probed list directories never open
-        if n_probe is None:
-            n_probe = 4
-        cents = _read_centroid_sidecar(f"{index_path}/centroids")
-        qm = qt / np.maximum(np.linalg.norm(qt, axis=1, keepdims=True), 1e-12)
-        q_probes = np.argsort(
-            -_nround(qm @ cents.T), axis=1, kind="stable"
-        )[:, :n_probe]
-        probe_union = sorted({int(p) for row in q_probes for p in row})
-        corpus = corpus.filter(F.col("list_id").isin(probe_union))
-    elif n_probe is not None:
-        raise ValueError(
-            "sq8_search: n_probe given but the index has no list_id "
-            "partitions — rebuild with sq8_build_index(n_lists=...)"
-        )
+        return spark.createDataFrame([], _TOPK_SCHEMA)
+    qt = _batch_matrix(r[1] for r in qrows)
+    corpus, probes = _open_index(spark, index_path, "codes", _unit_rows(qt), n_probe, "sq8_search")
     if rerank is None:
         # PQ-style corpus-scaled budget over what this search SCANS:
         # the probed codes frame (partition-pruned, codes-only — the
-        # count never touches float vectors). See docstring for the
-        # measured honesty note: a guard rail here, not a recall lever.
+        # count never touches float vectors)
         rerank = _auto_rerank_budget(corpus.count())
-    keep = k + rerank
-
-    def score_partition(batches):
-        import heapq
-
-        import numpy as np
-        import pandas as pd
-
-        heaps = {int(qid): [] for qid in q_ids}
-        probe_sets = (
-            None if q_probes is None
-            else [set(map(int, row)) for row in q_probes]
-        )
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            cells = list(pdf["codes"])
-            if isinstance(cells[0], (bytes, bytearray)):  # packed layout
-                codes = np.frombuffer(
-                    b"".join(cells), dtype=np.uint8
-                ).reshape(len(cells), -1).astype(np.float64)
-            else:
-                codes = np.array(cells, dtype=np.float64)
-            deq = mn + codes * scale
-            nids = pdf["vec_id"].to_numpy()
-            lids = pdf["list_id"].to_numpy() if probe_sets is not None else None
-            adc_all = qn @ deq.T
-            adc_all = np.sign(adc_all) * np.floor(np.abs(adc_all) * 1e6 + 0.5) / 1e6
-            for qi, qid in enumerate(q_ids):
-                adc = adc_all[qi]
-                heap = heaps[int(qid)]
-                floor = heap[0][0] if len(heap) >= keep else -2.0
-                for ci in np.nonzero(adc >= floor)[0]:
-                    if lids is not None and int(lids[ci]) not in probe_sets[qi]:
-                        continue  # another query's probe, not this one's
-                    nid = int(nids[ci])
-                    if nid == qid:
-                        continue
-                    item = (float(adc[ci]), -nid)
-                    if len(heap) < keep:
-                        heapq.heappush(heap, item)
-                    elif item > heap[0]:
-                        heapq.heapreplace(heap, item)
-        out = [
-            (int(qid), -neg_nid, adc_r)
-            for qid, heap in heaps.items()
-            for adc_r, neg_nid in heap
-        ]
-        yield pd.DataFrame(
-            out, columns=["vec_id", "neighbor_id", "adc"]
-        ).astype(
-            {"vec_id": "int64", "neighbor_id": "int64", "adc": "float64"}
-        )
-
-    candidates = corpus.mapInPandas(
-        score_partition,
-        schema="vec_id bigint, neighbor_id bigint, adc double",
-    )
-    cand_cut = top_k_per_group(
-        candidates,
-        partition_by=["vec_id"],
-        order_by=[F.col("adc").desc(), F.col("neighbor_id").asc()],
-        k=keep,
-    )
-    return _adc_exact_rerank(
-        spark, cand_cut, qrows, embeddings, id_col, vec_col, k,
-        round_scale, cand_bound=len(qrows) * keep,
+    return _ann_search(
+        corpus, qrows, _sq8_codec(_np_unit_rounded(qt), mn, mx), k, rerank=rerank,
+        float_corpus=embeddings, id_col=id_col, vec_col=vec_col,
+        round_scale=round_scale, probes=probes,
     )

@@ -401,19 +401,13 @@ def _load() -> None:
 # (the audit remains the authority of record per standing policy).
 # The r20-green cohort becomes streak 2 after r22 and is r23's
 # must-return set; the cycle repeats.
-# OUT = the r21-green non-anchors (fresh history, streak 1) — every
-# family keeps a representative in the 50 (relational via
-# pricing-summary/with-without-orders/pivot/histogram/Q3/
-# heavy-hitters/part-class/supplier-part-agg; sketches via
-# price-percentiles; warehouse via zorder + scd2 asof/chain +
-# range-join; validators via orders-expectations; windows via
-# percent-rank tiers; text via repetition/rarity/bigram/
-# decontaminate/chunks/token-budget/stratified; dedup via
-# passage-dups/dedup-clusters/simhash/near-dup-prune-lsh + the
-# streaming near-dup ingest loop; similarity via centroid-knn/
-# cosine-near-dup/label-centroids/lsh-mp/sq8-ivf; codecs via
-# png/audio/gif; events via sliding/session/stream-funnel; bpe via
-# bpe-tokens/bpe-tokenize).
+# r23 rotation: the same steady state one turn on. Rule 3 binds on
+# the r20-green cohort (out in r21 and r22): 9 anchors + those exact
+# 41 must-returns = 50 fixed slots, zero free, as
+# `scripts/rotation_plan.py --propose` prints it. The r21-green
+# cohort becomes streak 2 after r23 and is r24's must-return set.
+# OUT = the other 82 entries: the r21-green cohort (streak 1) and
+# the r22-green cohort (streak 0).
 _PRIORITY: tuple[str, ...] = (
     # marts / full pipeline (permanent anchors)
     "mart_supplier_performance", "mart_product_performance",
@@ -424,26 +418,26 @@ _PRIORITY: tuple[str, ...] = (
     "recon_row_summary", "recon_mismatched_cells",
     "recon_column_mismatches", "recon_sample_mismatches",
     "recon_extra_rows",
-    # rule-3 must-returns (out-streak 2 after r21; the r19-green
-    # saturated cohort — exactly 41, zero free slots)
-    "corpus_near_dup_prune_lsh", "customer_scd2_asof",
-    "customer_scd2_chain", "customer_tiers_percent_rank",
-    "customers_with_orders", "customers_without_orders",
-    "doc_bigram_logprob", "doc_bpe_tokenize", "doc_bpe_tokens",
-    "doc_chunks", "doc_decontaminate", "doc_dedup_clusters",
-    "doc_neardup_stream", "doc_passage_dups", "doc_rarity_score",
-    "doc_repetition_stats", "doc_simhash", "doc_stratified_sample",
-    "doc_token_budget", "emb_centroid_knn", "emb_cosine_near_dup",
-    "emb_label_centroids", "emb_lsh_mp_topk", "emb_sq8_ivf_topk",
-    "events_sessionization", "events_sliding_window",
-    "events_stream_funnel", "lineitem_heavy_hitters",
-    "multimodal_audio_stats", "multimodal_gif_frames",
-    "multimodal_png_roundtrip", "orders_expectations",
-    "orders_price_histogram", "orders_status_pivot",
-    "orders_zorder_pruning", "part_price_band_range_join",
-    "part_price_class", "pricing_summary",
-    "sketch_price_percentiles", "supplier_part_agg",
-    "tpch_q3_shipping_priority",
+    # rule-3 must-returns (out-streak 2 after r22: the r20-green
+    # cohort, as `scripts/rotation_plan.py --propose` names it —
+    # exactly 41, zero free slots)
+    "adaptive_salted_skew_join", "corpus_bpe_merges",
+    "corpus_clean_pipeline", "corpus_dedup_report", "corpus_vocabulary",
+    "doc_containment_pairs", "doc_dsir_sample", "doc_dsir_weights",
+    "doc_incremental_dedup", "doc_jaccard_pairs", "doc_mixture_sample",
+    "doc_quality_classifier", "doc_quality_score", "doc_simhash_pairs",
+    "doc_tfidf_keywords", "emb_hard_negatives", "emb_ivf_kmeans_topk",
+    "emb_ivf_topk", "emb_kmeans_clusters", "emb_lsh_near_dup",
+    "emb_pq_ivf_topk", "emb_pq_topk", "emb_rp_rerank_topk",
+    "emb_semdedup_prune", "events_asof_join",
+    "events_cumulative_new_users", "events_interval_join",
+    "events_json_extract", "events_stream_dedup",
+    "events_stream_running_counts", "multimodal_decode_stats",
+    "multimodal_wav_roundtrip", "orders_priority_daily_gapfill",
+    "parts_fuzzy_match", "parts_sales_left_join",
+    "recon_bucketed_zero_shuffle", "sketch_distinct_counts",
+    "top_part_per_supplier", "tpch_q18_large_volume_customer",
+    "tpch_q5_local_supplier_volume", "warehouse_upsert_roundtrip",
 )
 
 

@@ -28,7 +28,6 @@ from ..llm.similarity import (
     cosine_topk_bruteforce,
     hard_negative_topk,
     hyperplane_lsh_topk,
-    ivf_topk,
     lsh_near_dup_pairs,
 )
 from ..llm.decontaminate import ngram_overlap

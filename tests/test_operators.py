@@ -227,6 +227,10 @@ def test_minhash_rejects_bad_band_split(spark):
     df = spark.createDataFrame([(1, "a b c d")], ["doc_id", "text"])
     with pytest.raises(ValueError, match="evenly divide"):
         minhash_lsh_pairs(df, num_perm=16, bands=32)
+    # a threshold <= 0 is not a near-dup cut: fail fast, not jaccard-0 pairs
+    for bad in (0.0, -0.5):
+        with pytest.raises(ValueError, match="threshold"):
+            minhash_lsh_pairs(df, threshold=bad)
 
 
 def test_diff_rejects_empty_compare_cols(spark):
@@ -413,12 +417,14 @@ def test_jl_inference_skips_null_rows_and_gumbel_carry_cols(spark):
     }
 
 
-def test_ivf_topk_recall_vs_bruteforce(spark, sf_dir):
-    from sahithi_metamorph_etl_spark.llm.similarity import ivf_topk
+def test_ivf_topk_recall_vs_bruteforce(spark, sf_dir, tmp_path):
+    from sahithi_metamorph_etl_spark.llm.similarity import ivf_build_index, ivf_search
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     exact = cosine_topk_bruteforce(emb, k=5, query_filter=F.col("vec_id") < 50)
-    approx = ivf_topk(emb, k=5, n_lists=8, n_probe=4, query_filter=F.col("vec_id") < 50)
+    idx = str(tmp_path / "ivf")
+    ivf_build_index(emb, idx, n_lists=8)
+    approx = ivf_search(spark, idx, emb.filter(F.col("vec_id") < 50), k=5, n_probe=4)
     e: dict[int, set] = {}
     for r in exact.collect():
         e.setdefault(r["vec_id"], set()).add(r["neighbor_id"])
@@ -437,32 +443,31 @@ def test_ivf_physical_index_prunes_probe_scan(spark, sf_dir, tmp_path):
     """The materialized IVF layout must (a) preserve every corpus row
     across the partitioned write, (b) push the probe set into the scan
     as a PARTITION filter — non-probed list directories never open —
-    and (c) return exactly what the index-free ivf_topk returns for the
-    same seed/params (the physical layout is a storage optimization,
-    not a semantics change)."""
+    (c) read only the probed list directories, and (d) return the same
+    answer when the index is rebuilt from a repartitioned corpus (the
+    seeded k-means trains on the lowest ids, so the centroids — and
+    everything downstream — are layout-independent)."""
     import contextlib
     import io
     import os
 
+    import numpy as np
+
     from sahithi_metamorph_etl_spark.llm.similarity import (
         ivf_build_index,
         ivf_search,
-        ivf_topk,
     )
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     idx = str(tmp_path / "ivf")
-    ivf_build_index(emb, idx, n_lists=8)
+    cents = ivf_build_index(emb, idx, n_lists=8)
 
     # (a) physical layout: one directory per non-empty list, rows preserved
     list_dirs = [d for d in os.listdir(f"{idx}/lists") if d.startswith("list_id=")]
     assert 1 < len(list_dirs) <= 8
     assert spark.read.parquet(f"{idx}/lists").count() == emb.count()
     # the k-row centroid table is ONE part file (single footer read at
-    # search time); pinned because the single-partition write must come
-    # from repartition(1) — coalesce(1) on the driver-local frame made
-    # one task evaluate all parallelize slices sequentially through the
-    # Python runner (~3.5s stall measured on local[32])
+    # search time)
     cent_parts = [
         f for f in os.listdir(f"{idx}/centroids") if f.endswith(".parquet")
     ]
@@ -481,12 +486,11 @@ def test_ivf_physical_index_prunes_probe_scan(spark, sf_dir, tmp_path):
 
     # (c) execution-level pruning: only probed list directories are read
     # (recompute the probe union the same way ivf_search does)
-    import numpy as np
-
     cents_rows = spark.read.parquet(f"{idx}/centroids").collect()
-    cents = np.zeros((len(cents_rows), len(cents_rows[0]["centroid"])))
+    stored = np.zeros((len(cents_rows), len(cents_rows[0]["centroid"])))
     for r in cents_rows:
-        cents[r["list_id"]] = r["centroid"]
+        stored[r["list_id"]] = r["centroid"]
+    assert np.array_equal(stored, cents)
     qrows = queries.select("vec_id", "embedding").collect()
     qm = np.array([r[1] for r in qrows], dtype=np.float64)
     qm = qm / np.maximum(np.linalg.norm(qm, axis=1, keepdims=True), 1e-12)
@@ -501,112 +505,34 @@ def test_ivf_physical_index_prunes_probe_scan(spark, sf_dir, tmp_path):
     }
     assert scanned == {str(p) for p in probe_union}
 
-    # (d) same answer as the index-free form (same seed -> same centroids)
-    mem = ivf_topk(emb, k=5, n_lists=8, n_probe=4, query_filter=F.col("vec_id") < 50)
+    # (d) same seed, different layout -> same centroids, same answer
+    idx2 = str(tmp_path / "ivf_relaid")
+    again = ivf_build_index(emb.repartition(7), idx2, n_lists=8)
+    assert np.array_equal(again, cents)
     got = sorted(tuple(r) for r in ann.collect())
-    want = sorted(tuple(r) for r in mem.collect())
+    want = sorted(
+        tuple(r) for r in ivf_search(spark, idx2, queries, k=5, n_probe=4).collect()
+    )
     assert got == want
 
 
-def test_ivf_physical_equals_logical_on_random_corpora(spark):
-    """The materialized index path (ivf_build_index + ivf_search) must
-    return EXACTLY what the index-free ivf_topk returns on ANY corpus —
-    the physical layout is a storage optimization, never a semantics
-    change. Discrete small-range coordinates force genuine rounded-dot
-    ties (duplicate vectors, zero vectors, equal cos_sims), exercising
-    the stored-assignment vs recomputed-assignment agreement, the
-    stable lowest-list-id probe tie-break, and the (sim, -nid) heap
-    tie-break on both paths; n may be below n_lists (fewer trained
-    centroids than lists) and k may exceed every list's population."""
-    import shutil
-    import tempfile
+@pytest.mark.parametrize("kind", ["ivf", "sq8", "pq"])
+def test_physical_index_equals_reference_on_random_corpora(spark, kind):
+    """Every ANN index layout is a storage optimization, never a
+    semantics change: a search over the materialized index must return
+    EXACTLY its reference on ANY corpus.
 
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
+    - ivf: a numpy replay — rounded-argmax list assignment, stable
+      lowest-list probes, (cos desc, id asc) top-k — and probing every
+      list equals cosine_topk_bruteforce;
+    - sq8: the flat sq8_topk scan at the same parameters;
+    - pq: the flat pq_topk scan, on a flat index and on an
+      IVF-composed one probing every list.
 
-    from sahithi_metamorph_etl_spark.llm.similarity import (
-        ivf_build_index,
-        ivf_search,
-        ivf_topk,
-    )
-
-    vec = st.lists(st.integers(min_value=-2, max_value=2), min_size=3, max_size=3)
-
-    @settings(max_examples=5, deadline=None)
-    @given(st.lists(vec, min_size=2, max_size=14))
-    def check(vecs):
-        emb = spark.createDataFrame(
-            [(i, [float(v) for v in vv]) for i, vv in enumerate(vecs)],
-            "vec_id bigint, embedding array<double>",
-        )
-        logical = ivf_topk(
-            emb, k=3, n_lists=3, n_probe=2, query_filter=F.col("vec_id") >= 0
-        )
-        idx = tempfile.mkdtemp(prefix="ivf_prop_")
-        try:
-            ivf_build_index(emb, idx, n_lists=3)
-            physical = ivf_search(spark, idx, emb, k=3, n_probe=2)
-            got = sorted(tuple(r) for r in physical.collect())
-        finally:
-            shutil.rmtree(idx, ignore_errors=True)
-        want = sorted(tuple(r) for r in logical.collect())
-        assert got == want, (vecs, got, want)
-
-    check()
-
-
-def test_sq8_physical_equals_flat_on_random_corpora(spark):
-    """sq8_search over a materialized index must return EXACTLY what
-    the flat sq8_topk scan returns on ANY corpus — the codes table is
-    a storage optimization, never a semantics change. Discrete
-    small-range coordinates force the hard cases: duplicate vectors
-    (adc and cosine ties -> id tie-breaks on both paths), zero vectors
-    (norm clamp), and CONSTANT dimensions (mx == mn -> the code-0
-    branch on both the numpy and the replay side)."""
-    import shutil
-    import tempfile
-
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    from sahithi_metamorph_etl_spark.llm.similarity import (
-        sq8_build_index,
-        sq8_search,
-        sq8_topk,
-    )
-
-    vec = st.lists(st.integers(min_value=-2, max_value=2), min_size=3, max_size=3)
-
-    @settings(max_examples=5, deadline=None)
-    @given(st.lists(vec, min_size=2, max_size=14))
-    def check(vecs):
-        emb = spark.createDataFrame(
-            [(i, [float(v) for v in vv]) for i, vv in enumerate(vecs)],
-            "vec_id bigint, embedding array<double>",
-        )
-        flat = sq8_topk(emb, k=3, rerank=2, query_filter=F.col("vec_id") >= 0)
-        idx = tempfile.mkdtemp(prefix="sq8_prop_")
-        try:
-            sq8_build_index(emb, idx)
-            physical = sq8_search(spark, idx, emb, emb, k=3, rerank=2)
-            got = sorted(tuple(r) for r in physical.collect())
-        finally:
-            shutil.rmtree(idx, ignore_errors=True)
-        want = sorted(tuple(r) for r in flat.collect())
-        assert got == want, (vecs, got, want)
-
-    check()
-
-
-def test_pq_physical_equals_flat_on_random_corpora(spark):
-    """pq_search over a materialized codes index must return EXACTLY
-    what the flat pq_topk scan returns on ANY corpus — and probing
-    EVERY list of an IVF-composed index must too (the sq8 property
-    test's treatment applied to the r14-graded IVFPQ layout). Discrete
-    small-range coordinates force the hard cases: duplicate vectors
-    (ADC and cosine ties -> id tie-breaks on both paths), zero vectors
-    (norm clamp), and encode ties between codebook entries (rounded-
-    distance argmin -> lowest-cid on both the numpy and replay side)."""
+    Discrete small-range coordinates force the hard cases: duplicate
+    vectors (score ties -> id tie-breaks), zero vectors (norm clamp),
+    constant dimensions (the SQ8 code-0 branch), encode ties between
+    codebook entries (lowest cid), and fewer vectors than lists."""
     import shutil
     import tempfile
 
@@ -614,21 +540,38 @@ def test_pq_physical_equals_flat_on_random_corpora(spark):
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
-    from sahithi_metamorph_etl_spark.llm.similarity import (
-        pq_build_index,
-        pq_search,
-        pq_topk,
-    )
+    from sahithi_metamorph_etl_spark.llm import similarity as sim
 
-    # fixed tiny codebooks (m=2, ksub=3, dsub=2) and coarse centroids:
+    # fixed tiny PQ codebooks (m=2, ksub=3, dsub=2) and coarse centroids:
     # explicit so the flat and physical paths share them exactly
     books = np.array([
         [[1.0, 0.0], [0.0, 1.0], [-1.0, -1.0]],
         [[0.5, -0.5], [0.0, 0.0], [1.0, 1.0]],
     ])
     cents = np.array([[1.0, 0.0, 0.0, 0.0], [0.0, -1.0, 0.0, 1.0]])
+    dim = 4 if kind == "pq" else 3
+    vec = st.lists(st.integers(min_value=-2, max_value=2), min_size=dim, max_size=dim)
+    every = F.col("vec_id") >= 0
 
-    vec = st.lists(st.integers(min_value=-2, max_value=2), min_size=4, max_size=4)
+    def rows_of(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    def ivf_replay(vecs, cents, n_probe, k):
+        u = np.array(vecs, dtype=np.float64)
+        u = u / np.maximum(np.linalg.norm(u, axis=1, keepdims=True), 1e-12)
+        near = sim._nround(u @ cents.T)
+        lists = near.argmax(axis=1)
+        cos = sim._nround(u @ u.T)
+        want = []
+        for q in range(len(u)):
+            probes = np.argsort(-near[q], kind="stable")[:n_probe]
+            scored = sorted(
+                (-cos[q, j], j)
+                for j in range(len(u))
+                if j != q and lists[j] in probes
+            )
+            want += [(q, r + 1, j, -s) for r, (s, j) in enumerate(scored[:k])]
+        return sorted(want)
 
     @settings(max_examples=5, deadline=None)
     @given(st.lists(vec, min_size=2, max_size=14))
@@ -637,35 +580,37 @@ def test_pq_physical_equals_flat_on_random_corpora(spark):
             [(i, [float(v) for v in vv]) for i, vv in enumerate(vecs)],
             "vec_id bigint, embedding array<double>",
         )
-        flat = pq_topk(
-            emb, k=3, m=2, ksub=3, rerank=2,
-            query_filter=F.col("vec_id") >= 0, books=books,
-        )
-        want = sorted(tuple(r) for r in flat.collect())
-        idx = tempfile.mkdtemp(prefix="pq_prop_")
+        idx = tempfile.mkdtemp(prefix=f"{kind}_prop_")
         try:
-            pq_build_index(emb, idx, m=2, ksub=3, books=books)
-            got = sorted(
-                tuple(r)
-                for r in pq_search(spark, idx, emb, emb, k=3, rerank=2).collect()
-            )
+            if kind == "ivf":
+                trained = sim.ivf_build_index(emb, idx, n_lists=3)
+                got = rows_of(sim.ivf_search(spark, idx, emb, k=3, n_probe=2))
+                assert got == ivf_replay(vecs, trained, 2, 3), vecs
+                got = rows_of(sim.ivf_search(spark, idx, emb, k=3, n_probe=len(trained)))
+                exact = sim.cosine_topk_bruteforce(emb, k=3, query_filter=every)
+                assert got == rows_of(exact), vecs
+            elif kind == "sq8":
+                sim.sq8_build_index(emb, idx)
+                got = rows_of(sim.sq8_search(spark, idx, emb, emb, k=3, rerank=2))
+                flat = sim.sq8_topk(emb, k=3, rerank=2, query_filter=every)
+                assert got == rows_of(flat), vecs
+            else:
+                want = rows_of(sim.pq_topk(
+                    emb, k=3, m=2, ksub=3, rerank=2, query_filter=every, books=books,
+                ))
+                sim.pq_build_index(emb, idx, m=2, ksub=3, books=books)
+                got = rows_of(sim.pq_search(spark, idx, emb, emb, k=3, rerank=2))
+                assert got == want, vecs
+                ivf_idx = f"{idx}/ivf"
+                sim.pq_build_index(
+                    emb, ivf_idx, m=2, ksub=3, books=books, n_lists=2, centroids=cents
+                )
+                got = rows_of(
+                    sim.pq_search(spark, ivf_idx, emb, emb, k=3, rerank=2, n_probe=2)
+                )
+                assert got == want, vecs
         finally:
             shutil.rmtree(idx, ignore_errors=True)
-        assert got == want, (vecs, got, want)
-        idx2 = tempfile.mkdtemp(prefix="pq_prop_ivf_")
-        try:
-            pq_build_index(
-                emb, idx2, m=2, ksub=3, books=books, n_lists=2, centroids=cents
-            )
-            got2 = sorted(
-                tuple(r)
-                for r in pq_search(
-                    spark, idx2, emb, emb, k=3, rerank=2, n_probe=2
-                ).collect()
-            )
-        finally:
-            shutil.rmtree(idx2, ignore_errors=True)
-        assert got2 == want, (vecs, got2, want)
 
     check()
 
@@ -839,14 +784,14 @@ def test_unbounded_query_collects_rejected(spark, sf_dir):
     from sahithi_metamorph_etl_spark.llm.similarity import (
         cosine_near_dup_pairs,
         cosine_topk_bruteforce,
-        ivf_topk,
+        sq8_topk,
     )
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     with pytest.raises(ValueError, match="query_filter"):
         cosine_topk_bruteforce(emb, k=3)
     with pytest.raises(ValueError, match="query_filter"):
-        ivf_topk(emb, k=3)
+        sq8_topk(emb, k=3)
     with pytest.raises(ValueError, match="max_queries"):
         cosine_topk_bruteforce(emb, k=3, max_queries=10)
     with pytest.raises(ValueError, match="max_corpus_rows"):
@@ -2069,16 +2014,17 @@ def test_pack_sequences_null_text_counts_as_empty(spark):
 
 
 def test_pq_codebooks_layout_independent_and_runs_reproducible(spark, sf_dir):
-    """The PQ codebook training sample is the train_sample LOWEST ids
-    (ordered take) — so the trained codebooks must be bit-identical
-    across any physical repartitioning of the input (an un-ordered
-    limit would pick layout-dependent rows). And a fixed layout must
-    reproduce pq_topk results exactly run to run."""
+    """The PQ codebooks and the IVF coarse centroids train on ONE shared
+    sample, the train_sample LOWEST ids (ordered take) — so both must be
+    bit-identical across any physical repartitioning of the input (an
+    un-ordered limit would pick layout-dependent rows). And a fixed
+    layout must reproduce pq_topk results exactly run to run."""
     import numpy as np
 
     from pyspark.sql import functions as F
 
     from sahithi_metamorph_etl_spark.llm.similarity import (
+        _train_centroids,
         _train_pq_codebooks,
         pq_topk,
     )
@@ -2087,11 +2033,13 @@ def test_pq_codebooks_layout_independent_and_runs_reproducible(spark, sf_dir):
         F.col("vec_id") < 300
     )
     books = _train_pq_codebooks(emb, "vec_id", "embedding", 8, 8, 42, 64)
+    cents = _train_centroids(emb, "vec_id", "embedding", 8, 42, 64)
     for n in (1, 7):
-        again = _train_pq_codebooks(
-            emb.repartition(n), "vec_id", "embedding", 8, 8, 42, 64
-        )
+        relaid = emb.repartition(n)
+        again = _train_pq_codebooks(relaid, "vec_id", "embedding", 8, 8, 42, 64)
         assert np.array_equal(books, again), f"repartition({n})"
+        again = _train_centroids(relaid, "vec_id", "embedding", 8, 42, 64)
+        assert np.array_equal(cents, again), f"centroids repartition({n})"
 
     def run():
         return sorted(
@@ -2415,6 +2363,10 @@ def test_neardup_against_seen_catches_edited_repeats(spark):
     # the fingerprint op misses the edited repeat — both new docs "novel"
     kept = dedup_against_seen(batch, content_fingerprint(prior))
     assert sorted(r["doc_id"] for r in kept.collect()) == [10, 11]
+    # a threshold <= 0 is not a near-dup cut: fail fast
+    for bad in (0.0, -1.0):
+        with pytest.raises(ValueError, match="threshold"):
+            neardup_against_seen(batch, band_signature_store(prior), prior, threshold=bad)
 
 
 def test_neardup_band_store_bucketed_colocation(spark, sf_dir, tmp_path):
@@ -2925,12 +2877,17 @@ def test_sq8_physical_index_matches_flat_scan(spark, sf_dir, tmp_path):
     )
     assert du(f"{idx}/codes") < emb_bytes / 3
 
-    # the unpacked array<smallint> layout decodes to the same answer
-    # (sq8_search auto-detects the cell type)
-    idx2 = str(tmp_path / "sq8_idx_unpacked")
-    sq8_build_index(emb, idx2, packed=False)
-    srch2 = sq8_search(spark, idx2, emb.filter(qf), emb, k=5, rerank=32)
-    assert sorted(map(tuple, srch2.collect())) == sorted(map(tuple, flat.collect()))
+    # codes that are not one binary cell per vector (an array<smallint>
+    # layout written by hand) fail fast instead of mis-decoding
+    import pytest as _pytest
+
+    idx2 = str(tmp_path / "sq8_idx_array")
+    sq8_build_index(emb, idx2)
+    spark.createDataFrame(
+        [(0, [1, 2, 3])], "vec_id bigint, codes array<smallint>"
+    ).write.mode("overwrite").parquet(f"{idx2}/codes")
+    with _pytest.raises(ValueError, match="binary"):
+        sq8_search(spark, idx2, emb.filter(qf), emb, k=5, rerank=32)
 
     # empty query set: typed empty frame, no job
     none = sq8_search(spark, idx, emb.filter(F.col("vec_id") < 0), emb)
@@ -3811,6 +3768,34 @@ def test_logreg_property_matches_replay_on_random_corpora(spark):
     )
     with _pytest.raises(ValueError, match="no scoreable"):
         logreg_quality_score(all_null, F.col("source") == "tgt")
+
+
+@pytest.mark.parametrize(
+    "path, want",
+    [
+        ("/tmp/x/c", "/tmp/x/c"),
+        ("rel/idx/c", "rel/idx/c"),
+        ("file:/tmp/x/c", "/tmp/x/c"),
+        ("file:///tmp/x/c", "/tmp/x/c"),
+        ("file://localhost/tmp/x/c", "/tmp/x/c"),
+        ("file://otherhost/tmp/x/c", None),
+        ("hdfs://nn/idx/c", None),
+        ("hdfs:/idx/c", None),
+        ("s3a://bucket/idx/c", None),
+        ("s3a:/bucket/idx/c", None),
+    ],
+)
+def test_local_sidecar_path_forms(path, want):
+    """Sidecar paths resolve to the driver-local POSIX path both the
+    pyarrow and the Hadoop FS layer read; a file: URI on another host
+    and every other scheme — single-slash forms included — raise."""
+    from sahithi_metamorph_etl_spark.llm.similarity import _local_sidecar_path
+
+    if want is None:
+        with pytest.raises(ValueError, match="driver-local"):
+            _local_sidecar_path(path)
+    else:
+        assert _local_sidecar_path(path) == want
 
 
 def test_sidecar_local_path_contract(tmp_path):
