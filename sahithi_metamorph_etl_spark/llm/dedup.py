@@ -1,28 +1,47 @@
-"""Deduplication operators: exact, n-gram Jaccard, MinHash-LSH, SimHash.
+"""Deduplication operators: exact, n-gram Jaccard and containment,
+MinHash-LSH (within a corpus and against prior snapshots), SimHash,
+and passage copies.
 
-Training-data dedup at 100 TB cannot compare all pairs; the scalable
-paths here are:
+Training-data dedup at 100 TB cannot compare all pairs. Every n-gram
+pair producer here is the same candidate → exact-verify pipeline,
+written once:
 
-- exact: one hash-aggregate on a content fingerprint (1 shuffle);
-- Jaccard: shingle-inverted-index self-join — exact pairwise scores but
-  join fan-out bounded by shingle frequency (cap hot shingles upstream);
-- MinHash-LSH: fixed-size signatures (64 perms), banded bucketing
-  (16 bands x 4 rows), candidate pairs only within equal band
-  signatures, then exact-Jaccard verification of candidates only. This
-  is the standard sub-quadratic near-dup pipeline (Broder MinHash /
-  LSH banding as in Mining of Massive Datasets ch.3), expressed purely
-  in DataFrame ops — no UDFs.
-- SimHash: 64-bit sign-of-weighted-sum signature (Charikar), hamming
-  buckets for candidates.
+1. SHINGLE INDEX — word n-grams hashed to xxhash64 longs (one token
+   prelude, :func:`_doc_tokens`, and one gram builder,
+   :func:`_grams_expr`), either as a distinct
+   ``(id, shingle)`` row index or as one distinct-hash array per doc.
+2. CANDIDATES — pairs that can reach the threshold, never all pairs:
+   - :func:`jaccard_pairs`: self-join of the rare-first PREFIX index
+     (AllPairs/PPJoin), exact;
+   - :func:`containment_pairs`: the inverted-index self-join
+     (:func:`_overlap_pairs`), whose overlap count is already exact;
+   - :func:`minhash_lsh_pairs`: equal LSH band signatures (64 perms,
+     16 bands x 4 rows — Broder MinHash / LSH banding as in Mining of
+     Massive Datasets ch.3);
+   - :func:`neardup_against_seen`: the same band signatures joined
+     against a persisted store of prior snapshots.
+3. ONE VERIFY — :func:`_verify_jaccard` scores candidates by
+   ``size(array_intersect)`` over the per-doc hash arrays and keeps
+   Jaccard >= threshold.
+
+The four share one threshold rule (:func:`_check_threshold`: (0, 1])
+and one hot-key cap (:func:`_key_counts`, also behind
+:func:`passage_dups`). Exact dedup is one hash-aggregate on a content
+fingerprint (1 shuffle); SimHash is a 64-bit sign-of-weighted-sum
+signature (Charikar) with hamming chunk buckets for candidates.
+Everything is DataFrame ops except the MinHash min-matrix, one Arrow
+batch pass.
 """
 
 from __future__ import annotations
 
 import random
 
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.windows import CacheRelease
 from .textstats import content_fingerprint
 
 # Mersenne prime 2^31-1 as universal-hash modulus: a*h stays < 2^62, so
@@ -102,24 +121,147 @@ def hot_shingles(
     return freq.limit(k) if k is not None else freq
 
 
+def _doc_tokens(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """``(id, w)``: each doc's whitespace token array — the one token
+    prelude of the hashed shingle forms, which build their n-grams over
+    ``w`` with :func:`_grams_expr`. Null text reads as ``""`` (no
+    shingles for n >= 2). ``w`` is its own projection so the gram
+    lambda sees an attribute, not ``split`` (see :func:`word_shingles`)."""
+    return df.select(
+        F.col(id_col),
+        F.split(F.trim(F.coalesce(F.col(text_col), F.lit(""))), r"\s+").alias("w"),
+    )
+
+
 def _hashed_shingle_index(
     df: DataFrame, text_col: str, id_col: str, n: int
 ) -> DataFrame:
     """Distinct ``(id, shingle)`` inverted index carrying xxhash64
     SHINGLE HASHES — fixed-width long join keys instead of n-gram
-    strings (set counts exact up to 64-bit collisions, the trade
-    jaccard/minhash already make). The hash is a SCALAR projection
-    after the explode — hashing inside an HOF chain under the Generate
-    re-evaluates the whole array expression per emitted row (measured
-    6 s vs 0.5 s for the index build)."""
-    words = df.select(
-        F.col(id_col),
-        F.split(F.trim(F.coalesce(F.col(text_col), F.lit(""))), r"\s+").alias("w"),
-    )
+    strings (set counts exact up to 64-bit collisions, p ≈
+    |shingles|²·2⁻⁶⁵). The gram array is exploded inline: projecting
+    it to a column first measured ~0.8 s slower per
+    ``doc_dedup_clusters`` build on 4 cores. The hash is a SCALAR
+    projection after the explode — hashing inside an HOF chain under
+    the Generate re-evaluates the whole array expression per emitted
+    row (measured 6 s vs 0.5 s for the index build)."""
     return (
-        words.select(F.col(id_col), F.explode(_grams_expr(n)).alias("__s"))
+        _doc_tokens(df, text_col, id_col)
+        .select(F.col(id_col), F.explode(_grams_expr(n)).alias("__s"))
         .select(F.col(id_col), F.xxhash64("__s").alias("shingle"))
         .distinct()
+    )
+
+
+def _shingle_hash_arrays(
+    df: DataFrame, text_col: str, id_col: str, n: int
+) -> DataFrame:
+    """``(id, __hs)``: each doc's DISTINCT xxhash64 shingle hashes as one
+    array — the same hashes :func:`_hashed_shingle_index` emits as rows.
+    Tokenize, shingle and hash all run in JVM whole-stage codegen;
+    Python never touches a string. Docs with < n tokens yield an empty
+    array. The distinct shingle array is materialized before the
+    hashing HOF, so its lambda sees an attribute reference."""
+    sh = _doc_tokens(df, text_col, id_col).select(
+        F.col(id_col), F.array_distinct(_grams_expr(n)).alias("__sh")
+    )
+    return sh.select(
+        F.col(id_col), F.expr("transform(__sh, s -> xxhash64(s))").alias("__hs")
+    )
+
+
+def _check_threshold(threshold: float, op_name: str) -> None:
+    """The one threshold rule of the pair producers: a Jaccard or
+    containment score is a set-overlap ratio, so the cut lies in
+    (0, 1]. Above 1 nothing can pass (a silently empty result); at or
+    below 0 the verify keeps zero-overlap candidates."""
+    if not 0.0 < threshold <= 1.0:
+        raise ValueError(
+            f"{op_name}: threshold must be in (0, 1], got {threshold!r} — "
+            "a similarity threshold is a set-overlap ratio"
+        )
+
+
+def _key_counts(
+    df: DataFrame, key: str, max_freq: int | None, param: str
+) -> DataFrame:
+    """``(key, __f)``: how many rows of ``df`` carry each ``key`` — with
+    ``max_freq``, only the keys at or under it. This is the one hot-key
+    cap (boilerplate shingles and passages, whose self-join fan-out is
+    freq² per key). Below 2 no key could connect any pair and the
+    output would be silently empty, so that raises ``ValueError``."""
+    if max_freq is not None and max_freq < 2:
+        raise ValueError(
+            f"{param} must be >= 2 (got {max_freq}): below 2 no key can "
+            "connect any pair and the output is empty"
+        )
+    counts = df.groupBy(key).agg(F.count(F.lit(1)).alias("__f"))
+    return counts if max_freq is None else counts.filter(F.col("__f") <= max_freq)
+
+
+def _drop_hot_keys(
+    df: DataFrame, key: str, max_freq: int | None, param: str
+) -> DataFrame:
+    """``df`` without the rows whose ``key`` is over the
+    :func:`_key_counts` cap (``None`` keeps everything)."""
+    if max_freq is None:
+        return df
+    return df.join(_key_counts(df, key, max_freq, param).select(key), key, "left_semi")
+
+
+def _with_release(pairs: DataFrame, pinned: DataFrame, return_release: bool):
+    """``pairs``, or ``(pairs, CacheRelease(pinned))`` for a caller that
+    drops the persisted frame backing the plan once it materializes
+    (the ``operators.windows.global_rank`` lifetime contract)."""
+    return (pairs, CacheRelease(pinned)) if return_release else pairs
+
+
+def _overlap_pairs(sh: DataFrame, id_col: str) -> DataFrame:
+    """``(doc_a, doc_b, n_common, n_a, n_b)`` for every pair
+    ``doc_a < doc_b`` sharing a shingle of the distinct ``(id, shingle)``
+    index ``sh``: the inverted-index self-join (fan-out Σ freq² over
+    shingles), grouped overlap counts, and both set sizes. ``sh`` feeds
+    three consumers (sizes and both join sides); a caller that runs the
+    plan for real persists it."""
+    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("__n"))
+    a = sh.select(F.col(id_col).alias("doc_a"), "shingle")
+    b = sh.select(F.col(id_col).alias("doc_b"), "shingle")
+    return (
+        a.join(b, "shingle")
+        .filter(F.col("doc_a") < F.col("doc_b"))
+        .groupBy("doc_a", "doc_b")
+        .agg(F.count(F.lit(1)).alias("n_common"))
+        .join(sizes.select(F.col(id_col).alias("doc_a"), F.col("__n").alias("n_a")), "doc_a")
+        .join(sizes.select(F.col(id_col).alias("doc_b"), F.col("__n").alias("n_b")), "doc_b")
+    )
+
+
+def _verify_jaccard(
+    cand: DataFrame,
+    arr_a: DataFrame,
+    arr_b: DataFrame,
+    id_col: str,
+    threshold: float,
+    a: str = "doc_a",
+    b: str = "doc_b",
+) -> DataFrame:
+    """The one exact verify: candidate pairs ``(a, b)`` join each side's
+    per-doc distinct-hash array (``arr_a``/``arr_b``: ``(id_col, __hs)``
+    from :func:`_shingle_hash_arrays` or :func:`_rarefirst_hash_arrays`),
+    score ``|A ∩ B| / |A ∪ B|`` with ``size(array_intersect)``, and keep
+    Jaccard >= ``threshold``. Returns ``(a, b, jaccard)``.
+
+    The arrays ride whole into ``array_intersect`` and are never
+    exploded, so the verify is two doc-keyed joins — no shingle-keyed
+    overlap join, overlap groupBy or size aggregate. Values equal the
+    exploded-index form bit for bit (same distinct xxhash64 sets)."""
+    common = F.size(F.array_intersect("__ha", "__hb"))
+    jac = common / (F.size("__ha") + F.size("__hb") - common)
+    return (
+        cand.join(arr_a.select(F.col(id_col).alias(a), F.col("__hs").alias("__ha")), a)
+        .join(arr_b.select(F.col(id_col).alias(b), F.col("__hs").alias("__hb")), b)
+        .select(a, b, jac.alias("jaccard"))
+        .filter(F.col("jaccard") >= threshold)
     )
 
 
@@ -131,32 +273,22 @@ def _rarefirst_hash_arrays(
     max_shingle_freq: int | None,
 ) -> DataFrame:
     """Persisted per-doc xxhash64 shingle arrays ``(id, __hs, __n)`` in
-    the canonical rare-first (freq, hash) order — the shared backbone of
-    the prefix-filtered exact passes (:func:`jaccard_pairs`,
-    :func:`containment_pairs` with ``prefix=True``). ``__n`` is the
-    POST-cap set size, so ratios computed from it stay internally
-    consistent under ``max_shingle_freq``.
+    the canonical rare-first (freq, hash) order that the prefix filter
+    of :func:`jaccard_pairs` needs. ``__n`` is the POST-cap set size, so
+    ratios computed from it stay internally consistent under
+    ``max_shingle_freq``.
 
     Persisted because it feeds THREE consumers (the prefix index and
     both verify sides); it is the compact representation of the shingle
     index — one row per doc, not per (doc, shingle)."""
     sh = _hashed_shingle_index(df, text_col, id_col, n)
-    freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("__freq"))
-    if max_shingle_freq is not None:
-        if max_shingle_freq < 2:
-            raise ValueError(
-                f"max_shingle_freq must be >= 2 (got {max_shingle_freq}): below 2 no "
-                "shingle can connect any pair and the output is empty"
-            )
-        freq = freq.filter(F.col("__freq") <= max_shingle_freq)
-    from pyspark import StorageLevel
-
+    freq = _key_counts(sh, "shingle", max_shingle_freq, "max_shingle_freq")
     return (
         sh.join(freq, "shingle")
         .groupBy(id_col)
         .agg(
             F.transform(
-                F.sort_array(F.collect_list(F.struct("__freq", "shingle"))),
+                F.sort_array(F.collect_list(F.struct("__f", "shingle"))),
                 lambda s: s["shingle"],
             ).alias("__hs")
         )
@@ -174,28 +306,22 @@ def jaccard_pairs(
     max_shingle_freq: int | None = None,
     return_release: bool = False,
 ) -> DataFrame:
-    """Exact n-gram Jaccard similarity pairs >= threshold.
+    """Exact n-gram Jaccard similarity pairs >= threshold:
+    ``(doc_a, doc_b, jaccard)`` for doc_a < doc_b.
 
-    Inverted-index self-join: |pairs| is sum over shingles of freq^2 —
-    fine when shingle frequencies are bounded. At open-web scale pass
-    ``max_shingle_freq``: shingles shared by more documents than that
-    are dropped BEFORE the self-join (anti-join against the hot set),
-    bounding the fan-out at max_freq² per surviving shingle. Scores
-    then approximate Jaccard over the non-boilerplate shingle space —
-    per-doc sizes are recomputed on the capped index so the ratio stays
-    internally consistent; pairs connected ONLY by boilerplate no
-    longer surface (that is the point).
+    The shingle index carries xxhash64 hashes, not strings: fixed-width
+    long keys make the join hash and compare cheap and the join state
+    compact; set counts are exact up to 64-bit hash collisions
+    (~2e-9 at a million distinct shingles; the same trade
+    minhash_lsh_pairs makes).
 
-    The index carries xxhash64 SHINGLE HASHES, not strings (r10):
-    fixed-width long keys make the join hash and compare cheap and
-    the join state compact, uniform with the minhash path; set counts
-    are exact up to 64-bit hash collisions (p ≈ |shingles|²·2⁻⁶⁵ —
-    ~2e-9 at a million distinct shingles; the same trade
-    minhash_lsh_pairs already makes). Implementation note: the hash
-    must be a SCALAR projection after the explode — hashing inside an
-    HOF chain under the Generate re-evaluates the whole array
-    expression per emitted row (measured 6 s vs 0.5 s for the index
-    build).
+    At open-web scale pass ``max_shingle_freq``: shingles shared by more
+    documents than that are dropped BEFORE the self-join, bounding the
+    fan-out at max_freq² per surviving shingle. Scores then approximate
+    Jaccard over the non-boilerplate shingle space — per-doc sizes are
+    recomputed on the capped index so the ratio stays internally
+    consistent; pairs connected ONLY by boilerplate no longer surface
+    (that is the point).
 
     PREFIX FILTERING (r10, the AllPairs/PPJoin principle — Bayardo et
     al. WWW'07, Xiao et al. VLDB'08): a qualifying pair at Jaccard >= t
@@ -206,13 +332,11 @@ def jaccard_pairs(
     remain — pigeonhole). So the candidate self-join runs on the
     rare-first-ordered PREFIX index only — at t=0.8 that is ~20% of
     the index, shrinking the freq² join fan-out ~25× — and candidates
-    verify EXACTLY via array_intersect on the full per-doc hash
-    arrays. Output is bit-identical to the naive all-pairs form
-    (pinned in tests + the same DuckDB oracle); the float ceil
-    carries a -1e-9 epsilon so a representation error can only ever
-    LENGTHEN a prefix, never unsoundly shorten it. The
-    ``max_shingle_freq`` cap drops hot shingles before ordering,
-    using the same frequency table the canonical order needs anyway.
+    go through the one exact verify (:func:`_verify_jaccard`) on the
+    full per-doc hash arrays. Output is bit-identical to the naive
+    all-pairs form (pinned in tests + the same DuckDB oracle); the
+    float ceil carries a -1e-9 epsilon so a representation error can
+    only ever LENGTHEN a prefix, never unsoundly shorten it.
 
     Measured at sf0.1 (same-session A/Bs, two fresh sessions): prefix
     beats the naive inverted-index form at EVERY threshold once the
@@ -221,23 +345,16 @@ def jaccard_pairs(
     1.90 s — and under the 8x token-tagged corpus it grows 1.4x vs
     the naive 1.9x. The fan-out bound (~(1-t)^2 of freq^2 per
     shingle) is the scale insurance; it composes with the
-    hot-shingle cap. Equality with the naive form is pinned in tests
-    across thresholds.
+    hot-shingle cap.
 
-    With ``return_release=True`` returns ``(pairs, CacheRelease)`` —
-    the per-doc array frame backs the returned plan so it cannot be
+    ``threshold`` must lie in (0, 1] (``ValueError`` otherwise). With
+    ``return_release=True`` returns ``(pairs, CacheRelease)`` — the
+    per-doc array frame backs the returned plan so it cannot be
     unpersisted here; call ``release()`` after materializing to drop
     the pinned partitions (same lifetime contract as
     ``operators.windows.global_rank``).
     """
-    if not 0.0 < threshold <= 1.0:
-        # threshold > 1 makes the prefix length negative (F.slice
-        # fails at job runtime); threshold <= 0 silently degenerates
-        # the prefix to the full index (quadratic candidate fan-out)
-        raise ValueError(
-            f"threshold must be in (0, 1] (got {threshold}): a Jaccard "
-            "similarity is a set-overlap ratio"
-        )
+    _check_threshold(threshold, "jaccard_pairs")
     arr = _rarefirst_hash_arrays(df, text_col, id_col, n, max_shingle_freq)
     # prefix = first n - ceil(t*n) + 1 elements (the epsilon guards
     # the integer boundary of the float product: errors can only
@@ -257,50 +374,18 @@ def jaccard_pairs(
         .select("doc_a", "doc_b")
         .distinct()
     )
-    a = arr.select(F.col(id_col).alias("doc_a"), F.col("__hs").alias("__ha"),
-                   F.col("__n").alias("__na"))
-    b = arr.select(F.col(id_col).alias("doc_b"), F.col("__hs").alias("__hb"),
-                   F.col("__n").alias("__nb"))
-    common = F.size(F.array_intersect("__ha", "__hb"))
-    jac = common * 1.0 / (F.col("__na") + F.col("__nb") - common)
-    pairs = (
-        cand.join(a, "doc_a")
-        .join(b, "doc_b")
-        .select("doc_a", "doc_b", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
-    )
-    if return_release:
-        from ..operators.windows import CacheRelease
-
-        return pairs, CacheRelease(arr)
-    return pairs
+    pairs = _verify_jaccard(cand, arr, arr, id_col, threshold)
+    return _with_release(pairs, arr, return_release)
 
 
 def _jaccard_from_shingles(sh: DataFrame, id_col: str, threshold: float) -> DataFrame:
-    """Pairwise exact Jaccard from a distinct (id, shingle) index.
-
-    The index feeds three consumers (per-doc sizes + both self-join
-    sides) — persist so shingling runs once, not three times."""
-    from pyspark import StorageLevel
-
-    sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-    a = sh.select(F.col(id_col).alias("doc_a"), "shingle")
-    b = sh.select(F.col(id_col).alias("doc_b"), "shingle")
-    common = (
-        a.join(b, "shingle")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sa = sizes.select(F.col(id_col).alias("doc_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col(id_col).alias("doc_b"), F.col("n_sh").alias("n_b"))
+    """Exact all-pairs Jaccard over a distinct ``(id, shingle)`` index —
+    the reference the prefix-filtered :func:`jaccard_pairs` is pinned
+    against in tests."""
+    p = _overlap_pairs(sh, id_col)
     jac = F.col("n_common") * 1.0 / (F.col("n_a") + F.col("n_b") - F.col("n_common"))
-    return (
-        common.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select("doc_a", "doc_b", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
+    return p.select("doc_a", "doc_b", jac.alias("jaccard")).filter(
+        F.col("jaccard") >= threshold
     )
 
 
@@ -311,7 +396,6 @@ def containment_pairs(
     n: int = 3,
     threshold: float = 0.8,
     max_shingle_freq: int | None = None,
-    prefix: bool = False,
     return_release: bool = False,
 ) -> DataFrame:
     """Asymmetric CONTAINMENT near-dup pairs (Broder's containment):
@@ -322,196 +406,42 @@ def containment_pairs(
     chunk extracted from a longer doc), which symmetric Jaccard scores
     low because the size imbalance dominates the union.
 
-    Two exact, bit-identical paths (property-pinned against each other
-    in tests across random corpora and thresholds):
-
-    - ``prefix=False`` (default): hashed inverted-index self-join —
-      pair fan-out sum of freq² per shingle, grouped counts, ratio
-      filter. Fastest when shingle frequencies are bounded (measured
-      at sf0.1 / t=0.8, interleaved best-of-3: 1.5-2.0 s vs 2.7-3.6 s
-      for the prefix path, whose array-frame build dominates at this
-      scale; the long hash keys alone beat the string-keyed form
-      ~2.0 s).
-    - ``prefix=True``: AllPairs/PPJoin adapted to the asymmetric
-      measure. A pair qualifies iff ``I >= ceil(t·min(|A|,|B|))``,
-      because the SMALLER doc always has the larger containment
-      (``I/min >= I/max``); under the shared rare-first canonical
-      order the pigeonhole argument then binds only the CONTAINED
-      (smaller) side: some common shingle must sit in the smaller
-      doc's first ``|S| - ceil(t·|S|) + 1`` elements. Candidates come
-      from the PREFIX index joined against the FULL index restricted
-      to ``|prefix side| <= |full side|`` — the container side cannot
-      be prefix-bounded (its ratio may be arbitrarily small and the
-      overlap bound depends on the partner's size), which is why this
-      join is prefix×full where Jaccard's is prefix×prefix. Fan-out
-      per shingle drops freq² → prefix_freq·freq (~(1-t) of freq²);
-      candidates verify exactly via ``array_intersect``. Use it when
-      shingle frequencies GROW with corpus size (open-web boilerplate)
-      — the regime where freq² is the scale killer and the ~(1-t)
-      bound plus the compact verify is what survives; it composes
-      with ``max_shingle_freq``, which caps the regime directly.
+    One exact engine: the hashed inverted-index self-join
+    (:func:`_overlap_pairs`) counts the overlap of every pair sharing a
+    shingle, so the ratios need no separate verify. A contained-side
+    PPJoin prefix path used to sit next to it; it was slower at every
+    measured scale (sf0.1, 4 cores, t=0.8: median 2.13 s vs 4.37 s over
+    5 interleaved runs, same 256 pairs; 8x token-tagged: 2.91 s vs
+    4.02 s) and was removed. Fan-out is Σ freq² over shingles — bound
+    it with ``max_shingle_freq``.
 
     ``max_shingle_freq`` drops boilerplate shingles BEFORE the join
     with the same approximation contract as ``jaccard_pairs`` (per-doc
     sizes recomputed on the capped index so ratios stay internally
     consistent). Docs with fewer than ``n`` tokens have no shingles
-    and never pair.
+    and never pair. ``threshold`` must lie in (0, 1].
 
     With ``return_release=True`` returns ``(pairs, CacheRelease)`` —
     same lifetime contract as ``jaccard_pairs(return_release=True)``:
     the persisted index frame drops on ``release()`` instead of
     pinning block-manager storage for the session.
     """
-    if not (0.0 < threshold <= 1.0):
-        raise ValueError(
-            f"containment_pairs: threshold must be in (0, 1], got {threshold!r}"
-        )
-    if not prefix:
-        from pyspark import StorageLevel
-
-        sh = _hashed_shingle_index(df, text_col, id_col, n)
-        if max_shingle_freq is not None:
-            if max_shingle_freq < 2:
-                raise ValueError(
-                    f"max_shingle_freq must be >= 2 (got {max_shingle_freq}): below 2 "
-                    "no shingle can connect any pair and the output is empty"
-                )
-            hot = (
-                sh.groupBy("shingle")
-                .agg(F.count(F.lit(1)).alias("__f"))
-                .filter(F.col("__f") > max_shingle_freq)
-                .select("shingle")
-            )
-            sh = sh.join(hot, "shingle", "left_anti")
-        # the index feeds three consumers (sizes + both join sides)
-        sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
-        pairs = _containment_from_shingles(sh, id_col, threshold)
-        if return_release:
-            from ..operators.windows import CacheRelease
-
-            return pairs, CacheRelease(sh)
-        return pairs
-    arr = _rarefirst_hash_arrays(df, text_col, id_col, n, max_shingle_freq)
-    # prefix = first n - ceil(t*n) + 1 elements of the CONTAINED side
-    # (same epsilon discipline as jaccard_pairs: a float representation
-    # error can only lengthen the prefix, never unsoundly shorten it)
-    plen = (
-        F.col("__n")
-        - F.ceil(F.lit(float(threshold)) * F.col("__n") - F.lit(1e-9))
-        + 1
-    ).cast("int")
-    # prefix rows carry their doc's size so the contained-side
-    # restriction (smaller joins bigger; id tie-break at equal sizes,
-    # which also kills self-pairs) rides the shingle join as an int
-    # compare instead of a later doc-level join
-    pidx = arr.select(
-        F.col(id_col).alias("doc_p"),
-        F.col("__n").alias("__np"),
-        F.explode(F.slice("__hs", 1, plen)).alias("shingle"),
-    )
-    fidx = arr.select(
-        F.col(id_col).alias("doc_f"),
-        F.col("__n").alias("__nf"),
-        F.explode("__hs").alias("shingle"),
-    )
-    cand = (
-        pidx.join(fidx, "shingle")
-        .filter(
-            (F.col("__np") < F.col("__nf"))
-            | ((F.col("__np") == F.col("__nf")) & (F.col("doc_p") < F.col("doc_f")))
-        )
-        .select(
-            F.least("doc_p", "doc_f").alias("doc_a"),
-            F.greatest("doc_p", "doc_f").alias("doc_b"),
-        )
-        .distinct()
-    )
-    a = arr.select(
-        F.col(id_col).alias("doc_a"),
-        F.col("__hs").alias("__ha"),
-        F.col("__n").alias("__na"),
-    )
-    b = arr.select(
-        F.col(id_col).alias("doc_b"),
-        F.col("__hs").alias("__hb"),
-        F.col("__n").alias("__nb"),
-    )
-    common = F.size(F.array_intersect("__ha", "__hb"))
+    _check_threshold(threshold, "containment_pairs")
+    sh = _drop_hot_keys(
+        _hashed_shingle_index(df, text_col, id_col, n),
+        "shingle", max_shingle_freq, "max_shingle_freq",
+    ).persist(StorageLevel.MEMORY_AND_DISK)
     pairs = (
-        cand.join(a, "doc_a")
-        .join(b, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            (common * 1.0 / F.col("__na")).alias("containment_a_in_b"),
-            (common * 1.0 / F.col("__nb")).alias("containment_b_in_a"),
-        )
-        .filter(
-            F.greatest(
-                F.col("containment_a_in_b"), F.col("containment_b_in_a")
-            ) >= threshold
-        )
-    )
-    if return_release:
-        from ..operators.windows import CacheRelease
-
-        return pairs, CacheRelease(arr)
-    return pairs
-
-
-def _containment_from_shingles(sh: DataFrame, id_col: str, threshold: float) -> DataFrame:
-    """Inverted-index containment from a distinct (id, shingle) frame —
-    the ``prefix=False`` engine of :func:`containment_pairs` and the
-    correctness baseline its ``prefix=True`` path is property-pinned
-    against in tests. The frame feeds three consumers (sizes + both
-    join sides): callers persist it; tests pass it bare."""
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-    a = sh.select(F.col(id_col).alias("doc_a"), "shingle")
-    b = sh.select(F.col(id_col).alias("doc_b"), "shingle")
-    common = (
-        a.join(b, "shingle")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sa = sizes.select(F.col(id_col).alias("doc_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col(id_col).alias("doc_b"), F.col("n_sh").alias("n_b"))
-    return (
-        common.join(sa, "doc_a")
-        .join(sb, "doc_b")
+        _overlap_pairs(sh, id_col)
         .select(
             "doc_a",
             "doc_b",
             (F.col("n_common") * 1.0 / F.col("n_a")).alias("containment_a_in_b"),
             (F.col("n_common") * 1.0 / F.col("n_b")).alias("containment_b_in_a"),
         )
-        .filter(
-            F.greatest(
-                F.col("containment_a_in_b"), F.col("containment_b_in_a")
-            ) >= threshold
-        )
+        .filter(F.greatest("containment_a_in_b", "containment_b_in_a") >= threshold)
     )
-
-
-def _shingle_hash_arrays(
-    df: DataFrame, text_col: str, id_col: str, n: int
-) -> DataFrame:
-    """(id, array<bigint>) of DISTINCT xxhash64 shingle hashes per doc —
-    tokenize, shingle, hash all inside JVM whole-stage codegen; Python
-    never touches a string. Docs with < n tokens yield an empty array.
-
-    Same projection-boundary discipline as :func:`word_shingles`: the
-    token array and the shingle array are each materialized before the
-    HOF that consumes them, so lambdas see attribute references (the
-    split/concat work runs once per element, not per re-evaluation)."""
-    words = df.select(
-        F.col(id_col),
-        F.split(F.trim(F.coalesce(F.col(text_col), F.lit(""))), r"\s+").alias("w"),
-    )
-    sh = words.select(F.col(id_col), F.array_distinct(_grams_expr(n)).alias("__sh"))
-    return sh.select(
-        F.col(id_col), F.expr("transform(__sh, s -> xxhash64(s))").alias("__hs")
-    )
+    return _with_release(pairs, sh, return_release)
 
 
 def _perm_params(num_perm: int, seed: int = 42) -> list[tuple[int, int, int]]:
@@ -590,15 +520,6 @@ def band_signature_store(
     )
 
 
-def _require_positive_threshold(threshold: float, op_name: str) -> None:
-    if not threshold > 0:
-        raise ValueError(
-            f"{op_name}: threshold must be > 0, got {threshold!r} — the "
-            "array_intersect verify keeps zero-overlap candidates until "
-            "the threshold filter, so a threshold <= 0 emits jaccard-0 pairs"
-        )
-
-
 def neardup_against_seen(
     new_df: DataFrame,
     seen_bands: DataFrame,
@@ -645,10 +566,8 @@ def neardup_against_seen(
     freed-with-the-session rationale only holds for one-shot batch
     jobs.
 
-    ``threshold <= 0`` raises ``ValueError``: the array_intersect
-    verify form keeps zero-overlap candidate pairs until the
-    ``jac >= threshold`` filter, so such a threshold would emit
-    jaccard-0 collision pairs — not a meaningful near-dup cut.
+    ``threshold`` must lie in (0, 1] (``ValueError`` otherwise, as for
+    every pair producer here).
 
     ``new_sigs`` (an (id, band, sig) frame for exactly ``new_df``,
     i.e. ``band_signature_store(new_df, ...)`` at the SAME
@@ -656,9 +575,7 @@ def neardup_against_seen(
     caller that also needs them downstream (the streaming ingest loop
     extends the store with the novel subset of the same frame), the
     shingle+minhash pass then runs ONCE per batch, not twice."""
-    from pyspark import StorageLevel
-
-    _require_positive_threshold(threshold, "neardup_against_seen")
+    _check_threshold(threshold, "neardup_against_seen")
     if new_sigs is None:
         new_sigs = band_signature_store(new_df, text_col, id_col, n, num_perm, bands)
     seen = seen_bands.select(
@@ -667,8 +584,7 @@ def neardup_against_seen(
     # candidate-pair-sized by the banding argument (collisions, never
     # |batch| x |corpus|) and consumed by THREE downstream branches
     # (both semi-joins + the final assembly) — persist so the collision
-    # join against the store runs once per call, not three times; the
-    # blocks are freed with the session like the minhash band frame
+    # join against the store runs once per call, not three times
     candidates = (
         new_sigs.join(seen, ["band", "sig"])
         .select(F.col(id_col), "seen_id")
@@ -676,25 +592,12 @@ def neardup_against_seen(
         .distinct()
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    # exact-verify candidates only: shingle just the colliding docs;
-    # the candidate id lists are tiny — broadcast the semi-join probes.
-    # Verification rides per-doc DISTINCT-hash ARRAYS + array_intersect
-    # (r21, the jaccard_pairs verify form): the former exploded
-    # (id, shingle) index needed a shingle-keyed join + groupBy for the
-    # overlap plus two size aggregates and three assembly joins — four
-    # exchanges this form does without (arrays are per-candidate-doc,
-    # bounded by doc length; sizes ride as size(__hs)). Values are
-    # identical: _shingle_hash_arrays carries array_distinct of the
-    # same xxhash64 shingles _hashed_shingle_index emits distinct rows
-    # of, so counts and the Jaccard ratio agree bit-for-bit.
-    # the probes ride the persisted candidate frame WITHOUT a distinct:
-    # a semi-join matches on ANY build row, so duplicate probe ids are
-    # semantically inert, and dropping the per-column distinct removes
-    # one exchange+aggregate per probe (guide §2.4 — the streaming loop
-    # pays these every micro-batch). The broadcast then carries
-    # candidate-pair rows instead of distinct ids — still bounded by
-    # the banding collision count, the quantity that bounds this whole
-    # verify stage.
+    # exact-verify candidates only: shingle just the colliding docs.
+    # The candidate id lists are tiny — broadcast the semi-join probes,
+    # WITHOUT a distinct: a semi-join matches on ANY build row, so
+    # duplicate probe ids are semantically inert, and dropping the
+    # per-column distinct removes one exchange+aggregate per probe
+    # (guide §2.4 — the streaming loop pays these every micro-batch).
     arr_new = _shingle_hash_arrays(
         new_df.join(
             F.broadcast(candidates.select(id_col)),
@@ -709,26 +612,10 @@ def neardup_against_seen(
         ),
         text_col, id_col, n,
     )
-    common = F.size(F.array_intersect("__ha", "__hb"))
-    jac = common / (F.size("__ha") + F.size("__hb") - common)
-    pairs = (
-        candidates.join(
-            arr_new.select(F.col(id_col), F.col("__hs").alias("__ha")), id_col
-        )
-        .join(
-            arr_old.select(
-                F.col(id_col).alias("seen_id"), F.col("__hs").alias("__hb")
-            ),
-            "seen_id",
-        )
-        .filter(jac >= F.lit(threshold))
-        .select(id_col, "seen_id", jac.alias("jaccard"))
+    pairs = _verify_jaccard(
+        candidates, arr_new, arr_old, id_col, threshold, a=id_col, b="seen_id"
     )
-    if return_release:
-        from ..operators.windows import CacheRelease
-
-        return pairs, CacheRelease(candidates)
-    return pairs
+    return _with_release(pairs, candidates, return_release)
 
 
 def minhash_lsh_pairs(
@@ -739,24 +626,21 @@ def minhash_lsh_pairs(
     num_perm: int = 64,
     bands: int = 16,
     threshold: float = 0.8,
-    verify: bool = True,
 ) -> DataFrame:
     """Sub-quadratic near-dup detection: MinHash signatures + LSH bands.
 
     With 64 perms / 16 bands x 4 rows, the candidate probability for
-    jaccard s is 1-(1-s^4)^16 (~0.99 at s=0.8, ~0.07 at s=0.3). If
-    ``verify``, candidates are re-scored with exact Jaccard and filtered
-    — output schema matches :func:`jaccard_pairs`. ``threshold <= 0``
-    raises ``ValueError``, as in :func:`neardup_against_seen` (the
-    verify form would keep zero-overlap banded collisions).
+    jaccard s is 1-(1-s^4)^16 (~0.99 at s=0.8, ~0.07 at s=0.3).
+    Candidates are re-scored with exact Jaccard by the one verify
+    (:func:`_verify_jaccard`) — output schema matches
+    :func:`jaccard_pairs`. ``threshold`` must lie in (0, 1].
     """
-    from pyspark import StorageLevel
-
-    _require_positive_threshold(threshold, "minhash_lsh_pairs")
-    band_sigs = band_signature_store(df, text_col, id_col, n, num_perm, bands)
+    _check_threshold(threshold, "minhash_lsh_pairs")
     # consumed by both sides of the band self-join — persist the tiny
     # signature table so the scoring pass runs once
-    band_sigs = band_sigs.persist(StorageLevel.MEMORY_AND_DISK)
+    band_sigs = band_signature_store(df, text_col, id_col, n, num_perm, bands).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
     a = band_sigs.select(F.col(id_col).alias("doc_a"), "band", "sig")
     b = band_sigs.select(F.col(id_col).alias("doc_b"), "band", "sig")
     candidates = (
@@ -765,31 +649,16 @@ def minhash_lsh_pairs(
         .select("doc_a", "doc_b")
         .distinct()
     )
-    if not verify:
-        return candidates
     # exact-verify the candidates ONLY: shingle just the docs appearing
     # in some candidate pair (the sub-quadratic point — verifying
-    # against the full corpus would re-do the O(N^2) work).
-    #
-    # Verification rides per-doc DISTINCT-hash arrays + array_intersect
-    # (r21, the jaccard_pairs/neardup_against_seen verify form): the
-    # former exploded (id, shingle) index needed a shingle-keyed
-    # overlap join + groupBy plus size aggregates and assembly joins —
-    # exchanges the array form does without (the earlier 6.5s explode
-    # trap does not apply here: the arrays are never exploded, they
-    # ride whole into array_intersect). Values identical —
-    # _shingle_hash_arrays carries array_distinct of the same xxhash64
-    # shingles the exploded index emitted distinct rows of. The array
-    # frame feeds both join sides; persist so candidate docs shingle
-    # once (same lifetime contract as _jaccard_from_shingles' internal
-    # persist it replaces: freed with the session / clearCache).
-    # the probe-union distinct STAYS (r22 audit note): this semi-join
+    # against the full corpus would re-do the O(N^2) work). The array
+    # frame feeds both verify sides; persist so candidate docs shingle
+    # once (freed with the session / clearCache).
+    # The probe-union distinct STAYS (r22 audit note): this semi-join
     # runs as a sort-merge join (no broadcast hint), so the distinct's
     # map-side partial aggregate pre-shrinks the union before its
     # exchange — removing it was measured plan-for-plan to just shuffle
-    # ~2x the rows for one aggregate saved (the broadcast-probe case in
-    # neardup_against_seen is different: there the distinct was a whole
-    # extra exchange inside the broadcast build, and it is gone).
+    # ~2x the rows for one aggregate saved.
     cand_docs = (
         candidates.select(F.col("doc_a").alias(id_col))
         .unionByName(candidates.select(F.col("doc_b").alias(id_col)))
@@ -798,20 +667,7 @@ def minhash_lsh_pairs(
     arr = _shingle_hash_arrays(
         df.join(cand_docs, id_col, "left_semi"), text_col, id_col, n
     ).persist(StorageLevel.MEMORY_AND_DISK)
-    common = F.size(F.array_intersect("__ha", "__hb"))
-    jac = common / (F.size("__ha") + F.size("__hb") - common)
-    return (
-        candidates.join(
-            arr.select(F.col(id_col).alias("doc_a"), F.col("__hs").alias("__ha")),
-            "doc_a",
-        )
-        .join(
-            arr.select(F.col(id_col).alias("doc_b"), F.col("__hs").alias("__hb")),
-            "doc_b",
-        )
-        .filter(jac >= F.lit(threshold))
-        .select("doc_a", "doc_b", jac.alias("jaccard"))
-    )
+    return _verify_jaccard(candidates, arr, arr, id_col, threshold)
 
 
 def _md5_64_le(tok: Column) -> Column:
@@ -1063,18 +919,7 @@ def passage_dups(
     passages = segs.groupBy(id_col, "passage_hash").agg(
         F.first("n_tokens").alias("n_tokens")
     )
-    if max_passage_freq is not None:
-        if max_passage_freq < 2:
-            raise ValueError(
-                f"max_passage_freq must be >= 2 (got {max_passage_freq})"
-            )
-        hot = (
-            passages.groupBy("passage_hash")
-            .agg(F.count(F.lit(1)).alias("__f"))
-            .filter(F.col("__f") > max_passage_freq)
-            .select("passage_hash")
-        )
-        passages = passages.join(hot, "passage_hash", "left_anti")
+    passages = _drop_hot_keys(passages, "passage_hash", max_passage_freq, "max_passage_freq")
     a = passages.select(
         F.col(id_col).alias("doc_a"), "passage_hash", F.col("n_tokens").alias("__na")
     )

@@ -63,9 +63,8 @@ def _load() -> None:
 # verified either way (tests/test_oracle_parity.py runs all of them);
 # this only chooses which get the external hard signal first.
 #
-# ROTATION POLICY (since r6): the 50 slots rotate each round so that
-# every oracled entry accumulates at least one historical externally
-# checked row.  Rules:
+# ROTATION POLICY: the 50 slots rotate each round so that every
+# oracled entry accumulates externally checked rows. Rules:
 #   1. Permanent anchors (marts, pipeline, recon diff family — the
 #      reference's signature capability) never rotate out.
 #   2. Each round, entries that have never had an external row are
@@ -73,341 +72,10 @@ def _load() -> None:
 #      green history whose operator family keeps another anchor in the
 #      50 (or stays covered by the full pytest oracle-parity suite).
 #   3. No entry stays out for more than two consecutive rounds.
-# Rotation history: r6 brought in the recon family + 11 never-checked
-# entries; r7 brought in the r6/r7-born entries, the five r1-rows-only
-# entries, and the 14 streak-2 must-returns — after r7 every catalog
-# entry has >=1 historical external row and none's latest check failed.
-# r8 rotation: IN = the seven entries that reached out-streak 2 after
-# r7 (rule 3 binds: part_price_class, orders_status_pivot,
-# doc_quality_score, multimodal_decode_stats, multimodal_png_roundtrip,
-# events_stream_dedup, events_interval_join), corpus_bpe_merges again
-# (its r7 row was rows-only; this round it carries a real DuckDB
-# oracle and needs the hash-grade row), all thirteen r8-born entries
-# (rule 2: never checked — doc_bpe_tokenize, customer_scd2_merge,
-# customer_scd2_asof, orders_priority_daily_gapfill, parts_fuzzy_match,
-# doc_mixture_sample, doc_incremental_dedup, emb_centroid_knn,
-# lineitem_heavy_hitters, tpch_q3_shipping_priority,
-# tpch_q5_local_supplier_volume, recon_bucketed_zero_shuffle,
-# events_cumulative_new_users), and 20 of the 41 streak-1 entries. OUT = the 41 r7-green entries (fresh
-# history, streak 1) plus the TWENTY streak-1 holdovers that reach
-# streak 2 and MUST return in r9 (scripts/rotation_plan.py recomputes
-# this list authoritatively from the shipped CORRECTNESS files;
-# twenty-one with orders_price_quantile_hist):
-# corpus_dedup_report, corpus_near_dup_prune, corpus_text_profile,
-# customer_running_total, doc_exact_dedup, doc_hot_shingles,
-# doc_jaccard_pairs, doc_token_stats, doc_train_split, emb_cosine_topk,
-# events_asof_join_forward, events_hourly_tumbling,
-# events_incremental_slice, lineitem_union_slices,
-# multimodal_frame_sample, multimodal_resize, orders_filter_case,
-# orders_grouping_sets, sketch_mergeable_distinct, top10_orders —
-# each left a same-family representative in the 50 (top-k/union/filter/
-# grouping via the relational block incl. the new TPC-H Q3/Q5; token
-# stats via quality/vocabulary/tfidf/bpe; dedup via minhash+simhash+
-# clusters+incremental; sketches via heavy-hitters+quantile-hist;
-# similarity via emb_lsh_near_dup+centroid-knn; codec via
-# decode/png/wav/gif; events via asof/session/json/streaming). With 9
-# anchors + 21 must-returns, r9 has ~20 free slots — budget r9-born
-# entries accordingly.
-# r9 rotation: IN = the 21 rule-3 must-returns (out-streak 2 after
-# r8; scripts/rotation_plan.py recomputes the list authoritatively
-# from the shipped CORRECTNESS files), the three ANN-index entries
-# (emb_pq_topk, emb_lsh_ann_topk, emb_ivf_topk — streak 1, rule 3
-# would bind after r9 anyway, and this round they return carrying
-# REAL exact-recall DuckDB oracles instead of rows-only counts), and
-# every r9-born entry (rule 2). Remaining slots are streak-1 fillers,
-# one strong representative per family. OUT = the r8-green entries
-# (fresh history, streak 1 — legal to sit out one round) and the
-# unchosen streak-1 holdovers; each leaves a same-family
-# representative in the 50 (relational variants via grouping-sets/
-# cube/top-k/setops; sketches via mergeable-distinct+quantile-hist+
-# distinct-counts; text via token-stats/language/fingerprint/pii;
-# dedup via exact+jaccard+hot-shingles+near-dup-prune+dedup-report;
-# similarity via cosine-topk + the three ANN indexes; codecs via
-# png/jpeg/resize/frame-sample; events via tumbling/asof-fwd/
-# incremental/funnel; streaming via events_funnel's batch twin plus
-# pytest-live streaming suites).
-# NOTE: the r9-born customer_scd2_chain landed in the final r9
-# snapshot commit, AFTER the r9 priority-50 was frozen, so rule 2
-# deferred to r10 — it leads the r10 rotation below and got its
-# first external row there.
-# r10 rotation: IN = the 20 rule-3 must-returns (out-streak 2 after
-# r9; scripts/rotation_plan.py recomputes authoritatively:
-# customers_without_orders, customers_with_orders,
-# orders_price_histogram, sketch_price_percentiles,
-# orders_expectations, orders_zorder_pruning, doc_bpe_tokens,
-# doc_repetition_stats, emb_label_centroids, doc_chunks,
-# doc_token_budget, doc_stratified_sample, corpus_near_dup_prune_lsh,
-# doc_simhash, emb_cosine_near_dup, doc_rarity_score,
-# multimodal_audio_stats, multimodal_gif_frames,
-# events_sliding_window, events_stream_funnel), customer_scd2_chain
-# (rule 2 — the only never-externally-checked r9 entry), the
-# r10-born emb_lsh_mp_topk (rule 2), and 17 streak-1 fillers chosen
-# one-per-family, preferring entries whose code paths this round
-# touches (doc_bpe_tokenize for the BPE batch
-# retune; the SCD2 merge/asof siblings next to the chain's first
-# external row). OUT = the r9-green entries (fresh history, streak 1)
-# and 18 unchosen streak-1 holdovers that become r11 must-returns;
-# each leaves a same-family representative in the 50 (relational via
-# without/with-orders + histogram + expectations + Q3 + heavy-hitters;
-# sketches via price-percentiles; text via repetition/rarity/quality/
-# bpe-tokens; dedup via simhash + minhash-pairs + clusters +
-# near-dup-prune-lsh + decontaminate; similarity via cosine-near-dup +
-# label-centroids + centroid-knn; codecs via audio/gif/png; events via
-# sliding + sessionization + stream-funnel; warehouse via zorder +
-# scd2 merge/asof/chain).
-# r11 rotation: IN = the 24 rule-3 must-returns (out-streak 2 after
-# r10; scripts/rotation_plan.py recomputes authoritatively from the
-# shipped CORRECTNESS files) and 17 streak-1 fillers chosen
-# one-per-family, preferring entries whose code paths this round
-# touches (emb_pq_topk for the rerank-scaling change, emb_ivf_topk as
-# its list-pruning companion, doc_jaccard_pairs next to the r10
-# prefix-filter rework, corpus_dedup_report for the minhash A/B).
-# OUT = the r10-green entries (fresh history, streak 1) and the
-# unchosen streak-1 holdovers that become r12 must-returns; each
-# leaves a same-family representative in the 50 (relational via
-# top-k + grouping-sets + running-total + Q5 + skew pair; sketches
-# via distinct-counts + quantile-hist; text via quality/vocabulary/
-# tfidf/token-stats/pii; dedup via jaccard + simhash-pairs +
-# incremental + dedup-report + clean-pipeline; similarity via
-# lsh-near-dup + pq + ivf; codecs via decode/wav/jpeg; events via
-# asof/interval/json/funnel + the three streaming entries; warehouse
-# via upsert-roundtrip + bucketed-recon).
-# r12 rotation: IN = the 35 rule-3 must-returns (out-streak 2 after
-# r11; scripts/rotation_plan.py --propose recomputes authoritatively
-# from the shipped CORRECTNESS files), the rule-2 newborn
-# doc_neardup_incremental (born this round, never externally
-# checked), emb_random_projection (r11's single red driver row —
-# reshaped to scalar output this round and ordered back by the
-# verdict), and 4 streak-1 fillers chosen one-per-family, preferring
-# entries whose code paths this round touches
-# (doc_minhash_lsh_pairs sits on the band_signature_store refactor
-# that the incremental near-dup newborn factored out;
-# customer_scd2_merge keeps the warehouse/SCD2 family live).
-# OUT = the r11-green entries (fresh history, streak 1) and the
-# unchosen streak-1 holdovers that become r13 must-returns; each
-# leaves a same-family representative in the 50 (relational via
-# top10/by-month/cube/grouping-sets/union/setops/Q3; sketches via
-# mergeable-distinct + quantile-hist; text via token-stats/language/
-# fingerprint/pii/train-split/profile; dedup via exact + hot-shingles
-# + near-dup-prune + minhash-pairs + the incremental newborn;
-# similarity via cosine-topk + lsh-ann; codecs via resize/
-# frame-sample/jpeg; events via tumbling/asof-fwd/incremental/funnel;
-# warehouse via scd2-merge; skew via salted + lineitem_key_skew).
-# r13 rotation: the tightest roster yet — rule 3 binds on THIRTY-NINE
-# entries (out-streak 2 after r12; scripts/rotation_plan.py --propose
-# recomputes authoritatively from the shipped CORRECTNESS files), so
-# 9 anchors + 39 must-returns = 48 fixed slots and exactly TWO free
-# slots, spent on the two r13-born entries the r12 verdict ordered:
-# doc_neardup_stream (the steady-state streaming near-dup ingest loop
-# graded end to end — the replay-determinism contract built in r12
-# exists precisely to make it oracle-replayable) and emb_sq8_ivf_topk
-# (the IVF x SQ8 composed physical search, graded at probe settings
-# the r13 sweep measured at recall 0.86-0.91 across sf0.001..sf0.1
-# and 8x — the quality knob the r12 verdict flagged, closed).
-# OUT = the r12-green entries (fresh history, streak 1: the 35
-# returned must-returns, the three r12 newborns, emb_random_projection
-# and the two fillers) — every family keeps a representative in the 50
-# (relational via pricing-summary/with-without-orders/pivot/histogram/
-# Q3/heavy-hitters/part-class; sketches via price-percentiles; text
-# via repetition/rarity/bigram/decontaminate/chunks/token-budget/
-# stratified; dedup via passage-dups/dedup-clusters/simhash/
-# near-dup-prune-lsh + the streaming newborn; similarity via
-# centroid-knn/cosine-near-dup/label-centroids/lsh-mp + the composed
-# sq8 newborn; codecs via png/audio/gif; events via sliding/session/
-# stream-funnel; warehouse via zorder + scd2 asof/chain + range-join;
-# validators via orders_expectations).
-# r14 rotation: rule 3 binds on FORTY entries (out-streak 2 after
-# r13; scripts/rotation_plan.py --propose recomputes authoritatively
-# from the shipped CORRECTNESS files), so 9 anchors + 40 must-returns
-# = 49 fixed slots and exactly ONE free slot, spent on the single
-# newborn the r13 verdict ordered: emb_pq_ivf_topk — the IVFPQ
-# physical index (list-partitioned PQ codes + probed search) built,
-# property-pinned and 8x-scaled in r13 but deliberately held back
-# from grading until a slot could cover it (rule 2 fails on any
-# never-checked catalog entry outside the 50).
-# OUT = the r13-green non-anchors (fresh history, streak 1: the 39
-# returned must-returns plus the two r13 newborns) — every family
-# keeps a representative in the 50 (relational via
-# parts-sales/top-part/tpch-q5-q18/gapfill/fuzzy; sketches via
-# distinct-counts; skew via adaptive-salted; warehouse via
-# upsert-roundtrip; recon via the anchors + bucketed-zero-shuffle;
-# text via quality/dsir/tfidf/vocabulary/clean-pipeline/mixture;
-# dedup via jaccard/containment/simhash-pairs/incremental/
-# dedup-report; similarity via ivf/pq/rp-rerank/lsh-near-dup/
-# hard-negatives/kmeans/semdedup + the IVFPQ newborn; codecs via
-# decode-stats/wav; events via asof/interval/json/cumulative +
-# stream-dedup/running-counts; classifier via quality-classifier;
-# bpe via corpus-bpe-merges).
-# r15 rotation: the catalog SATURATED at 132 entries after r14 — the
-# 123 non-anchors now form exactly three cohorts of 41 cycling through
-# the 41 non-anchor slots, so every roster from here on is fully
-# determined: 9 anchors + the 41 rule-3 must-returns (out-streak 2
-# after r14; scripts/rotation_plan.py --propose recomputes them
-# authoritatively from the shipped CORRECTNESS files) = 50 fixed
-# slots, ZERO free. No newborn or catalog addition is possible in r15
-# or any later round — rule 2 would fire with no slot to cover it;
-# new capability work ships as library code + pytest only.
-# OUT = the r14-green non-anchors (fresh history, streak 1; they
-# become r16's must-returns) — every family keeps a representative in
-# the 50 (relational via top10/by-month/cube/grouping-sets/
-# filter-case/union-slices/setops/running-total/order-gaps/
-# quantile-hist/column-profile; sketches via mergeable-distinct; skew
-# via salted + lineitem-key-skew; warehouse via scd2-merge +
-# region-rollup; recon via the anchors; text via token-stats/language/
-# fingerprint/pii/train-split/hot-shingles/pack-sequences/
-# text-profile; dedup via exact/minhash-lsh/near-dup-prune/
-# neardup-incremental + duplicate-order-lines; similarity via cosine/
-# lsh-ann/sq8/kmeans-pp/random-projection; codecs via jpeg/resize/
-# frame-sample; events via hourly-tumbling/asof-forward/
-# incremental-slice/funnel).
-# r16 rotation: the saturated cycle's second turn. Rule 3 binds on the
-# r13-green cohort (out-streak 2 after r15 — out in r14 and r15), so
-# the roster is again fully determined: 9 anchors + those exact 41
-# must-returns = 50 fixed slots, ZERO free. NOTE: the r15 VERDICT's
-# prose list for r16 named the r14-green cohort by mistake — that set
-# is out only ONE round (streak 1 after r15) and seating it would
-# strand the r13-green cohort at streak 3, violating the very rule the
-# verdict cites. The verdict's own stated re-verify command
-# (`scripts/rotation_plan.py --propose`, computed from the shipped
-# CORRECTNESS files) names the r13-green set as the rule-3
-# must-returns, and the tests/test_entry.py tripwire enforces the same
-# audit — the machine-checked policy is authoritative over the prose.
-# (The r14-green cohort becomes streak 2 after r16 and is r17's
-# must-return set; the three cohorts then cycle forever.)
-# OUT = the r15-green non-anchors (fresh history, streak 1) — every
-# family keeps a representative in the 50 (relational via
-# pricing-summary/with-without-orders/pivot/histogram/Q3/
-# heavy-hitters/part-class; sketches via price-percentiles; text via
-# repetition/rarity/bigram/decontaminate/chunks/token-budget/
-# stratified; dedup via passage-dups/dedup-clusters/simhash/
-# near-dup-prune-lsh + the streaming ingest loop; similarity via
-# centroid-knn/cosine-near-dup/label-centroids/lsh-mp/sq8-ivf; codecs
-# via png/audio/gif; events via sliding/session/stream-funnel;
-# warehouse via zorder + scd2 asof/chain + range-join; bpe via
-# bpe-tokens/bpe-tokenize; validators via orders_expectations).
-# r17 rotation: the saturated cycle's third turn. Rule 3 binds on the
-# r14-green cohort (out-streak 2 after r16 — out in r15 and r16), so
-# the roster is again fully determined: 9 anchors + those exact 41
-# must-returns = 50 fixed slots, ZERO free. This round the VERDICT_r16
-# prose list and `scripts/rotation_plan.py --propose` agree exactly
-# (the audit remains the authority of record per standing policy; it
-# was re-run at seating time and names precisely this set). The
-# r15-green cohort becomes streak 2 after r17 and is r18's must-return
-# set; the three cohorts then continue cycling with period 3.
-# OUT = the r16-green non-anchors (fresh history, streak 1) — every
-# family keeps a representative in the 50 (relational via
-# parts-sales/top-part/tpch-q5-q18/gapfill/fuzzy; sketches via
-# distinct-counts; skew via adaptive-salted; warehouse via
-# upsert-roundtrip; recon via the anchors + bucketed-zero-shuffle;
-# text via quality/dsir/tfidf/vocabulary/clean-pipeline/mixture;
-# dedup via jaccard/containment/simhash-pairs/incremental/
-# dedup-report; similarity via ivf/pq/rp-rerank/lsh-near-dup/
-# hard-negatives/kmeans/semdedup/ivf-pq; codecs via decode-stats/wav;
-# events via asof/interval/json/cumulative + stream-dedup/
-# running-counts; classifier via quality-classifier; bpe via
-# corpus-bpe-merges).
-# r18 rotation: the saturated cycle's fourth turn (period-3 steady
-# state). Rule 3 binds on the r15-green cohort (out-streak 2 after
-# r17 — out in r16 and r17), so the roster is again fully determined:
-# 9 anchors + those exact 41 must-returns = 50 fixed slots, ZERO
-# free. `scripts/rotation_plan.py --propose` was re-run at seating
-# time and names precisely this set; VERDICT_r17's prose list agrees
-# (the audit remains the authority of record per standing policy).
-# The r16-green cohort becomes streak 2 after r18 and is r19's
-# must-return set; the cycle repeats.
-# OUT = the r17-green non-anchors (fresh history, streak 1) — every
-# family keeps a representative in the 50 (relational via
-# orders-filter-case/top10/by-month/cube/grouping-sets/
-# quantile-hist/union-slices/setops/rollup/column-profile;
-# windows via running-total/order-gaps; skew via salted + key-skew;
-# sketches via mergeable-distinct; warehouse via scd2-merge;
-# validators via duplicate-order-lines; text via token-stats/
-# language-guess/fingerprint/pii-scrub/train-split/text-profile/
-# pack-sequences; dedup via exact-dedup/hot-shingles/
-# near-dup-prune/minhash-lsh-pairs/neardup-incremental; similarity
-# via cosine-topk/random-projection/lsh-ann/sq8/kmeans-pp; codecs
-# via resize/frame-sample/jpeg; events via hourly-tumbling/
-# asof-forward/incremental-slice/funnel).
-# r19 rotation: the saturated cycle's fifth turn (period-3 steady
-# state). Rule 3 binds on the r16-green cohort (out-streak 2 after
-# r18 — out in r17 and r18), so the roster is again fully determined:
-# 9 anchors + those exact 41 must-returns = 50 fixed slots, ZERO
-# free. `scripts/rotation_plan.py --propose` was re-run at seating
-# time and names precisely this set; VERDICT_r18's prose list agrees
-# (the audit remains the authority of record per standing policy).
-# The r17-green cohort becomes streak 2 after r19 and is r20's
-# must-return set; the cycle repeats.
-# OUT = the r18-green non-anchors (fresh history, streak 1) — every
-# family keeps a representative in the 50 (relational via
-# pricing-summary/with-without-orders/pivot/histogram/Q3/
-# heavy-hitters/part-class/supplier-part-agg; sketches via
-# price-percentiles; warehouse via zorder + scd2 asof/chain +
-# range-join; validators via orders-expectations; windows via
-# percent-rank tiers; text via repetition/rarity/bigram/
-# decontaminate/chunks/token-budget/stratified; dedup via
-# passage-dups/dedup-clusters/simhash/near-dup-prune-lsh + the
-# streaming near-dup ingest loop; similarity via centroid-knn/
-# cosine-near-dup/label-centroids/lsh-mp/sq8-ivf; codecs via
-# png/audio/gif; events via sliding/session/stream-funnel; bpe via
-# bpe-tokens/bpe-tokenize).
-# r20 rotation: the saturated cycle's sixth turn (period-3 steady
-# state). Rule 3 binds on the r17-green cohort (out-streak 2 after
-# r19 — out in r18 and r19), so the roster is again fully determined:
-# 9 anchors + those exact 41 must-returns = 50 fixed slots, ZERO
-# free. `scripts/rotation_plan.py --propose` was re-run at seating
-# time and names precisely this set; VERDICT_r19's prose list agrees
-# (the audit remains the authority of record per standing policy).
-# The r18-green cohort becomes streak 2 after r20 and is r21's
-# must-return set; the cycle repeats.
-# OUT = the r19-green non-anchors (fresh history, streak 1) — every
-# family keeps a representative in the 50 (relational via
-# top-part-per-supplier/parts-sales-left-join/Q5/Q18/gapfill;
-# sketches via distinct-counts; skew via adaptive-salted; warehouse
-# via upsert-roundtrip; recon via the anchors + bucketed-zero-
-# shuffle; fuzzy via parts-fuzzy-match; text via quality/dsir/
-# tfidf/vocabulary/clean-pipeline/mixture; dedup via jaccard/
-# containment/simhash-pairs/incremental/dedup-report; similarity
-# via ivf/pq/rp-rerank/lsh-near-dup/hard-negatives/kmeans/semdedup/
-# ivf-pq; codecs via decode-stats/wav; events via asof/interval/
-# json/cumulative + stream-dedup/running-counts; classifier via
-# quality-classifier; bpe via corpus-bpe-merges).
-# r21 rotation: the saturated cycle's seventh turn (period-3 steady
-# state). Rule 3 binds on the r18-green cohort (out-streak 2 after
-# r20 — out in r19 and r20), so the roster is again fully determined:
-# 9 anchors + those exact 41 must-returns = 50 fixed slots, ZERO
-# free. `scripts/rotation_plan.py --propose` was re-run at seating
-# time and names precisely this set; VERDICT_r20's prose list agrees
-# (the audit remains the authority of record per standing policy).
-# The r19-green cohort becomes streak 2 after r21 and is r22's
-# must-return set; the cycle repeats.
-# OUT = the r20-green non-anchors (fresh history, streak 1) — every
-# family keeps a representative in the 50 (relational via
-# top10/by-month/cube/grouping-sets/filter-case/union-slices/setops/
-# quantile-hist/column-profile/rollup; windows via running-total/
-# order-gaps; skew via salted + key-skew; sketches via
-# mergeable-distinct; warehouse via scd2-merge; validators via
-# duplicate-order-lines; text via token-stats/language-guess/
-# fingerprint/pii-scrub/train-split/text-profile/pack-sequences;
-# dedup via exact-dedup/hot-shingles/near-dup-prune/minhash-lsh-pairs/
-# neardup-incremental; similarity via cosine-topk/random-projection/
-# lsh-ann/sq8/kmeans-pp; codecs via resize/frame-sample/jpeg; events
-# via hourly-tumbling/asof-forward/incremental-slice/funnel).
-# r22 rotation: the saturated cycle's eighth turn (period-3 steady
-# state). Rule 3 binds on the r19-green cohort (out-streak 2 after
-# r21 — out in r20 and r21), so the roster is again fully determined:
-# 9 anchors + those exact 41 must-returns = 50 fixed slots, ZERO
-# free. `scripts/rotation_plan.py --propose` was re-run at seating
-# time and names precisely this set; VERDICT_r21's prose list agrees
-# (the audit remains the authority of record per standing policy).
-# The r20-green cohort becomes streak 2 after r22 and is r23's
-# must-return set; the cycle repeats.
-# r23 rotation: the same steady state one turn on. Rule 3 binds on
-# the r20-green cohort (out in r21 and r22): 9 anchors + those exact
-# 41 must-returns = 50 fixed slots, zero free, as
-# `scripts/rotation_plan.py --propose` prints it. The r21-green
-# cohort becomes streak 2 after r23 and is r24's must-return set.
-# OUT = the other 82 entries: the r21-green cohort (streak 1) and
-# the r22-green cohort (streak 0).
+# `python scripts/rotation_plan.py --propose` audits this list against
+# the CORRECTNESS_r*.json history and prints the next roster (anchors
+# plus the rule-3 must-returns); tests/test_entry.py enforces the
+# policy. The per-round seating history lives in git log.
 _PRIORITY: tuple[str, ...] = (
     # marts / full pipeline (permanent anchors)
     "mart_supplier_performance", "mart_product_performance",

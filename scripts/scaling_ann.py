@@ -80,6 +80,22 @@ def replicate_8x(spark, sf_dir: str, out_dir: str) -> str:
     return path
 
 
+def tag_tokens(docs, i: int):
+    """Copy ``i`` of the documents for a token-tagged scale ladder
+    (SCALING.md): every whitespace token is suffixed with ``@i`` and
+    ids shift by ``i`` million, so within-copy shingles survive (pair
+    output grows exactly k-fold) while cross-copy shingles never
+    collide. JVM-only transform."""
+    toks = F.split(F.trim(F.coalesce(F.col("text"), F.lit(""))), r"\s+")
+    tagged = F.array_join(
+        F.transform(toks, lambda t: F.concat(t, F.lit(f"@{i}"))), " "
+    )
+    return docs.select(
+        (F.col("doc_id") + 1_000_000 * i).alias("doc_id"),
+        tagged.alias("text"),
+    )
+
+
 def timed(fn):
     t0 = time.time()
     out = fn()

@@ -49,8 +49,7 @@ from sahithi_metamorph_etl_spark.llm.similarity import (  # noqa: E402
     sq8_search,
     sq8_topk,
 )
-from scaling_ann import replicate_8x  # noqa: E402
-from scaling_containment_r11 import tag_tokens  # noqa: E402
+from scaling_ann import replicate_8x, tag_tokens  # noqa: E402
 
 _SPARK = None
 _WORK = None

@@ -53,8 +53,7 @@ from sahithi_metamorph_etl_spark.llm.similarity import (  # noqa: E402
 from sahithi_metamorph_etl_spark.streaming.neardup import (  # noqa: E402
     neardup_ingest_stream,
 )
-from scaling_ann import replicate_8x  # noqa: E402
-from scaling_containment_r11 import tag_tokens  # noqa: E402
+from scaling_ann import replicate_8x, tag_tokens  # noqa: E402
 
 _SPARK = None
 _WORK = None

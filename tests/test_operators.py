@@ -33,6 +33,8 @@ from sahithi_metamorph_etl_spark.validators import (
     validate_unique,
 )
 
+from .shingles import naive_hashed_shingles
+
 
 # --- projection / drift -----------------------------------------------------
 
@@ -221,14 +223,37 @@ def test_salted_join_rejects_right_preserving_modes(spark):
         salted_join(df, df, on=["k"], salt_source_col="k", how="full")
 
 
+def _collect_and_release(spark, make):
+    """Collect the pairs of ``make() -> (pairs, release)`` and prove the
+    release handle frees the cache: the persisted-RDD count is above
+    its baseline while the plan is live, back at it after
+    ``release()``, and a second ``release()`` does nothing. Starts
+    from a clear cache — an identical plan cached by an earlier call
+    would otherwise absorb the operator's persist."""
+    def n_persistent():
+        return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+
+    spark.catalog.clearCache()
+    base = n_persistent()
+    pairs, release = make()
+    rows = pairs.collect()
+    assert n_persistent() > base  # pinned while the plan is live
+    release.release()
+    assert n_persistent() == base  # gone immediately, not at clearCache
+    release.release()  # idempotent
+    assert n_persistent() == base
+    return rows
+
+
 def test_minhash_rejects_bad_band_split(spark):
     from sahithi_metamorph_etl_spark.llm.dedup import minhash_lsh_pairs
 
     df = spark.createDataFrame([(1, "a b c d")], ["doc_id", "text"])
     with pytest.raises(ValueError, match="evenly divide"):
         minhash_lsh_pairs(df, num_perm=16, bands=32)
-    # a threshold <= 0 is not a near-dup cut: fail fast, not jaccard-0 pairs
-    for bad in (0.0, -0.5):
+    # a threshold outside (0, 1] is not a near-dup cut: fail fast, not
+    # jaccard-0 pairs (<= 0) or a silently empty result (> 1)
+    for bad in (0.0, -0.5, 1.5):
         with pytest.raises(ValueError, match="threshold"):
             minhash_lsh_pairs(df, threshold=bad)
 
@@ -299,14 +324,13 @@ def test_jaccard_pairs_threshold_validation_and_release(spark, sf_dir):
     for bad in (0.0, -0.1, 1.5):
         with _pytest.raises(ValueError, match="threshold"):
             jaccard_pairs(docs, threshold=bad)
-    # release handle: result unchanged, pinned storage dropped after
-    pairs, release = jaccard_pairs(docs, threshold=0.8, return_release=True)
-    got = {(r["doc_a"], r["doc_b"]) for r in pairs.collect()}
-    assert got == {
+    # release handle: pinned storage dropped after, result unchanged
+    rows = _collect_and_release(
+        spark, lambda: jaccard_pairs(docs, threshold=0.8, return_release=True)
+    )
+    assert {(r["doc_a"], r["doc_b"]) for r in rows} == {
         (r["doc_a"], r["doc_b"]) for r in jaccard_pairs(docs, threshold=0.8).collect()
     }
-    release.release()
-    release.release()  # idempotent
 
 
 def test_containment_pairs_matches_naive_and_catches_subdocs(spark):
@@ -343,11 +367,6 @@ def test_containment_pairs_matches_naive_and_catches_subdocs(spark):
         for r in containment_pairs(docs, threshold=0.5).collect()
     }
     assert got == want
-    # the prefix=True scale path must agree exactly
-    assert {
-        (r["doc_a"], r["doc_b"]): (r["containment_a_in_b"], r["containment_b_in_a"])
-        for r in containment_pairs(docs, threshold=0.5, prefix=True).collect()
-    } == want
     assert got[(0, 1)][1] == 1.0  # the sub-document direction saturates
     assert all(3 not in p and 2 not in p for p in got)
 
@@ -357,8 +376,9 @@ def test_containment_pairs_matches_naive_and_catches_subdocs(spark):
 
     import pytest as _pytest
 
-    with _pytest.raises(ValueError, match="threshold"):
-        containment_pairs(docs, threshold=0.0)
+    for bad in (0.0, 1.5):
+        with _pytest.raises(ValueError, match="threshold"):
+            containment_pairs(docs, threshold=bad)
 
     # hot-shingle cap: capped shingles leave the index entirely —
     # planting the shared shingles in >max_freq docs removes the pair
@@ -372,25 +392,15 @@ def test_containment_pairs_matches_naive_and_catches_subdocs(spark):
         for r in containment_pairs(many, threshold=0.5, max_shingle_freq=3).collect()
     }
     assert (0, 1) not in capped  # their only shared shingles are now hot
-    # the cap composes identically with the prefix path (sizes are
-    # recomputed on the capped index in both)
-    assert {
-        (r["doc_a"], r["doc_b"])
-        for r in containment_pairs(
-            many, threshold=0.5, max_shingle_freq=3, prefix=True
-        ).collect()
-    } == capped
 
     with _pytest.raises(ValueError, match="max_shingle_freq"):
         containment_pairs(docs, max_shingle_freq=1)  # silent-empty degenerate
 
-    # release handle: result unchanged, pinned index dropped after
-    pairs, release = containment_pairs(docs, threshold=0.5, return_release=True)
-    assert {
-        (r["doc_a"], r["doc_b"]) for r in pairs.collect()
-    } == set(want)
-    release.release()
-    release.release()  # idempotent
+    # release handle: pinned index dropped after, result unchanged
+    rows = _collect_and_release(
+        spark, lambda: containment_pairs(docs, threshold=0.5, return_release=True)
+    )
+    assert {(r["doc_a"], r["doc_b"]) for r in rows} == set(want)
 
 
 def test_jl_inference_skips_null_rows_and_gumbel_carry_cols(spark):
@@ -2363,10 +2373,21 @@ def test_neardup_against_seen_catches_edited_repeats(spark):
     # the fingerprint op misses the edited repeat — both new docs "novel"
     kept = dedup_against_seen(batch, content_fingerprint(prior))
     assert sorted(r["doc_id"] for r in kept.collect()) == [10, 11]
-    # a threshold <= 0 is not a near-dup cut: fail fast
-    for bad in (0.0, -1.0):
+    # a threshold outside (0, 1] is not a near-dup cut: fail fast
+    for bad in (0.0, -1.0, 1.5):
         with pytest.raises(ValueError, match="threshold"):
             neardup_against_seen(batch, band_signature_store(prior), prior, threshold=bad)
+    # release handle: the persisted candidate frame drops, result unchanged
+    rows = _collect_and_release(
+        spark,
+        lambda: neardup_against_seen(
+            batch, band_signature_store(prior), prior, threshold=0.5,
+            return_release=True,
+        ),
+    )
+    assert [(r["doc_id"], r["seen_id"], r["jaccard"]) for r in rows] == [
+        (r["doc_id"], r["seen_id"], r["jaccard"]) for r in got
+    ]
 
 
 def test_neardup_band_store_bucketed_colocation(spark, sf_dir, tmp_path):
@@ -2638,40 +2659,15 @@ def test_jaccard_prefix_filter_equals_naive_all_pairs(spark, sf_dir):
     frequency, capped variant)."""
     import random
 
-    from pyspark.sql import functions as F
-
     from sahithi_metamorph_etl_spark.llm.dedup import (
         _jaccard_from_shingles,
         jaccard_pairs,
     )
 
     def naive(docs, threshold, cap=None):
-        words = docs.select(
-            F.col("doc_id"),
-            F.split(F.trim(F.coalesce(F.col("text"), F.lit(""))), r"\s+").alias("w"),
+        return _jaccard_from_shingles(
+            naive_hashed_shingles(docs, cap=cap), "doc_id", threshold
         )
-        w = F.col("w")
-        grams = F.when(
-            F.size(w) >= 3,
-            F.transform(
-                F.sequence(F.lit(0), F.size(w) - 3),
-                lambda i: F.concat_ws(
-                    " ", *[F.element_at(w, (i + j + 1).cast("int")) for j in range(3)]
-                ),
-            ),
-        ).otherwise(F.array().cast("array<string>"))
-        sh = (
-            words.select(F.col("doc_id"), F.explode(grams).alias("__s"))
-            .select(F.col("doc_id"), F.xxhash64("__s").alias("shingle"))
-            .distinct()
-        )
-        if cap is not None:
-            hot = (
-                sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("__f"))
-                .filter(F.col("__f") > cap).select("shingle")
-            )
-            sh = sh.join(hot, "shingle", "left_anti")
-        return _jaccard_from_shingles(sh, "doc_id", threshold)
 
     def as_set(df):
         return {
@@ -2755,6 +2751,16 @@ def test_passage_dups_detects_copies_at_any_offset(spark):
     # doc 0 (also a noise-embedded single copy) counts each shared
     # interior segment ONCE — identical to the single-copy pair (0, 2)
     assert out[(0, 51)] == out[(0, 2)], (out[(0, 51)], out[(0, 2)])
+    # hot-passage cap: the shared segments sit in all 6 carriers, so a
+    # cap of 6 keeps every pair and a cap of 5 drops them all
+    capped = {
+        (r["doc_a"], r["doc_b"]): (r["n_shared_passages"], r["shared_tokens"])
+        for r in passage_dups(docs, max_passage_freq=6).collect()
+    }
+    assert capped == out
+    assert passage_dups(docs, max_passage_freq=5).collect() == []
+    with pytest.raises(ValueError, match="max_passage_freq"):
+        passage_dups(docs, max_passage_freq=1)
 
 
 # --- seeded k-means (Lloyd) + SemDeDup (r11) --------------------------------

@@ -13,6 +13,8 @@ from hypothesis import given, settings, strategies as st
 from sahithi_metamorph_etl_spark.llm.decontaminate import ngram_overlap
 from sahithi_metamorph_etl_spark.llm.textstats import repetition_stats
 
+from .shingles import naive_hashed_shingles
+
 # small vocab → high collision rate → duplicates and overlaps actually occur
 _word = st.sampled_from(["alpha", "beta", "gamma", "delta", "x", "yy"])
 _doc = st.lists(_word, min_size=0, max_size=30).map(" ".join)
@@ -528,37 +530,13 @@ def test_jaccard_prefix_equals_naive_on_random_corpora(spark, texts):
     docs maximize shingle collisions and frequency ties), at a low and
     a high threshold — the completeness of the prefix lemma is exactly
     the kind of claim random exploration should keep honest."""
-    from pyspark.sql import functions as F
-
     from sahithi_metamorph_etl_spark.llm.dedup import (
         _jaccard_from_shingles,
         jaccard_pairs,
     )
 
     docs = spark.createDataFrame(list(enumerate(texts)), "doc_id bigint, text string")
-
-    def naive(threshold):
-        words = docs.select(
-            F.col("doc_id"),
-            F.split(F.trim(F.coalesce(F.col("text"), F.lit(""))), r"\s+").alias("w"),
-        )
-        w = F.col("w")
-        grams = F.when(
-            F.size(w) >= 3,
-            F.transform(
-                F.sequence(F.lit(0), F.size(w) - 3),
-                lambda i: F.concat_ws(
-                    " ", *[F.element_at(w, (i + j + 1).cast("int")) for j in range(3)]
-                ),
-            ),
-        ).otherwise(F.array().cast("array<string>"))
-        sh = (
-            words.select(F.col("doc_id"), F.explode(grams).alias("__s"))
-            .select(F.col("doc_id"), F.xxhash64("__s").alias("shingle"))
-            .distinct()
-        )
-        return _jaccard_from_shingles(sh, "doc_id", threshold)
-
+    sh = naive_hashed_shingles(docs)
     for t in (0.34, 0.85):
         got = {
             (r["doc_a"], r["doc_b"], round(r["jaccard"], 9))
@@ -566,70 +544,41 @@ def test_jaccard_prefix_equals_naive_on_random_corpora(spark, texts):
         }
         want = {
             (r["doc_a"], r["doc_b"], round(r["jaccard"], 9))
-            for r in naive(t).collect()
+            for r in _jaccard_from_shingles(sh, "doc_id", t).collect()
         }
         assert got == want, (t, got ^ want)
 
 
 @settings(max_examples=3, deadline=None)
 @given(st.lists(_doc, min_size=2, max_size=10))
-def test_containment_prefix_equals_naive_on_random_corpora(spark, texts):
-    """Prefix-filtered containment_pairs must equal the naive
-    inverted-index form on ANY corpus. The containment prefix lemma is
-    subtler than Jaccard's — it binds only the CONTAINED (smaller)
-    side, with an id tie-break at equal sizes — so random small-vocab
-    corpora (maximal shingle collisions, frequent size ties) are the
-    right adversary for its completeness."""
-    from pyspark.sql import functions as F
+def test_containment_pairs_matches_set_model_on_random_corpora(spark, texts):
+    """containment_pairs must equal a pure-Python shingle-set model on
+    ANY corpus: random small-vocab docs give many shingle collisions,
+    size ties and sub-documents, at a low, a high and the saturating
+    threshold."""
+    from sahithi_metamorph_etl_spark.llm.dedup import containment_pairs
 
-    from sahithi_metamorph_etl_spark.llm.dedup import (
-        _containment_from_shingles,
-        containment_pairs,
-    )
-
+    sets = {i: set(_grams(t, 3)) for i, t in enumerate(texts)}
     docs = spark.createDataFrame(list(enumerate(texts)), "doc_id bigint, text string")
-
-    def naive(threshold):
-        words = docs.select(
-            F.col("doc_id"),
-            F.split(F.trim(F.coalesce(F.col("text"), F.lit(""))), r"\s+").alias("w"),
-        )
-        w = F.col("w")
-        grams = F.when(
-            F.size(w) >= 3,
-            F.transform(
-                F.sequence(F.lit(0), F.size(w) - 3),
-                lambda i: F.concat_ws(
-                    " ", *[F.element_at(w, (i + j + 1).cast("int")) for j in range(3)]
-                ),
-            ),
-        ).otherwise(F.array().cast("array<string>"))
-        sh = (
-            words.select(F.col("doc_id"), F.explode(grams).alias("__s"))
-            .select(F.col("doc_id"), F.xxhash64("__s").alias("shingle"))
-            .distinct()
-        )
-        return _containment_from_shingles(sh, "doc_id", threshold)
-
-    def canon(rows):
-        return {
+    for t in (0.34, 0.85, 1.0):
+        want = set()
+        for a in sets:
+            for b in sets:
+                c = len(sets[a] & sets[b])
+                if a < b and c:
+                    ca, cb = c / len(sets[a]), c / len(sets[b])
+                    if max(ca, cb) >= t:
+                        want.add((a, b, round(ca, 9), round(cb, 9)))
+        got = {
             (
                 r["doc_a"],
                 r["doc_b"],
                 round(r["containment_a_in_b"], 9),
                 round(r["containment_b_in_a"], 9),
             )
-            for r in rows
+            for r in containment_pairs(docs, threshold=t).collect()
         }
-
-    for t in (0.34, 0.85, 1.0):
-        got = canon(containment_pairs(docs, threshold=t, prefix=True).collect())
-        want = canon(naive(t).collect())
         assert got == want, (t, got ^ want)
-        # the default (inverted-index) path runs the same engine as the
-        # naive model plus persist/cap plumbing — pin it once per corpus
-        if t == 0.85:
-            assert canon(containment_pairs(docs, threshold=t).collect()) == want
 
 
 @settings(max_examples=5, deadline=None)
