@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..core.frames import local_frame
+
 END_TOKEN = "</w>"
 
 
@@ -323,8 +325,8 @@ def learn_bpe(
         stats["merges"] = len(merges)
     if state_out is not None:
         state_out.append(state.select("word", "toks"))
-    return spark.createDataFrame(
-        merges, "rank int, left string, right string, merged string, freq bigint"
+    return local_frame(
+        spark, merges, "rank int, left string, right string, merged string, freq bigint"
     )
 
 

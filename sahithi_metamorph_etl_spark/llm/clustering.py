@@ -41,6 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..core.frames import local_frame
 from .embeddings import group_centroids_long
 from .similarity import _nround
 
@@ -254,8 +255,8 @@ def kmeans_parallel_init(
             (rank + 1, ids[ci], int(weights.get(ci, 0)))
             for rank, ci in enumerate(ranked)
         ]
-        return emb.sparkSession.createDataFrame(
-            rows, "init_rank int, vec_id bigint, n_assigned bigint"
+        return local_frame(
+            emb.sparkSession, rows, "init_rank int, vec_id bigint, n_assigned bigint"
         )
     return cents[ranked]
 

@@ -31,6 +31,9 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..core.frames import local_frame
+
+
 def _md5_low_bit(tag: str) -> int:
     """Low bit of the little-endian int64 of md5's first 8 bytes — the
     Python twin of DuckDB ``md5_number_upper(tag) & 1`` (same identity
@@ -74,8 +77,8 @@ def jl_random_projection(
             .collect()
         )
         if not row:
-            return df.sparkSession.createDataFrame(
-                [], f"`{id_col}` bigint, `{out_col}` array<double>"
+            return local_frame(
+                df.sparkSession, [], f"`{id_col}` bigint, `{out_col}` array<double>"
             )
         in_dim = int(row[0][0])
     signs = rademacher_signs(in_dim, out_dim, seed_tag)

@@ -45,6 +45,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..core.frames import local_frame
 from ..functions.money import dround
 from ..operators.windows import top_k_per_group
 
@@ -393,7 +394,7 @@ def cosine_topk_bruteforce(
         id_col, vec_col, query_filter, max_queries, "cosine_topk_bruteforce",
     )
     if not qrows:
-        return embeddings.sparkSession.createDataFrame([], _TOPK_SCHEMA)
+        return local_frame(embeddings.sparkSession, [], _TOPK_SCHEMA)
     qm = _unit_rows(_batch_matrix(r[1] for r in qrows))
     return _ann_search(
         _float_corpus(embeddings, id_col, vec_col), qrows,
@@ -448,9 +449,9 @@ def hard_negative_topk(
         "hard_negative_topk", extra_cols=(label_col,),
     )
     if not qrows:
-        return embeddings.sparkSession.createDataFrame(
-            [], "vec_id bigint, rank int, neighbor_id bigint, "
-            "neighbor_label int, cos_sim double",
+        return local_frame(
+            embeddings.sparkSession, [],
+            "vec_id bigint, rank int, neighbor_id bigint, neighbor_label int, cos_sim double",
         )
     if any(r[2] is None for r in qrows):
         raise ValueError(
@@ -588,8 +589,8 @@ def lsh_near_dup_pairs(
     # frame instead of a TypeError deep in plane construction
     row = embeddings.select(vec_col).filter(F.col(vec_col).isNotNull()).first()
     if row is None:
-        return embeddings.sparkSession.createDataFrame(
-            [], "vec_a bigint, vec_b bigint, cos_sim double"
+        return local_frame(
+            embeddings.sparkSession, [], "vec_a bigint, vec_b bigint, cos_sim double"
         )
     dim = len(row[0])
     rng = np.random.default_rng(seed)
@@ -856,7 +857,7 @@ def ivf_search(
     similarity operators do."""
     qrows = _bounded_query_rows(queries, id_col, vec_col, None, max_queries, "ivf_search")
     if not qrows:
-        return spark.createDataFrame([], _TOPK_SCHEMA)
+        return local_frame(spark, [], _TOPK_SCHEMA)
     qm = _unit_rows(_batch_matrix(r[1] for r in qrows))
     corpus, probes = _open_index(spark, index_path, "lists", qm, n_probe, "ivf_search")
     return _ann_search(corpus, qrows, _cosine_codec(qm, round_scale), k, probes=probes)
@@ -950,8 +951,9 @@ def hyperplane_lsh_topk(
     if dim is None:
         first = embeddings.select(vec_col).filter(F.col(vec_col).isNotNull()).first()
         if first is None:  # empty/all-null input: no buckets, no neighbors
-            return embeddings.sparkSession.createDataFrame(
-                [], "vec_id bigint, rank int, neighbor_id bigint, cos_sim double"
+            return local_frame(
+                embeddings.sparkSession, [],
+                "vec_id bigint, rank int, neighbor_id bigint, cos_sim double",
             )
         dim = len(first[0])
     planes = _planes(n_planes, dim)
@@ -1159,7 +1161,7 @@ def pq_topk(
     if not qrows:
         # also covers the empty-corpus case (queries come from the same
         # frame), so codebook training below always has sample vectors
-        return embeddings.sparkSession.createDataFrame([], _TOPK_SCHEMA)
+        return local_frame(embeddings.sparkSession, [], _TOPK_SCHEMA)
     books = _pq_books(embeddings, id_col, vec_col, m, ksub, seed, train_sample, books)
     qm = _unit_rows(_batch_matrix(r[1] for r in qrows))
     return _ann_search(
@@ -1281,7 +1283,7 @@ def pq_search(
 
     qrows = _bounded_query_rows(queries, id_col, vec_col, None, max_queries, "pq_search")
     if not qrows:
-        return spark.createDataFrame([], _TOPK_SCHEMA)
+        return local_frame(spark, [], _TOPK_SCHEMA)
     qm = _unit_rows(_batch_matrix(r[1] for r in qrows))
     corpus, probes = _open_index(spark, index_path, "codes", qm, n_probe, "pq_search")
     if rerank is None:
@@ -1386,7 +1388,8 @@ def _adc_exact_rerank(
     ``_BROADCAST_CAND_ROWS`` — at the documented caps the list is
     ~80M rows, well past sensible broadcast size, so larger (or
     unknown) bounds leave the strategy to AQE's measured sizes."""
-    qdf = spark.createDataFrame(
+    qdf = local_frame(
+        spark,
         [(int(r[0]), [float(v) for v in r[1]]) for r in qrows],
         "vec_id bigint, qv array<double>",
     )
@@ -1492,7 +1495,7 @@ def sq8_topk(
         embeddings, id_col, vec_col, query_filter, max_queries, "sq8_topk"
     )
     if not qrows:
-        return embeddings.sparkSession.createDataFrame([], _TOPK_SCHEMA)
+        return local_frame(embeddings.sparkSession, [], _TOPK_SCHEMA)
     mn, mx = _sq8_dim_stats(embeddings, id_col, vec_col)
     qn = _np_unit_rounded(_batch_matrix(r[1] for r in qrows))
     return _ann_search(
@@ -1629,7 +1632,7 @@ def sq8_search(
 
     qrows = _bounded_query_rows(queries, id_col, vec_col, None, max_queries, "sq8_search")
     if not qrows:
-        return spark.createDataFrame([], _TOPK_SCHEMA)
+        return local_frame(spark, [], _TOPK_SCHEMA)
     qt = _batch_matrix(r[1] for r in qrows)
     corpus, probes = _open_index(spark, index_path, "codes", _unit_rows(qt), n_probe, "sq8_search")
     if rerank is None:

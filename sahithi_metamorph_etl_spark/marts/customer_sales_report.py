@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 
 from ..functions.money import checked_sum, dround
 from ..operators.quantiles import approx_quantiles, inplan_quantiles, tier_by_cutoffs
+from ..operators.windows import CacheRelease
 
 
 def build_customer_sales_report(
@@ -46,7 +47,16 @@ def build_customer_sales_report(
     load_ts: dt.datetime | None = None,
     exact_tiers: bool = True,
     top_products: DataFrame | None = None,
-) -> DataFrame:
+    return_release: bool = False,
+):
+    """The mart's detail rows (one per non-cancelled sale).
+
+    The small per-customer aggregate is persisted because the cutoffs
+    and the tier join-back both read it; it backs the returned plan, so
+    it cannot be dropped here. ``return_release=True`` returns
+    ``(mart, CacheRelease)``: call ``release()`` once the mart is
+    written (the ``operators.windows.global_rank`` lifetime contract).
+    """
     load_ts = load_ts or dt.datetime(run_date.year, run_date.month, run_date.day)
     run_date_lit = F.lit(run_date.isoformat()).cast("date")
 
@@ -150,7 +160,7 @@ def build_customer_sales_report(
         .withColumn("LOAD_TSTMP", F.lit(load_ts.isoformat(sep=" ")).cast("timestamp"))
     )
 
-    return flagged.select(
+    mart = flagged.select(
         F.col("DAY_DT"),
         F.col("CUSTOMER_ID"),
         F.col("NAME").alias("CUSTOMER_NAME"),
@@ -168,3 +178,4 @@ def build_customer_sales_report(
         F.col("LOYALTY_TIER"),
         F.col("LOAD_TSTMP"),
     )
+    return (mart, CacheRelease(per_customer)) if return_release else mart

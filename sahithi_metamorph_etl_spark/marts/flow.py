@@ -86,14 +86,18 @@ def metamorph_tasks(
         return warehouse.write_legacy(out, "product_performance", run_date)
 
     def mart_customer(_upstream):
-        out = build_customer_sales_report(
+        out, release = build_customer_sales_report(
             warehouse.read_legacy(spark, "sales", run_date),
             warehouse.read_legacy(spark, "products", run_date),
             warehouse.read_legacy(spark, "customers", run_date),
             warehouse.read_legacy(spark, "supplier_performance", run_date),
             run_date,
+            return_release=True,
         )
-        return warehouse.write_legacy(out, "customer_sales_report", run_date)
+        try:
+            return warehouse.write_legacy(out, "customer_sales_report", run_date)
+        finally:
+            release.release()
 
     k = {"retries": retries, "retry_delay_s": retry_delay_s}
     ingest_deps = ("ingest_suppliers", "ingest_products", "ingest_customers")

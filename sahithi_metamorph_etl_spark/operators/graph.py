@@ -31,6 +31,8 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..core.frames import local_frame
+
 
 def connected_components(
     pairs: DataFrame,
@@ -87,7 +89,7 @@ def connected_components(
         schema = pairs.select(
             F.col(src_col).alias("vertex"), F.col(src_col).alias("component")
         ).schema
-        return pairs.sparkSession.createDataFrame(out, schema)
+        return local_frame(pairs.sparkSession, out, schema)
 
     # distributed path: undirected edge frame (each edge both ways),
     # deduped and persisted — consumed once per hash-min round

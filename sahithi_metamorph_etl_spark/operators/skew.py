@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..core.frames import local_frame
+
 SALT_COL = "__salt"
 
 
@@ -107,14 +109,13 @@ def adaptive_salted_join(
         counts.filter(F.col("__cnt") > F.lit(hot_ratio * mean_cnt))
         .orderBy(F.desc("__cnt"), *key_cols)
         .limit(max_hot_keys)
-        .collect()
+        .toArrow()
     )
-    if not hot:
+    if hot.num_rows == 0:
         return large.join(small, on, how)
-    n_salts = int(min(max_salts, max(2, math.ceil(hot[0]["__cnt"] / mean_cnt))))
-    spark = large.sparkSession
-    hot_keys = spark.createDataFrame(
-        [tuple(r[c] for c in key_cols) for r in hot], schema=large.select(*key_cols).schema
+    n_salts = int(min(max_salts, max(2, math.ceil(hot["__cnt"][0].as_py() / mean_cnt))))
+    hot_keys = local_frame(
+        large.sparkSession, hot.select(key_cols), large.select(*key_cols).schema
     ).withColumn("__is_hot", F.lit(True))
     salted_large = (
         large.join(F.broadcast(hot_keys), key_cols, "left")

@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..core.frames import local_frame
+
 
 def top_k_per_group(
     df: DataFrame,
@@ -117,8 +119,10 @@ def funnel(
             ).otherwise(acc),
         )["stage"].alias("reached")
     )
-    stages_df = events.sparkSession.createDataFrame(
-        [(i + 1, s) for i, s in enumerate(stages)], "stage int, event_type string"
+    stages_df = local_frame(
+        events.sparkSession,
+        [(i + 1, s) for i, s in enumerate(stages)],
+        "stage int, event_type string",
     )
     counts = (
         folded.crossJoin(F.broadcast(stages_df))

@@ -11,6 +11,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..core.frames import local_frame
+
 # usum overflow note: the hourly/session dsum groups grow with the event
 # volume, not with an entity dimension — testdata-bounded (<~1e6 units per
 # window); a 100 TB stream should route them through
@@ -414,8 +416,8 @@ def events_stream_funnel(spark, sf_dir):
         out = run_stream_to_memory(stream, "events_funnel_mem", output_mode="update")
         # emissions are monotone; max(reached) is each user's final stage
         final = out.groupBy("user_id").agg(F.max("reached").alias("reached"))
-        stages_df = spark.createDataFrame(
-            [(i + 1, s) for i, s in enumerate(stages)], "stage int, event_type string"
+        stages_df = local_frame(
+            spark, [(i + 1, s) for i, s in enumerate(stages)], "stage int, event_type string"
         )
         # same zero-backfill shape as the batch funnel: one pass over the
         # counts, left-join + coalesce (the previous crossJoin/anti-join

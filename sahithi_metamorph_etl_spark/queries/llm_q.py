@@ -11,6 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..core.frames import localize
 from ..functions.money import o_round
 from ..llm.dedup import (
     containment_pairs,
@@ -347,7 +348,7 @@ def doc_dsir_sample(spark, sf_dir):
     )
     try:
         out = dsir_gumbel_sample(w, k=100, tau=1.0, seed=42)
-        return spark.createDataFrame(out.collect(), schema=out.schema)
+        return localize(out)
     finally:
         release.release()
 
@@ -375,7 +376,7 @@ def doc_dsir_weights(spark, sf_dir):
     try:
         # localize the per-doc weight rows (documents-table-sized, the
         # doc_neardup_stream treatment), then drop the vocab cache
-        return spark.createDataFrame(w.collect(), schema=w.schema)
+        return localize(w)
     finally:
         release.release()
 
@@ -888,7 +889,7 @@ def doc_neardup_stream(spark, sf_dir):
             )
         )
         # localize before the tempdir (and its parquet listings) vanish
-        return spark.createDataFrame(out.collect(), schema=out.schema)
+        return localize(out)
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
@@ -1097,8 +1098,15 @@ FROM reach GROUP BY v
 def doc_dedup_clusters(spark, sf_dir):
     from ..operators.graph import dedup_clusters
 
-    prs = jaccard_pairs(read_testdata(spark, sf_dir, "documents"), threshold=0.8)
-    return dedup_clusters(prs)
+    prs, release = jaccard_pairs(
+        read_testdata(spark, sf_dir, "documents"), threshold=0.8, return_release=True
+    )
+    try:
+        return dedup_clusters(prs)
+    finally:
+        # the components are computed (driver union-find or persisted
+        # labels), so the pinned per-doc hash arrays can drop
+        release.release()
 
 
 _PRUNE_ORACLE = f"""
@@ -1130,7 +1138,11 @@ def corpus_near_dup_prune(spark, sf_dir):
     from ..operators.graph import dedup_clusters, prune_near_dups
 
     docs = read_testdata(spark, sf_dir, "documents")
-    clusters = dedup_clusters(jaccard_pairs(docs, threshold=0.8))
+    prs, release = jaccard_pairs(docs, threshold=0.8, return_release=True)
+    try:
+        clusters = dedup_clusters(prs)
+    finally:
+        release.release()
     return prune_near_dups(docs, clusters)
 
 
@@ -1204,7 +1216,11 @@ def corpus_dedup_report(spark, sf_dir):
         F.coalesce(F.sum("n_docs"), F.lit(0)).cast("bigint").alias("n_docs"),
         F.coalesce(F.sum(F.col("n_docs") - 1), F.lit(0)).cast("bigint").alias("n_exact_dup_docs"),
     )
-    clusters = dedup_clusters(jaccard_pairs(docs, threshold=0.8))
+    prs, release = jaccard_pairs(docs, threshold=0.8, return_release=True)
+    try:
+        clusters = dedup_clusters(prs)
+    finally:
+        release.release()
     hist = (
         clusters.groupBy("cluster_id")
         .agg(F.count(F.lit(1)).alias("sz"))
@@ -1746,7 +1762,7 @@ def emb_ivf_topk(spark, sf_dir):
         ivf_build_index(emb, idx, n_lists=16, centroids=_seed_unit_vectors(emb, 16))
         ann = ivf_search(spark, idx, emb.filter(F.col("vec_id") < 100), k=5, n_probe=4)
         summary = ann_recall_summary(exact, ann, recall_floor=0.2)
-        return spark.createDataFrame(summary.collect(), schema=summary.schema)
+        return localize(summary)
     finally:
         shutil.rmtree(idx, ignore_errors=True)
 
@@ -2641,7 +2657,7 @@ def emb_sq8_ivf_topk(spark, sf_dir):
             k=5, rerank=64, n_probe=10,
         )
         summary = ann_recall_summary(exact, ann, recall_floor=0.8)
-        return spark.createDataFrame(summary.collect(), schema=summary.schema)
+        return localize(summary)
     finally:
         shutil.rmtree(idx, ignore_errors=True)
 
@@ -2769,7 +2785,7 @@ def emb_pq_ivf_topk(spark, sf_dir):
             k=5, rerank=256, n_probe=10,
         )
         summary = ann_recall_summary(exact, ann, recall_floor=0.6)
-        return spark.createDataFrame(summary.collect(), schema=summary.schema)
+        return localize(summary)
     finally:
         shutil.rmtree(idx, ignore_errors=True)
 
@@ -3016,7 +3032,7 @@ def emb_ivf_kmeans_topk(spark, sf_dir):
         summary = ann_recall_summary(exact, ann, recall_floor=0.3)
         # localize the one-row summary before deleting the index files
         # (the emb_ivf_topk precedent: parquet listings capture eagerly)
-        return spark.createDataFrame(summary.collect(), schema=summary.schema)
+        return localize(summary)
     finally:
         shutil.rmtree(idx, ignore_errors=True)
 

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
+from ..core.frames import local_frame
 from ..functions.money import (
     davg,
     dround,
@@ -1040,8 +1041,8 @@ def orders_zorder_pruning(spark, sf_dir):
             n_match = back.filter(F.col(col) <= hi).count()
             st = parquet_pruning_stats(zpath, col, lo, hi)
             rows.append((col, int(b["n_rows"]), n_match, st["admitted_groups"] < st["n_groups"]))
-        return spark.createDataFrame(
-            rows,
+        return local_frame(
+            spark, rows,
             "pred_col string, n_rows_total bigint, n_rows_matching bigint, layout_pruned boolean",
         )
     finally:
@@ -1104,8 +1105,8 @@ def warehouse_upsert_roundtrip(spark, sf_dir):
             F.count_distinct("o_orderkey").alias("n_keys"),
             dsum(F.col("o_totalprice"), 2).alias("total_price"),
         ).collect()
-        return spark.createDataFrame(
-            summary, "n_rows bigint, n_keys bigint, total_price double"
+        return local_frame(
+            spark, summary, "n_rows bigint, n_keys bigint, total_price double"
         )
     finally:
         shutil.rmtree(root, ignore_errors=True)
@@ -1753,8 +1754,8 @@ def recon_bucketed_zero_shuffle(spark, sf_dir):
                 (F.col("o_totalprice") != F.col("t_totalprice")).cast("bigint")
             ).alias("n_price_mismatch"),
         ).collect()[0]
-        return spark.createDataFrame(
-            [(row["n_rows"], row["n_price_mismatch"], True)],
+        return local_frame(
+            spark, [(row["n_rows"], row["n_price_mismatch"], True)],
             "n_rows bigint, n_price_mismatch bigint, zero_shuffle_join boolean",
         )
     finally:

@@ -31,6 +31,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..core.frames import local_frame
 from ..functions.money import dround
 
 
@@ -107,7 +108,7 @@ def diff(
 
     counts = cells.groupBy("column_name").agg(F.count(F.lit(1)).alias("n_mismatch"))
     all_cols = (
-        common.sparkSession.createDataFrame([(c,) for c in compare_cols], "column_name string")
+        local_frame(common.sparkSession, [(c,) for c in compare_cols], "column_name string")
         .join(counts, "column_name", "left")
         .select("column_name", F.coalesce("n_mismatch", F.lit(0)).cast("bigint").alias("n_mismatch"))
     )

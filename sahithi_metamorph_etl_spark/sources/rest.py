@@ -122,4 +122,7 @@ def rows_from_records(
         data = [{k: rec.get(norm(k)) for k in wanted} for rec in data]
     else:
         data = [{k: rec.get(k) for k in wanted} for rec in data]
+    # the classic pickled-row path, not core.frames.local_frame: this is
+    # external JSON, and callers rely on its row-level type errors (a
+    # string in a numeric field names the field and the value)
     return spark.createDataFrame(data, schema=schema)

@@ -68,6 +68,13 @@ def _hidden_rule(jvm):
         return _is_hidden_component
 
 
+def _hadoop_path(spark, path: str):
+    """``(FileSystem, Path)`` for ``path``, on the FileSystem of its own
+    scheme."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
+
+
 def _has_data_files(spark, path: str) -> bool:
     """True iff the recursive Hadoop listing under ``path`` contains
     any file the parquet reader would SEE — one with no hidden
@@ -82,8 +89,7 @@ def _has_data_files(spark, path: str) -> bool:
     the path's own scheme, so the probe works wherever the store
     lives, not just local disk."""
     jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, hpath = _hadoop_path(spark, path)
     if not fs.exists(hpath):
         return False
     base = fs.makeQualified(hpath).toString().rstrip("/")
@@ -122,9 +128,16 @@ def _read_prior(spark, path: str, batch_id: int) -> DataFrame | None:
     own earlier half-written output. Only missing-data reads (path
     absent, or present with only commit markers like _SUCCESS) mean
     "first batch" — any other read failure (corrupt store, permissions)
-    must propagate, not silently ingest the whole batch as novel."""
+    must propagate, not silently ingest the whole batch as novel.
+
+    An absent path is checked with the Hadoop ``fs.exists`` first: the
+    read would fail too, but only after Spark logs a WARN with a full
+    ``FileNotFoundException`` trace on every stream start."""
     from pyspark.errors import AnalysisException
 
+    fs, hpath = _hadoop_path(spark, path)
+    if not fs.exists(hpath):
+        return None
     try:
         df = spark.read.parquet(path)
     except AnalysisException as e:

@@ -7,9 +7,13 @@ empty-payload guards (`ingestion_task.py:32-33`). Differences here:
 - the duplicate probe is ``limit(1)`` — on a 100 TB input the reference's
   full count of all duplicate groups is an unbounded extra job; one
   surviving row is enough to fail the gate;
-- callers are expected to ``cache()`` the DataFrame being validated when
-  they will also write it (the reference recomputes the whole lineage
-  for the validation action and again for the write).
+- each check is its own bounded action over the frame's lineage and
+  returns the frame unchanged; nothing is cached, so a write after the
+  checks recomputes the lineage. The package's ingest task
+  (``marts/flow.py``) validates and writes without persisting: on the
+  ``warehouse_daily`` benchmark a persisted ingest was no faster (traced
+  step 10.38 s vs 10.18 s on 4 cores). Cache first only when the lineage
+  is costly to recompute.
 """
 
 from __future__ import annotations

@@ -104,6 +104,30 @@ def test_metamorph_pipeline_end_to_end(spark, sf_dir, tmp_path):
     assert wh.read_legacy(spark, "supplier_performance", RUN_DATE).limit(1).count() == 1
 
 
+def test_catalog_rows_and_pipeline_release_their_persists(spark, sf_dir, tmp_path):
+    """Resource lifetime without a blanket ``clearCache()``: after each
+    benchmark catalog row runs its action, and after the whole
+    ingest→marts pipeline, no RDD it persisted is still persisted —
+    every persist an operator makes is released by its owner."""
+    from sahithi_metamorph_etl_spark.queries.catalog import all_queries
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    # a plan cached by an earlier test would absorb (and on release,
+    # drop) the persists under test. RDDs an earlier test left behind
+    # may still be unpersisted by the context cleaner at any time, so
+    # the check is on RDD ids created here, not on the count
+    spark.catalog.clearCache()
+    base = persisted()
+    queries = all_queries()
+    for row in ("doc_neardup_stream", "emb_ivf_kmeans_topk", "doc_dedup_clusters"):
+        queries[row](spark, sf_dir).write.format("noop").mode("overwrite").save()
+        assert persisted() <= base, row
+    run_metamorph_pipeline(spark, sf_dir, str(tmp_path / "wh"), RUN_DATE)
+    assert persisted() <= base
+
+
 def test_metamorph_pipeline_q1_gate_fires(spark, sf_dir, tmp_path, monkeypatch):
     real = flow_mod.tpch_entities
 
