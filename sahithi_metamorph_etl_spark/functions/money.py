@@ -120,10 +120,6 @@ def davg(c: Column, scale: int = 2) -> Column:
     return dround(from_units(usum(c)) / F.count(c), scale)
 
 
-def o_dec_sum(expr: str) -> str:
-    return f"sum(CAST({expr} AS DECIMAL(38,6)))"
-
-
 def o_dsum(expr: str, scale: int = 2) -> str:
     return o_round(o_from_units(o_usum(expr)), scale)
 

@@ -18,10 +18,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _clean(c):
-    return F.trim(F.col(c))
-
-
 def join_on_clean_keys(
     left: DataFrame,
     right: DataFrame,

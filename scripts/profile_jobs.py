@@ -1,5 +1,5 @@
 #!/usr/bin/env python
-"""r21 optimization-round profiler: per-query Spark JOB breakdown.
+"""Per-query Spark JOB breakdown of catalog rows.
 
 bench.py gives one wall-clock number per query; at sf0.1 the data is
 tiny (11 MB lineitem, 5k docs/vectors), so a slow row is almost never
@@ -10,8 +10,8 @@ jobs so the optimization target (guide §1.2 step 1: remove passes)
 is visible per query.
 
 Usage:
-  python scripts/profile_r21.py QUERY [QUERY...]   # profile named rows
-  python scripts/profile_r21.py --top              # the r20 top-20 rows
+  python scripts/profile_jobs.py QUERY [QUERY...]   # profile named rows
+  python scripts/profile_jobs.py --top              # the r20 top-20 rows
 
 Prints, per query: total wall s, job count, and each job's
 (duration, description) sorted by duration; plus the dead time not
@@ -52,7 +52,7 @@ def main() -> None:
 
     evdir = tempfile.mkdtemp(prefix="spark_events_")
     spark = get_spark(
-        app_name="profile_r21",
+        app_name="profile_jobs",
         extra_conf={
             "spark.eventLog.enabled": "true",
             "spark.eventLog.dir": evdir,

@@ -2,9 +2,9 @@
 """Focused bench: time named catalog queries with bench.py's exact
 methodology (warmup pass, best-of-2 timed noop saves, cache cleared per
 invocation) plus the two canaries before/after, so numbers triangulate
-against bench_r21_baseline.json under machine-load normalization.
+against a bench.py run under machine-load normalization.
 
-Usage: python scripts/time_queries_r21.py q1 q2 ...
+Usage: python scripts/time_queries.py q1 q2 ...
 Prints one JSON line: {"queries": {...}, "canary_sec": [...], "canary2_sec": [...]}
 """
 
@@ -24,7 +24,7 @@ from sahithi_metamorph_etl_spark.queries.catalog import all_queries  # noqa: E40
 def main() -> None:
     names = sys.argv[1:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark(app_name="time_queries_r21")
+    spark = get_spark(app_name="time_queries")
     qs = all_queries()
 
     from sahithi_metamorph_etl_spark.llm.clustering import kmeans_lloyd

