@@ -6,7 +6,7 @@ Metamorph-ETL/Sahithi-Metamorph-ETL reference warehouse (see SURVEY.md):
 - layered warehouse (raw overwrite / legacy append keyed by DAY_DT)
 - typed source/sink connectors with explicit StructType contracts
 - composable DataFrame operators (projection/filter/join/agg/window)
-- pre-write validators (uniqueness, non-empty, schema conformance)
+- pre-publish validators (uniqueness, non-empty, schema conformance)
 - a dataset reconciliation (diff) module ("Raptor"-equivalent)
 - three analytics marts (supplier/product performance, customer sales report)
 - LLM-data-pipeline extensions: dedup (exact/MinHash-LSH/SimHash/Jaccard),

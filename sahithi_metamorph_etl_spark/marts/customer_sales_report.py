@@ -35,7 +35,6 @@ from pyspark.sql import functions as F
 
 from ..functions.money import checked_sum, dround
 from ..operators.quantiles import approx_quantiles, inplan_quantiles, tier_by_cutoffs
-from ..operators.windows import CacheRelease
 
 
 def build_customer_sales_report(
@@ -47,16 +46,10 @@ def build_customer_sales_report(
     load_ts: dt.datetime | None = None,
     exact_tiers: bool = True,
     top_products: DataFrame | None = None,
-    return_release: bool = False,
-):
-    """The mart's detail rows (one per non-cancelled sale).
-
-    The small per-customer aggregate is persisted because the cutoffs
-    and the tier join-back both read it; it backs the returned plan, so
-    it cannot be dropped here. ``return_release=True`` returns
-    ``(mart, CacheRelease)``: call ``release()`` once the mart is
-    written (the ``operators.windows.global_rank`` lifetime contract).
-    """
+) -> DataFrame:
+    """The mart's detail rows (one per non-cancelled sale). Persists
+    nothing: the returned plan computes the per-customer aggregate once
+    (exchange reuse) for both the cutoffs and the tier join-back."""
     load_ts = load_ts or dt.datetime(run_date.year, run_date.month, run_date.day)
     run_date_lit = F.lit(run_date.isoformat()).cast("date")
 
@@ -96,8 +89,6 @@ def build_customer_sales_report(
         )
     )
 
-    from pyspark import StorageLevel
-
     metrics = (
         joined.withColumn("DAY_DT", run_date_lit)
         .withColumn("SALE_DATE", F.coalesce(F.col("SALE_DATE"), F.date_sub(run_date_lit, 1)))
@@ -112,18 +103,19 @@ def build_customer_sales_report(
     # NEVER persist the fact-wide frame: writing every detail row into
     # the block manager costs ~3x a plain computation pass (measured:
     # 5.5s persist vs 1.4s pass at sf0.1) and at 100 TB it is a full
-    # fact-sized spill. Instead the fact is scanned twice — once for the
-    # per-customer aggregate (Catalyst prunes to the 4 columns that pass
-    # needs), once for the detail projection — and only the SMALL
-    # per-customer aggregate (|customers| rows x 2 cols) is persisted,
-    # since both the cutoff aggregate and the tier projection consume it.
+    # fact-sized spill. Nor the per-customer aggregate: an unmaterialized
+    # cache reports a default (huge) size, so Catalyst adds a runtime
+    # bloom-filter subquery that scans the fact a third time. The fact
+    # is scanned twice — once for the per-customer aggregate (Catalyst
+    # prunes to the 4 columns that pass needs), once for the detail
+    # projection.
     # PER-CUSTOMER totals are scale-invariant (orders per customer is a
     # fixed ratio in this data model, ~10 x <=6e5 each ⇒ <=~1e7), so the
     # declared 1e8 bound holds at ANY corpus SF and checked_sum provably
     # keeps the codegen-friendly bigint micro-unit path
     per_customer = metrics.groupBy("CUSTOMER_ID").agg(
         checked_sum(F.col("SALE_AMOUNT"), max_abs_total=1e8, scale=2).alias("AGG_SALES_AMOUNT")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    )
 
     if exact_tiers:
         # 1-row cutoff aggregate broadcast back onto per_customer: the
@@ -178,4 +170,4 @@ def build_customer_sales_report(
         F.col("LOYALTY_TIER"),
         F.col("LOAD_TSTMP"),
     )
-    return (mart, CacheRelease(per_customer)) if return_release else mart
+    return mart

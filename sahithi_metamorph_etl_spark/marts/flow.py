@@ -6,14 +6,26 @@ Topology from `ETL_Airflow/dags/metamorph_etl_dag.py:49`:
         >> supplier_performance >> product_performance
         >> customer_sales_report
 
-Each ingest task runs the reference's quality gates (Q1 uniqueness +
-non-empty, `utils.py` validations) and lands raw + legacy layers in the
-:class:`~..sinks.warehouse.LayeredWarehouse`; each mart task reads the
-run-date slice BACK from the legacy layer (the reference's P6
-``DAY_DT = current_date`` read-back — here a pruned partition scan) and
-writes its result as a legacy mart table. The composition is what the
-reference can only express through Airflow; task functions stay plain
-callables an orchestrator could schedule directly.
+Each ingest task lands its entity as write → audit → publish:
+
+1. **write** — the entity's lineage (for sales, with the SALE_ID
+   dedupe) runs exactly once, into the raw snapshot
+   ``raw/<name>_pre`` (the reference's ``raw.*_pre``);
+2. **audit** — the reference's quality gates (Q1 uniqueness +
+   non-empty, `utils.py` validations) run on the staged snapshot, read
+   back with the schema just written, so they scan parquet instead of
+   re-running the lineage;
+3. **publish** — the staged snapshot is appended as the run date's
+   ``legacy/<name>`` partition.
+
+A failed gate leaves the rejected snapshot in ``raw/<name>_pre`` (the
+audit area), writes no legacy partition for the day, and the pipeline
+skips every downstream task. Each mart task reads the run-date slice
+BACK from the legacy layer (the reference's P6 ``DAY_DT =
+current_date`` read-back — here a pruned partition scan) and writes its
+result as a legacy mart table. The composition is what the reference
+can only express through Airflow; task functions stay plain callables
+an orchestrator could schedule directly.
 """
 
 from __future__ import annotations
@@ -61,10 +73,12 @@ def metamorph_tasks(
                 # (`ingestion_task.py:234`), so cleanse deterministically
                 # first — the gate below then enforces the invariant.
                 df = dedupe_by_key(df, [_ENTITY_KEYS[name]])
-            validate_non_empty(df, name)
-            validate_unique(df, [_ENTITY_KEYS[name]])
-            warehouse.write_raw(df, name)
-            return warehouse.write_legacy(df, name, run_date)
+            # write → audit → publish (module docstring); the schema
+            # just written spares the read-back a schema-inference job
+            staged = spark.read.schema(df.schema).parquet(warehouse.write_raw(df, name))
+            validate_non_empty(staged, name)
+            validate_unique(staged, [_ENTITY_KEYS[name]])
+            return warehouse.write_legacy(staged, name, run_date)
 
         return _run
 
@@ -86,18 +100,14 @@ def metamorph_tasks(
         return warehouse.write_legacy(out, "product_performance", run_date)
 
     def mart_customer(_upstream):
-        out, release = build_customer_sales_report(
+        out = build_customer_sales_report(
             warehouse.read_legacy(spark, "sales", run_date),
             warehouse.read_legacy(spark, "products", run_date),
             warehouse.read_legacy(spark, "customers", run_date),
             warehouse.read_legacy(spark, "supplier_performance", run_date),
             run_date,
-            return_release=True,
         )
-        try:
-            return warehouse.write_legacy(out, "customer_sales_report", run_date)
-        finally:
-            release.release()
+        return warehouse.write_legacy(out, "customer_sales_report", run_date)
 
     k = {"retries": retries, "retry_delay_s": retry_delay_s}
     ingest_deps = ("ingest_suppliers", "ingest_products", "ingest_customers")

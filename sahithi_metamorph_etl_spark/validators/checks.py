@@ -1,4 +1,4 @@
-"""Pre-write data-quality gates (SURVEY.md §2.11 Q1).
+"""Pre-publish data-quality gates (SURVEY.md §2.11 Q1).
 
 Reference: ``DuplicateValidator.validate_no_duplicates``
 (`utils.py:116-142`) raises if any key group has more than one row; plus
@@ -7,13 +7,15 @@ empty-payload guards (`ingestion_task.py:32-33`). Differences here:
 - the duplicate probe is ``limit(1)`` — on a 100 TB input the reference's
   full count of all duplicate groups is an unbounded extra job; one
   surviving row is enough to fail the gate;
-- each check is its own bounded action over the frame's lineage and
-  returns the frame unchanged; nothing is cached, so a write after the
-  checks recomputes the lineage. The package's ingest task
-  (``marts/flow.py``) validates and writes without persisting: on the
-  ``warehouse_daily`` benchmark a persisted ingest was no faster (traced
-  step 10.38 s vs 10.18 s on 4 cores). Cache first only when the lineage
-  is costly to recompute.
+- the empty probe is ``isEmpty()``: one job that stops at the first
+  non-empty partition;
+- each check is its own bounded action over the frame it is given and
+  returns the frame unchanged. The package's ingest task
+  (``marts/flow.py``) audits the staged raw snapshot, not the source
+  lineage: it writes the lineage once, reads the parquet back, gates it,
+  and only then publishes it to the legacy layer, so the checks scan
+  parquet instead of recomputing joins and shuffles. A gate on an
+  unstaged frame re-runs its whole lineage.
 """
 
 from __future__ import annotations
@@ -45,7 +47,7 @@ def validate_unique(df: DataFrame, keys: list[str]) -> DataFrame:
 
 
 def validate_non_empty(df: DataFrame, what: str = "input") -> DataFrame:
-    if df.limit(1).count() == 0:
+    if df.isEmpty():
         raise EmptyInputError(f"{what} is empty")
     return df
 

@@ -13,6 +13,7 @@ from sahithi_metamorph_etl_spark.core.pipeline import (
 )
 from sahithi_metamorph_etl_spark.marts import RUN_DATE
 from sahithi_metamorph_etl_spark.marts import flow as flow_mod
+from sahithi_metamorph_etl_spark.marts.customer_sales_report import build_customer_sales_report
 from sahithi_metamorph_etl_spark.marts.flow import run_metamorph_pipeline
 from sahithi_metamorph_etl_spark.sinks.warehouse import LayeredWarehouse
 from sahithi_metamorph_etl_spark.validators.checks import DuplicateKeyError
@@ -102,13 +103,25 @@ def test_metamorph_pipeline_end_to_end(spark, sf_dir, tmp_path):
         assert c in report.columns
     # the supplier mart slice the customer mart consumed is also landed
     assert wh.read_legacy(spark, "supplier_performance", RUN_DATE).limit(1).count() == 1
+    # the customer mart reads its per-customer aggregate twice in one
+    # plan; persisting it put an unmaterialized InMemoryRelation there,
+    # whose default size over these parquet read-backs made Catalyst add
+    # a runtime bloom filter that scanned the fact a third time
+    mart = build_customer_sales_report(
+        *(wh.read_legacy(spark, t, RUN_DATE) for t in ("sales", "products", "customers", "supplier_performance")),
+        RUN_DATE,
+    )
+    plan = mart._jdf.queryExecution().optimizedPlan().toString()
+    assert "bloom_filter_agg" not in plan
+    assert "InMemoryRelation" not in plan
 
 
 def test_catalog_rows_and_pipeline_release_their_persists(spark, sf_dir, tmp_path):
     """Resource lifetime without a blanket ``clearCache()``: after each
-    benchmark catalog row runs its action, and after the whole
-    ingest→marts pipeline, no RDD it persisted is still persisted —
-    every persist an operator makes is released by its owner."""
+    benchmark catalog row and the customer mart row run their action,
+    and after the whole ingest→marts pipeline, no RDD it persisted is
+    still persisted — every persist an operator makes is released by
+    its owner."""
     from sahithi_metamorph_etl_spark.queries.catalog import all_queries
 
     def persisted():
@@ -121,7 +134,7 @@ def test_catalog_rows_and_pipeline_release_their_persists(spark, sf_dir, tmp_pat
     spark.catalog.clearCache()
     base = persisted()
     queries = all_queries()
-    for row in ("doc_neardup_stream", "emb_ivf_kmeans_topk", "doc_dedup_clusters"):
+    for row in ("doc_neardup_stream", "emb_ivf_kmeans_topk", "doc_dedup_clusters", "mart_customer_sales_report"):
         queries[row](spark, sf_dir).write.format("noop").mode("overwrite").save()
         assert persisted() <= base, row
     run_metamorph_pipeline(spark, sf_dir, str(tmp_path / "wh"), RUN_DATE)
@@ -137,8 +150,9 @@ def test_metamorph_pipeline_q1_gate_fires(spark, sf_dir, tmp_path, monkeypatch):
         return e
 
     monkeypatch.setattr(flow_mod, "tpch_entities", with_dup_suppliers)
+    root = tmp_path / "wh2"
     with pytest.raises(PipelineFailure) as ei:
-        run_metamorph_pipeline(spark, sf_dir, str(tmp_path / "wh2"), RUN_DATE)
+        run_metamorph_pipeline(spark, sf_dir, str(root), RUN_DATE)
     runs = ei.value.runs
     assert runs["ingest_suppliers"].status == "failed"
     assert isinstance(runs["ingest_suppliers"].error, DuplicateKeyError)
@@ -146,6 +160,39 @@ def test_metamorph_pipeline_q1_gate_fires(spark, sf_dir, tmp_path, monkeypatch):
     assert runs["ingest_sales"].status == "skipped"
     assert runs["customer_sales_report"].status == "skipped"
     assert runs["ingest_products"].status == "success"
+    # write-audit-publish: the rejected snapshot stays in the raw audit
+    # area, duplicate included, and nothing is published for the day
+    day = f"DAY_DT={RUN_DATE.isoformat()}"
+    assert not (root / "legacy" / "suppliers" / day).exists()
+    staged = spark.read.parquet(str(root / "raw" / "suppliers_pre"))
+    n_suppliers = real(spark, sf_dir)["suppliers"].count()
+    assert staged.count() == n_suppliers + 1
+    assert staged.select("SUPPLIER_ID").distinct().count() == n_suppliers
+    # an independent ingest that passed its gates published its day
+    assert (root / "legacy" / "products" / day).is_dir()
+    assert LayeredWarehouse(str(root)).read_legacy(spark, "products", RUN_DATE).count() > 0
+
+
+# Jobs per ingest task on the sf0.001 fixture: the lineage runs once (the
+# raw write), the gates and the publish read the staged parquet. Running
+# the lineage per gate and per write takes 13 (sales) and 14 (products).
+INGEST_JOB_BUDGET = {"ingest_sales": 7, "ingest_products": 7}
+
+
+@pytest.mark.parametrize("task", sorted(INGEST_JOB_BUDGET))
+def test_ingest_job_budget(spark, sf_dir, tmp_path, task):
+    wh = LayeredWarehouse(str(tmp_path / "wh"))
+    fn = next(t.fn for t in flow_mod.metamorph_tasks(spark, sf_dir, wh, RUN_DATE) if t.name == task)
+    sc, group = spark.sparkContext, f"budget-{task}-{tmp_path.name}"
+    sc.setJobGroup(group, group)
+    try:
+        fn({})
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < jobs <= INGEST_JOB_BUDGET[task], jobs
 
 
 def test_upsert_legacy_merges_keys_and_preserves_other_days(spark, sf_dir, tmp_path):
