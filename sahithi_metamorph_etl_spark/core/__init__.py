@@ -1,3 +1,3 @@
-from .session import get_spark, stop_spark
+from .session import get_spark
 
-__all__ = ["get_spark", "stop_spark"]
+__all__ = ["get_spark"]

@@ -13,22 +13,27 @@ stdlib (``zlib``, ``struct``) and numpy:
   dequant, IDCT, 4:4:4/4:2:2/4:2:0 upsampling, YCbCr->RGB, DRI/RSTn)
   AND progressive (SOF2: T.81 Annex G spectral selection + successive
   approximation — DC/AC first and refinement scans, EOB runs,
-  coefficient accumulation across scans). Encoders for both modes
-  (Annex K tables; baseline 4:4:4/4:2:0, progressive 4:4:4 with a
-  configurable successive-approximation depth) power the round-trip
-  tests and the resize write-back path. Arithmetic coding and
-  non-interleaved *sequential* multi-scan raise
+  coefficient accumulation across scans), through one marker walk and
+  one scan decoder. Encoders for both modes (Annex K tables; baseline
+  4:4:4/4:2:0, progressive 4:4:4 with a configurable
+  successive-approximation depth) share one coefficient head and power
+  the round-trip tests and the resize write-back path. Arithmetic
+  coding and non-interleaved *sequential* multi-scan raise
   ``UnsupportedImageError`` rather than faking pixels.
-- GIF  — first-frame FULL pixel decode from spec (variable-width LZW,
-  global/local color tables, interlace, screen composition) and a
-  single-frame GIF89a encoder (<=256-color input) for fixtures.
+- GIF  — FULL animation decode from spec (variable-width LZW,
+  global/local color tables, interlace, GCE delay/transparency,
+  disposal methods) through one frame walker, whose first frame is
+  :func:`decode_gif`; single-frame and animated GIF89a encoders
+  (<=256-color input) for fixtures.
+- WAV  — PCM RIFF decode/encode.
 
 If PIL is importable (not in this container, but in a production image)
 it is preferred automatically for both decode and resize; everything
 here is the self-contained fallback. All functions are plain
-bytes/ndarray transforms so they can run inside Arrow-batched
-``mapInPandas`` closures (multimodal.py) without shipping module state
-to executors — import this module INSIDE the closure.
+bytes/ndarray transforms, and the module imports nothing from its
+package, so Arrow-batched ``mapInPandas`` closures (multimodal.py,
+queries/llm_q.py) get it through :func:`codec_loader`, which ships this
+source by value and runs it on the executor.
 """
 
 from __future__ import annotations
@@ -46,8 +51,9 @@ _PNG_CHANNELS = {0: 1, 2: 3, 4: 2, 6: 4}
 class UnsupportedImageError(ValueError):
     """Payload is a recognized image format but outside the subset this
     library-free codec implements (e.g. interlaced/palette/16-bit PNG,
-    JPEG pixel decode). Callers should treat it as 'needs a real codec
-    library', distinct from 'not an image at all'."""
+    arithmetic-coded or multi-scan sequential JPEG). Callers should
+    treat it as 'needs a real codec library', distinct from 'not an
+    image at all'."""
 
 
 def sniff_format(payload: bytes) -> str | None:
@@ -229,41 +235,19 @@ def decode_bmp(payload: bytes) -> np.ndarray:
     return np.ascontiguousarray(rows[:, :, order])
 
 
-# --------------------------------------------------------- JPEG / GIF
-
-
-def jpeg_header(payload: bytes) -> tuple[int, int, int]:
-    """(width, height, channels) from the JPEG SOF segment — a real
-    header parse (marker walk), no pixel decode."""
-    if not payload.startswith(b"\xff\xd8"):
-        raise ValueError("not a JPEG payload")
-    pos = 2
-    while pos + 4 <= len(payload):
-        if payload[pos] != 0xFF:
-            pos += 1
-            continue
-        marker = payload[pos + 1]
-        if marker == 0xFF:  # fill byte before a marker (spec-permitted)
-            pos += 1
-            continue
-        if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-            pos += 2
-            continue
-        (seg_len,) = struct.unpack(">H", payload[pos + 2 : pos + 4])
-        if marker in (0xC0, 0xC1, 0xC2, 0xC3):  # SOF0..SOF3
-            _prec, h, w, ncomp = struct.unpack(">BHHB", payload[pos + 4 : pos + 10])
-            return w, h, ncomp
-        pos += 2 + seg_len
-    raise ValueError("JPEG payload has no SOF segment")
-
-
-# ------------------------------------------------- baseline JPEG codec
+# --------------------------------------------------------------- JPEG
 #
 # Full pixel decode for baseline sequential (SOF0/SOF1, Huffman) AND
 # progressive (SOF2, Annex G) JPEG — together the two modes cover
 # essentially every real-web Huffman JPEG — plus from-spec encoders for
 # both, used by the round-trip tests and the resize write-back path.
 # Arithmetic coding stays an honest UnsupportedImageError.
+#
+# One marker walk (_jpeg_segments) serves the header parse and the
+# decoder. The decoder has one scan decoder: every scan writes into the
+# per-component coefficient grids, and a baseline file is one
+# interleaved scan over the full band (Ss=0, Se=63, Ah=Al=0). The two
+# encoders share one coefficient head and one entropy-scan loop.
 #
 # Decoder correctness does NOT depend on this module's table constants:
 # quantization and Huffman tables are read from the payload's own
@@ -279,7 +263,6 @@ _JPEG_ZIGZAG = np.array([
     35, 42, 49, 56, 57, 50, 43, 36, 29, 22, 15, 23, 30, 37, 44, 51,
     58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63,
 ], dtype=np.int64)
-
 # ITU-T T.81 Annex K quantization tables (quality-50 reference)
 _JPEG_Q_LUM = np.array([
     16, 11, 10, 16, 24, 40, 51, 61,
@@ -362,210 +345,61 @@ def _jpeg_build_codes(bits, vals) -> dict:
     return codes
 
 
-def _jpeg_scale_qtable(base: np.ndarray, quality: int) -> np.ndarray:
-    """IJG quality scaling of an Annex K base table (1..100)."""
-    q = min(100, max(1, int(quality)))
-    scale = 5000 // q if q < 50 else 200 - 2 * q
-    return np.clip((base * scale + 50) // 100, 1, 255).astype(np.int64)
+def _jpeg_seg(marker: int, body: bytes) -> bytes:
+    return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
 
 
-class _JpegBitWriter:
-    def __init__(self) -> None:
-        self.out = bytearray()
-        self._acc = 0
-        self._n = 0
-
-    def write(self, code: int, length: int) -> None:
-        for i in range(length - 1, -1, -1):
-            self._acc = (self._acc << 1) | ((code >> i) & 1)
-            self._n += 1
-            if self._n == 8:
-                self.out.append(self._acc)
-                if self._acc == 0xFF:  # byte stuffing
-                    self.out.append(0x00)
-                self._acc = 0
-                self._n = 0
-
-    def flush(self) -> None:
-        while self._n:
-            self.write(1, 1)
-
-
-def _jpeg_magnitude(v: int) -> tuple[int, int]:
-    """(size category, appended bits) for a DC diff / AC coefficient."""
-    size = int(abs(v)).bit_length()
-    bits = v if v >= 0 else v + (1 << size) - 1
-    return size, bits
-
-
-def _jpeg_encode_block(
-    writer: _JpegBitWriter,
-    block: np.ndarray,
-    qtable: np.ndarray,
-    dc_codes: dict,
-    ac_codes: dict,
-    pred: int,
-    dct_m: np.ndarray,
-) -> int:
-    """FDCT + quantize + entropy-encode one level-shifted 8x8 block;
-    returns the new DC predictor."""
-    coef = dct_m @ block @ dct_m.T
-    quant = np.round(coef / qtable).astype(np.int64)
-    zz = quant.flatten()[_JPEG_ZIGZAG]
-    dc = int(zz[0])
-    size, bits = _jpeg_magnitude(dc - pred)
-    code, length = dc_codes[size]
-    writer.write(code, length)
-    if size:
-        writer.write(bits, size)
-    run = 0
-    last_nz = int(np.max(np.nonzero(zz)[0])) if np.any(zz[1:]) else 0
-    for k in range(1, 64):
-        v = int(zz[k])
-        if k > last_nz:
-            break
-        if v == 0:
-            run += 1
+def _jpeg_segments(payload: bytes):
+    """The one JPEG marker walk: yields ``(marker, body, end)`` for each
+    length-bearing segment from SOI to this image's EOI, ``end`` being
+    the offset just past the body. Fill bytes and standalone markers
+    (TEM, RSTn) are stepped over; after an SOS the entropy-coded data
+    (stuffed FF00, RSTn) is skipped up to the next marker. Segment
+    bodies are skipped whole, so literal FF D9 / FF DA bytes inside a
+    COM/APPn/DHT body neither end the walk nor fake a scan, and bytes
+    after EOI (concatenated JPEGs, trailers) are never read."""
+    if not payload.startswith(b"\xff\xd8"):
+        raise ValueError("not a JPEG payload")
+    n = len(payload)
+    pos = 2
+    while pos + 4 <= n:
+        if payload[pos] != 0xFF:
+            pos += 1
             continue
-        while run > 15:
-            code, length = ac_codes[0xF0]  # ZRL
-            writer.write(code, length)
-            run -= 16
-        size, bits = _jpeg_magnitude(v)
-        code, length = ac_codes[(run << 4) | size]
-        writer.write(code, length)
-        writer.write(bits, size)
-        run = 0
-    if last_nz < 63:
-        code, length = ac_codes[0x00]  # EOB
-        writer.write(code, length)
-    return dc
+        marker = payload[pos + 1]
+        if marker == 0xFF:  # fill byte before a marker (spec-permitted)
+            pos += 1
+            continue
+        if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
+            pos += 2
+            continue
+        if marker == 0xD9:
+            return
+        (seg_len,) = struct.unpack(">H", payload[pos + 2 : pos + 4])
+        end = pos + 2 + seg_len
+        yield marker, payload[pos + 4 : end], end
+        pos = end
+        while marker == 0xDA:  # entropy-coded data up to the next marker
+            pos = payload.find(b"\xff", pos)
+            if pos < 0:
+                return
+            if pos + 1 < n and (payload[pos + 1] == 0x00 or 0xD0 <= payload[pos + 1] <= 0xD7):
+                pos += 2
+            else:
+                break
 
 
-def _jpeg_dht_segment(tc: int, th: int, spec) -> bytes:
-    bits, vals = spec
-    body = bytes([(tc << 4) | th]) + bytes(bits) + bytes(vals)
-    return b"\xff\xc4" + struct.pack(">H", len(body) + 2) + body
+def jpeg_header(payload: bytes) -> tuple[int, int, int]:
+    """(width, height, channels) from the JPEG SOF segment — a real
+    header parse (marker walk), no pixel decode."""
+    for marker, body, _end in _jpeg_segments(payload):
+        if marker in (0xC0, 0xC1, 0xC2, 0xC3):  # SOF0..SOF3
+            _prec, h, w, ncomp = struct.unpack(">BHHB", body[:6])
+            return w, h, ncomp
+    raise ValueError("JPEG payload has no SOF segment")
 
 
-def encode_jpeg_baseline(
-    pixels: np.ndarray,
-    quality: int = 85,
-    subsampling: str = "444",
-    restart_interval: int = 0,
-) -> bytes:
-    """(H, W) or (H, W, 3) uint8 -> baseline sequential JFIF bytes.
-
-    ``subsampling``: "444" (one block per component per MCU) or "420"
-    (2x2 luma blocks + box-mean-downsampled chroma per 16x16 MCU).
-    ``restart_interval`` > 0 emits DRI + RSTn markers every that many
-    MCUs (exercises the decoder's restart path)."""
-    arr = np.asarray(pixels, dtype=np.uint8)
-    if arr.ndim == 3 and arr.shape[2] == 1:
-        arr = arr[:, :, 0]
-    gray = arr.ndim == 2
-    if not gray and arr.shape[2] != 3:
-        raise ValueError("JPEG encoder takes grayscale or RGB pixels")
-    if subsampling not in ("444", "420"):
-        raise ValueError("subsampling must be '444' or '420'")
-    h, w = arr.shape[:2]
-    if h == 0 or w == 0:
-        raise ValueError("empty image")
-    dct_m = _jpeg_dct_matrix()
-    q_lum = _jpeg_scale_qtable(_JPEG_Q_LUM, quality)
-    q_chrom = _jpeg_scale_qtable(_JPEG_Q_CHROM, quality)
-    dc_lum = _jpeg_build_codes(*_JPEG_DC_LUM)
-    ac_lum = _jpeg_build_codes(*_JPEG_AC_LUM)
-    dc_chrom = _jpeg_build_codes(*_JPEG_DC_CHROM)
-    ac_chrom = _jpeg_build_codes(*_JPEG_AC_CHROM)
-
-    planes = _jpeg_rgb_to_ycbcr_planes(arr, gray)
-    if gray:
-        samp = [(1, 1)]
-    elif subsampling == "420":
-        # pad to even dims, then 2x2 box mean for chroma
-        y, cb, cr = planes
-        ph, pw = (h + 1) // 2 * 2, (w + 1) // 2 * 2
-        cb = np.pad(cb, ((0, ph - h), (0, pw - w)), mode="edge")
-        cr = np.pad(cr, ((0, ph - h), (0, pw - w)), mode="edge")
-        cb = cb.reshape(ph // 2, 2, pw // 2, 2).mean(axis=(1, 3))
-        cr = cr.reshape(ph // 2, 2, pw // 2, 2).mean(axis=(1, 3))
-        planes = [y, cb, cr]
-        samp = [(2, 2), (1, 1), (1, 1)]
-    else:
-        samp = [(1, 1), (1, 1), (1, 1)]
-
-    max_h = max(s[0] for s in samp)
-    max_v = max(s[1] for s in samp)
-    mcus_x = (w + 8 * max_h - 1) // (8 * max_h)
-    mcus_y = (h + 8 * max_v - 1) // (8 * max_v)
-    padded = []
-    for plane, (sh, sv) in zip(planes, samp):
-        th, tw = mcus_y * sv * 8, mcus_x * sh * 8
-        ph, pw = plane.shape
-        padded.append(
-            np.pad(plane, ((0, th - ph), (0, tw - pw)), mode="edge") - 128.0
-        )
-
-    writer = _JpegBitWriter()
-    preds = [0] * len(planes)
-    qtables = [q_lum] + [q_chrom] * (len(planes) - 1)
-    dc_tbls = [dc_lum] + [dc_chrom] * (len(planes) - 1)
-    ac_tbls = [ac_lum] + [ac_chrom] * (len(planes) - 1)
-    entropy = bytearray()
-    rst = 0
-    n_mcus = 0
-    for my in range(mcus_y):
-        for mx in range(mcus_x):
-            if restart_interval and n_mcus and n_mcus % restart_interval == 0:
-                writer, rst = _jpeg_flush_restart(entropy, writer, rst)
-                preds = [0] * len(planes)
-            for ci, (plane, (sh, sv)) in enumerate(zip(padded, samp)):
-                for by in range(sv):
-                    for bx in range(sh):
-                        y0 = (my * sv + by) * 8
-                        x0 = (mx * sh + bx) * 8
-                        preds[ci] = _jpeg_encode_block(
-                            writer,
-                            plane[y0 : y0 + 8, x0 : x0 + 8],
-                            qtables[ci],
-                            dc_tbls[ci],
-                            ac_tbls[ci],
-                            preds[ci],
-                            dct_m,
-                        )
-            n_mcus += 1
-    writer.flush()
-    entropy += writer.out
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
-
-    out = bytearray(b"\xff\xd8")  # SOI
-    out += seg(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
-    out += seg(0xDB, b"\x00" + bytes(q_lum.flatten()[_JPEG_ZIGZAG].astype(np.uint8)))
-    if not gray:
-        out += seg(0xDB, b"\x01" + bytes(q_chrom.flatten()[_JPEG_ZIGZAG].astype(np.uint8)))
-    ncomp = len(planes)
-    sof = bytearray([8]) + struct.pack(">HH", h, w) + bytes([ncomp])
-    for ci, (sh, sv) in enumerate(samp):
-        sof += bytes([ci + 1, (sh << 4) | sv, 0 if ci == 0 else 1])
-    out += seg(0xC0, bytes(sof))
-    out += _jpeg_dht_segment(0, 0, _JPEG_DC_LUM)
-    out += _jpeg_dht_segment(1, 0, _JPEG_AC_LUM)
-    if not gray:
-        out += _jpeg_dht_segment(0, 1, _JPEG_DC_CHROM)
-        out += _jpeg_dht_segment(1, 1, _JPEG_AC_CHROM)
-    if restart_interval:
-        out += seg(0xDD, struct.pack(">H", restart_interval))
-    sos = bytearray([ncomp])
-    for ci in range(ncomp):
-        sos += bytes([ci + 1, 0x00 if ci == 0 else 0x11])
-    sos += b"\x00\x3f\x00"
-    out += seg(0xDA, bytes(sos))
-    out += entropy
-    out += b"\xff\xd9"  # EOI
-    return bytes(out)
+# ---------------------------------------------------------- JPEG decode
 
 
 class _JpegBitReader:
@@ -620,11 +454,6 @@ class _JpegBitReader:
         raise UnsupportedImageError("JPEG stream missing expected restart marker")
 
 
-def _jpeg_decode_table(table: dict) -> dict:
-    """symbol -> (code, length) table to (length, code) -> symbol."""
-    return {(length, code): sym for sym, (code, length) in table.items()}
-
-
 def _jpeg_huff_decode(reader: _JpegBitReader, table: dict) -> int:
     code = 0
     for length in range(1, 17):
@@ -643,35 +472,9 @@ def _jpeg_extend(v: int, size: int) -> int:
     return v
 
 
-def _jpeg_decode_block(
-    reader: _JpegBitReader, dc_tbl: dict, ac_tbl: dict, pred: int
-) -> tuple[np.ndarray, int]:
-    """One block of zigzag coefficients (still quantized) + DC pred."""
-    size = _jpeg_huff_decode(reader, dc_tbl)
-    dc = pred + _jpeg_extend(reader.read_bits(size), size)
-    zz = np.zeros(64, dtype=np.int64)
-    zz[0] = dc
-    k = 1
-    while k < 64:
-        rs = _jpeg_huff_decode(reader, ac_tbl)
-        run, size = rs >> 4, rs & 0x0F
-        if size == 0:
-            if run == 15:  # ZRL: 16 zeros
-                k += 16
-                continue
-            break  # EOB
-        k += run
-        if k > 63:
-            raise UnsupportedImageError("JPEG AC coefficient index overflow")
-        zz[k] = _jpeg_extend(reader.read_bits(size), size)
-        k += 1
-    return zz, dc
-
-
 def _jpeg_parse_dqt(body: bytes, qtables: dict) -> None:
     """Parse one DQT segment body (possibly several tables) into
-    natural-order (8, 8) int64 tables keyed by table id — shared by the
-    baseline and progressive decoders."""
+    natural-order (8, 8) int64 tables keyed by table id."""
     bp = 0
     while bp < len(body):
         pq, tq = body[bp] >> 4, body[bp] & 0x0F
@@ -689,242 +492,44 @@ def _jpeg_parse_dqt(body: bytes, qtables: dict) -> None:
 
 def _jpeg_parse_dht(body: bytes, huff: dict) -> None:
     """Parse one DHT segment body (possibly several tables) into decode
-    tables keyed by (class, id) — shared by both decoders."""
+    tables ``(length, code) -> symbol`` keyed by (class, id)."""
     bp = 0
     while bp < len(body):
         tc, th = body[bp] >> 4, body[bp] & 0x0F
         bits = list(body[bp + 1 : bp + 17])
         nvals = sum(bits)
         vals = list(body[bp + 17 : bp + 17 + nvals])
-        huff[(tc, th)] = _jpeg_decode_table(_jpeg_build_codes(bits, vals))
+        codes = _jpeg_build_codes(bits, vals)
+        huff[(tc, th)] = {(length, code): sym for sym, (code, length) in codes.items()}
         bp += 17 + nvals
 
 
-def _jpeg_planes_to_image(
-    comps: list[dict], planes: dict, h: int, w: int, max_h: int, max_v: int
-) -> np.ndarray:
-    """Shared decoder tail: upsample subsampled component planes
-    (replicated samples), crop to the frame, and convert 1 plane to
-    gray / 3 planes from YCbCr (BT.601) to RGB uint8."""
-    full = []
+def _jpeg_parse_sof(marker: int, body: bytes) -> dict:
+    """SOF0/1/2 -> frame dict. Each component carries its zigzag
+    coefficient grid, padded to whole MCUs (interleaved scans address
+    the padding blocks too)."""
+    prec, fh, fw, ncomp = struct.unpack(">BHHB", body[:6])
+    if prec != 8:
+        raise UnsupportedImageError(f"JPEG precision {prec} (only 8-bit)")
+    if len(body) < 6 + 3 * ncomp:
+        raise ValueError("truncated JPEG SOF segment")
+    comps = []
+    for ci in range(ncomp):
+        cid, hv, tq = body[6 + 3 * ci : 9 + 3 * ci]
+        comps.append({"id": cid, "h": hv >> 4, "v": hv & 0x0F, "tq": tq})
+    if not all(1 <= c["h"] <= 2 and 1 <= c["v"] <= 2 for c in comps):
+        raise UnsupportedImageError("JPEG sampling factors beyond 2 not supported")
+    max_h = max(c["h"] for c in comps)
+    max_v = max(c["v"] for c in comps)
+    mcus_x = (fw + 8 * max_h - 1) // (8 * max_h)
+    mcus_y = (fh + 8 * max_v - 1) // (8 * max_v)
     for c in comps:
-        plane = planes[c["id"]]
-        ry, rx = max_v // c["v"], max_h // c["h"]
-        if ry > 1 or rx > 1:
-            plane = np.repeat(np.repeat(plane, ry, axis=0), rx, axis=1)
-        full.append(plane[:h, :w])
-    if len(full) == 1:
-        out = np.clip(np.round(full[0]), 0, 255).astype(np.uint8)
-        return out[:, :, None]
-    y, cb, cr = full[0], full[1] - 128.0, full[2] - 128.0
-    r = y + 1.402 * cr
-    g = y - 0.344136 * cb - 0.714136 * cr
-    b = y + 1.772 * cb
-    return np.clip(np.round(np.stack([r, g, b], axis=2)), 0, 255).astype(np.uint8)
-
-
-def _jpeg_rgb_to_ycbcr_planes(arr: np.ndarray, gray: bool) -> list[np.ndarray]:
-    """Shared encoder head: grayscale -> [Y]; RGB -> BT.601 [Y, Cb, Cr]
-    float64 planes (Cb/Cr offset to the 0..255 range)."""
-    if gray:
-        return [arr.astype(np.float64)]
-    rgb = arr.astype(np.float64)
-    r, g, b = rgb[:, :, 0], rgb[:, :, 1], rgb[:, :, 2]
-    return [
-        0.299 * r + 0.587 * g + 0.114 * b,
-        -0.168736 * r - 0.331264 * g + 0.5 * b + 128.0,
-        0.5 * r - 0.418688 * g - 0.081312 * b + 128.0,
-    ]
-
-
-def _decode_jpeg_progressive(payload: bytes) -> np.ndarray:
-    """Progressive (SOF2) JPEG bytes -> (H, W, C) uint8. Coefficients
-    accumulate across scans (spectral selection + successive
-    approximation, T.81 Annex G); dequant+IDCT run once at the end."""
-    qtables: dict[int, np.ndarray] = {}
-    huff: dict[tuple[int, int], dict] = {}
-    frame = None
-    restart_interval = 0
-    coefs: dict[int, np.ndarray] = {}  # comp id -> (by, bx, 64) int32
-    comp_qt: dict[int, int] = {}
-    pos = 2
-    saw_eoi = False
-    while pos + 2 <= len(payload):
-        if payload[pos] != 0xFF:
-            pos += 1
-            continue
-        marker = payload[pos + 1]
-        if marker == 0xFF:
-            pos += 1
-            continue
-        if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-            pos += 2
-            continue
-        if marker == 0xD9:
-            saw_eoi = True
-            break
-        if pos + 4 > len(payload):
-            break
-        (seg_len,) = struct.unpack(">H", payload[pos + 2 : pos + 4])
-        body = payload[pos + 4 : pos + 2 + seg_len]
-        if marker == 0xDB:
-            _jpeg_parse_dqt(body, qtables)
-        elif marker == 0xC4:
-            _jpeg_parse_dht(body, huff)
-        elif marker == 0xC2:
-            prec, fh, fw, ncomp = struct.unpack(">BHHB", body[:6])
-            if prec != 8:
-                raise UnsupportedImageError(f"JPEG precision {prec} (only 8-bit)")
-            comps = []
-            for ci in range(ncomp):
-                cid, hv, tq = body[6 + 3 * ci : 9 + 3 * ci]
-                comps.append({"id": cid, "h": hv >> 4, "v": hv & 0x0F, "tq": tq})
-            if not all(1 <= c["h"] <= 2 and 1 <= c["v"] <= 2 for c in comps):
-                raise UnsupportedImageError("JPEG sampling factors beyond 2 not supported")
-            max_h = max(c["h"] for c in comps)
-            max_v = max(c["v"] for c in comps)
-            mcus_x = (fw + 8 * max_h - 1) // (8 * max_h)
-            mcus_y = (fh + 8 * max_v - 1) // (8 * max_v)
-            frame = {
-                "h": fh, "w": fw, "comps": comps,
-                "max_h": max_h, "max_v": max_v,
-                "mcus_x": mcus_x, "mcus_y": mcus_y,
-            }
-            for c in comps:
-                # coefficient grid padded to full MCUs (interleaved DC
-                # scans address padding blocks too)
-                coefs[c["id"]] = np.zeros(
-                    (mcus_y * c["v"], mcus_x * c["h"], 64), dtype=np.int32
-                )
-                comp_qt[c["id"]] = c["tq"]
-        elif marker in (0xC0, 0xC1, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
-            raise ValueError("not a progressive JPEG frame")
-        elif marker == 0xDD:
-            (restart_interval,) = struct.unpack(">H", body[:2])
-        elif marker == 0xDA:
-            if frame is None:
-                raise ValueError("JPEG SOS before SOF")
-            ns = body[0]
-            scan = []
-            for ci in range(ns):
-                cs, tt = body[1 + 2 * ci : 3 + 2 * ci]
-                scan.append({"cs": cs, "td": tt >> 4, "ta": tt & 0x0F})
-            ss, se, ahal = body[1 + 2 * ns : 4 + 2 * ns]
-            ah, al = ahal >> 4, ahal & 0x0F
-            pos = _decode_progressive_scan(
-                payload, pos + 2 + seg_len, frame, scan, ss, se, ah, al,
-                huff, coefs, restart_interval,
-            )
-            continue
-        pos += 2 + seg_len
-    if frame is None:
-        raise ValueError("JPEG payload missing SOF2/SOS")
-    del saw_eoi  # tolerated either way, like the baseline path
-
-    # dequantize + IDCT + assemble (same tail as the baseline decoder)
-    dct_m = _jpeg_dct_matrix()
-    comps = frame["comps"]
-    h, w = frame["h"], frame["w"]
-    max_h, max_v = frame["max_h"], frame["max_v"]
-    planes = {}
-    for c in comps:
-        qt = qtables.get(comp_qt[c["id"]])
-        if qt is None:
-            raise UnsupportedImageError("JPEG component references missing quant table")
-        grid = coefs[c["id"]]
-        by, bx = grid.shape[:2]
-        plane = np.zeros((by * 8, bx * 8), dtype=np.float64)
-        for yb in range(by):
-            for xb in range(bx):
-                nat = np.zeros(64, dtype=np.int64)
-                nat[_JPEG_ZIGZAG] = grid[yb, xb]
-                block = nat.reshape(8, 8) * qt
-                plane[yb * 8 : yb * 8 + 8, xb * 8 : xb * 8 + 8] = (
-                    dct_m.T @ block.astype(np.float64) @ dct_m + 128.0
-                )
-        planes[c["id"]] = plane
-    return _jpeg_planes_to_image(comps, planes, h, w, max_h, max_v)
-
-
-def _decode_progressive_scan(
-    payload: bytes,
-    pos: int,
-    frame: dict,
-    scan: list[dict],
-    ss: int,
-    se: int,
-    ah: int,
-    al: int,
-    huff: dict,
-    coefs: dict,
-    restart_interval: int,
-) -> int:
-    """Decode one progressive scan's entropy data starting at ``pos``;
-    returns the byte offset just past it (at the next marker)."""
-    by_id = {c["id"]: c for c in frame["comps"]}
-    reader = _JpegBitReader(payload, pos)
-    if ss == 0:
-        if se != 0:
-            raise UnsupportedImageError("progressive scan mixes DC and AC bands")
-        _decode_dc_scan(reader, frame, scan, by_id, ah, al, huff, coefs, restart_interval)
-    else:
-        if len(scan) != 1:
-            raise UnsupportedImageError("progressive AC scan must be non-interleaved")
-        _decode_ac_scan(reader, frame, scan[0], by_id, ss, se, ah, al, huff, coefs,
-                        restart_interval)
-    # skip to the next marker (reader stops mid-byte; entropy data never
-    # contains a bare 0xFF followed by a non-stuffing, non-RST byte)
-    p = reader._pos
-    while p + 1 < len(payload):
-        if payload[p] == 0xFF and payload[p + 1] != 0x00:
-            if 0xD0 <= payload[p + 1] <= 0xD7:
-                p += 2
-                continue
-            return p
-        p += 1
-    return len(payload)
-
-
-def _decode_dc_scan(reader, frame, scan, by_id, ah, al, huff, coefs, restart_interval):
-    preds = {sc["cs"]: 0 for sc in scan}
-    n_mcus_total = frame["mcus_x"] * frame["mcus_y"]
-    interleaved = len(scan) > 1
-    n_units = 0
-    if interleaved:
-        units = n_mcus_total
-    else:
-        c = by_id[scan[0]["cs"]]
-        units = _comp_blocks(frame, c)[0] * _comp_blocks(frame, c)[1]
-    for u in range(units):
-        if restart_interval and n_units and n_units % restart_interval == 0:
-            reader.sync_restart()
-            preds = {sc["cs"]: 0 for sc in scan}
-        for sc in scan:
-            comp = by_id[sc["cs"]]
-            if interleaved:
-                mx, my = u % frame["mcus_x"], u // frame["mcus_x"]
-                blocks = [
-                    (my * comp["v"] + byy, mx * comp["h"] + bxx)
-                    for byy in range(comp["v"])
-                    for bxx in range(comp["h"])
-                ]
-            else:
-                bw = _comp_blocks(frame, comp)[1]
-                blocks = [(u // bw, u % bw)]
-            for yb, xb in blocks:
-                cell = coefs[sc["cs"]][yb, xb]
-                if ah == 0:
-                    tbl = huff.get((0, sc["td"]))
-                    if tbl is None:
-                        raise UnsupportedImageError("JPEG scan references missing table")
-                    size = _jpeg_huff_decode(reader, tbl)
-                    diff = _jpeg_extend(reader.read_bits(size), size)
-                    preds[sc["cs"]] += diff
-                    cell[0] = preds[sc["cs"]] << al
-                else:
-                    if reader.read_bit():
-                        cell[0] = int(cell[0]) | (1 << al)
-        n_units += 1
+        c["coef"] = np.zeros((mcus_y * c["v"], mcus_x * c["h"], 64), dtype=np.int32)
+    return {
+        "progressive": marker == 0xC2, "h": fh, "w": fw, "comps": comps,
+        "by_id": {c["id"]: c for c in comps}, "max_h": max_h, "max_v": max_v,
+        "mcus_x": mcus_x, "mcus_y": mcus_y,
+    }
 
 
 def _comp_blocks(frame, comp) -> tuple[int, int]:
@@ -935,27 +540,73 @@ def _comp_blocks(frame, comp) -> tuple[int, int]:
     return -(-ch // 8), -(-cw // 8)
 
 
-def _decode_ac_scan(reader, frame, sc, by_id, ss, se, ah, al, huff, coefs,
-                    restart_interval):
-    comp = by_id[sc["cs"]]
-    tbl = huff.get((1, sc["ta"]))
-    if tbl is None:
-        raise UnsupportedImageError("JPEG scan references missing table")
-    bh, bw = _comp_blocks(frame, comp)
-    grid = coefs[sc["cs"]]
+def _jpeg_decode_scan(
+    payload: bytes, pos: int, frame: dict, body: bytes, huff: dict, restart_interval: int
+) -> None:
+    """Decode one scan whose entropy data starts at ``pos`` into the
+    frame's coefficient grids: interleaved (one MCU per data unit) or
+    single-component (one block per data unit), band ``Ss..Se`` at
+    successive-approximation bits ``Ah/Al``. A sequential frame's scan
+    is the full band at Ah=Al=0: a DC decode plus one AC-first block."""
+    ns = body[0]
+    scan = []
+    for ci in range(ns):
+        cs, tt = body[1 + 2 * ci : 3 + 2 * ci]
+        scan.append((frame["by_id"][cs], tt >> 4, tt & 0x0F))
+    ss, se, ahal = body[1 + 2 * ns : 4 + 2 * ns]
+    ah, al = ahal >> 4, ahal & 0x0F
+    if not frame["progressive"]:
+        if ns != len(frame["comps"]):
+            # a scan covering fewer components than the frame is a
+            # non-interleaved multi-scan file; refuse rather than leave
+            # the other planes zero
+            raise UnsupportedImageError(
+                f"non-interleaved JPEG (scan covers {ns}/{len(frame['comps'])} "
+                "frame components)"
+            )
+        ss, se, ah, al = 0, 63, 0, 0
+    elif ss == 0 and se != 0:
+        raise UnsupportedImageError("progressive scan mixes DC and AC bands")
+    elif ss > 0 and ns != 1:
+        raise UnsupportedImageError("progressive AC scan must be non-interleaved")
+    tables = []
+    for comp, td, ta in scan:
+        dc_tbl = huff.get((0, td)) if ss == 0 and ah == 0 else {}
+        ac_tbl = huff.get((1, ta)) if se > 0 else {}
+        if dc_tbl is None or ac_tbl is None:
+            raise UnsupportedImageError("JPEG scan references missing table")
+        tables.append((comp, dc_tbl, ac_tbl))
+    if ns == 1:
+        comp, dc_tbl, ac_tbl = tables[0]
+        bh, bw = _comp_blocks(frame, comp)
+        units = [[(comp, dc_tbl, ac_tbl, comp["coef"][yb, xb])]
+                 for yb in range(bh) for xb in range(bw)]
+    else:
+        units = [
+            [(comp, dc_tbl, ac_tbl, comp["coef"][my * comp["v"] + by, mx * comp["h"] + bx])
+             for comp, dc_tbl, ac_tbl in tables
+             for by in range(comp["v"]) for bx in range(comp["h"])]
+            for my in range(frame["mcus_y"]) for mx in range(frame["mcus_x"])
+        ]
+    ac_block = _ac_first_block if ah == 0 else _ac_refine_block
+    dc_first, dc_refine, k0 = ss == 0 and ah == 0, ss == 0 and ah > 0, max(ss, 1)
+    reader = _JpegBitReader(payload, pos)
+    preds: dict = {}
     eobrun = 0
-    n_units = 0
-    for u in range(bh * bw):
-        if restart_interval and n_units and n_units % restart_interval == 0:
+    for u, unit in enumerate(units):
+        if restart_interval and u and u % restart_interval == 0:
             reader.sync_restart()
-            eobrun = 0
-        yb, xb = u // bw, u % bw
-        cell = grid[yb, xb]
-        if ah == 0:
-            eobrun = _ac_first_block(reader, tbl, cell, ss, se, al, eobrun)
-        else:
-            eobrun = _ac_refine_block(reader, tbl, cell, ss, se, al, eobrun)
-        n_units += 1
+            preds, eobrun = {}, 0
+        for comp, dc_tbl, ac_tbl, cell in unit:
+            if dc_first:
+                size = _jpeg_huff_decode(reader, dc_tbl)
+                dc = preds.get(comp["id"], 0) + _jpeg_extend(reader.read_bits(size), size)
+                preds[comp["id"]] = dc
+                cell[0] = dc << al
+            elif dc_refine and reader.read_bit():
+                cell[0] |= 1 << al
+            if se > 0:
+                eobrun = ac_block(reader, ac_tbl, cell, k0, se, al, eobrun)
 
 
 def _ac_first_block(reader, tbl, cell, ss, se, al, eobrun) -> int:
@@ -979,8 +630,6 @@ def _ac_first_block(reader, tbl, cell, ss, se, al, eobrun) -> int:
         cell[k] = _jpeg_extend(reader.read_bits(s), s) << al
         k += 1
     return 0
-
-
 def _ac_refine_block(reader, tbl, cell, ss, se, al, eobrun) -> int:
     p1 = 1 << al
     m1 = -1 << al
@@ -1024,17 +673,349 @@ def _ac_refine_block(reader, tbl, cell, ss, se, al, eobrun) -> int:
     return eobrun
 
 
-# ---------------------------------------------------------------- encode
+
+def _jpeg_planes_to_image(frame: dict, qtables: dict) -> np.ndarray:
+    """The one decoder tail: dequantize + IDCT every coefficient block,
+    upsample subsampled planes (replicated samples), crop to the frame,
+    and convert 1 plane to gray / 3 planes from YCbCr (BT.601) to RGB
+    uint8."""
+    dct_m = _jpeg_dct_matrix()
+    full = []
+    for c in frame["comps"]:
+        qt = qtables.get(c["tq"])
+        if qt is None:
+            raise UnsupportedImageError("JPEG component references missing quant table")
+        grid = c["coef"]
+        by, bx = grid.shape[:2]
+        plane = np.zeros((by * 8, bx * 8), dtype=np.float64)
+        for yb in range(by):
+            for xb in range(bx):
+                nat = np.zeros(64, dtype=np.int64)
+                nat[_JPEG_ZIGZAG] = grid[yb, xb]
+                block = nat.reshape(8, 8) * qt
+                plane[yb * 8 : yb * 8 + 8, xb * 8 : xb * 8 + 8] = (
+                    dct_m.T @ block.astype(np.float64) @ dct_m + 128.0
+                )
+        ry, rx = frame["max_v"] // c["v"], frame["max_h"] // c["h"]
+        if ry > 1 or rx > 1:
+            plane = np.repeat(np.repeat(plane, ry, axis=0), rx, axis=1)
+        full.append(plane[: frame["h"], : frame["w"]])
+    if len(full) == 1:
+        out = np.clip(np.round(full[0]), 0, 255).astype(np.uint8)
+        return out[:, :, None]
+    y, cb, cr = full[0], full[1] - 128.0, full[2] - 128.0
+    r = y + 1.402 * cr
+    g = y - 0.344136 * cb - 0.714136 * cr
+    b = y + 1.772 * cb
+    return np.clip(np.round(np.stack([r, g, b], axis=2)), 0, 255).astype(np.uint8)
 
 
-def _jpeg_flush_restart(out: bytearray, writer: "_JpegBitWriter", rst: int):
-    """Byte-align the entropy stream, append it plus RSTn, and hand back
-    a fresh writer and the next modulo-8 restart index — the one RSTn
-    emission protocol shared by every encoder scan type."""
+def decode_jpeg(payload: bytes) -> np.ndarray:
+    """JPEG bytes -> (H, W, C) uint8 (C=1 gray, C=3 RGB) for baseline
+    sequential (SOF0/SOF1, one interleaved scan) and progressive (SOF2,
+    T.81 Annex G: spectral selection + successive approximation, EOB
+    runs, coefficients accumulated across scans). Quant/Huffman tables
+    come from the payload's own DQT/DHT segments; sampling factors 1-2
+    per axis (4:4:4, 4:2:2, 4:2:0) with replicated-sample upsampling;
+    DRI/RSTn honored. Arithmetic-coded and lossless/hierarchical frames,
+    non-interleaved and multi-scan sequential streams raise
+    UnsupportedImageError."""
+    qtables: dict[int, np.ndarray] = {}
+    huff: dict[tuple[int, int], dict] = {}  # (tc, th) -> (length, code)->sym
+    frame = None
+    restart_interval = 0
+    n_scans = 0
+    for marker, body, end in _jpeg_segments(payload):
+        if marker == 0xDB:  # DQT (may hold several tables)
+            _jpeg_parse_dqt(body, qtables)
+        elif marker == 0xC4:  # DHT (may hold several tables)
+            _jpeg_parse_dht(body, huff)
+        elif marker in (0xC0, 0xC1, 0xC2):  # baseline / extended / progressive
+            frame = _jpeg_parse_sof(marker, body)
+        elif marker in (0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
+            raise UnsupportedImageError(f"JPEG SOF marker 0x{marker:02x} not supported")
+        elif marker == 0xDD:  # DRI
+            (restart_interval,) = struct.unpack(">H", body[:2])
+        elif marker == 0xDA:  # SOS
+            if frame is None:
+                raise ValueError("JPEG SOS before SOF")
+            if n_scans and not frame["progressive"]:
+                raise UnsupportedImageError("multi-scan sequential JPEG not supported")
+            _jpeg_decode_scan(payload, end, frame, body, huff, restart_interval)
+            n_scans += 1
+    if frame is None or not n_scans:
+        raise ValueError("JPEG payload missing SOF/SOS")
+    return _jpeg_planes_to_image(frame, qtables)
+
+
+# ---------------------------------------------------------- JPEG encode
+
+
+def _jpeg_scale_qtable(base: np.ndarray, quality: int) -> np.ndarray:
+    """IJG quality scaling of an Annex K base table (1..100)."""
+    q = min(100, max(1, int(quality)))
+    scale = 5000 // q if q < 50 else 200 - 2 * q
+    return np.clip((base * scale + 50) // 100, 1, 255).astype(np.int64)
+
+
+class _JpegBitWriter:
+    def __init__(self) -> None:
+        self.out = bytearray()
+        self._acc = 0
+        self._n = 0
+
+    def write(self, code: int, length: int) -> None:
+        for i in range(length - 1, -1, -1):
+            self._acc = (self._acc << 1) | ((code >> i) & 1)
+            self._n += 1
+            if self._n == 8:
+                self.out.append(self._acc)
+                if self._acc == 0xFF:  # byte stuffing
+                    self.out.append(0x00)
+                self._acc = 0
+                self._n = 0
+
+    def flush(self) -> None:
+        while self._n:
+            self.write(1, 1)
+
+
+def _jpeg_magnitude(v: int) -> tuple[int, int]:
+    """(size category, appended bits) for a DC diff / AC coefficient."""
+    size = int(abs(v)).bit_length()
+    bits = v if v >= 0 else v + (1 << size) - 1
+    return size, bits
+
+
+def _jpeg_rgb_to_ycbcr_planes(arr: np.ndarray, gray: bool) -> list[np.ndarray]:
+    """Grayscale -> [Y]; RGB -> BT.601 [Y, Cb, Cr] float64 planes
+    (Cb/Cr offset to the 0..255 range)."""
+    if gray:
+        return [arr.astype(np.float64)]
+    rgb = arr.astype(np.float64)
+    r, g, b = rgb[:, :, 0], rgb[:, :, 1], rgb[:, :, 2]
+    return [
+        0.299 * r + 0.587 * g + 0.114 * b,
+        -0.168736 * r - 0.331264 * g + 0.5 * b + 128.0,
+        0.5 * r - 0.418688 * g - 0.081312 * b + 128.0,
+    ]
+
+
+def _jpeg_encode_head(pixels, quality, sof_marker, subsampling, restart_interval):
+    """The one encoder head: input checks, Annex K tables at
+    ``quality``, YCbCr planes (chroma 2x2 box-mean for "420"), edge
+    padding to whole MCUs, FDCT + quantize. Returns ``(grids, mcus,
+    tables, header)``: per component the (blocks_y, blocks_x, 64)
+    zigzag coefficient grid; per MCU its ``(component, block)`` list in
+    interleaved order; per component its (DC, AC) Huffman codes (table
+    0 for luma, 1 for chroma); and the SOI..DRI header bytes with
+    ``sof_marker`` as the frame marker."""
+    arr = np.asarray(pixels, dtype=np.uint8)
+    if arr.ndim == 3 and arr.shape[2] == 1:
+        arr = arr[:, :, 0]
+    gray = arr.ndim == 2
+    if not gray and arr.shape[2] != 3:
+        raise ValueError("JPEG encoder takes grayscale or RGB pixels")
+    if subsampling not in ("444", "420"):
+        raise ValueError("subsampling must be '444' or '420'")
+    h, w = arr.shape[:2]
+    if h == 0 or w == 0:
+        raise ValueError("empty image")
+    qts = [_jpeg_scale_qtable(_JPEG_Q_LUM, quality)]
+    specs = [(_JPEG_DC_LUM, _JPEG_AC_LUM)]
+    if not gray:
+        qts.append(_jpeg_scale_qtable(_JPEG_Q_CHROM, quality))
+        specs.append((_JPEG_DC_CHROM, _JPEG_AC_CHROM))
+    codes = [(_jpeg_build_codes(*dc), _jpeg_build_codes(*ac)) for dc, ac in specs]
+
+    planes = _jpeg_rgb_to_ycbcr_planes(arr, gray)
+    samp = [(1, 1)] * len(planes)
+    if not gray and subsampling == "420":
+        # pad to even dims, then 2x2 box mean for chroma
+        ph, pw = (h + 1) // 2 * 2, (w + 1) // 2 * 2
+        for ci in (1, 2):
+            c = np.pad(planes[ci], ((0, ph - h), (0, pw - w)), mode="edge")
+            planes[ci] = c.reshape(ph // 2, 2, pw // 2, 2).mean(axis=(1, 3))
+        samp[0] = (2, 2)
+    max_h, max_v = samp[0]
+    mcus_x = (w + 8 * max_h - 1) // (8 * max_h)
+    mcus_y = (h + 8 * max_v - 1) // (8 * max_v)
+
+    dct_m = _jpeg_dct_matrix()
+    grids = []
+    for ci, (plane, (sh, sv)) in enumerate(zip(planes, samp)):
+        by, bx = mcus_y * sv, mcus_x * sh
+        ph, pw = plane.shape
+        padded = np.pad(plane, ((0, by * 8 - ph), (0, bx * 8 - pw)), mode="edge") - 128.0
+        qt = qts[min(ci, 1)]
+        grid = np.zeros((by, bx, 64), dtype=np.int64)
+        for yb in range(by):
+            for xb in range(bx):
+                coef = dct_m @ padded[yb * 8 : yb * 8 + 8, xb * 8 : xb * 8 + 8] @ dct_m.T
+                grid[yb, xb] = np.round(coef / qt).astype(np.int64).flatten()[_JPEG_ZIGZAG]
+        grids.append(grid)
+    mcus = [
+        [(ci, grid[my * sv + yy, mx * sh + xx])
+         for ci, (grid, (sh, sv)) in enumerate(zip(grids, samp))
+         for yy in range(sv) for xx in range(sh)]
+        for my in range(mcus_y) for mx in range(mcus_x)
+    ]
+
+    header = bytearray(b"\xff\xd8")  # SOI
+    header += _jpeg_seg(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
+    for t, qt in enumerate(qts):
+        header += _jpeg_seg(0xDB, bytes([t]) + bytes(qt.flatten()[_JPEG_ZIGZAG].astype(np.uint8)))
+    sof = bytearray([8]) + struct.pack(">HH", h, w) + bytes([len(planes)])
+    for ci, (sh, sv) in enumerate(samp):
+        sof += bytes([ci + 1, (sh << 4) | sv, min(ci, 1)])
+    header += _jpeg_seg(sof_marker, bytes(sof))
+    for t, (dc, ac) in enumerate(specs):
+        for tc, (bits, vals) in ((0, dc), (1, ac)):
+            header += _jpeg_seg(0xC4, bytes([(tc << 4) | t]) + bytes(bits) + bytes(vals))
+    if restart_interval:
+        header += _jpeg_seg(0xDD, struct.pack(">H", int(restart_interval)))
+    return grids, mcus, [codes[min(ci, 1)] for ci in range(len(planes))], bytes(header)
+
+
+def _jpeg_sos(cis, sel: int, ss: int, se: int, ah: int, al: int) -> bytes:
+    """SOS segment for component indices ``cis``; each one's table
+    selector byte is ``min(ci, 1) * sel`` (0x11: DC and AC tables,
+    0x10: DC only, 0x01: AC only)."""
+    body = bytearray([len(cis)])
+    for ci in cis:
+        body += bytes([ci + 1, min(ci, 1) * sel])
+    return _jpeg_seg(0xDA, bytes(body + bytes([ss, se, (ah << 4) | al])))
+
+
+def _jpeg_encode_scan(units, restart_interval: int, code) -> bytes:
+    """Entropy-code one scan: ``units`` are its data units, each a list
+    of ``(component, zigzag block)``; ``code(writer, ci, block, preds)``
+    codes one block (``preds``: DC predictors by component). Every
+    ``restart_interval`` units the stream is byte-aligned, an RSTn
+    (modulo 8) is appended and the predictors reset."""
+    out = bytearray()
+    writer = _JpegBitWriter()
+    preds: dict = {}
+    for u, unit in enumerate(units):
+        if restart_interval and u and u % restart_interval == 0:
+            writer.flush()
+            out += writer.out + bytes([0xFF, 0xD0 + (u // restart_interval - 1) % 8])
+            writer = _JpegBitWriter()
+            preds = {}
+        for ci, block in unit:
+            code(writer, ci, block, preds)
     writer.flush()
-    out += writer.out
-    out += bytes([0xFF, 0xD0 + rst])
-    return _JpegBitWriter(), (rst + 1) % 8
+    return bytes(out + writer.out)
+
+
+def _jpeg_encode_dc(writer: _JpegBitWriter, dc: int, ci: int, preds: dict, codes: dict) -> None:
+    size, bits = _jpeg_magnitude(dc - preds.get(ci, 0))
+    writer.write(*codes[size])
+    if size:
+        writer.write(bits, size)
+    preds[ci] = dc
+
+
+def _jpeg_encode_ac_first(writer: _JpegBitWriter, block: np.ndarray, ac: dict, al: int) -> None:
+    """AC band 1..63 of one zigzag block, point-transformed by ``al``
+    (the whole AC coding of a baseline block at al=0): run/size codes,
+    ZRL for runs past 15, and EOB0 unless coefficient 63 is nonzero
+    (no cross-block EOB runs — valid, slightly less compressed, and no
+    run ever spans a restart marker)."""
+    mag = np.abs(block) >> al
+    vals = np.where(block < 0, -mag, mag).tolist()
+    nz = np.flatnonzero(mag[1:])
+    last = int(nz[-1]) + 1 if nz.size else 0
+    run = 0
+    for k in range(1, last + 1):
+        v = vals[k]
+        if v == 0:
+            run += 1
+            continue
+        while run > 15:
+            writer.write(*ac[0xF0])  # ZRL
+            run -= 16
+        size, bits = _jpeg_magnitude(v)
+        writer.write(*ac[(run << 4) | size])
+        writer.write(bits, size)
+        run = 0
+    if last < 63:
+        writer.write(*ac[0x00])  # EOB0
+
+
+def _jpeg_encode_ac_refine(writer: _JpegBitWriter, block: np.ndarray, ac: dict, al: int) -> None:
+    """AC refinement of one block (Ah=Al+1): newly-significant
+    coefficients as (run, 1) + sign, correction bits for
+    already-significant ones buffered and flushed after the owning code
+    word; EOB0 per block."""
+    absv = [abs(int(v)) >> al for v in block]
+    # last newly-significant index (== 1 at this precision)
+    eob = 0
+    for k in range(1, 64):
+        if absv[k] == 1:
+            eob = k
+    run = 0
+    buffered: list[int] = []
+    for k in range(1, eob + 1):
+        a = absv[k]
+        if a == 0:
+            run += 1
+            continue
+        # emit pending ZRLs at ANY nonzero magnitude (not just the
+        # newly-significant ones): this keeps run <= 15 whenever a
+        # correction bit is buffered, so every buffered bit belongs
+        # to the immediately-following code word — the positional
+        # invariant the decoder's interleaved read depends on
+        while run > 15:
+            writer.write(*ac[0xF0])
+            for bit in buffered:
+                writer.write(bit, 1)
+            buffered = []
+            run -= 16
+        if a > 1:
+            # already significant: buffer its correction bit
+            buffered.append(a & 1)
+            continue
+        writer.write(*ac[(run << 4) | 1])
+        writer.write(1 if int(block[k]) > 0 else 0, 1)
+        for bit in buffered:
+            writer.write(bit, 1)
+        buffered = []
+        run = 0
+    # end of block: EOB0 + correction bits for the remaining
+    # already-significant coefficients — but ONLY when positions
+    # remain past the last newly-significant one. When that one sat
+    # at k=63 the decoder's band loop has already ended; a spurious
+    # EOB here would be consumed as the NEXT block's first code.
+    if eob < 63:
+        writer.write(*ac[0x00])
+        for bit in buffered + [absv[k] & 1 for k in range(eob + 1, 64) if absv[k] > 1]:
+            writer.write(bit, 1)
+
+
+def encode_jpeg_baseline(
+    pixels: np.ndarray,
+    quality: int = 85,
+    subsampling: str = "444",
+    restart_interval: int = 0,
+) -> bytes:
+    """(H, W) or (H, W, 3) uint8 -> baseline sequential JFIF bytes.
+
+    ``subsampling``: "444" (one block per component per MCU) or "420"
+    (2x2 luma blocks + box-mean-downsampled chroma per 16x16 MCU).
+    ``restart_interval`` > 0 emits DRI + RSTn markers every that many
+    MCUs (exercises the decoder's restart path)."""
+    grids, mcus, tables, header = _jpeg_encode_head(
+        pixels, quality, 0xC0, subsampling, restart_interval
+    )
+
+    def code(writer, ci, block, preds):
+        dc_codes, ac_codes = tables[ci]
+        _jpeg_encode_dc(writer, int(block[0]), ci, preds, dc_codes)
+        _jpeg_encode_ac_first(writer, block, ac_codes, 0)
+
+    scan = _jpeg_encode_scan(mcus, restart_interval, code)
+    return header + _jpeg_sos(range(len(grids)), 0x11, 0, 63, 0, 0) + scan + b"\xff\xd9"
 
 
 def encode_jpeg_progressive(
@@ -1051,406 +1032,36 @@ def encode_jpeg_progressive(
     state reset at each marker, per spec). Coefficients are identical
     to the baseline encoder at the same quality, so
     decode(progressive) == decode(baseline)."""
-    arr = np.asarray(pixels, dtype=np.uint8)
-    if arr.ndim == 3 and arr.shape[2] == 1:
-        arr = arr[:, :, 0]
-    gray = arr.ndim == 2
-    if not gray and arr.shape[2] != 3:
-        raise ValueError("JPEG encoder takes grayscale or RGB pixels")
     if not 0 <= al_levels <= 3:
         raise ValueError("al_levels must be in 0..3")
-    h, w = arr.shape[:2]
-    if h == 0 or w == 0:
-        raise ValueError("empty image")
-    dct_m = _jpeg_dct_matrix()
-    q_lum = _jpeg_scale_qtable(_JPEG_Q_LUM, quality)
-    q_chrom = _jpeg_scale_qtable(_JPEG_Q_CHROM, quality)
-
-    planes = _jpeg_rgb_to_ycbcr_planes(arr, gray)
-    ncomp = len(planes)
-    qtables = [q_lum] + [q_chrom] * (ncomp - 1)
-    mcus_x, mcus_y = -(-w // 8), -(-h // 8)  # 4:4:4 only: 1 block/comp/MCU
-
-    # quantized zigzag coefficients per component: (by, bx, 64)
-    comps_zz = []
-    for plane, qt in zip(planes, qtables):
-        padded = np.pad(
-            plane, ((0, mcus_y * 8 - h), (0, mcus_x * 8 - w)), mode="edge"
-        ) - 128.0
-        zz = np.zeros((mcus_y, mcus_x, 64), dtype=np.int64)
-        for yb in range(mcus_y):
-            for xb in range(mcus_x):
-                block = padded[yb * 8 : yb * 8 + 8, xb * 8 : xb * 8 + 8]
-                coef = dct_m @ block @ dct_m.T
-                zz[yb, xb] = np.round(coef / qt).astype(np.int64).flatten()[_JPEG_ZIGZAG]
-        comps_zz.append(zz)
-
-    dc_specs = [_JPEG_DC_LUM] + [_JPEG_DC_CHROM] * (ncomp > 1)
-    ac_specs = [_JPEG_AC_LUM] + [_JPEG_AC_CHROM] * (ncomp > 1)
-    dc_codes = [_jpeg_build_codes(*s) for s in dc_specs]
-    ac_codes = [_jpeg_build_codes(*s) for s in ac_specs]
-    comp_dc = [0] + [1] * (ncomp - 1)
-    comp_ac = [0] + [1] * (ncomp - 1)
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
-
-    def sos_header(comp_ids: list[int], tds: list[int], tas: list[int],
-                   ss: int, se: int, ah: int, al: int) -> bytes:
-        body = bytearray([len(comp_ids)])
-        for cid, td, ta in zip(comp_ids, tds, tas):
-            body += bytes([cid, (td << 4) | ta])
-        body += bytes([ss, se, (ah << 4) | al])
-        return seg(0xDA, bytes(body))
-
-    out = bytearray(b"\xff\xd8")
-    out += seg(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
-    out += seg(0xDB, b"\x00" + bytes(q_lum.flatten()[_JPEG_ZIGZAG].astype(np.uint8)))
-    if not gray:
-        out += seg(0xDB, b"\x01" + bytes(q_chrom.flatten()[_JPEG_ZIGZAG].astype(np.uint8)))
-    sof = bytearray([8]) + struct.pack(">HH", h, w) + bytes([ncomp])
-    for ci in range(ncomp):
-        sof += bytes([ci + 1, 0x11, 0 if ci == 0 else 1])
-    out += seg(0xC2, bytes(sof))
-    out += _jpeg_dht_segment(0, 0, _JPEG_DC_LUM)
-    out += _jpeg_dht_segment(1, 0, _JPEG_AC_LUM)
-    if not gray:
-        out += _jpeg_dht_segment(0, 1, _JPEG_DC_CHROM)
-        out += _jpeg_dht_segment(1, 1, _JPEG_AC_CHROM)
-    ri = int(restart_interval)
-    if ri:
-        out += seg(0xDD, struct.pack(">H", ri))
-
-    # scan 1: interleaved DC first, Al=al_levels
-    out += sos_header(
-        list(range(1, ncomp + 1)), comp_dc, [0] * ncomp, 0, 0, 0, al_levels
+    grids, mcus, tables, header = _jpeg_encode_head(
+        pixels, quality, 0xC2, "444", restart_interval
     )
-    writer = _JpegBitWriter()
-    preds = [0] * ncomp
-    rst = 0
-    for u in range(mcus_x * mcus_y):
-        if ri and u and u % ri == 0:
-            writer, rst = _jpeg_flush_restart(out, writer, rst)
-            preds = [0] * ncomp
-        yb, xb = u // mcus_x, u % mcus_x
-        for ci in range(ncomp):
-            dc = int(comps_zz[ci][yb, xb, 0]) >> al_levels
-            size, bits = _jpeg_magnitude(dc - preds[ci])
-            code, length = dc_codes[comp_dc[ci]][size]
-            writer.write(code, length)
-            if size:
-                writer.write(bits, size)
-            preds[ci] = dc
-    writer.flush()
-    out += writer.out
-
-    # DC refinements down to Al=0
+    ri = int(restart_interval)
+    cis = range(len(grids))
+    out = bytearray(header)
+    out += _jpeg_sos(cis, 0x10, 0, 0, 0, al_levels) + _jpeg_encode_scan(
+        mcus, ri,
+        lambda w, ci, b, p: _jpeg_encode_dc(w, int(b[0]) >> al_levels, ci, p, tables[ci][0]),
+    )
     for al in range(al_levels - 1, -1, -1):
-        out += sos_header(
-            list(range(1, ncomp + 1)), comp_dc, [0] * ncomp, 0, 0, al + 1, al
+        out += _jpeg_sos(cis, 0x10, 0, 0, al + 1, al) + _jpeg_encode_scan(
+            mcus, ri, lambda w, ci, b, p: w.write((int(b[0]) >> al) & 1, 1)
         )
-        writer = _JpegBitWriter()
-        rst = 0
-        for u in range(mcus_x * mcus_y):
-            if ri and u and u % ri == 0:
-                writer, rst = _jpeg_flush_restart(out, writer, rst)
-            yb, xb = u // mcus_x, u % mcus_x
-            for ci in range(ncomp):
-                writer.write((int(comps_zz[ci][yb, xb, 0]) >> al) & 1, 1)
-        writer.flush()
-        out += writer.out
-
-    # AC scans per component: first at Al=al_levels, then refinements
-    for ci in range(ncomp):
-        out += sos_header([ci + 1], [0], [comp_ac[ci]], 1, 63, 0, al_levels)
-        out += _encode_ac_first(comps_zz[ci], ac_codes[comp_ac[ci]], al_levels, ri)
+    for ci in cis:
+        blocks = [[(ci, b)] for b in grids[ci].reshape(-1, 64)]
+        ac = tables[ci][1]
+        out += _jpeg_sos([ci], 0x01, 1, 63, 0, al_levels) + _jpeg_encode_scan(
+            blocks, ri, lambda w, _ci, b, _p: _jpeg_encode_ac_first(w, b, ac, al_levels)
+        )
         for al in range(al_levels - 1, -1, -1):
-            out += sos_header([ci + 1], [0], [comp_ac[ci]], 1, 63, al + 1, al)
-            out += _encode_ac_refine(comps_zz[ci], ac_codes[comp_ac[ci]], al, ri)
-
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-def _encode_ac_first(
-    zz: np.ndarray, ac: dict, al: int, restart_interval: int = 0
-) -> bytes:
-    """AC first scan (Ss=1..63, Ah=0): per-block EOB0 (no cross-block
-    EOB runs — valid, slightly less compressed). ``restart_interval``
-    emits an RSTn every that many blocks (per-block EOBs mean no EOB
-    run ever spans a restart, as the spec requires)."""
-    out = bytearray()
-    writer = _JpegBitWriter()
-    rst = 0
-    by, bx = zz.shape[:2]
-    for u in range(by * bx):
-        if restart_interval and u and u % restart_interval == 0:
-            writer, rst = _jpeg_flush_restart(out, writer, rst)
-        cell = zz[u // bx, u % bx]
-        run = 0
-        emitted_any = False
-        last_nz = 0
-        vals = [int(v) >> al if int(v) >= 0 else -((-int(v)) >> al) for v in cell]
-        for k in range(1, 64):
-            if vals[k]:
-                last_nz = k
-        for k in range(1, 64):
-            v = vals[k]
-            if k > last_nz:
-                break
-            if v == 0:
-                run += 1
-                continue
-            while run > 15:
-                code, length = ac[0xF0]
-                writer.write(code, length)
-                run -= 16
-            size, bits = _jpeg_magnitude(v)
-            code, length = ac[(run << 4) | size]
-            writer.write(code, length)
-            writer.write(bits, size)
-            run = 0
-            emitted_any = True
-        if last_nz < 63 or not emitted_any:
-            code, length = ac[0x00]  # EOB0
-            writer.write(code, length)
-    writer.flush()
-    out += writer.out
-    return bytes(out)
+            out += _jpeg_sos([ci], 0x01, 1, 63, al + 1, al) + _jpeg_encode_scan(
+                blocks, ri, lambda w, _ci, b, _p: _jpeg_encode_ac_refine(w, b, ac, al)
+            )
+    return bytes(out + b"\xff\xd9")
 
 
-def _encode_ac_refine(
-    zz: np.ndarray, ac: dict, al: int, restart_interval: int = 0
-) -> bytes:
-    """AC refinement scan (Ah=Al+1): newly-significant coefficients as
-    (run, 1) + sign, correction bits for already-significant ones
-    buffered and flushed after the owning code word; per-block EOB0.
-    ``restart_interval`` emits an RSTn every that many blocks."""
-    out = bytearray()
-    writer = _JpegBitWriter()
-    rst = 0
-    by, bx = zz.shape[:2]
-    for u in range(by * bx):
-        if restart_interval and u and u % restart_interval == 0:
-            writer, rst = _jpeg_flush_restart(out, writer, rst)
-        cell = zz[u // bx, u % bx]
-        absv = [abs(int(v)) >> al for v in cell]
-        # last newly-significant index (== 1 at this precision)
-        eob = 0
-        for k in range(1, 64):
-            if absv[k] == 1:
-                eob = k
-        run = 0
-        buffered: list[int] = []
-        for k in range(1, 64):
-            if k > eob:
-                break
-            a = absv[k]
-            if a == 0:
-                run += 1
-                continue
-            # emit pending ZRLs at ANY nonzero magnitude (not just the
-            # newly-significant ones): this keeps run <= 15 whenever a
-            # correction bit is buffered, so every buffered bit belongs
-            # to the immediately-following code word — the positional
-            # invariant the decoder's interleaved read depends on
-            while run > 15:
-                code, length = ac[0xF0]
-                writer.write(code, length)
-                for bit in buffered:
-                    writer.write(bit, 1)
-                buffered = []
-                run -= 16
-            if a > 1:
-                # already significant: buffer its correction bit
-                buffered.append((abs(int(cell[k])) >> al) & 1)
-                continue
-            code, length = ac[(run << 4) | 1]
-            writer.write(code, length)
-            writer.write(1 if int(cell[k]) > 0 else 0, 1)
-            for bit in buffered:
-                writer.write(bit, 1)
-            buffered = []
-            run = 0
-        # end of block: EOB0 + correction bits for the remaining
-        # already-significant coefficients — but ONLY when positions
-        # remain past the last newly-significant one. When that one sat
-        # at k=63 the decoder's band loop has already ended; a spurious
-        # EOB here would be consumed as the NEXT block's first code.
-        if eob < 63:
-            tail_bits = [
-                (abs(int(cell[k])) >> al) & 1
-                for k in range(max(eob + 1, 1), 64)
-                if absv[k] > 1
-            ]
-            code, length = ac[0x00]
-            writer.write(code, length)
-            for bit in buffered + tail_bits:
-                writer.write(bit, 1)
-    writer.flush()
-    out += writer.out
-    return bytes(out)
-
-
-def _jpeg_has_further_sos(payload: bytes, pos: int) -> bool:
-    """True iff a real SOS marker occurs between ``pos`` (inside/after
-    the decoded scan's entropy data) and this image's EOI. Walks the
-    stream by MARKER STRUCTURE: entropy bytes (stuffed FF00, fill FFs,
-    RSTn) are stepped over, and every length-bearing segment body is
-    skipped wholesale — so literal FF D9/FF DA bytes inside a COM/APPn/
-    DHT body can neither end the walk early nor fake a second scan."""
-    p = pos
-    n = len(payload)
-    while p + 1 < n:
-        if payload[p] != 0xFF:
-            p += 1  # residual entropy byte
-            continue
-        m = payload[p + 1]
-        if m == 0x00 or m == 0xFF:  # stuffing / fill
-            p += 2 if m == 0x00 else 1
-            continue
-        if 0xD0 <= m <= 0xD7:  # RSTn: bare marker
-            p += 2
-            continue
-        if m == 0xD9:  # true EOI for this image
-            return False
-        if m == 0xDA:  # a second scan header
-            return True
-        if p + 4 > n:
-            return False  # truncated tail: nothing decodable follows
-        (seg_len,) = struct.unpack(">H", payload[p + 2 : p + 4])
-        p += 2 + seg_len  # skip the whole segment body
-    return False
-
-
-def decode_jpeg(payload: bytes) -> np.ndarray:
-    """JPEG bytes -> (H, W, C) uint8 (C=1 gray, C=3 RGB): baseline
-    sequential decoded inline; progressive (SOF2) dispatched to the
-    Annex G coefficient-accumulation path. Quant/Huffman tables come
-    from the payload's own DQT/DHT segments; sampling factors 1-2 per
-    axis (4:4:4, 4:2:2, 4:2:0) with replicated-sample upsampling;
-    DRI/RSTn honored. Arithmetic-coded streams raise
-    UnsupportedImageError."""
-    if not payload.startswith(b"\xff\xd8"):
-        raise ValueError("not a JPEG payload")
-    qtables: dict[int, np.ndarray] = {}
-    huff: dict[tuple[int, int], dict] = {}  # (tc, th) -> (length, code)->sym
-    frame = None
-    restart_interval = 0
-    pos = 2
-    scan = None
-    while pos + 4 <= len(payload):
-        if payload[pos] != 0xFF:
-            pos += 1
-            continue
-        marker = payload[pos + 1]
-        if marker == 0xFF:
-            pos += 1
-            continue
-        if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-            pos += 2
-            continue
-        if marker == 0xD9:
-            break
-        (seg_len,) = struct.unpack(">H", payload[pos + 2 : pos + 4])
-        body = payload[pos + 4 : pos + 2 + seg_len]
-        if marker == 0xDB:  # DQT (may hold several tables)
-            _jpeg_parse_dqt(body, qtables)
-        elif marker == 0xC4:  # DHT (may hold several tables)
-            _jpeg_parse_dht(body, huff)
-        elif marker in (0xC0, 0xC1):  # baseline / extended sequential
-            prec, fh, fw, ncomp = struct.unpack(">BHHB", body[:6])
-            if prec != 8:
-                raise UnsupportedImageError(f"JPEG precision {prec} (only 8-bit)")
-            if len(body) < 6 + 3 * ncomp:
-                raise ValueError("truncated JPEG SOF segment")
-            comps = []
-            for ci in range(ncomp):
-                cid, hv, tq = body[6 + 3 * ci : 9 + 3 * ci]
-                comps.append({"id": cid, "h": hv >> 4, "v": hv & 0x0F, "tq": tq})
-            frame = {"h": fh, "w": fw, "comps": comps}
-        elif marker == 0xC2:  # progressive: Annex G coefficient-accumulation path
-            return _decode_jpeg_progressive(payload)
-        elif marker in (0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
-            raise UnsupportedImageError(f"JPEG SOF marker 0x{marker:02x} not supported")
-        elif marker == 0xDD:  # DRI
-            (restart_interval,) = struct.unpack(">H", body[:2])
-        elif marker == 0xDA:  # SOS
-            ns = body[0]
-            scan = []
-            for ci in range(ns):
-                cs, tt = body[1 + 2 * ci : 3 + 2 * ci]
-                scan.append({"cs": cs, "td": tt >> 4, "ta": tt & 0x0F})
-            pos = pos + 2 + seg_len  # entropy data starts here
-            break
-        pos += 2 + seg_len
-    if frame is None or scan is None:
-        raise ValueError("JPEG payload missing SOF/SOS")
-    if len(scan) != len(frame["comps"]):
-        # a scan covering fewer components than the frame means a
-        # non-interleaved multi-scan file: decoding only the first scan
-        # would leave the other planes zero and misread the MCU layout.
-        # Refuse honestly (same policy as progressive/arithmetic) —
-        # never fake pixels.
-        raise UnsupportedImageError(
-            "non-interleaved JPEG (scan covers "
-            f"{len(scan)}/{len(frame['comps'])} frame components)"
-        )
-
-    comps = frame["comps"]
-    by_id = {c["id"]: c for c in comps}
-    h, w = frame["h"], frame["w"]
-    max_h = max(c["h"] for c in comps)
-    max_v = max(c["v"] for c in comps)
-    if not all(1 <= c["h"] <= 2 and 1 <= c["v"] <= 2 for c in comps):
-        raise UnsupportedImageError("JPEG sampling factors beyond 2 not supported")
-    mcus_x = (w + 8 * max_h - 1) // (8 * max_h)
-    mcus_y = (h + 8 * max_v - 1) // (8 * max_v)
-    dct_m = _jpeg_dct_matrix()
-    planes = {
-        c["id"]: np.zeros((mcus_y * c["v"] * 8, mcus_x * c["h"] * 8), dtype=np.float64)
-        for c in comps
-    }
-    preds = {c["id"]: 0 for c in comps}
-    reader = _JpegBitReader(payload, pos)
-    n_mcus = 0
-    for my in range(mcus_y):
-        for mx in range(mcus_x):
-            if restart_interval and n_mcus and n_mcus % restart_interval == 0:
-                reader.sync_restart()
-                preds = {c["id"]: 0 for c in comps}
-            for sc in scan:
-                comp = by_id[sc["cs"]]
-                qt = qtables.get(comp["tq"])
-                dc_tbl = huff.get((0, sc["td"]))
-                ac_tbl = huff.get((1, sc["ta"]))
-                if qt is None or dc_tbl is None or ac_tbl is None:
-                    raise UnsupportedImageError("JPEG scan references missing table")
-                for by in range(comp["v"]):
-                    for bx in range(comp["h"]):
-                        zz, preds[comp["id"]] = _jpeg_decode_block(
-                            reader, dc_tbl, ac_tbl, preds[comp["id"]]
-                        )
-                        nat = np.zeros(64, dtype=np.int64)
-                        nat[_JPEG_ZIGZAG] = zz
-                        block = nat.reshape(8, 8) * qt
-                        px = dct_m.T @ block.astype(np.float64) @ dct_m + 128.0
-                        y0 = (my * comp["v"] + by) * 8
-                        x0 = (mx * comp["h"] + bx) * 8
-                        planes[comp["id"]][y0 : y0 + 8, x0 : x0 + 8] = px
-            n_mcus += 1
-    # belt and braces for the same hazard: any FURTHER SOS after the
-    # decoded scan but BEFORE this image's EOI means a multi-scan stream
-    # (spec-valid sequential JPEG permits it; this decoder only handles
-    # one interleaved scan). A PROPER MARKER WALK is required — not a
-    # raw byte search: segment bodies (COM/APPn/DHT between scans) may
-    # contain literal FF D9 / FF DA bytes, and bytes past the true EOI
-    # (concatenated JPEGs, motion-photo appendices, trailers) are not
-    # part of this image and must not trigger a refusal.
-    if _jpeg_has_further_sos(payload, reader._pos):
-        raise UnsupportedImageError("multi-scan sequential JPEG not supported")
-
-    return _jpeg_planes_to_image(comps, planes, h, w, max_h, max_v)
+# ---------------------------------------------------------------- GIF
 
 
 def gif_header(payload: bytes) -> tuple[int, int, int]:
@@ -1459,7 +1070,6 @@ def gif_header(payload: bytes) -> tuple[int, int, int]:
         raise ValueError("not a GIF payload")
     w, h = struct.unpack("<HH", payload[6:10])
     return w, h, 3
-
 
 def _gif_lzw_decode(data: bytes, min_code_size: int) -> bytearray:
     """GIF-variant LZW (GIF89a spec appendix F): variable code width
@@ -1527,13 +1137,28 @@ def _gif_lzw_decode(data: bytes, min_code_size: int) -> bytearray:
     return out
 
 
-def decode_gif(payload: bytes) -> np.ndarray:
-    """GIF bytes -> (H, W, 3) uint8 via a from-spec LZW decode of the
-    FIRST image frame composed onto the logical screen (background
-    color fill). Interlaced frames are de-interlaced (4-pass order);
-    animation beyond frame one and transparency compositing are out of
-    scope for corpus feature-extraction (the first frame is the
-    thumbnail/statistics frame)."""
+
+def _gif_deinterlace(idx: np.ndarray, h: int) -> np.ndarray:
+    order = (
+        list(range(0, h, 8))
+        + list(range(4, h, 8))
+        + list(range(2, h, 4))
+        + list(range(1, h, 2))
+    )
+    deint = np.zeros_like(idx)
+    deint[order] = idx
+    return deint
+
+
+def _gif_frames(payload: bytes):
+    """The one GIF frame walker: yields ``(delay_centiseconds, screen)``
+    per image frame, ``screen`` being a copy of the logical screen as a
+    viewer displays it after that frame. Each frame is composed onto the
+    evolving screen honoring the Graphic Control Extension (delay,
+    transparency index — transparent pixels leave the screen unchanged)
+    and disposal methods 0/1 (leave), 2 (restore background) and 3
+    (restore previous); disposal runs only when the next frame is
+    requested."""
     if payload[:6] not in (b"GIF87a", b"GIF89a"):
         raise ValueError("not a GIF payload")
     sw, sh = struct.unpack("<HH", payload[6:10])
@@ -1544,12 +1169,30 @@ def decode_gif(payload: bytes) -> np.ndarray:
         n = 2 ** ((packed & 0x07) + 1)
         gct = np.frombuffer(payload, dtype=np.uint8, count=3 * n, offset=pos).reshape(n, 3)
         pos += 3 * n
+    bg = (
+        gct[bg_index]
+        if gct is not None and bg_index < len(gct)
+        else np.zeros(3, dtype=np.uint8)
+    )
+    screen = np.zeros((sh, sw, 3), dtype=np.uint8)
+    screen[:, :] = bg
+    n_frames = 0
+    # pending graphic control state (applies to the NEXT image block)
+    delay, transparent, disposal = 0, None, 0
     while pos < len(payload):
         block = payload[pos]
         if block == 0x3B:  # trailer
             break
-        if block == 0x21:  # extension: label + sub-blocks, skip
+        if block == 0x21:  # extension
+            label = payload[pos + 1]
             pos += 2
+            if label == 0xF9:  # graphic control extension
+                size = payload[pos]
+                gfields = payload[pos + 1 : pos + 1 + size]
+                flags = gfields[0]
+                disposal = (flags >> 2) & 0x07
+                (delay,) = struct.unpack("<H", gfields[1:3])
+                transparent = gfields[3] if flags & 0x01 else None
             while pos < len(payload) and payload[pos] != 0:
                 pos += 1 + payload[pos]
             pos += 1
@@ -1583,148 +1226,6 @@ def decode_gif(payload: bytes) -> np.ndarray:
             .reshape(h, w)
         )
         if ipacked & 0x40:  # interlaced: rows arrive in 4 passes
-            order = (
-                list(range(0, h, 8))
-                + list(range(4, h, 8))
-                + list(range(2, h, 4))
-                + list(range(1, h, 2))
-            )
-            deint = np.zeros_like(idx)
-            deint[order] = idx
-            idx = deint
-        if np.any(idx >= len(ct)):
-            raise UnsupportedImageError("GIF index outside color table")
-        frame = ct[idx]
-        # compose onto the logical screen (background fill)
-        if (left, top, w, h) == (0, 0, sw, sh):
-            return np.ascontiguousarray(frame)
-        screen = np.zeros((sh, sw, 3), dtype=np.uint8)
-        if gct is not None and bg_index < len(gct):
-            screen[:, :] = gct[bg_index]
-        screen[top : top + h, left : left + w] = frame[: sh - top, : sw - left]
-        return screen
-    raise ValueError("GIF payload has no image frame")
-
-
-def encode_gif(pixels: np.ndarray) -> bytes:
-    """(H, W) palette-index or (H, W, 3) uint8 array -> single-frame
-    GIF89a. RGB input is quantized to its distinct colors (<=256
-    required — fixture/write-back use, not general photography; use
-    JPEG/PNG for continuous-tone images). Emits clear codes per the
-    spec whenever the dictionary fills."""
-    arr = np.asarray(pixels, dtype=np.uint8)
-    if arr.ndim == 2:
-        arr = np.stack([arr] * 3, axis=2)
-    h, w, _ = arr.shape
-    flat = arr.reshape(-1, 3)
-    colors, inverse = np.unique(flat, axis=0, return_inverse=True)
-    if len(colors) > 256:
-        raise ValueError(f"GIF encoder needs <=256 distinct colors, got {len(colors)}")
-    ct_bits = max(1, int(np.ceil(np.log2(max(len(colors), 2)))))
-    ct_size = 1 << ct_bits
-    table = np.zeros((ct_size, 3), dtype=np.uint8)
-    table[: len(colors)] = colors
-    indices = inverse.astype(np.int64)
-
-    out = bytearray(b"GIF89a")
-    out += struct.pack("<HH", w, h)
-    out += bytes([0x80 | (ct_bits - 1), 0, 0])  # GCT flag+size, bg, aspect
-    out += table.tobytes()
-    out += b"\x2c" + struct.pack("<HHHH", 0, 0, w, h) + b"\x00"
-    # one LZW implementation for both encoders (the animation encoder
-    # shares this helper): min_code_size + 255-byte sub-blocks + term
-    out += _gif_lzw_encode_blocks(indices, ct_bits)
-    out += b"\x3b"
-    return bytes(out)
-
-
-def _gif_deinterlace(idx: "np.ndarray", h: int) -> "np.ndarray":
-    order = (
-        list(range(0, h, 8))
-        + list(range(4, h, 8))
-        + list(range(2, h, 4))
-        + list(range(1, h, 2))
-    )
-    deint = np.zeros_like(idx)
-    deint[order] = idx
-    return deint
-
-
-def decode_gif_frames(payload: bytes) -> list[tuple[int, np.ndarray]]:
-    """Animated GIF bytes -> [(delay_centiseconds, (H, W, 3) uint8), ...]
-    — FULL animation decode per the GIF89a spec: each frame is composed
-    onto the evolving logical screen honoring the Graphic Control
-    Extension (frame delay, transparency index — transparent pixels
-    leave the screen unchanged) and disposal methods 0/1 (leave),
-    2 (restore background) and 3 (restore previous). The returned
-    arrays are what a viewer displays after each frame."""
-    if payload[:6] not in (b"GIF87a", b"GIF89a"):
-        raise ValueError("not a GIF payload")
-    sw, sh = struct.unpack("<HH", payload[6:10])
-    packed, bg_index = payload[10], payload[11]
-    pos = 13
-    gct = None
-    if packed & 0x80:
-        n = 2 ** ((packed & 0x07) + 1)
-        gct = np.frombuffer(payload, dtype=np.uint8, count=3 * n, offset=pos).reshape(n, 3)
-        pos += 3 * n
-    bg = (
-        gct[bg_index]
-        if gct is not None and bg_index < len(gct)
-        else np.zeros(3, dtype=np.uint8)
-    )
-    screen = np.zeros((sh, sw, 3), dtype=np.uint8)
-    screen[:, :] = bg
-    frames: list[tuple[int, np.ndarray]] = []
-    # pending graphic control state (applies to the NEXT image block)
-    delay, transparent, disposal = 0, None, 0
-    while pos < len(payload):
-        block = payload[pos]
-        if block == 0x3B:  # trailer
-            break
-        if block == 0x21:  # extension
-            label = payload[pos + 1]
-            pos += 2
-            if label == 0xF9:  # graphic control extension
-                size = payload[pos]
-                gfields = payload[pos + 1 : pos + 1 + size]
-                flags = gfields[0]
-                disposal = (flags >> 2) & 0x07
-                (delay,) = struct.unpack("<H", gfields[1:3])
-                transparent = gfields[3] if flags & 0x01 else None
-            while pos < len(payload) and payload[pos] != 0:
-                pos += 1 + payload[pos]
-            pos += 1
-            continue
-        if block != 0x2C:
-            raise UnsupportedImageError(f"unknown GIF block 0x{block:02x}")
-        left, top, w, h = struct.unpack("<HHHH", payload[pos + 1 : pos + 9])
-        ipacked = payload[pos + 9]
-        pos += 10
-        ct = gct
-        if ipacked & 0x80:
-            n = 2 ** ((ipacked & 0x07) + 1)
-            ct = np.frombuffer(payload, dtype=np.uint8, count=3 * n, offset=pos).reshape(n, 3)
-            pos += 3 * n
-        if ct is None:
-            raise UnsupportedImageError("GIF frame has no color table")
-        min_code_size = payload[pos]
-        pos += 1
-        lzw = bytearray()
-        while pos < len(payload) and payload[pos] != 0:
-            size = payload[pos]
-            lzw += payload[pos + 1 : pos + 1 + size]
-            pos += 1 + size
-        pos += 1  # block terminator
-        indices = _gif_lzw_decode(bytes(lzw), min_code_size)
-        if len(indices) < w * h:
-            raise UnsupportedImageError("GIF LZW stream shorter than frame")
-        idx = (
-            np.frombuffer(indices, dtype=np.uint8, count=w * h)
-            .astype(np.int64)
-            .reshape(h, w)
-        )
-        if ipacked & 0x40:
             idx = _gif_deinterlace(idx, h)
         if np.any(idx >= len(ct)):
             raise UnsupportedImageError("GIF index outside color table")
@@ -1749,15 +1250,75 @@ def decode_gif_frames(payload: bytes) -> list[tuple[int, np.ndarray]]:
         else:
             composed = px
         screen[top : top + ch_, left : left + cw_] = composed
-        frames.append((int(delay), screen.copy()))
+        n_frames += 1
+        yield int(delay), screen.copy()
         if disposal == 2:  # restore region to background
             screen[top : top + ch_, left : left + cw_] = bg
         elif disposal == 3 and saved is not None:  # restore previous
             screen[top : top + ch_, left : left + cw_] = saved
         delay, transparent, disposal = 0, None, 0
-    if not frames:
+    if not n_frames:
         raise ValueError("GIF payload has no image frame")
-    return frames
+
+
+def decode_gif(payload: bytes) -> np.ndarray:
+    """GIF bytes -> (H, W, 3) uint8: the FIRST image frame as a viewer
+    displays it — the frame walker of :func:`decode_gif_frames` stopped
+    after frame 1, so later frames are never decoded. The frame is
+    composed onto the background-filled logical screen; pixels at the
+    frame's GCE transparency index show the background, not their
+    color-table entry. Interlaced frames are de-interlaced (4-pass
+    order)."""
+    return next(_gif_frames(payload))[1]
+
+
+def decode_gif_frames(payload: bytes) -> list[tuple[int, np.ndarray]]:
+    """Animated GIF bytes -> [(delay_centiseconds, (H, W, 3) uint8), ...]
+    — FULL animation decode per the GIF89a spec: each frame is composed
+    onto the evolving logical screen honoring the Graphic Control
+    Extension (frame delay, transparency index — transparent pixels
+    leave the screen unchanged) and disposal methods 0/1 (leave),
+    2 (restore background) and 3 (restore previous). The returned
+    arrays are what a viewer displays after each frame."""
+    return list(_gif_frames(payload))
+
+
+def _gif_head(frames: list[np.ndarray]) -> tuple[bytes, np.ndarray, int]:
+    """The one GIF89a encoder head: (H, W, 3)/(H, W) uint8 frames of
+    one logical screen -> (header through the global color table,
+    per-pixel palette indices of all frames concatenated, color-table
+    bits). The palette is the union of frame colors (<=256)."""
+    arrs = []
+    for f in frames:
+        a = np.asarray(f, dtype=np.uint8)
+        if a.ndim == 2:
+            a = np.stack([a] * 3, axis=2)
+        arrs.append(a)
+    h, w = arrs[0].shape[:2]
+    if any(a.shape != (h, w, 3) for a in arrs):
+        raise ValueError("all frames must share the logical screen size")
+    flat = np.concatenate([a.reshape(-1, 3) for a in arrs])
+    colors, inverse = np.unique(flat, axis=0, return_inverse=True)
+    if len(colors) > 256:
+        raise ValueError(f"GIF encoder needs <=256 distinct colors, got {len(colors)}")
+    ct_bits = max(1, int(np.ceil(np.log2(max(len(colors), 2)))))
+    table = np.zeros((1 << ct_bits, 3), dtype=np.uint8)
+    table[: len(colors)] = colors
+    head = b"GIF89a" + struct.pack("<HH", w, h)
+    head += bytes([0x80 | (ct_bits - 1), 0, 0])  # GCT flag+size, bg, aspect
+    return head + table.tobytes(), inverse.astype(np.int64), ct_bits
+
+
+def encode_gif(pixels: np.ndarray) -> bytes:
+    """(H, W) palette-index or (H, W, 3) uint8 array -> single-frame
+    GIF89a with no Graphic Control Extension. RGB input is quantized to
+    its distinct colors (<=256 required — fixture/write-back use, not
+    general photography; use JPEG/PNG for continuous-tone images).
+    Emits clear codes per the spec whenever the dictionary fills."""
+    head, indices, ct_bits = _gif_head([pixels])
+    h, w = np.shape(pixels)[:2]
+    desc = b"\x2c" + struct.pack("<HHHH", 0, 0, w, h) + b"\x00"
+    return head + desc + _gif_lzw_encode_blocks(indices, ct_bits) + b"\x3b"
 
 
 def encode_gif_animation(
@@ -1770,40 +1331,19 @@ def encode_gif_animation(
     the single-frame encoder."""
     if not frames:
         raise ValueError("need at least one frame")
-    arrs = []
-    for f in frames:
-        a = np.asarray(f, dtype=np.uint8)
-        if a.ndim == 2:
-            a = np.stack([a] * 3, axis=2)
-        arrs.append(a)
-    h, w, _ = arrs[0].shape
-    if any(a.shape != (h, w, 3) for a in arrs):
-        raise ValueError("all frames must share the logical screen size")
-    delays = list(delays_cs or [0] * len(arrs))
-    if len(delays) != len(arrs):
+    delays = list(delays_cs or [0] * len(frames))
+    if len(delays) != len(frames):
         raise ValueError("delays_cs length must match frames")
-    flat = np.concatenate([a.reshape(-1, 3) for a in arrs])
-    colors, inverse = np.unique(flat, axis=0, return_inverse=True)
-    if len(colors) > 256:
-        raise ValueError(f"GIF encoder needs <=256 distinct colors, got {len(colors)}")
-    ct_bits = max(1, int(np.ceil(np.log2(max(len(colors), 2)))))
-    ct_size = 1 << ct_bits
-    table = np.zeros((ct_size, 3), dtype=np.uint8)
-    table[: len(colors)] = colors
-
-    out = bytearray(b"GIF89a")
-    out += struct.pack("<HH", w, h)
-    out += bytes([0x80 | (ct_bits - 1), 0, 0])
-    out += table.tobytes()
+    head, indices, ct_bits = _gif_head(frames)
+    h, w = np.shape(frames[0])[:2]
+    out = bytearray(head)
     n_px = h * w
     for fi, delay in enumerate(delays):
-        idx = inverse[fi * n_px : (fi + 1) * n_px].astype(np.int64)
         # GCE: disposal=1 (leave), no transparency
         out += b"\x21\xf9\x04" + bytes([0x04]) + struct.pack("<H", int(delay)) + b"\x00\x00"
         out += b"\x2c" + struct.pack("<HHHH", 0, 0, w, h) + b"\x00"
-        out += _gif_lzw_encode_blocks(idx, ct_bits)
-    out += b"\x3b"
-    return bytes(out)
+        out += _gif_lzw_encode_blocks(indices[fi * n_px : (fi + 1) * n_px], ct_bits)
+    return bytes(out + b"\x3b")
 
 
 def _gif_lzw_encode_blocks(indices: np.ndarray, ct_bits: int) -> bytes:
@@ -1857,7 +1397,6 @@ def _gif_lzw_encode_blocks(indices: np.ndarray, ct_bits: int) -> bytes:
         out += bytes([len(chunk)]) + chunk
     out += b"\x00"
     return bytes(out)
-
 
 
 # ------------------------------------------------------- WAV (audio)
@@ -1958,10 +1497,10 @@ def image_stats(payload: bytes) -> tuple[int, int, int] | None:
 
 def decode_image(payload: bytes) -> np.ndarray:
     """Pixel decode for any supported image payload -> (H, W, C) uint8.
-    PNG, BMP, baseline JPEG and GIF (first frame, LZW) decode here
-    without any library; progressive JPEG requires a codec library
-    (PIL path) and otherwise raises ``UnsupportedImageError`` — never
-    fake pixels."""
+    PNG, BMP, baseline and progressive JPEG and GIF (first frame as
+    displayed) decode here without any library; variants outside that
+    subset need a codec library (PIL path) and otherwise raise
+    ``UnsupportedImageError`` — never fake pixels."""
     fmt = sniff_format(payload)
     if fmt is None:
         raise ValueError("payload is not a recognized image format")
@@ -1988,14 +1527,31 @@ def module_source() -> str:
     """This module's full source text, for shipping INTO Arrow-batch
     closures by value: executor Python workers don't share the driver's
     ``sys.path``, so a ``mapInPandas`` closure cannot assume this
-    package is importable worker-side. Call sites capture the returned
-    string in the closure and ``exec`` it there — the closure stays
-    fully self-contained (the repo-wide UDF rule) while this file stays
-    the single source of truth for the codec."""
+    package is importable worker-side. :func:`codec_loader` captures it
+    and runs it there — the closure stays fully self-contained (the
+    repo-wide UDF rule) while this file stays the single source of truth
+    for the codec."""
     import inspect
     import sys
 
     return inspect.getsource(sys.modules[__name__])
+
+
+def codec_loader():
+    """The one way an Arrow-batch closure gets the codecs: call this on
+    the driver, capture the returned ``load`` in the closure, and call
+    ``load()`` on the executor for a fresh namespace dict holding every
+    codec function (``ns["decode_png"]`` ...). ``load`` is a nested
+    function, so cloudpickle ships it by value together with the source
+    text it captured; unpickling it imports nothing from this package."""
+    src = module_source()
+
+    def load() -> dict:
+        ns: dict = {}
+        exec(src, ns)
+        return ns
+
+    return load
 
 
 def resize_nearest(pixels: np.ndarray, out_w: int, out_h: int) -> np.ndarray:

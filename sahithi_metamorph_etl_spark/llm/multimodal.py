@@ -57,18 +57,18 @@ def decode_media_stats(media: DataFrame, batch_hint: int = 1024) -> DataFrame:
 
     ``mapInPandas`` keeps the decode embarrassingly parallel and
     streaming per partition — no collect, no driver involvement. The
-    codec ships into the closure as source text (codecs.module_source),
+    closure gets the codecs from ``codecs.codec_loader``: its ``load``
+    ships by value with the codec source and runs it on the executor,
     so the stage runs on executors that don't have this package on
     their PYTHONPATH.
     """
 
-    from .codecs import module_source
+    from .codecs import codec_loader
 
-    codecs_src = module_source()  # shipped by value; see codecs.module_source
+    load_codecs = codec_loader()
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ns: dict = {}
-        exec(codecs_src, ns)
+        ns = load_codecs()
         image_stats = ns["image_stats"]
 
         def _stats(payload: bytes) -> tuple[int, int, int]:
@@ -102,16 +102,15 @@ def decode_audio_stats(media: DataFrame) -> DataFrame:
     WAV decode via ``llm.codecs``; non-audio or unsupported payloads
     yield nulls for the audio columns instead of failing the stage
     (total over arbitrary binary, like decode_media_stats). Same
-    executor-shipping pattern: the codec travels as source text."""
-    from .codecs import module_source
+    executor-shipping pattern: the codecs come from ``codec_loader``."""
+    from .codecs import codec_loader
 
-    codecs_src = module_source()
+    load_codecs = codec_loader()
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
 
-        ns: dict = {}
-        exec(codecs_src, ns)
+        ns = load_codecs()
         decode_wav = ns["decode_wav"]
 
         for pdf in batches:
@@ -146,8 +145,8 @@ def decode_audio_stats(media: DataFrame) -> DataFrame:
 
 
 def resize_image_media(media: DataFrame, out_w: int, out_h: int) -> DataFrame:
-    """REAL image resize: decode pixels (PNG/BMP via llm.codecs — PIL
-    when available), nearest-neighbor resample to ``out_w`` x ``out_h``,
+    """REAL image resize: decode pixels (PNG/BMP/JPEG/GIF via
+    llm.codecs — PIL when available), nearest-neighbor resample to ``out_w`` x ``out_h``,
     re-encode as PNG — (media_id, payload, media_type, orig_width,
     orig_height, channels, ok).
 
@@ -160,13 +159,12 @@ def resize_image_media(media: DataFrame, out_w: int, out_h: int) -> DataFrame:
     if out_w <= 0 or out_h <= 0:
         raise ValueError("output dimensions must be positive")
 
-    from .codecs import module_source
+    from .codecs import codec_loader
 
-    codecs_src = module_source()  # shipped by value; see codecs.module_source
+    load_codecs = codec_loader()
 
     def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ns: dict = {}
-        exec(codecs_src, ns)
+        ns = load_codecs()
         decode_image, encode_png, resize_nearest = (
             ns["decode_image"], ns["encode_png"], ns["resize_nearest"]
         )
@@ -305,16 +303,15 @@ def decode_gif_frame_stats(media: DataFrame) -> DataFrame:
     real-codec counterpart of the byte-window ``sample_frames``: where
     that stage slices bytes, this one yields actual composed frames —
     the shape a keyframe-extraction pipeline consumes. Same
-    executor-shipping pattern: the codec travels as source text."""
-    from .codecs import module_source
+    executor-shipping pattern: the codecs come from ``codec_loader``."""
+    from .codecs import codec_loader
 
-    codecs_src = module_source()
+    load_codecs = codec_loader()
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
 
-        ns: dict = {}
-        exec(codecs_src, ns)
+        ns = load_codecs()
         decode_gif_frames = ns["decode_gif_frames"]
 
         for pdf in batches:

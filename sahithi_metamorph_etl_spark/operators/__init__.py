@@ -1,7 +1,7 @@
 from .projection import normalize_columns, rename_positional, conform_to_contract
 from .joins import join_on_clean_keys, semi_join, anti_join
 from .windows import top_k_per_group, sessionize
-from .aggregates import duplicate_keys, two_level_aggregate
+from .aggregates import duplicate_keys
 from .quantiles import exact_quantiles, approx_quantiles, tier_by_cutoffs
 
 __all__ = [
@@ -14,7 +14,6 @@ __all__ = [
     "top_k_per_group",
     "sessionize",
     "duplicate_keys",
-    "two_level_aggregate",
     "exact_quantiles",
     "approx_quantiles",
     "tier_by_cutoffs",

@@ -47,20 +47,3 @@ def dedupe_by_key(
         .drop("__rn")
     )
 
-
-def two_level_aggregate(
-    df: DataFrame,
-    fine_keys: list[str],
-    fine_aggs: list[Column],
-    coarse_keys: list[str],
-    coarse_aggs: list[Column],
-) -> tuple[DataFrame, DataFrame]:
-    """The reference's A1→A2 cascade (`m_supplier_performance_task.py:121-141`):
-    aggregate at a fine grain, then re-aggregate coarser. Returns BOTH
-    levels because the fine level typically also feeds a ranking window
-    (W1). Spark already does partial/final aggregation inside each
-    groupBy; the cascade exists for reuse, not for performance.
-    """
-    fine = df.groupBy(*fine_keys).agg(*fine_aggs)
-    coarse = fine.groupBy(*coarse_keys).agg(*coarse_aggs)
-    return fine, coarse

@@ -2103,7 +2103,7 @@ FROM base
 def multimodal_png_roundtrip(spark, sf_dir):
     import pandas as pd
 
-    from ..llm.codecs import module_source
+    from ..llm.codecs import codec_loader
 
     # r21 (guide §2.4/§4): compute-bound Python codec chain over a single
     # parquet split ran as ONE task; spread doc_ids across the session's
@@ -2113,13 +2113,12 @@ def multimodal_png_roundtrip(spark, sf_dir):
         .select("doc_id")
         .repartition(spark.sparkContext.defaultParallelism)
     )
-    codecs_src = module_source()  # shipped by value; see codecs.module_source
+    load_codecs = codec_loader()
 
     def work(batches):
         import numpy as np
 
-        ns: dict = {}
-        exec(codecs_src, ns)
+        ns = load_codecs()
         decode_png, encode_png = ns["decode_png"], ns["encode_png"]
 
         for pdf in batches:
@@ -2168,7 +2167,7 @@ FROM documents
 def multimodal_jpeg_roundtrip(spark, sf_dir):
     import pandas as pd
 
-    from ..llm.codecs import module_source
+    from ..llm.codecs import codec_loader
 
     # r21 (guide §2.4/§4): compute-bound Python codec chain over a single
     # parquet split ran as ONE task; spread doc_ids across the session's
@@ -2178,13 +2177,12 @@ def multimodal_jpeg_roundtrip(spark, sf_dir):
         .select("doc_id")
         .repartition(spark.sparkContext.defaultParallelism)
     )
-    codecs_src = module_source()  # shipped by value; see codecs.module_source
+    load_codecs = codec_loader()
 
     def work(batches):
         import numpy as np
 
-        ns: dict = {}
-        exec(codecs_src, ns)
+        ns = load_codecs()
         decode_jpeg, encode_jpeg = ns["decode_jpeg"], ns["encode_jpeg_baseline"]
         encode_prog = ns["encode_jpeg_progressive"]
 
@@ -2249,16 +2247,15 @@ FROM b
 def multimodal_wav_roundtrip(spark, sf_dir):
     import pandas as pd
 
-    from ..llm.codecs import module_source
+    from ..llm.codecs import codec_loader
 
     docs = read_testdata(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    codecs_src = module_source()
+    load_codecs = codec_loader()
 
     def work(batches):
         import numpy as np
 
-        ns: dict = {}
-        exec(codecs_src, ns)
+        ns = load_codecs()
         decode_wav, encode_wav = ns["decode_wav"], ns["encode_wav"]
 
         def _r4(v: float) -> float:
@@ -2362,17 +2359,16 @@ FROM b
 def multimodal_audio_stats(spark, sf_dir):
     import pandas as pd
 
-    from ..llm.codecs import module_source
+    from ..llm.codecs import codec_loader
     from ..llm.multimodal import decode_audio_stats
 
     docs = read_testdata(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    codecs_src = module_source()  # shipped by value; see codecs.module_source
+    load_codecs = codec_loader()
 
     def synth(batches):
         import numpy as np
 
-        ns: dict = {}
-        exec(codecs_src, ns)
+        ns = load_codecs()
         encode_wav = ns["encode_wav"]
 
         for pdf in batches:
@@ -3074,7 +3070,7 @@ FROM documents WHERE doc_id % 7 = 0
 def multimodal_gif_frames(spark, sf_dir):
     import pandas as pd
 
-    from ..llm.codecs import module_source
+    from ..llm.codecs import codec_loader
     from ..llm.multimodal import decode_gif_frame_stats
 
     # r21 (guide §2.4/§4): the synth->decode Python chain is compute-bound
@@ -3086,13 +3082,12 @@ def multimodal_gif_frames(spark, sf_dir):
         .select("doc_id")
         .repartition(spark.sparkContext.defaultParallelism)
     )
-    codecs_src = module_source()  # shipped by value; see codecs.module_source
+    load_codecs = codec_loader()
 
     def synth(batches):
         import numpy as np
 
-        ns: dict = {}
-        exec(codecs_src, ns)
+        ns = load_codecs()
         encode_gif_animation = ns["encode_gif_animation"]
 
         for pdf in batches:

@@ -46,10 +46,6 @@ def read_csv(
     )
 
 
-def read_json(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
-    return spark.read.schema(schema).json(path)
-
-
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     # Parquet carries its own schema; contracts are enforced downstream by
     # validators.validate_schema where a pipeline requires it.

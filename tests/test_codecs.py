@@ -245,6 +245,25 @@ def test_codecs_module_is_executor_shippable():
     assert "decode_png" in ns and "resize_nearest" in ns
 
 
+def test_exec_only_in_the_codecs_shipping_helper():
+    """Every Arrow-batch closure gets the codec namespace from
+    ``codec_loader``; no other line in the package executes source."""
+    import inspect
+    import pathlib
+    import re
+
+    pkg = pathlib.Path(codecs.__file__).resolve().parent.parent
+    lines, start = inspect.getsourcelines(codecs.codec_loader)
+    allowed = {(pkg / "llm" / "codecs.py", n) for n in range(start, start + len(lines))}
+    offenders = [
+        f"{p.relative_to(pkg)}:{i}"
+        for p in sorted(pkg.rglob("*.py"))
+        for i, line in enumerate(p.read_text().splitlines(), 1)
+        if re.search(r"\bexec\(", line) and (p, i) not in allowed
+    ]
+    assert offenders == [], "load the codecs with codecs.codec_loader()"
+
+
 def _gradient_rgb(h: int, w: int) -> np.ndarray:
     yy, xx = np.mgrid[0:h, 0:w]
     return np.stack(
@@ -494,6 +513,7 @@ def test_gif_interlaced_decode():
     out = codecs.decode_gif(bytes(enc))
     expected = np.stack([rows] * 3, axis=2)
     assert np.array_equal(out, expected)
+    assert np.array_equal(codecs.decode_gif_frames(bytes(enc))[0][1], expected)
 
 
 def test_wav_roundtrip_properties():
@@ -604,6 +624,14 @@ def test_gif_animation_transparency_and_disposal():
     assert np.array_equal(s2[0, 0], black)
     # frame 3: full blue regardless of earlier disposals
     assert (dec[2][1] == blue).all()
+    # the first-frame decode is the frame walker stopped after frame 1,
+    # so it shows what a viewer shows: with the transparent patch as
+    # frame 1, its transparent cells show the background, not blue
+    assert np.array_equal(codecs.decode_gif(payload), dec[0][1])
+    lead = head + f2 + f3 + b"\x3b"
+    first = codecs.decode_gif(lead)
+    assert np.array_equal(first, codecs.decode_gif_frames(lead)[0][1])
+    assert np.array_equal(first[1, 2], black) and np.array_equal(first[1, 1], green)
 
 
 def test_jpeg_trailing_bytes_after_eoi_still_decode():
@@ -690,11 +718,101 @@ def test_gif_frame_rect_outside_screen_is_refused():
     bad = head + frame(0, 7, 2, 2, [1, 1, 1, 1]) + b"\x3b"
     with _pytest.raises(codecs.UnsupportedImageError, match="outside"):
         codecs.decode_gif_frames(bad)
+    with _pytest.raises(codecs.UnsupportedImageError, match="outside"):
+        codecs.decode_gif(bad)
     # left beyond screen width -> refusal
     bad2 = head + frame(9, 0, 2, 2, [1, 1, 1, 1]) + b"\x3b"
     with _pytest.raises(codecs.UnsupportedImageError, match="outside"):
         codecs.decode_gif_frames(bad2)
+    with _pytest.raises(codecs.UnsupportedImageError, match="outside"):
+        codecs.decode_gif(bad2)
     # exactly at the edge: zero-area contribution, still decodes
     ok = head + frame(0, 0, 4, 4, [1] * 16) + frame(4, 4, 2, 2, [1] * 4) + b"\x3b"
     dec = codecs.decode_gif_frames(ok)
     assert len(dec) == 2
+
+
+def _noise(shape, seed):
+    return np.random.default_rng(seed).integers(0, 256, size=shape).astype(np.uint8)
+
+
+# name -> encoder call; covers every encoder mode (subsampling, gray,
+# restart intervals, every successive-approximation depth, the LZW
+# dictionary reset, animation GCEs)
+_PINNED_PAYLOADS = {
+    "jpeg_444": lambda: codecs.encode_jpeg_baseline(_gradient_rgb(40, 56), 95, "444"),
+    "jpeg_444_noise": lambda: codecs.encode_jpeg_baseline(_noise((23, 37, 3), 1), 50),
+    "jpeg_420": lambda: codecs.encode_jpeg_baseline(_gradient_rgb(33, 41), 95, "420"),
+    "jpeg_420_noise": lambda: codecs.encode_jpeg_baseline(_noise((19, 27, 3), 2), 75, "420"),
+    "jpeg_gray": lambda: codecs.encode_jpeg_baseline((np.mgrid[0:24, 0:24][0] * 10).astype(np.uint8), 90),
+    "jpeg_restart": lambda: codecs.encode_jpeg_baseline(_gradient_rgb(40, 40), 90, restart_interval=3),
+    "jpeg_420_restart": lambda: codecs.encode_jpeg_baseline(_noise((35, 18, 3), 3), 85, "420", 2),
+    "prog_al0": lambda: codecs.encode_jpeg_progressive(_noise((21, 21), 4), 90, al_levels=0),
+    "prog_al1": lambda: codecs.encode_jpeg_progressive(_gradient_rgb(16, 16), 90, al_levels=1),
+    "prog_al2": lambda: codecs.encode_jpeg_progressive(_noise((24, 17, 3), 5), 75, al_levels=2),
+    "prog_al3": lambda: codecs.encode_jpeg_progressive(_noise((13, 30, 3), 6), 95, al_levels=3),
+    "prog_restart": lambda: codecs.encode_jpeg_progressive(
+        _noise((16, 48, 3), 7), 75, al_levels=3, restart_interval=1),
+    "gif_palette": lambda: codecs.encode_gif(_noise((37, 53), 8) % 200),
+    "gif_dict_reset": lambda: codecs.encode_gif(_noise((120, 130), 9)),
+    "gif_rgb": lambda: codecs.encode_gif(
+        np.array([[0, 0, 0], [255, 0, 0], [0, 9, 200]], dtype=np.uint8)[_noise((9, 11), 10) % 3]),
+    "gif_animation": lambda: codecs.encode_gif_animation(
+        [np.full((5, 7, 3), c, dtype=np.uint8) for c in (10, 80, 200)] + [_noise((5, 7), 11) % 7],
+        [3, 5, 7, 0]),
+}
+
+_PINNED_BYTES = {
+    "gif_animation": "2eb2044c0bac19583743ed38ebee1d069acc68ec077db596be8e96b4480afb4e",
+    "gif_dict_reset": "5fd58bb5fb0917c108b3af3ba46bdf3a6e0af16a03a9e157ecc07c6e46386321",
+    "gif_palette": "f544885234a62533045e8a610f0d75970df9220625c51b031f90a74ef2f17529",
+    "gif_rgb": "3f61d4f8dc73c2e1e8d8ec14b28503790a8f841d2834bdf4ca4887b795b1ec90",
+    "jpeg_420": "b60abbccb4ae86993246938f111e93915f759aed91de349b0909bcf7803fcd0a",
+    "jpeg_420_noise": "a1d9c0d91a1337edec9120470d040acc6d7234fe352fddbea43533a082278b0f",
+    "jpeg_420_restart": "4003a975d4e4aeb4ed00190f659c7280a77ab5973031fbe51c9264c8d606436e",
+    "jpeg_444": "1136f0af2da36e5867f883355e2565174a46a61353abf55221368e68c751a1d8",
+    "jpeg_444_noise": "5cabfee3902dbb89ed5a7a8969e2dbd3473ce03e4629f8bb641caf4f0327cea2",
+    "jpeg_gray": "9c4601880cb3c26f3e417f036f7954c6d663edf458f6a31c130417b38772ff28",
+    "jpeg_restart": "a218e57a76b6445be83383b01505867284cb41a8ef40e2e666a3e7654e903120",
+    "prog_al0": "e67811a2f267d3bec30ced77d5f45772cdd0ffc3780f15349d7b6c57f24a260c",
+    "prog_al1": "c353b241c5e7c10f1a673905e65ddb0138dd216d1116aef93f6074c42007873e",
+    "prog_al2": "0f5e6e7ac984f550e1ea9ddb0fd01d4e5c775596d702105d4842b7a3265570df",
+    "prog_al3": "1b3d1d7cbbdb5dc016c05bae83b5236616584d2ada697d6eb2bc9c7c185da66e",
+    "prog_restart": "af23a40f95bc4b9e980fd144de5f3641517025b3162904a0fa3b55fdc008302e",
+}
+
+_PINNED_PIXELS = {
+    "jpeg_420": "cc8787b37d0aa74136ca1c6f3055d55163fcc4f4f6602cafb214eca42a4406a5",
+    "jpeg_420_noise": "ba2d6dea73f276118550cbbd183f061582341212d50865d58c9b08144fabae59",
+    "jpeg_420_restart": "460e93304fa12225834d2266299cef828a82077a053ca74bb8254c7c25cb44a3",
+    "jpeg_444": "a76b4b0a885d249c4fbcaaaa8ae0b6533f1847c5915d663966453b8b333e1549",
+    "jpeg_444_noise": "aa0a2eb18ac6d83d2c987b485d4e64a6ed6327033662a3d78040f5cec49351f6",
+    "jpeg_gray": "11db2475d9885c592dc43363dea5d060608d350f33e156fde7a7b2154fba0957",
+    "jpeg_restart": "0ff408f2848e9987b716edb99892eb8467d06eb3cc438b63e21d955b5519c7ac",
+    "prog_al0": "4470a472b5018d7688784182b4873821cc6089cf57bfa742eb8824812766f8f7",
+    "prog_al1": "acc19a20d028202ea206f3e8f317593f04751e624909467311639f6f7b1fc78c",
+    "prog_al2": "fbfddacb49f7d2ad8c78c4bb4397a7d7216b78cff3e83bf842dddde4828ea395",
+    "prog_al3": "a23af465d83fa48015ff82451f77cd519bf51c9e2af48e9af86cbc1fb0a17531",
+    "prog_restart": "e5c305025748a407f52da449a7c277d0e41930a2178eb6b516e64ba0c1792972",
+}
+
+
+@pytest.mark.parametrize("name", sorted(_PINNED_PAYLOADS))
+def test_encoder_bytes_are_pinned(name):
+    """Every encoder's output is byte-exact: a refactor of the shared
+    coefficient head, block coder, palette or header code must not move
+    one byte."""
+    import hashlib
+
+    assert hashlib.sha256(_PINNED_PAYLOADS[name]()).hexdigest() == _PINNED_BYTES[name]
+
+
+@pytest.mark.parametrize("name", sorted(n for n in _PINNED_PAYLOADS if "gif" not in n))
+def test_jpeg_decoded_pixels_are_pinned(name):
+    """decode_jpeg's pixels for every pinned encoder payload, shape
+    included: the one scan decoder must reproduce them exactly."""
+    import hashlib
+
+    px = codecs.decode_jpeg(_PINNED_PAYLOADS[name]())
+    digest = hashlib.sha256(repr(px.shape).encode() + px.tobytes()).hexdigest()
+    assert digest == _PINNED_PIXELS[name]
