@@ -442,12 +442,20 @@ class _JpegBitReader:
             v = (v << 1) | self.read_bit()
         return v
 
-    def sync_restart(self) -> None:
-        """Byte-align and consume the next RSTn marker."""
+    def sync_restart(self, m: int) -> None:
+        """Byte-align and consume the restart marker RSTm. The walk
+        stops at the FIRST marker (stuffed 0xFF00 and 0xFF fill bytes
+        are not markers): a lost or out-of-order RST, the next SOS or
+        EOI refuses instead of resuming the scan on unrelated data."""
         self._n = 0
         d = self._d
         while self._pos + 1 < len(d):
-            if d[self._pos] == 0xFF and 0xD0 <= d[self._pos + 1] <= 0xD7:
+            if d[self._pos] == 0xFF and d[self._pos + 1] not in (0x00, 0xFF):
+                if d[self._pos + 1] != 0xD0 + m:
+                    raise UnsupportedImageError(
+                        f"JPEG restart marker RST{m} expected, found "
+                        f"0xFF{d[self._pos + 1]:02X}"
+                    )
                 self._pos += 2
                 return
             self._pos += 1
@@ -595,7 +603,7 @@ def _jpeg_decode_scan(
     eobrun = 0
     for u, unit in enumerate(units):
         if restart_interval and u and u % restart_interval == 0:
-            reader.sync_restart()
+            reader.sync_restart((u // restart_interval - 1) % 8)
             preds, eobrun = {}, 0
         for comp, dc_tbl, ac_tbl, cell in unit:
             if dc_first:
@@ -1161,14 +1169,32 @@ def _gif_frames(payload: bytes):
     requested."""
     if payload[:6] not in (b"GIF87a", b"GIF89a"):
         raise ValueError("not a GIF payload")
-    sw, sh = struct.unpack("<HH", payload[6:10])
-    packed, bg_index = payload[10], payload[11]
-    pos = 13
-    gct = None
-    if packed & 0x80:
-        n = 2 ** ((packed & 0x07) + 1)
-        gct = np.frombuffer(payload, dtype=np.uint8, count=3 * n, offset=pos).reshape(n, 3)
-        pos += 3 * n
+    pos = 6
+
+    def take(k: int) -> bytes:
+        # every read goes through here, so a payload cut anywhere
+        # inside a block refuses with one error that names the cut
+        nonlocal pos
+        if pos + k > len(payload):
+            raise UnsupportedImageError(
+                f"truncated GIF payload: {k} byte(s) needed at offset "
+                f"{pos} of {len(payload)}"
+            )
+        pos += k
+        return payload[pos - k : pos]
+
+    def color_table(flags: int) -> np.ndarray:
+        n = 2 ** ((flags & 0x07) + 1)
+        return np.frombuffer(take(3 * n), dtype=np.uint8).reshape(n, 3)
+
+    def sub_blocks() -> bytes:
+        out = bytearray()
+        while size := take(1)[0]:
+            out += take(size)
+        return bytes(out)
+
+    sw, sh, packed, bg_index, _aspect = struct.unpack("<HHBBB", take(7))
+    gct = color_table(packed) if packed & 0x80 else None
     bg = (
         gct[bg_index]
         if gct is not None and bg_index < len(gct)
@@ -1179,45 +1205,33 @@ def _gif_frames(payload: bytes):
     n_frames = 0
     # pending graphic control state (applies to the NEXT image block)
     delay, transparent, disposal = 0, None, 0
+    # a payload that ends between blocks lacks only its trailer: the
+    # frames read so far stand
     while pos < len(payload):
-        block = payload[pos]
+        block = take(1)[0]
         if block == 0x3B:  # trailer
             break
         if block == 0x21:  # extension
-            label = payload[pos + 1]
-            pos += 2
+            label = take(1)[0]
+            fields = sub_blocks()
             if label == 0xF9:  # graphic control extension
-                size = payload[pos]
-                gfields = payload[pos + 1 : pos + 1 + size]
-                flags = gfields[0]
+                if len(fields) < 4:
+                    raise UnsupportedImageError(
+                        "GIF graphic control extension shorter than 4 bytes"
+                    )
+                flags, delay, index = struct.unpack("<BHB", fields[:4])
                 disposal = (flags >> 2) & 0x07
-                (delay,) = struct.unpack("<H", gfields[1:3])
-                transparent = gfields[3] if flags & 0x01 else None
-            while pos < len(payload) and payload[pos] != 0:
-                pos += 1 + payload[pos]
-            pos += 1
+                transparent = index if flags & 0x01 else None
             continue
         if block != 0x2C:
             raise UnsupportedImageError(f"unknown GIF block 0x{block:02x}")
-        left, top, w, h = struct.unpack("<HHHH", payload[pos + 1 : pos + 9])
-        ipacked = payload[pos + 9]
-        pos += 10
-        ct = gct
-        if ipacked & 0x80:  # local color table
-            n = 2 ** ((ipacked & 0x07) + 1)
-            ct = np.frombuffer(payload, dtype=np.uint8, count=3 * n, offset=pos).reshape(n, 3)
-            pos += 3 * n
+        left, top, w, h, ipacked = struct.unpack("<HHHHB", take(9))
+        ct = color_table(ipacked) if ipacked & 0x80 else gct
         if ct is None:
             raise UnsupportedImageError("GIF frame has no color table")
-        min_code_size = payload[pos]
-        pos += 1
-        lzw = bytearray()
-        while pos < len(payload) and payload[pos] != 0:
-            size = payload[pos]
-            lzw += payload[pos + 1 : pos + 1 + size]
-            pos += 1 + size
-        pos += 1  # block terminator
-        indices = _gif_lzw_decode(bytes(lzw), min_code_size)
+        min_code_size = take(1)[0]
+        lzw = sub_blocks()
+        indices = _gif_lzw_decode(lzw, min_code_size)
         if len(indices) < w * h:
             raise UnsupportedImageError("GIF LZW stream shorter than frame")
         idx = (
@@ -1258,7 +1272,7 @@ def _gif_frames(payload: bytes):
             screen[top : top + ch_, left : left + cw_] = saved
         delay, transparent, disposal = 0, None, 0
     if not n_frames:
-        raise ValueError("GIF payload has no image frame")
+        raise UnsupportedImageError("GIF payload has no image frame")
 
 
 def decode_gif(payload: bytes) -> np.ndarray:

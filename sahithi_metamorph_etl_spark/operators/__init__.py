@@ -2,7 +2,7 @@ from .projection import normalize_columns, rename_positional, conform_to_contrac
 from .joins import join_on_clean_keys, semi_join, anti_join
 from .windows import top_k_per_group, sessionize
 from .aggregates import duplicate_keys
-from .quantiles import exact_quantiles, approx_quantiles, tier_by_cutoffs
+from .quantiles import approx_quantiles, tier_by_cutoffs
 
 __all__ = [
     "normalize_columns",
@@ -14,7 +14,6 @@ __all__ = [
     "top_k_per_group",
     "sessionize",
     "duplicate_keys",
-    "exact_quantiles",
     "approx_quantiles",
     "tier_by_cutoffs",
 ]

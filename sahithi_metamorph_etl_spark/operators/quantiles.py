@@ -6,8 +6,9 @@ then bakes the scalars into the plan. Both styles are supported:
 
 - ``approx_quantiles``: Greenwald-Khanna sketch, one pass, the right call
   at 100 TB (error budget explicit);
-- ``exact_quantiles``: in-plan ``percentile`` — exact, deterministic,
-  used where results are hash-compared against an oracle.
+- ``inplan_quantiles``: exact ``percentile`` as a 1-row frame joined
+  onto the plan — deterministic, used where results are hash-compared
+  against an oracle.
 """
 
 from __future__ import annotations
@@ -18,16 +19,6 @@ from pyspark.sql import functions as F
 
 def approx_quantiles(df: DataFrame, col: str, probs: list[float], rel_err: float = 0.01) -> list[float]:
     return df.approxQuantile(col, probs, rel_err)
-
-
-def exact_quantiles(df: DataFrame, col: str, probs: list[float]) -> list[float]:
-    """Exact linear-interpolated percentiles (one aggregate job; the
-    column is sorted per-group internally — fine for per-key scalars,
-    use approx_quantiles for whole-fact-table quantiles at scale)."""
-    row = df.select(
-        F.expr(f"percentile({col}, array({', '.join(str(p) for p in probs)}))").alias("q")
-    ).first()
-    return list(row["q"])
 
 
 def inplan_quantiles(df: DataFrame, col: str, probs: list[float], names: list[str]) -> DataFrame:

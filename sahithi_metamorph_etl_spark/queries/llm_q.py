@@ -831,9 +831,14 @@ def doc_neardup_stream(spark, sf_dir):
     import tempfile
     import time
 
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
     from ..streaming.neardup import neardup_ingest_stream
 
     docs = read_testdata(spark, sf_dir, "documents")
+    batch_id = (F.col("doc_id") % 3).cast("int").alias("batch_id")
+    table = docs.select("*", batch_id).toArrow()
     work = tempfile.mkdtemp(prefix="neardup_stream_")
     try:
         watch = os.path.join(work, "incoming")
@@ -843,16 +848,11 @@ def doc_neardup_stream(spark, sf_dir):
         # mtime order, so batch ids 0,1,2 map to doc_id % 3 == 0,1,2
         base = time.time() - 3600
         for b in range(3):
-            stage = os.path.join(work, f"stage{b}")
-            (
-                docs.filter(F.col("doc_id") % 3 == b)
-                .coalesce(1).write.mode("overwrite").parquet(stage)
-            )
-            part = next(
-                f for f in sorted(os.listdir(stage)) if f.endswith(".parquet")
-            )
             dst = os.path.join(watch, f"batch{b}.parquet")
-            shutil.move(os.path.join(stage, part), dst)
+            pq.write_table(
+                table.filter(pc.equal(table["batch_id"], b)).select(docs.columns),
+                dst,
+            )
             os.utime(dst, (base + b * 60, base + b * 60))
         corpus = os.path.join(work, "corpus")
         store = os.path.join(work, "store")
@@ -868,18 +868,19 @@ def doc_neardup_stream(spark, sf_dir):
             q.processAllAvailable()
         finally:
             q.stop()
-        landed = spark.read.parquet(corpus).select(
+        # the stream's own writer produced these: read them back with
+        # the known schema instead of inferring it from a footer
+        written = "doc_id bigint, __BATCH_ID int"
+        landed = spark.read.schema(written).parquet(corpus).select(
             "doc_id", F.lit(True).alias("is_novel")
         )
         store_rows = (
-            spark.read.parquet(store)
+            spark.read.schema(written).parquet(store)
             .groupBy("doc_id")
             .agg(F.count(F.lit(1)).alias("n_store_rows"))
         )
         out = (
-            docs.select(
-                "doc_id", (F.col("doc_id") % 3).cast("int").alias("batch_id")
-            )
+            docs.select("doc_id", batch_id)
             .join(landed, "doc_id", "left")
             .join(store_rows, "doc_id", "left")
             .select(

@@ -50,6 +50,7 @@ from sahithi_metamorph_etl_spark.llm.similarity import (  # noqa: E402
     sq8_build_index,
     sq8_search,
 )
+from sahithi_metamorph_etl_spark.queries.llm_q import _seed_unit_vectors  # noqa: E402
 from sahithi_metamorph_etl_spark.streaming.neardup import (  # noqa: E402
     neardup_ingest_stream,
 )
@@ -69,14 +70,6 @@ def timed_best(fn, n=3):
         best = el if best is None else min(best, el)
     _SPARK.catalog.clearCache()
     return best
-
-
-def _seed_unit_vectors(emb, n: int):
-    import numpy as np
-
-    rows = emb.select("vec_id", "embedding").orderBy("vec_id").limit(n).collect()
-    xs = np.array([r[1] for r in rows], dtype=np.float64)
-    return xs / np.maximum(np.linalg.norm(xs, axis=1, keepdims=True), 1e-12)
 
 
 def sq8_ivf_surface(spark, emb, res: dict, tag: str) -> None:

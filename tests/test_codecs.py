@@ -816,3 +816,36 @@ def test_jpeg_decoded_pixels_are_pinned(name):
     px = codecs.decode_jpeg(_PINNED_PAYLOADS[name]())
     digest = hashlib.sha256(repr(px.shape).encode() + px.tobytes()).hexdigest()
     assert digest == _PINNED_PIXELS[name]
+
+
+def test_gif_truncated_prefixes_decode_or_refuse():
+    """Every prefix of an animation that keeps the GIF signature either
+    decodes — a payload cut between blocks lacks only its trailer, and
+    the frames read so far stand — or refuses with exactly
+    UnsupportedImageError, never a bare struct, index or numpy error
+    from a cut inside an extension, a descriptor or a color table."""
+    frames = [np.full((5, 7, 3), c, dtype=np.uint8) for c in (10, 80, 200)]
+    payload = codecs.encode_gif_animation(frames, [3, 5, 7])
+    decoded = 0
+    for k in range(6, len(payload)):
+        try:
+            dec = codecs.decode_gif_frames(payload[:k])
+        except Exception as e:  # noqa: BLE001 - the type is the assertion
+            assert type(e) is codecs.UnsupportedImageError, (k, repr(e))
+        else:
+            decoded += 1
+            assert all(np.array_equal(f, g) for (_, f), g in zip(dec, frames))
+    assert decoded
+    assert len(codecs.decode_gif_frames(payload[:-1])) == 3
+
+
+@pytest.mark.parametrize("name", ["jpeg_restart", "prog_restart"])
+def test_jpeg_out_of_order_restart_marker_refuses(name):
+    """A restart interval must end in the expected RSTm (m = restart
+    count mod 8): rewriting the first RST0 to RST5 refuses instead of
+    resynchronizing on whatever marker comes next."""
+    payload = _PINNED_PAYLOADS[name]()
+    rst = payload.index(b"\xff\xd0", payload.index(b"\xff\xda"))
+    bad = payload[: rst + 1] + b"\xd5" + payload[rst + 2 :]
+    with pytest.raises(codecs.UnsupportedImageError, match="RST0 expected"):
+        codecs.decode_jpeg(bad)

@@ -931,131 +931,6 @@ def test_read_prior_distinguishes_empty_store_from_corrupted(spark, tmp_path):
     assert [r["doc_id"] for r in prior.collect()] == [1]
 
 
-def test_hidden_component_rule_matches_spark_jvm(spark):
-    """The probe's hidden-path predicate must be an EXACT mirror of
-    Spark's ``HadoopFSUtils.shouldFilterOutPathName`` — any divergence
-    re-opens the r14 ADVICE bug class where the probe and the reader
-    disagree about which files exist (probe misses what the reader
-    sees → corrupted store silently reads as empty; probe sees what
-    the reader hides → a recoverable crashed write wedges as
-    "corrupted"). Pinned name-by-name against the JVM original over
-    randomized names plus every structural edge case."""
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    from sahithi_metamorph_etl_spark.streaming.neardup import (
-        _is_hidden_component,
-    )
-
-    jvm_rule = spark._jvm.org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName
-
-    edge_cases = [
-        "_SUCCESS", "_committed_123", "_started_123", "_temporary",
-        "__BATCH_ID=3", "_m=x", "a=b", ".hidden", "._x", ".=",
-        "_metadata", "_common_metadata", "_metadata.parquet",
-        "_common_metadata_extra", "part-00000.snappy.parquet",
-        "part-0._COPYING_", "_part._COPYING_", "__BATCH_ID=3._COPYING_",
-        "_", ".", "=", "_=",
-    ]
-    for name in edge_cases:
-        assert _is_hidden_component(name) == jvm_rule(name), name
-
-    name_st = st.text(alphabet=list("_.=abZ0-"), min_size=1, max_size=12)
-
-    @settings(max_examples=200, deadline=None)
-    @given(name_st)
-    def check(name):
-        assert _is_hidden_component(name) == jvm_rule(name), name
-
-    check()
-
-
-def test_hidden_rule_prefers_jvm_and_falls_back_to_mirror(spark):
-    """The probe consults Spark's OWN predicate when reachable (so the
-    probe and the reader cannot diverge on that Spark) and only drops
-    to the test-pinned Python mirror when a future Spark moves the
-    internal method (it migrated from InMemoryFileIndex once before)."""
-    from sahithi_metamorph_etl_spark.streaming.neardup import (
-        _hidden_rule,
-        _is_hidden_component,
-    )
-
-    primary = _hidden_rule(spark._jvm)
-    assert primary is not _is_hidden_component  # JVM rule reachable here
-    assert primary("_SUCCESS") and not primary("__BATCH_ID=3")
-
-    class _NoSuchJvm:
-        def __getattr__(self, name):
-            raise AttributeError(name)
-
-    assert _hidden_rule(_NoSuchJvm()) is _is_hidden_component
-
-
-def test_hidden_rule_fallback_logs_which_predicate_ran(caplog):
-    """r15 ADVICE (low): the bare ``except Exception`` in _hidden_rule
-    catches ANY Py4J failure (transient gateway errors included), not
-    only a moved/removed method, so without a log line it is impossible
-    to tell from production logs which predicate actually ran. The
-    fallback must leave a debug-level note naming the mirror."""
-    import logging
-
-    from sahithi_metamorph_etl_spark.streaming.neardup import (
-        _hidden_rule,
-        _is_hidden_component,
-    )
-
-    class _NoSuchJvm:
-        def __getattr__(self, name):
-            raise AttributeError(name)
-
-    with caplog.at_level(
-        logging.DEBUG, logger="sahithi_metamorph_etl_spark.streaming.neardup"
-    ):
-        assert _hidden_rule(_NoSuchJvm()) is _is_hidden_component
-    notes = [
-        r for r in caplog.records
-        if r.levelno == logging.DEBUG and "Python mirror" in r.getMessage()
-    ]
-    assert notes, "fallback to the mirror must log a debug-level note"
-    assert "shouldFilterOutPathName" in notes[0].getMessage()
-
-
-def test_has_data_files_memoizes_component_verdicts(spark, tmp_path, monkeypatch):
-    """r15 ADVICE (low): with the JVM predicate selected, every verdict
-    is a Py4J round-trip, and path components repeat heavily across a
-    partitioned listing (every staged file shares ``_temporary``; part
-    basenames recur across partition dirs). The probe must evaluate the
-    rule once per DISTINCT component, not once per (file x component),
-    or a large store hitting the UNABLE_TO_INFER_SCHEMA path pays
-    thousands of needless round-trips."""
-    from sahithi_metamorph_etl_spark.streaming import neardup as nd
-
-    # a crashed-write store: 8 staged files under one _temporary tree —
-    # all hidden, so the probe walks the ENTIRE listing (no early
-    # return) and, unmemoized, would evaluate '_temporary' 8 times
-    store = tmp_path / "nd_store_memo"
-    staged = store / "_temporary" / "0"
-    staged.mkdir(parents=True)
-    for i in range(8):
-        (staged / f"part-0000{i}-aaaa.snappy.parquet").write_bytes(b"PAR1junk")
-
-    calls: list[str] = []
-
-    def counting_rule(jvm):
-        def rule(s):
-            calls.append(s)
-            return nd._is_hidden_component(s)
-        return rule
-
-    monkeypatch.setattr(nd, "_hidden_rule", counting_rule)
-    assert nd._has_data_files(spark, str(store)) is False
-    assert calls, "probe must have consulted the rule"
-    assert len(calls) == len(set(calls)), (
-        "hidden-path rule must be evaluated at most once per distinct "
-        f"component; saw repeats in {calls}"
-    )
-
-
 def test_neardup_ingest_stream_releases_caches_per_batch(spark, tmp_path):
     """Steady-state cache hygiene: every micro-batch persists the novel
     frame and the collision-candidate frame, and BOTH must drop when
@@ -1098,3 +973,66 @@ def test_neardup_ingest_stream_releases_caches_per_batch(spark, tmp_path):
         f"stream leaked {after - before} pinned cache entr(ies) across "
         "3 micro-batches"
     )
+
+
+def test_neardup_ingest_stream_steady_batch_job_budget(spark, tmp_path):
+    """Steady-state cost: a micro-batch that collides with a prior
+    store decides novelty ONCE — the verified-dup ids are collected a
+    single time and both sink writes anti-join that local frame, so no
+    part of the dedup pipeline runs again for the second write.
+    ``foreachBatch`` jobs do not inherit a job group; the stream tags
+    each with ``id = <query id>`` and ``batch = <n>`` in its
+    description, which is what this counts."""
+    import shutil as _shutil
+    import time as _time
+
+    from sahithi_metamorph_etl_spark.streaming.neardup import (
+        neardup_ingest_stream,
+    )
+
+    def words(tag, edit=None):
+        return " ".join(
+            "EDIT" if t == edit else f"{tag}_{t}" for t in range(30)
+        )
+
+    schema = "doc_id bigint, text string"
+    src = tmp_path / "ndj_src"
+    src.mkdir()
+    batches = [
+        [(0, words("w0")), (1, words("w1")), (2, words("w2"))],
+        [(10, words("w0", edit=5)), (11, words("n1"))],
+        [(20, words("w1", edit=7)), (21, words("n2"))],
+    ]
+    for i, rows_ in enumerate(batches):
+        stage = tmp_path / f"ndj_stage_{i}"
+        spark.createDataFrame(rows_, schema).coalesce(1).write.parquet(str(stage))
+        _shutil.copy(next(stage.glob("part-*.parquet")), src / f"{i:02d}.parquet")
+        _time.sleep(1.05)
+    stream = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(src))
+    )
+    corpus = str(tmp_path / "ndj_corpus")
+    q = neardup_ingest_stream(
+        stream, corpus, str(tmp_path / "ndj_store"),
+        str(tmp_path / "ndj_ckpt"), threshold=0.5,
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    kept = sorted(r["doc_id"] for r in spark.read.parquet(corpus).collect())
+    assert kept == [0, 1, 2, 11, 21]
+
+    jobs = spark.sparkContext._jsc.sc().statusStore().jobsList(None)
+    per_batch = [0, 0, 0]
+    for i in range(jobs.size()):
+        desc = jobs.apply(i).description()
+        lines = desc.get().splitlines() if desc.isDefined() else []
+        if f"id = {q.id}" in lines:
+            for b in range(3):
+                per_batch[b] += f"batch = {b}" in lines
+    # batches 1 and 2 are steady state: a prior store and a verified
+    # duplicate each
+    assert max(per_batch[1:]) <= 18, per_batch
