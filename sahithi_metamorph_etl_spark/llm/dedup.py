@@ -18,29 +18,39 @@ written once:
    - :func:`minhash_lsh_pairs`: equal LSH band signatures (64 perms,
      16 bands x 4 rows — Broder MinHash / LSH banding as in Mining of
      Massive Datasets ch.3);
-   - :func:`neardup_against_seen`: the same band signatures joined
-     against a persisted store of prior snapshots.
-3. ONE VERIFY — :func:`_verify_jaccard` scores candidates by
-   ``size(array_intersect)`` over the per-doc hash arrays and keeps
-   Jaccard >= threshold.
+   - :func:`neardup_against_seen`: the same band signatures of a
+     bounded batch, probed against a persisted store of prior
+     snapshots.
+3. VERIFY — the self-join producers share one Spark verify,
+   :func:`_verify_jaccard`: ``size(array_intersect)`` over the per-doc
+   hash arrays, keeping Jaccard >= threshold. The against-seen
+   decision (:func:`_decide_against_seen`) is per batch and runs on
+   the driver: the batch's hash arrays are collected once, and its
+   candidate pairs are scored there with the same formula, to the same
+   double.
 
 The four share one threshold rule (:func:`_check_threshold`: (0, 1])
 and one hot-key cap (:func:`_key_counts`, also behind
 :func:`passage_dups`). Exact dedup is one hash-aggregate on a content
 fingerprint (1 shuffle); SimHash is a 64-bit sign-of-weighted-sum
 signature (Charikar) with hamming chunk buckets for candidates.
-Everything is DataFrame ops except the MinHash min-matrix, one Arrow
-batch pass.
+Everything is DataFrame ops except the MinHash band kernel
+(:func:`_band_kernel`), which runs in one Arrow batch pass over a
+corpus and on the driver over a batch.
 """
 
 from __future__ import annotations
 
 import random
 
+import pyarrow as pa
 from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_type
 
+from ..core.frames import local_frame
 from ..operators.windows import CacheRelease
 from .textstats import content_fingerprint
 
@@ -452,6 +462,52 @@ def _perm_params(num_perm: int, seed: int = 42) -> list[tuple[int, int, int]]:
     ]
 
 
+def _band_kernel(num_perm: int, bands: int):
+    """The one MinHash-LSH band kernel: ``kernel(ids, hash_arrays) ->
+    (ids, bands, sigs)``, one output row per (doc, band), where
+    ``hash_arrays`` holds each doc's xxhash64 shingle hashes (as
+    :func:`_shingle_hash_arrays` emits them) and ``sig`` is the band's
+    min-hashes joined with commas. The vectorized a*h+b mod p
+    min-matrix runs per doc (a, h < 2^31, so the uint64 product cannot
+    overflow). Docs with no hashes (< n tokens) emit no rows.
+
+    A nested function from this factory, so cloudpickle ships it BY
+    VALUE to the Arrow workers of :func:`band_signature_store` (they
+    import nothing from this package), and the driver-side decision of
+    :func:`_decide_against_seen` runs the very same function."""
+    import numpy as np
+
+    if bands <= 0 or num_perm % bands != 0:
+        raise ValueError(
+            f"bands ({bands}) must evenly divide num_perm ({num_perm}); "
+            "a non-divisor silently drops permutations and bands > num_perm "
+            "would bucket every document together"
+        )
+    rows_per_band = num_perm // bands
+    perm_a = np.array([a for _, a, _ in _perm_params(num_perm)], dtype=np.uint64)
+    perm_b = np.array([b for _, _, b in _perm_params(num_perm)], dtype=np.uint64)
+    mersenne = np.uint64(_MERSENNE31)
+
+    def kernel(ids, hash_arrays):
+        import numpy as np
+
+        out_id, out_band, out_sig = [], [], []
+        for doc_id, hs_list in zip(ids, hash_arrays):
+            if hs_list is None or len(hs_list) == 0:  # < n tokens
+                continue
+            hs = np.asarray(hs_list, dtype=np.int64).view(np.uint64) % mersenne
+            mins = ((hs[:, None] * perm_a[None, :] + perm_b[None, :]) % mersenne).min(axis=0)
+            for j in range(bands):
+                out_id.append(doc_id)
+                out_band.append(j)
+                out_sig.append(
+                    ",".join(str(v) for v in mins[j * rows_per_band : (j + 1) * rows_per_band])
+                )
+        return out_id, out_band, out_sig
+
+    return kernel
+
+
 def band_signature_store(
     df: DataFrame,
     text_col: str = "text",
@@ -468,46 +524,19 @@ def band_signature_store(
     Zero-shuffle, split JVM/Python at the right seam:
     tokenize→shingle→xxhash64 runs in whole-stage codegen
     (_shingle_hash_arrays — Python never sees a string), then one Arrow
-    batch pass does the vectorized a*h+b mod p min-matrix per doc
-    (a,h < 2^31 so the uint64 product can't overflow); only
-    |docs| x bands tiny signature rows ever leave the partition.
-    Self-contained closure — pickles by value, no package refs on
-    workers. (The previous all-Python form md5-hashed every shingle in
-    a Python loop — ~1.5M hashlib calls at sf0.1, the single hottest
-    Python section in the bench.) Docs with < n tokens emit no rows.
-    In production, bucket the persisted store by (band, sig)
-    (sinks/warehouse.write_bucketed) so the daily collision join is
-    co-located."""
-    import numpy as np
-
-    if bands <= 0 or num_perm % bands != 0:
-        raise ValueError(
-            f"bands ({bands}) must evenly divide num_perm ({num_perm}); "
-            "a non-divisor silently drops permutations and bands > num_perm "
-            "would bucket every document together"
-        )
-    rows_per_band = num_perm // bands
-    perm_a = np.array([a for _, a, _ in _perm_params(num_perm)], dtype=np.uint64)
-    perm_b = np.array([b for _, _, b in _perm_params(num_perm)], dtype=np.uint64)
-    mersenne = np.uint64(_MERSENNE31)
+    batch pass runs the band kernel (:func:`_band_kernel`) per doc;
+    only |docs| x bands tiny signature rows ever leave the partition.
+    The kernel pickles by value, so workers need no package. (The
+    previous all-Python form md5-hashed every shingle in a Python
+    loop — ~1.5M hashlib calls at sf0.1, the single hottest Python
+    section in the bench.) Docs with < n tokens emit no rows."""
+    kernel = _band_kernel(num_perm, bands)
 
     def band_signatures(batches):
-        import numpy as np
         import pandas as pd
 
         for pdf in batches:
-            out_id, out_band, out_sig = [], [], []
-            for doc_id, hs_list in zip(pdf["__id"], pdf["__hs"]):
-                if hs_list is None or len(hs_list) == 0:  # < n tokens
-                    continue
-                hs = np.asarray(hs_list, dtype=np.int64).view(np.uint64) % mersenne
-                mins = ((hs[:, None] * perm_a[None, :] + perm_b[None, :]) % mersenne).min(axis=0)
-                for j in range(bands):
-                    out_id.append(doc_id)
-                    out_band.append(j)
-                    out_sig.append(
-                        ",".join(str(v) for v in mins[j * rows_per_band : (j + 1) * rows_per_band])
-                    )
+            out_id, out_band, out_sig = kernel(pdf["__id"], pdf["__hs"])
             yield pd.DataFrame({"__band_id": out_id, "band": out_band, "sig": out_sig}).astype(
                 {"__band_id": "int64", "band": "int32", "sig": "string"}
             )
@@ -520,6 +549,113 @@ def band_signature_store(
     )
 
 
+def _arrays_by_id(ids: list, arrays: list) -> dict:
+    """``{id: [hash array, ...]}`` — a list per id, so a repeated id
+    scores every one of its rows, as the inner joins of
+    :func:`_verify_jaccard` do."""
+    out: dict = {}
+    for i, hs in zip(ids, arrays):
+        out.setdefault(i, []).append(hs)
+    return out
+
+
+def _store_probe(seen_bands: DataFrame, sigs: DataFrame, id_col: str) -> DataFrame:
+    """``(id, seen_id)`` collision rows of the batch signatures ``sigs``
+    (a local frame) against the band store ``seen_bands``: one scan of
+    the store, joined on (band, sig) to the BROADCAST batch side, so
+    the store is never shuffled, in any layout. One row per colliding
+    band (deduplicated by the caller); self-pairs and null ids drop."""
+    seen = seen_bands.select(F.col(id_col).alias("seen_id"), "band", "sig")
+    return (
+        seen.join(F.broadcast(sigs), ["band", "sig"])
+        .select(id_col, "seen_id")
+        .filter(F.col(id_col) != F.col("seen_id"))
+    )
+
+
+def _decide_against_seen(
+    new_df: DataFrame,
+    seen_bands: DataFrame | None,
+    old_df: DataFrame | None,
+    text_col: str,
+    id_col: str,
+    n: int,
+    num_perm: int,
+    bands: int,
+    threshold: float,
+    store_name: str = "seen_bands",
+    corpus_name: str = "old_df",
+):
+    """The one near-dup-against-seen decision, held on the driver:
+    ``(sigs, pairs)`` — the batch's ``(id, band, sig)`` signatures as an
+    Arrow table and its verified ``(id, seen_id, jaccard)`` tuples.
+
+    Spark runs only what touches data outside the batch:
+
+    1. one collect of the batch's ``(id, __hs)`` shingle-hash arrays;
+    2. the band kernel (:func:`_band_kernel`) on those arrays — no
+       Python stage;
+    3. one store scan joined to the broadcast batch signatures
+       (:func:`_store_probe`), collected;
+    4. one scan of ``old_df`` semi-joined to the broadcast candidate
+       seen ids, whose hash arrays are collected.
+
+    The exact verify then scores the candidate pairs only, with
+    ``c = len(set(A) & set(B))`` and ``c / (len(A) + len(B) - c)`` —
+    the same IEEE double as :func:`_verify_jaccard`'s
+    ``size(array_intersect)`` division. With no store (``seen_bands``
+    None) there are no pairs. A candidate whose seen doc has no row in
+    ``old_df`` raises ``RuntimeError``: the store and the payloads
+    disagree, and dropping the candidate would pass its doc as novel."""
+    _check_threshold(threshold, "neardup_against_seen")
+    kernel = _band_kernel(num_perm, bands)
+    spark = new_df.sparkSession
+    hs = _shingle_hash_arrays(new_df, text_col, id_col, n).toArrow()
+    ids, arrays = hs.column(id_col).to_pylist(), hs.column("__hs").to_pylist()
+    out_id, out_band, out_sig = kernel(ids, arrays)
+    sigs = pa.table({
+        id_col: pa.array(out_id, to_arrow_type(new_df.schema[id_col].dataType)),
+        "band": pa.array(out_band, pa.int32()),
+        "sig": pa.array(out_sig, pa.string()),
+    })
+    if seen_bands is None or not out_id:
+        return sigs, []
+    sig_frame = local_frame(spark, sigs, from_arrow_schema(sigs.schema))
+    cand = _store_probe(seen_bands, sig_frame, id_col).toArrow()
+    cand_pairs = sorted(set(zip(cand.column(id_col).to_pylist(), cand.column("seen_id").to_pylist())))
+    if not cand_pairs:
+        return sigs, []
+    seen_ids = sorted({s for _, s in cand_pairs})
+    old = {}
+    if old_df is not None:
+        probe = local_frame(
+            spark, [(s,) for s in seen_ids],
+            T.StructType([T.StructField(id_col, seen_bands.schema[id_col].dataType)]),
+        )
+        found = _shingle_hash_arrays(
+            old_df.join(F.broadcast(probe), id_col, "left_semi"), text_col, id_col, n
+        ).toArrow()
+        old = _arrays_by_id(found.column(id_col).to_pylist(), found.column("__hs").to_pylist())
+    missing = [s for s in seen_ids if s not in old]
+    if missing:
+        raise RuntimeError(
+            f"near-dup store {store_name!r} names {len(missing)} seen doc(s) "
+            f"with no payload in corpus {corpus_name!r} (e.g. {missing[:5]}): "
+            "the store and the corpus disagree — a corrupted or mismatched "
+            "corpus; refusing to pass their near-duplicates as novel"
+        )
+    new = _arrays_by_id(ids, arrays)
+    pairs = []
+    for i, s in cand_pairs:
+        for a in new[i]:
+            for b in old[s]:
+                c = len(set(a) & set(b))
+                jac = c / (len(a) + len(b) - c)
+                if jac >= threshold:
+                    pairs.append((i, s, jac))
+    return sigs, pairs
+
+
 def neardup_against_seen(
     new_df: DataFrame,
     seen_bands: DataFrame,
@@ -530,92 +666,48 @@ def neardup_against_seen(
     num_perm: int = 64,
     bands: int = 16,
     threshold: float = 0.8,
-    return_release: bool = False,
-    new_sigs: DataFrame | None = None,
-):
+) -> DataFrame:
     """Incremental (cross-snapshot) NEAR-dup detection: which documents
     of the incoming batch near-duplicate something already in the
     corpus? The MinHash complement of :func:`dedup_against_seen`
     (which catches only EXACT fingerprint repeats — a one-word edit
-    defeats it). Returns verified (id, seen_id, jaccard) pairs, one row
-    per (new doc, seen doc) with word-``n``-gram Jaccard >=
-    ``threshold``; anti-join the batch against the distinct ids to keep
-    only novel docs, and append ``band_signature_store(novel)`` to the
-    store for the next batch.
+    defeats it). Returns verified (id, seen_id, jaccard) pairs as a
+    local frame, one row per (new doc, seen doc) with word-``n``-gram
+    Jaccard >= ``threshold``; anti-join the batch against the distinct
+    ids to keep only novel docs, and append ``band_signature_store(novel)``
+    to the store for the next batch.
 
     ``seen_bands`` is the persisted (id, band, sig) store from prior
     snapshots (:func:`band_signature_store`); ``old_df`` holds the
     prior snapshots' payloads and is touched ONLY for candidate
-    verification (semi-joined down to colliding docs first).
+    verification (semi-joined down to colliding docs first). A
+    candidate whose seen doc has no payload in ``old_df`` raises
+    ``RuntimeError``.
 
-    SCALE SHAPE: batch signatures are zero-shuffle; the collision join
-    hash-partitions on (band, sig) — co-located for free when the store
-    is bucketed on those keys, and the batch side broadcasts in steady
-    state (today's batch << corpus); verification shingles ONLY the
-    colliding docs on both sides (the sub-quadratic point: candidates,
-    never |batch| x |corpus|). Recall is the standard banded bound —
-    1-(1-s^r)^b, ~0.99+ at s=0.8 with 16 bands x 4 rows.
-
-    With ``return_release=True`` returns ``(pairs, CacheRelease)`` —
-    the ``jaccard_pairs`` lifetime contract: the candidate frame stays
-    pinned until :meth:`CacheRelease.release` is called after the
-    result materializes. Spark's CacheManager holds each persisted
-    entry until explicit unpersist, so a LONG-LIVED caller that
-    invokes this repeatedly (the streaming ingest loop calls it once
-    per micro-batch) MUST use this form — the default's
-    freed-with-the-session rationale only holds for one-shot batch
-    jobs.
+    SCALE SHAPE: the batch is bounded (one day, one micro-batch), so
+    its side of the decision runs on the driver
+    (:func:`_decide_against_seen`): one collect of its shingle-hash
+    arrays, the band signatures and the exact verify are local. Spark
+    runs one store scan against the broadcast batch signatures (the
+    store is never shuffled) and one payload scan semi-joined to the
+    candidate seen ids — candidates, never |batch| x |corpus|. Nothing
+    is persisted. Recall is the standard banded bound — 1-(1-s^r)^b,
+    ~0.99+ at s=0.8 with 16 bands x 4 rows.
 
     ``threshold`` must lie in (0, 1] (``ValueError`` otherwise, as for
-    every pair producer here).
-
-    ``new_sigs`` (an (id, band, sig) frame for exactly ``new_df``,
-    i.e. ``band_signature_store(new_df, ...)`` at the SAME
-    n/num_perm/bands) skips recomputing the batch signatures — for a
-    caller that also needs them downstream (the streaming ingest loop
-    extends the store with the novel subset of the same frame), the
-    shingle+minhash pass then runs ONCE per batch, not twice."""
-    _check_threshold(threshold, "neardup_against_seen")
-    if new_sigs is None:
-        new_sigs = band_signature_store(new_df, text_col, id_col, n, num_perm, bands)
-    seen = seen_bands.select(
-        F.col(id_col).alias("seen_id"), F.col("band"), F.col("sig")
+    every pair producer here)."""
+    _, pairs = _decide_against_seen(
+        new_df, seen_bands, old_df, text_col, id_col, n, num_perm, bands, threshold
     )
-    # candidate-pair-sized by the banding argument (collisions, never
-    # |batch| x |corpus|) and consumed by THREE downstream branches
-    # (both semi-joins + the final assembly) — persist so the collision
-    # join against the store runs once per call, not three times
-    candidates = (
-        new_sigs.join(seen, ["band", "sig"])
-        .select(F.col(id_col), "seen_id")
-        .filter(F.col(id_col) != F.col("seen_id"))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    return local_frame(
+        new_df.sparkSession,
+        pairs,
+        T.StructType([
+            new_df.schema[id_col],
+            T.StructField("seen_id", seen_bands.schema[id_col].dataType),
+            T.StructField("jaccard", T.DoubleType()),
+        ]),
     )
-    # exact-verify candidates only: shingle just the colliding docs.
-    # The candidate id lists are tiny — broadcast the semi-join probes,
-    # WITHOUT a distinct: a semi-join matches on ANY build row, so
-    # duplicate probe ids are semantically inert, and dropping the
-    # per-column distinct removes one exchange+aggregate per probe
-    # (guide §2.4 — the streaming loop pays these every micro-batch).
-    arr_new = _shingle_hash_arrays(
-        new_df.join(
-            F.broadcast(candidates.select(id_col)),
-            id_col, "left_semi",
-        ),
-        text_col, id_col, n,
-    )
-    arr_old = _shingle_hash_arrays(
-        old_df.join(
-            F.broadcast(candidates.select(F.col("seen_id").alias(id_col))),
-            id_col, "left_semi",
-        ),
-        text_col, id_col, n,
-    )
-    pairs = _verify_jaccard(
-        candidates, arr_new, arr_old, id_col, threshold, a=id_col, b="seen_id"
-    )
-    return _with_release(pairs, candidates, return_release)
 
 
 def minhash_lsh_pairs(

@@ -11,7 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..core.frames import localize
+from ..core.frames import local_frame, localize
 from ..functions.money import o_round
 from ..llm.dedup import (
     containment_pairs,
@@ -744,10 +744,10 @@ WHERE n_common * 1.0 / (x.n + y.n - n_common) >= 0.8
               "collides its MinHash band signatures against the persisted band "
               "store of the prior corpus (doc_id < 250), then exact-verifies only "
               "the colliding pairs — catches the one-word-edit repeats that "
-              "fingerprint-based doc_incremental_dedup misses. Batch signatures "
-              "are zero-shuffle; the collision join is co-located when the store "
-              "is bucketed on (band, sig); verification shingles colliding docs "
-              "only, never |batch| x |corpus|. HASH-GRADE: verified pairs equal "
+              "fingerprint-based doc_incremental_dedup misses. The batch is decided "
+              "on the driver: its signatures are computed locally, the store is "
+              "one scan against them (broadcast, never shuffled), and verification "
+              "reads the colliding seen docs only, never |batch| x |corpus|. HASH-GRADE: verified pairs equal "
               "exact cross-snapshot Jaccard >= 0.8 (banded miss p~2e-4 at s=0.8)")
 def doc_neardup_incremental(spark, sf_dir):
     from ..llm.dedup import band_signature_store, neardup_against_seen
@@ -826,11 +826,13 @@ LEFT JOIN sz ON sz.doc_id = t.doc_id
               "replay-determinism contract is what makes the steady-state "
               "loop oracle-replayable at all")
 def doc_neardup_stream(spark, sf_dir):
+    import glob
     import os
     import shutil
     import tempfile
     import time
 
+    import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
@@ -868,29 +870,27 @@ def doc_neardup_stream(spark, sf_dir):
             q.processAllAvailable()
         finally:
             q.stop()
-        # the stream's own writer produced these: read them back with
-        # the known schema instead of inferring it from a footer
-        written = "doc_id bigint, __BATCH_ID int"
-        landed = spark.read.schema(written).parquet(corpus).select(
-            "doc_id", F.lit(True).alias("is_novel")
+        # the stream's own writer produced these: read back only their
+        # doc ids with pyarrow and grade on the driver (no Spark job)
+        def landed_ids(path):
+            files = glob.glob(os.path.join(path, "__BATCH_ID=*", "*.parquet"))
+            if not files:
+                return pa.array([], pa.int64())
+            return pq.read_table(files, columns=["doc_id"])["doc_id"].combine_chunks()
+
+        ids = table["doc_id"]
+        counts = landed_ids(store).value_counts()
+        n_store = pc.take(counts.field("counts"), pc.index_in(ids, counts.field("values")))
+        out = pa.table({
+            "doc_id": ids,
+            "batch_id": table["batch_id"],
+            "is_novel": pc.is_in(ids, landed_ids(corpus)),
+            "n_store_rows": pc.fill_null(n_store, 0),
+        })
+        return local_frame(
+            spark, out,
+            "doc_id bigint, batch_id int, is_novel boolean, n_store_rows bigint",
         )
-        store_rows = (
-            spark.read.schema(written).parquet(store)
-            .groupBy("doc_id")
-            .agg(F.count(F.lit(1)).alias("n_store_rows"))
-        )
-        out = (
-            docs.select("doc_id", batch_id)
-            .join(landed, "doc_id", "left")
-            .join(store_rows, "doc_id", "left")
-            .select(
-                "doc_id", "batch_id",
-                F.coalesce("is_novel", F.lit(False)).alias("is_novel"),
-                F.coalesce("n_store_rows", F.lit(0)).cast("bigint").alias("n_store_rows"),
-            )
-        )
-        # localize before the tempdir (and its parquet listings) vanish
-        return localize(out)
     finally:
         shutil.rmtree(work, ignore_errors=True)
 

@@ -3,13 +3,15 @@ Streaming pipeline — the daily-batch loop the batch operator
 (:func:`..llm.dedup.neardup_against_seen`) documents, wired end to
 end: each micro-batch collides with the persisted band store, only
 content-novel documents land, and their signatures extend the store
-for the next batch. Novelty is decided once per micro-batch: the
-verified duplicate ids are collected to a local frame, and both sink
-writes anti-join it.
+for the next batch. Novelty is decided once per micro-batch, on the
+driver, by the same decision ``neardup_against_seen`` runs; both sink
+writes come from its result.
 
-Reading prior state tells an empty store from a corrupted one by
+Reading the prior store tells an empty store from a corrupted one by
 asking the parquet reader's own file index (``inputFiles``) whether
 it lists any data file — no second copy of Spark's hidden-path rule.
+The prior corpus is read with the batch's own schema; a corpus that
+lost a payload the store still names fails the decision instead.
 
 Reference parity: the reference engine has no streaming dedup; this is
 part of the LLM-curation extension surface (SURVEY.md §2 extras),
@@ -19,11 +21,15 @@ stack.
 
 from __future__ import annotations
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_schema
 
-from ..core.frames import localize
-from ..llm.dedup import band_signature_store, neardup_against_seen
+from ..core.frames import local_frame
+from ..llm.dedup import _decide_against_seen
 
 
 def _has_data_files(spark, path: str) -> bool:
@@ -40,7 +46,9 @@ def _has_data_files(spark, path: str) -> bool:
     return bool(spark.read.schema("_probe int").parquet(path).inputFiles())
 
 
-def _read_prior(spark, path: str, batch_id: int) -> DataFrame | None:
+def _read_prior(
+    spark, path: str, batch_id: int, schema: T.StructType | None = None
+) -> DataFrame | None:
     """Batches strictly BEFORE ``batch_id`` from a __BATCH_ID-partitioned
     path, or None when nothing earlier exists. The strict bound is the
     replay keystone: a crash between the sink writes and the checkpoint
@@ -57,17 +65,22 @@ def _read_prior(spark, path: str, batch_id: int) -> DataFrame | None:
     only after Spark logs a WARN with a full ``FileNotFoundException``
     trace on every stream start.
 
-    The read infers its schema on purpose (one footer job): a
+    Without ``schema`` the read infers it on purpose (one footer job): a
     known-schema read plans no split for a zero-length part file, even
     with ``ignoreCorruptFiles=false``, so a store of zero-length husks
     would read as "no prior data" instead of failing. When inference
     finds no footer, :func:`_has_data_files` asks the reader's file
-    index whether the store is empty or corrupted."""
+    index whether the store is empty or corrupted. With ``schema`` (the
+    corpus, whose columns are the batch's) the read starts no job; a
+    lost or zero-length corpus payload then reads as absent, and the
+    decision raises for the store candidate that names it."""
     from pyspark.errors import AnalysisException
 
     hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
     if not hpath.getFileSystem(spark._jsc.hadoopConfiguration()).exists(hpath):
         return None
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path).filter(F.col("__BATCH_ID") < batch_id)
     try:
         df = spark.read.parquet(path)
     except AnalysisException as e:
@@ -111,77 +124,68 @@ def neardup_ingest_stream(
 ):
     """Start the incremental near-dup ingestion stream: per micro-batch
 
-    1. detect near-duplicates of the batch against the PERSISTED band
-       store (``neardup_against_seen`` — collision join + exact
-       verification, never batch x corpus),
-    2. collect the detected ids once to a local frame and anti-join
-       the batch and its signatures against it → novel documents,
-    3. append the novel payloads to ``corpus_path`` and their band
-       signatures to ``store_path``, each under the batch's own
-       ``__BATCH_ID`` partition with dynamic partition overwrite — the
-       ``stream_to_legacy`` exactly-once treatment: a replayed batch
-       REPLACES its own files instead of appending duplicates, and
-       both reads filter to strictly-earlier batches so the replayed
-       decision is bit-identical.
+    1. decide, on the driver, which documents of the batch near-dup
+       something already ingested (:func:`..llm.dedup._decide_against_seen`,
+       the decision behind ``neardup_against_seen``): one collect of
+       the batch's shingle hashes, one scan of the PERSISTED band store
+       against the broadcast batch signatures, one scan of the corpus
+       for the colliding seen docs, and the exact verify on the
+       candidate pairs only — never batch x corpus;
+    2. append the novel payloads (the batch anti-joined to the local
+       duplicate ids) to ``corpus_path`` and their band signatures (the
+       local signature table minus those ids) to ``store_path``, each
+       under the batch's own ``__BATCH_ID`` partition with dynamic
+       partition overwrite — the ``stream_to_legacy`` exactly-once
+       treatment: a replayed batch REPLACES its own files instead of
+       appending duplicates, and both reads filter to strictly-earlier
+       batches so the replayed decision is bit-identical.
+
+    The batch is bounded by the source's ``maxFilesPerTrigger``, so its
+    side of the decision fits on the driver; nothing is persisted and
+    no Python stage runs. A store candidate with no corpus payload
+    raises ``RuntimeError`` naming both paths: every store id was
+    written to the corpus by the same earlier batch, so its absence
+    means a corrupted or mismatched corpus.
 
     WITHIN-batch near-dups are deliberately out of scope (they are
     ``minhash_lsh_pairs``'s job at corpus build time); this pipeline
     answers "is the incoming document new vs everything ALREADY
     ingested". Returns the StreamingQuery; caller owns its lifecycle.
-
-    Scale shape per batch: batch signatures zero-shuffle; the
-    collision join prunes to earlier ``__BATCH_ID`` partitions and is
-    co-located when the store is bucketed on (band, sig); corpus
-    payloads are touched only for colliding candidates.
     """
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark import StorageLevel
-
         spark = batch_df.sparkSession
         store = _read_prior(spark, store_path, batch_id)
-        # the batch's band signatures feed BOTH the collision join and
-        # (filtered to the novel subset) the store write — compute the
-        # shingle+minhash pass ONCE per batch and persist it
-        sigs = band_signature_store(
-            batch_df, text_col, id_col, n, num_perm, bands
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            novel = batch_df
-            # null ids never reach the store (no later batch could
-            # name them as a match)
-            novel_sigs = sigs.filter(F.col(id_col).isNotNull())
-            if store is not None:
-                # return_release: the collision-candidate frame inside
-                # neardup_against_seen is persisted per call, so the
-                # cache must drop once the decision is made, not
-                # accumulate one pinned frame per batch
-                dups, release = neardup_against_seen(
-                    batch_df, store, _read_prior(spark, corpus_path, batch_id),
-                    text_col=text_col, id_col=id_col,
-                    n=n, num_perm=num_perm, bands=bands, threshold=threshold,
-                    return_release=True, new_sigs=sigs,
-                )
-                # decide novelty ONCE: the verified-dup ids, bounded by
-                # the batch (maxFilesPerTrigger), held as a local frame
-                # that both sink writes anti-join — the dedup pipeline
-                # never runs a second time for the second write
-                try:
-                    dup_ids = localize(dups.select(id_col).distinct())
-                finally:
-                    release.release()
-                novel = batch_df.join(dup_ids, id_col, "left_anti")
-                novel_sigs = novel_sigs.join(dup_ids, id_col, "left_anti")
-            for df, path in ((novel, corpus_path), (novel_sigs, store_path)):
-                (
-                    df.withColumn("__BATCH_ID", F.lit(batch_id))
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("__BATCH_ID")
-                    .parquet(path)
-                )
-        finally:
-            sigs.unpersist()
+        corpus = None
+        if store is not None:
+            # the corpus holds exactly the batch's columns: read it back
+            # with that schema (no footer-inference job)
+            corpus = _read_prior(
+                spark, corpus_path, batch_id,
+                T.StructType(batch_df.schema.fields + [T.StructField("__BATCH_ID", T.IntegerType())]),
+            )
+        sigs, pairs = _decide_against_seen(
+            batch_df, store, corpus, text_col, id_col, n, num_perm, bands,
+            threshold, store_name=store_path, corpus_name=corpus_path,
+        )
+        dup_ids = sorted({i for i, _, _ in pairs})
+        novel = batch_df
+        if dup_ids:
+            dups = local_frame(spark, [(i,) for i in dup_ids], T.StructType([batch_df.schema[id_col]]))
+            novel = batch_df.join(F.broadcast(dups), id_col, "left_anti")
+        # null ids never reach the store (no later batch could name
+        # them as a match)
+        ids = sigs.column(id_col)
+        keep = pc.and_(pc.is_valid(ids), pc.invert(pc.is_in(ids, pa.array(dup_ids, ids.type))))
+        novel_sigs = local_frame(spark, sigs.filter(keep), from_arrow_schema(sigs.schema))
+        for df, path in ((novel, corpus_path), (novel_sigs, store_path)):
+            (
+                df.withColumn("__BATCH_ID", F.lit(batch_id))
+                .write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("__BATCH_ID")
+                .parquet(path)
+            )
 
     return (
         stream_df.writeStream.outputMode("append")

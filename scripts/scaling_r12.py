@@ -11,10 +11,12 @@
   INDEPENDENT of k — the whole point vs k sequential k-means++ passes.
 - neardup_against_seen: steady-state incremental near-dup — a FIXED
   incoming batch against a 1x-vs-8x persisted band store. Expectation:
-  sub-linear growth (batch signatures are constant work; the collision
-  join grows with the store but verification touches colliding docs
-  only) with IDENTICAL verified pairs at both scales (the batch's
-  twins live in copy 0; token-tagged copies can never cross-collide).
+  sub-linear growth (the batch side — signatures and the exact verify
+  — is constant driver work; the one store scan grows with the store,
+  and the corpus lookup reads colliding docs only) with IDENTICAL
+  verified pairs at both scales (the batch's twins live in copy 0;
+  token-tagged copies can never cross-collide). The call returns a
+  local frame, so the timed ``noop`` write measures the decision.
 
 Embeddings replicate by dimension-rolled copies (scaling_ann protocol:
 preserves within-copy similarity, decorrelates copies); documents by

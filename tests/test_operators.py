@@ -2377,37 +2377,38 @@ def test_neardup_against_seen_catches_edited_repeats(spark):
     for bad in (0.0, -1.0, 1.5):
         with pytest.raises(ValueError, match="threshold"):
             neardup_against_seen(batch, band_signature_store(prior), prior, threshold=bad)
-    # release handle: the persisted candidate frame drops, result unchanged
-    rows = _collect_and_release(
-        spark,
-        lambda: neardup_against_seen(
-            batch, band_signature_store(prior), prior, threshold=0.5,
-            return_release=True,
-        ),
+    # the decision is held on the driver: the call pins no cache entry
+    # (a long-lived caller such as the ingest stream has nothing to
+    # release), and the result is unchanged
+    base = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+    again = neardup_against_seen(
+        batch, band_signature_store(prior), prior, threshold=0.5
     )
-    assert [(r["doc_id"], r["seen_id"], r["jaccard"]) for r in rows] == [
-        (r["doc_id"], r["seen_id"], r["jaccard"]) for r in got
-    ]
+    assert spark.sparkContext._jsc.sc().getPersistentRDDs().size() == base
+    assert [tuple(r) for r in again.collect()] == [tuple(r) for r in got]
+    # a store candidate whose seen doc has no payload fails fast instead
+    # of dropping out of the verify and passing doc 10 as novel
+    with pytest.raises(RuntimeError, match="no payload in corpus"):
+        neardup_against_seen(
+            batch, band_signature_store(prior), prior.filter("doc_id != 1"),
+            threshold=0.5,
+        )
 
 
-def test_neardup_band_store_bucketed_colocation(spark, sf_dir, tmp_path):
-    """The docstring's 100 TB claim, plan-proven: with the persisted
-    band store written BUCKETED on (band, sig) — the collision-join
-    keys — the store side satisfies the join distribution from its
-    layout, so with broadcast disabled the plan drops the store-side
-    exchange (only the small daily batch still shuffles) and the
-    bucketed scan is actually exploited. Data path identical to the
-    unbucketed store."""
+def test_neardup_store_probe_is_one_unshuffled_scan(spark, sf_dir, tmp_path):
+    """The store side of the near-dup decision is one scan joined to
+    the BROADCAST batch signatures, so the store is never shuffled —
+    written bucketed on (band, sig) or plain, and with automatic
+    broadcast switched off. Both layouts give equal pairs."""
     from pyspark.sql import functions as F
 
+    from sahithi_metamorph_etl_spark.core.frames import localize
     from sahithi_metamorph_etl_spark.llm.dedup import (
+        _store_probe,
         band_signature_store,
         neardup_against_seen,
     )
-    from sahithi_metamorph_etl_spark.operators.plancheck import (
-        _plan_string,
-        plan_summary,
-    )
+    from sahithi_metamorph_etl_spark.operators.plancheck import plan_summary
     from sahithi_metamorph_etl_spark.sinks.warehouse import LayeredWarehouse
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
@@ -2416,6 +2417,8 @@ def test_neardup_band_store_bucketed_colocation(spark, sf_dir, tmp_path):
     old = docs.filter(F.col("doc_id") < 300)
     batch = docs.filter(F.col("doc_id") >= 300)
     store_df = band_signature_store(old)
+    plain_path = str(tmp_path / "plain")
+    store_df.write.parquet(plain_path)
 
     tbl = "band_store_bk_t"
     spark.sql(f"DROP TABLE IF EXISTS {tbl}")
@@ -2425,17 +2428,16 @@ def test_neardup_band_store_bucketed_colocation(spark, sf_dir, tmp_path):
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        bucketed = neardup_against_seen(batch, spark.table(tbl), old)
-        plain = neardup_against_seen(batch, store_df, old)
-        got_b = sorted((r["doc_id"], r["seen_id"], r["jaccard"])
-                       for r in bucketed.collect())
-        got_p = sorted((r["doc_id"], r["seen_id"], r["jaccard"])
-                       for r in plain.collect())
-        assert got_b == got_p
-        assert "Bucketed: true" in _plan_string(bucketed)
-        # the store-side hash exchange disappears; everything else is
-        # common to both plans
-        assert plan_summary(bucketed).shuffles < plan_summary(plain).shuffles
+        sigs = localize(band_signature_store(batch))
+        got = []
+        for store in (spark.table(tbl), spark.read.parquet(plain_path)):
+            s = plan_summary(_store_probe(store, sigs, "doc_id"))
+            assert (s.file_scans, s.shuffles, s.broadcasts) == (1, 0, 1), s
+            got.append(sorted(
+                (r["doc_id"], r["seen_id"], r["jaccard"])
+                for r in neardup_against_seen(batch, store, old).collect()
+            ))
+        assert got[0] == got[1] and got[0]
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
